@@ -2,9 +2,11 @@
 50 queries, canon-sorted md5 value-hash vs DuckDB at sf0.01."""
 import hashlib
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it was cloned
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -18,7 +18,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it was cloned
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -40,9 +40,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.environ.get("SCALE_SWEEP_SCRATCH", "/tmp/spark_graft_scale_sweep")
 

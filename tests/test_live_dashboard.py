@@ -79,6 +79,26 @@ def test_refresh_recomputes_with_time_window(server):
     assert late["window"]["from"] == "2025-06-01"
 
 
+def test_refresh_releases_the_frames_it_cached(server, spark):
+    """A time-filtered run_analysis caches usage, column_performance and
+    column_scores for itself; /api/refresh must release them, so repeated
+    refreshes leave the session's cached frames where the first left them
+    (the shared mined log and profiles stay cached)."""
+    def cached_frames() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    # distinct windows: a repeated identical plan would reuse its cache
+    # entry and hide the growth
+    paths = ["/api/refresh?from=2025-06-01", "/api/refresh?from=2025-05-01",
+             "/api/refresh?to=2025-06-01"]
+    first = json.loads(_get(server, paths[0])[2])
+    after_first = cached_frames()
+    for path in paths[1:]:
+        _get(server, path)
+        assert cached_frames() == after_first
+    assert json.loads(_get(server, paths[0])[2]) == first
+
+
 def test_root_serves_dashboard_html_with_live_toolbar(server):
     status, ctype, body = _get(server, "/")
     assert status == 200 and ctype.startswith("text/html")

@@ -13,6 +13,7 @@ footers) to enumerate candidate columns — O(tables), not O(rows).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,22 +37,25 @@ def view_columns_df(
         (f"{r['table_schema']}.{r['table_name']}", r["table_name"])
         for r in views_df.select("table_schema", "table_name").collect()
     ]
-    rows = []
+    rows: dict[str, list[str]] = {"view": [], "table": [], "column": []}
     table_names: list[str] = []
     for view, table in view_rows:
         if table in tables.TABLES:
             if table not in table_names:
                 table_names.append(table)
             for c in tables.table_columns(spark, sf_dir, table):
-                rows.append((view, table, c))
+                rows["view"].append(view)
+                rows["table"].append(table)
+                rows["column"].append(c)
     schema = T.StructType(
-        [
-            T.StructField("view", T.StringType(), False),
-            T.StructField("table", T.StringType(), False),
-            T.StructField("column", T.StringType(), False),
-        ]
+        [T.StructField(name, T.StringType(), False) for name in rows]
     )
-    return spark.createDataFrame(rows, schema=schema), sorted(table_names)
+    # built through Arrow: a list goes through a Python-worker PythonRDD
+    # that every action reading the candidates would re-run
+    return (
+        spark.createDataFrame(pa.table(rows), schema=schema),
+        sorted(table_names),
+    )
 
 
 # Session-memoized default-args analyses: several registered queries

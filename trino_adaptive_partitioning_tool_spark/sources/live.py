@@ -150,18 +150,24 @@ class _Handler(BaseHTTPRequestHandler):
             .orderBy(F.desc("wf"), "name")
             .limit(5)
         )
-        return {
-            "window": {"from": t_from, "to": t_to},
-            "n_queries": res["query_logs"].count(),
-            "recommendations": _rows(
-                recs.select(
-                    F.col("view"),
-                    F.array_join("partition_keys", ", ").alias("keys"),
-                    F.round("total_score", 2).alias("score"),
-                )
-            ),
-            "top_columns": _rows(usage),
-        }
+        try:
+            return {
+                "window": {"from": t_from, "to": t_to},
+                "n_queries": res["query_logs"].count(),
+                "recommendations": _rows(
+                    recs.select(
+                        F.col("view"),
+                        F.array_join("partition_keys", ", ").alias("keys"),
+                        F.round("total_score", 2).alias("score"),
+                    )
+                ),
+                "top_columns": _rows(usage),
+            }
+        finally:
+            # the frames this time-filtered call cached for itself; the
+            # mined log and the table profiles are session-shared and stay
+            for key in ("usage", "column_performance", "column_scores"):
+                res[key].unpersist(blocking=True)
 
     def _page(self) -> str:
         from ..operators import recommend
