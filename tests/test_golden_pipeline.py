@@ -42,6 +42,29 @@ def test_golden_determinism(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def test_release_analysis_drops_only_what_the_call_cached(spark):
+    """A call over a caller-supplied log caches its mined log, usage,
+    column_performance and column_scores for itself, and release_analysis
+    unpersists exactly those. A memoized default-input analysis owns
+    nothing, so releasing it leaves the session-shared frames cached."""
+    from trino_adaptive_partitioning_tool_spark.sources import fixtures
+
+    shared = recommend.run_analysis(spark, SMOKE_SF_DIR)
+    assert shared.call_cached == ()
+    res = recommend.run_analysis(
+        spark, SMOKE_SF_DIR, logs_df=fixtures.query_logs_df(spark)
+    )
+    own = [res[k] for k in
+           ("mined_logs", "usage", "column_performance", "column_scores")]
+    assert sorted(map(id, res.call_cached)) == sorted(map(id, own))
+    res["recommendations"].collect()
+    recommend.release_analysis(res)
+    assert not any(df.is_cached for df in own)
+    recommend.release_analysis(shared)
+    assert shared["profiles"].is_cached and shared["mined_logs"].is_cached
+    assert shared["usage"].is_cached and shared["column_scores"].is_cached
+
+
 def test_score_monotonic_in_usage(spark):
     """More weighted usage ⇒ score never decreases (all else equal)."""
     candidates = spark.createDataFrame(

@@ -4,8 +4,6 @@ src/partitioning.py:22-66)."""
 
 from __future__ import annotations
 
-import re
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -678,46 +676,6 @@ def test_miner_grammar_differential(qe):
         c > 0
         for c in (*m["join_columns"].values(), *m["where_columns"].values())
     ), sql
-
-
-# every string and number literal of a generated statement (the pools'
-# identifiers carry digits only after a word character)
-_FZ_LITERAL = re.compile(r"'(?:[^']|'')*'|(?<![\w.])\d+(?:\.\d+)?")
-_fz_string_lit = st.text(max_size=12).map(lambda s: "'" + s.replace("'", "''") + "'")
-_fz_number_lit = st.one_of(
-    st.integers(0, 10**9).map(str),
-    st.tuples(st.integers(0, 999), st.integers(0, 999)).map(lambda t: f"{t[0]}.{t[1]}"),
-)
-
-
-@given(qe=_fz_query(depth=2), data=st.data())
-@settings(max_examples=int(os.environ.get("MINER_FUZZ_EXAMPLES", "300")),
-          deadline=None)
-def test_shape_memo_rows_equal_walk_under_literal_changes(qe, data):
-    """The memo keys on the literal-masked token shape, so a statement and
-    its copies with other string and number literals share one entry;
-    each must still get exactly the rows its own walk gives."""
-    sql, _ = qe
-
-    def relit(m):
-        return data.draw(_fz_string_lit if m.group(0)[0] == "'" else _fz_number_lit)
-
-    for variant in (sql, _FZ_LITERAL.sub(relit, sql), _FZ_LITERAL.sub(relit, sql)):
-        want = Counter(mining._explode_mined("q", mining.mine_statement(variant)))
-        got = Counter(("q", *row) for row in mining.statement_rows(variant))
-        assert got == want, variant
-
-
-def test_shape_memo_never_grows_past_cap():
-    cap = mining._SHAPE_MEMO_CAP
-    sqls = [f"SELECT c_{i} FROM t_{i} WHERE k_{i} = 1" for i in range(cap + 100)]
-    for sql in sqls:
-        mining.statement_rows(sql)
-        assert len(mining._SHAPE_MEMO) <= cap
-    assert len(mining._SHAPE_MEMO) == cap
-    # first in, first out: the oldest shape went, the newest stayed
-    oldest, newest = (mining._shape(mining.tokenize(s)) for s in (sqls[0], sqls[-1]))
-    assert oldest not in mining._SHAPE_MEMO and newest in mining._SHAPE_MEMO
 
 
 def test_mine_query_log_invariant_under_input_layout(spark):

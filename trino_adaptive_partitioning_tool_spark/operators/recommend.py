@@ -122,6 +122,24 @@ def _profiled_tables(
     return hit
 
 
+class Analysis(dict):
+    """run_analysis's frames by name. ``call_cached`` holds the frames
+    that one call cached for itself alone; release_analysis drops them."""
+
+    def __init__(self, frames, call_cached=()):
+        super().__init__(frames)
+        self.call_cached = tuple(call_cached)
+
+
+def release_analysis(result: Analysis) -> None:
+    """Unpersist the frames the run_analysis call that returned `result`
+    cached for itself. Session-shared frames (the mined fixture log, the
+    table profiles, a memoized default-input analysis) are never among
+    them, so this is safe after every call."""
+    for df in result.call_cached:
+        df.unpersist(blocking=True)
+
+
 def run_analysis(
     spark: SparkSession,
     sf_dir: str,
@@ -130,7 +148,7 @@ def run_analysis(
     time_filter=None,
     exact_stats: bool = False,
     profile_percentiles: bool = True,
-) -> dict[str, DataFrame]:
+) -> Analysis:
     """Run the full analysis; returns every intermediate as a DataFrame.
 
     `time_filter` is a pyspark Column predicate over the log (the
@@ -147,7 +165,7 @@ def run_analysis(
         )
         hit = _ANALYSIS_CACHE.get(memo_key)
         if hit is not None:
-            return dict(hit)
+            return Analysis(hit)
     logs = logs_df if logs_df is not None else fixtures.query_logs_df(spark)
     views = views_df if views_df is not None else fixtures.catalog_views_df(spark)
     views = views.where(F.col("table_type") == "MATERIALIZED VIEW")
@@ -166,6 +184,7 @@ def run_analysis(
     # semi-filter(mine(logs)) — this turns the spec-history query's
     # per-generation Arrow mining stages into one shared pass);
     # per-call mining only when the caller supplied its OWN log
+    cached: list[DataFrame] = []  # what this call caches for itself
     if logs_df is None and time_filter is None:
         mined_logs = mined_fixture_logs(spark)
     elif logs_df is None:
@@ -174,6 +193,7 @@ def run_analysis(
         )
     else:
         mined_logs = mining.mine_query_log(logs).cache()
+        cached.append(mined_logs)
     candidates, table_names = view_columns_df(spark, sf_dir, views)
 
     # r14 (r13 verdict #7): table profiles are a pure function of the
@@ -195,6 +215,7 @@ def run_analysis(
         candidates.select("view", "column"), views, logs, mined_logs
     ).cache()
     col_perf = scoring.column_performance(logs, mined_logs).cache()
+    cached += [usage, col_perf]
     tab_perf = scoring.table_performance(logs, mined_logs)
     resource = scoring.resource_scores(logs)
     classified = scoring.classify_queries(logs, mined_logs)
@@ -202,6 +223,7 @@ def run_analysis(
     scored = scoring.partition_scores(
         candidates, usage, profiled, col_perf
     ).cache()
+    cached.append(scored)
     top = scoring.top_candidates(scored)
     transformed = transforms.with_transforms(top)
     scripts = transforms.partition_scripts(transformed, views)
@@ -222,9 +244,10 @@ def run_analysis(
         "recommendations": scripts,
     }
     if memo_key is not None:
+        # memoized for the session: nothing here is this call's own
         _ANALYSIS_CACHE[memo_key] = result
-        return dict(result)
-    return result
+        return Analysis(result)
+    return Analysis(result, cached)
 
 
 def recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:

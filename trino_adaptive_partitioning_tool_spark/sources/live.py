@@ -164,10 +164,7 @@ class _Handler(BaseHTTPRequestHandler):
                 "top_columns": _rows(usage),
             }
         finally:
-            # the frames this time-filtered call cached for itself; the
-            # mined log and the table profiles are session-shared and stay
-            for key in ("usage", "column_performance", "column_scores"):
-                res[key].unpersist(blocking=True)
+            recommend.release_analysis(res)
 
     def _page(self) -> str:
         from ..operators import recommend
