@@ -364,6 +364,81 @@ def emit_output_lines(
     return lines
 
 
+def _scan_scaling(spark, sf_dir: str) -> dict:
+    """Amplified scan-scaling probe. At 10 MB/table, query timings are
+    capped by per-call fixed costs (plan build, job setup — tens of ms
+    each), not the scan. Replicate lineitem to ~15 M rows and time the
+    SAME aggregation against a 1-row-group vs a 32-row-group layout,
+    fresh plan per rep (repeated actions on one DataFrame skip
+    materialized shuffle stages and would fake the number). This
+    isolates the property that carries to 100 TB: the scan parallelizes
+    with the data layout."""
+    import shutil
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    scratch = tempfile.mkdtemp(prefix="tapt_bench_scan_")
+    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    prev_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    try:
+        lt = pq.read_table(f"{sf_dir}/lineitem.parquet")
+        mult = max(1, 15_000_000 // max(1, lt.num_rows))
+        big = pa.concat_tables([lt] * mult)
+        pq.write_table(
+            big, f"{scratch}/amp_single.parquet", row_group_size=big.num_rows
+        )
+        pq.write_table(
+            big, f"{scratch}/amp_multi.parquet",
+            row_group_size=max(1, big.num_rows // 32),
+        )
+
+        def run(path: str) -> None:
+            spark.read.parquet(path).groupBy(
+                "l_returnflag", "l_linestatus"
+            ).agg(
+                F.sum(
+                    F.col("l_extendedprice")
+                    * (1 - F.col("l_discount"))
+                    * (1 + F.col("l_tax"))
+                ).alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            ).collect()
+
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        amp: dict[str, float] = {}
+        for label, path, mpb in [
+            ("single_rg_sec", f"{scratch}/amp_single.parquet", None),
+            ("multi_rg_sec", f"{scratch}/amp_multi.parquet", "8388608"),
+        ]:
+            if mpb:
+                spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+            run(path)  # JIT/footer warm-up, untimed
+            best = float("inf")
+            for _ in range(2):
+                start = time.perf_counter()
+                run(path)
+                best = min(best, time.perf_counter() - start)
+            amp[label] = round(best, 3)
+    finally:
+        # restore BOTH confs on every exit path — a throw mid-probe must
+        # not leave the session over-splitting at 8 MB
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
+        if prev_nanos is None:
+            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+        else:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev_nanos)
+        shutil.rmtree(scratch, ignore_errors=True)
+    speedup = (
+        round(amp["single_rg_sec"] / amp["multi_rg_sec"], 2)
+        if amp["multi_rg_sec"]
+        else None
+    )
+    return {"rows": big.num_rows, **amp, "speedup": speedup}
+
+
 def main() -> None:
     # exact all-pairs oracle twins are sf<=0.01 ground-truth baselines;
     # they must never enter a headline (scale) benchmark
@@ -701,170 +776,26 @@ def main() -> None:
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
-    # Row-group twin: the env's testdata parquet is single-row-group, so
-    # scan-bound queries are floored at 1 scan task no matter how many
-    # cores exist (TESTDATA.md / memory). Rewrite the three largest
-    # tables with ~32 row groups (pyarrow preserves the exact schema,
-    # incl. the ns timestamps load_table normalizes), symlink the rest,
-    # drop maxPartitionBytes so splits align with row groups, and re-run
-    # the scan-bound headline queries — proving the same plans
-    # parallelize when the data layout does, which is what 100 TB files
-    # (>=128 MB row groups, split by the default conf) look like.
-    twin_block = None
-    twin_scratch = tempfile.mkdtemp(prefix="tapt_bench_twin_")
+    scan_scaling = None
     try:
         if skip_extras:
             raise RuntimeError("SPARK_GRAFT_BENCH_SKIP_EXTRAS set")
-        import pyarrow.parquet as pq
-
-        from trino_adaptive_partitioning_tool_spark.queries import registry as _reg
-
-        rewrite = ["lineitem", "orders", "events"]
-        twin_queries = [
-            "pricing_summary",
-            "shipping_priority",
-            "region_revenue",
-            "simple_predicate_revenue",
-            "event_hourly_rollup",
-        ]
-        row_groups: dict[str, int] = {}
-        for fn in os.listdir(sf_dir):
-            if not fn.endswith(".parquet"):
-                continue
-            src, dst = f"{sf_dir}/{fn}", f"{twin_scratch}/{fn}"
-            t = fn.removesuffix(".parquet")
-            if t in rewrite:
-                tbl = pq.read_table(src)
-                pq.write_table(
-                    tbl, dst, row_group_size=max(1, tbl.num_rows // 32)
-                )
-                row_groups[t] = pq.ParquetFile(dst).metadata.num_row_groups
-            else:
-                os.symlink(src, dst)
-        prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-        _reg._PLAN_CACHE.clear()  # memoized plans are keyed per sf_dir, but
-        # the conf change must reach every twin plan
-        try:
-            twin_timings: dict[str, float] = {}
-            for name in twin_queries:
-                best = float("inf")
-                for _ in range(reps):
-                    start = time.perf_counter()
-                    qs[name](spark, twin_scratch).count()
-                    best = min(best, time.perf_counter() - start)
-                twin_timings[name] = round(best, 3)
-                base = timings.get(name)
-                speed = round(base / best, 2) if base else None
-                print(
-                    f"# twin {name}: {best:.3f}s "
-                    f"(vs {base}s single-row-group, {speed}x)",
-                    file=sys.stderr,
-                )
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-            _reg._PLAN_CACHE.clear()
-        twin_block = {
-            "row_groups": row_groups,
-            "queries": twin_timings,
-            "speedup": {
-                n: round(timings[n] / twin_timings[n], 2)
-                for n in twin_timings
-                if timings.get(n) and twin_timings[n] > 0
-            },
-        }
-
-        # Amplified scan-scaling probe: at 10 MB/table the headline twin
-        # speedups are capped by per-call fixed costs (plan build, job
-        # setup — tens of ms each), not the scan. Replicate lineitem to
-        # ~15 M rows and time the SAME aggregation against a 1-row-group
-        # vs a 32-row-group layout, fresh plan per rep (repeated actions
-        # on one DataFrame skip materialized shuffle stages and would
-        # fake the number). This isolates the property that carries to
-        # 100 TB: the scan parallelizes with the data layout.
-        import pyarrow as pa
-
-        lt = pq.read_table(f"{sf_dir}/lineitem.parquet")
-        mult = max(1, 15_000_000 // max(1, lt.num_rows))
-        big = pa.concat_tables([lt] * mult)
-        pq.write_table(
-            big, f"{twin_scratch}/amp_single.parquet",
-            row_group_size=big.num_rows,
-        )
-        pq.write_table(
-            big, f"{twin_scratch}/amp_multi.parquet",
-            row_group_size=max(1, big.num_rows // 32),
-        )
-
-        def _amp_run(path: str) -> None:
-            spark.read.parquet(path).groupBy(
-                "l_returnflag", "l_linestatus"
-            ).agg(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()
-
-        prev_nanos = spark.conf.get(
-            "spark.sql.legacy.parquet.nanosAsLong", None
-        )
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            amp: dict[str, float] = {}
-            for label, path, mpb in [
-                ("single_rg_sec", f"{twin_scratch}/amp_single.parquet", None),
-                ("multi_rg_sec", f"{twin_scratch}/amp_multi.parquet",
-                 "8388608"),
-            ]:
-                if mpb:
-                    spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
-                _amp_run(path)  # JIT/footer warm-up, untimed
-                best = float("inf")
-                for _ in range(2):
-                    start = time.perf_counter()
-                    _amp_run(path)
-                    best = min(best, time.perf_counter() - start)
-                amp[label] = round(best, 3)
-        finally:
-            # restore BOTH confs on every exit path — a throw mid-probe
-            # must not leave the session over-splitting at 8 MB
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-            if prev_nanos is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set(
-                    "spark.sql.legacy.parquet.nanosAsLong", prev_nanos
-                )
-        amp_speed = (
-            round(amp["single_rg_sec"] / amp["multi_rg_sec"], 2)
-            if amp.get("multi_rg_sec")
-            else None
-        )
-        twin_block["scan_scaling"] = {
-            "rows": big.num_rows,
-            **amp,
-            "speedup": amp_speed,
-        }
+        scan_scaling = _scan_scaling(spark, sf_dir)
         print(
-            f"# scan_scaling: {big.num_rows} rows, single-rg "
-            f"{amp['single_rg_sec']}s vs 32-rg {amp['multi_rg_sec']}s "
-            f"= {amp_speed}x",
+            f"# scan_scaling: {scan_scaling['rows']} rows, single-rg "
+            f"{scan_scaling['single_rg_sec']}s vs 32-rg "
+            f"{scan_scaling['multi_rg_sec']}s = {scan_scaling['speedup']}x",
             file=sys.stderr,
         )
     except Exception as exc:  # pragma: no cover - resilience path
-        print(f"# rowgroup twin failed: {exc!r}", file=sys.stderr)
-    finally:
-        shutil.rmtree(twin_scratch, ignore_errors=True)
+        print(f"# scan_scaling failed: {exc!r}", file=sys.stderr)
 
     # The driver captures only the TAIL of stdout (~2 KB) and json-parses
     # the final line — round 5 proved that inlining the plan manifests
     # (~10 KB) truncates the line and the whole bench goes unrecorded
     # (BENCH_r05.json: parsed=null). Keep the stdout line compact and
-    # write the heavy diagnostics (per-query plan shapes, row-group twin
-    # timings) to BENCH_PLANS.json next to this script instead.
+    # write the heavy diagnostics (per-query plan shapes, the scan
+    # scaling probe) to BENCH_PLANS.json next to this script instead.
     try:
         load_end_1m = round(os.getloadavg()[0], 2)
     except OSError:  # pragma: no cover - platform without getloadavg
@@ -886,7 +817,7 @@ def main() -> None:
         "plans": plans,
         "applied_layout_speedup": layout_speedup,
         "applied_layout_partitions": layout_partitions,
-        "rowgroup_twin": twin_block,
+        "scan_scaling": scan_scaling,
         "baseline_medians": baseline_medians,
         "cold_queries": cold_timings,  # first-call times, read by
         # scripts/gen_bench_baseline.py to build cold_medians (too big
@@ -914,12 +845,11 @@ def main() -> None:
     except OSError as exc:  # pragma: no cover - resilience path
         print(f"# plan manifest write failed: {exc!r}", file=sys.stderr)
 
-    scan_scaling = (twin_block or {}).get("scan_scaling") or {}
     for line in emit_output_lines(
         total=total,
         timings=timings,
         layout_speedup=layout_speedup,
-        scan_scaling_x=scan_scaling.get("speedup"),
+        scan_scaling_x=(scan_scaling or {}).get("speedup"),
         regressions=regressions,
         missing_baseline=missing_baseline,
         sf=sf,

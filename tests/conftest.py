@@ -28,3 +28,11 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM '{PARITY_SF_DIR}/{t}.parquet'"
         )
     return con
+
+
+def memo_entry(spark, namespace, key):
+    """The session memo's value for (namespace, key), or None."""
+    from trino_adaptive_partitioning_tool_spark import memo
+
+    app_id = spark.sparkContext.applicationId
+    return memo._ENTRIES.get(app_id, {}).get((namespace, key))

@@ -227,20 +227,24 @@ def test_cluster_profile_advisory_columns(spark):
 
 
 def test_evict_fit_caches(spark):
+    from conftest import memo_entry
+    from trino_adaptive_partitioning_tool_spark import memo
     from trino_adaptive_partitioning_tool_spark.queries import (
         clustering as qc,
     )
 
-    qc._assignments(spark, SMOKE_SF_DIR)
+    frame = qc._assignments(spark, SMOKE_SF_DIR)
     app = spark.sparkContext.applicationId
-    assert (app, SMOKE_SF_DIR) in qc._ASSIGN_CACHE
-    # filtered eviction for a different sf_dir touches nothing
-    assert qc.evict_fit_caches(app_id=app, sf_dir="/nonexistent") == 0
-    assert (app, SMOKE_SF_DIR) in qc._ASSIGN_CACHE
-    dropped = qc.evict_fit_caches(app_id=app, sf_dir=SMOKE_SF_DIR)
-    assert dropped >= 2  # fit + persisted assignment at minimum
-    assert (app, SMOKE_SF_DIR) not in qc._ASSIGN_CACHE
-    assert (app, SMOKE_SF_DIR) not in qc._FIT_CACHE
+    fit = memo_entry(spark, "clustering.fit", (SMOKE_SF_DIR,))
+    assert fit is not None and fit[1] is frame
+    assert qc._assignments(spark, SMOKE_SF_DIR) is frame  # reused
+    # eviction for a different sf_dir touches nothing
+    assert memo.evict(app, "/nonexistent") == 0
+    assert memo_entry(spark, "clustering.fit", (SMOKE_SF_DIR,)) is fit
+    dropped = memo.evict(app, SMOKE_SF_DIR)
+    assert dropped >= 1  # the fit (centroids + persisted assignment)
+    assert memo_entry(spark, "clustering.fit", (SMOKE_SF_DIR,)) is None
+    assert not frame.storageLevel.useMemory  # unpersisted
     # the surface still works after eviction (re-fits on demand)
     assert qc._assignments(spark, SMOKE_SF_DIR).count() > 0
 
@@ -400,23 +404,22 @@ def test_semdedup_split_mode_matches_registered_result(spark):
 
 
 def test_semdedup_split_frame_cached_and_evictable(spark):
-    """r9 review finding #3: split mode must not pin a fresh persisted
-    assignment frame per invocation — repeat calls share the
-    session-memoized refined frame, and evict_fit_caches releases it
-    with the other per-(app, sf_dir) caches."""
+    """Split mode must not pin a fresh persisted assignment frame per
+    invocation: repeat calls share the session-memoized refined frame,
+    and evicting the sf_dir releases it with the other entries."""
+    from conftest import memo_entry
+    from trino_adaptive_partitioning_tool_spark import memo
     from trino_adaptive_partitioning_tool_spark.queries import (
         clustering as qc,
     )
 
     app = spark.sparkContext.applicationId
+    key = (SMOKE_SF_DIR, qc._SEMDEDUP_CLUSTER_CEILING, qc._K)
     qc._semdedup(spark, SMOKE_SF_DIR, split_oversized=True).count()
-    keys = [k for k in qc._SPLIT_CACHE if k[0] == app and k[1] == SMOKE_SF_DIR]
-    assert len(keys) == 1
-    frame = qc._SPLIT_CACHE[keys[0]]
+    frame = memo_entry(spark, "clustering.split", key)
+    assert frame is not None
     qc._semdedup(spark, SMOKE_SF_DIR, split_oversized=True).count()
-    assert qc._SPLIT_CACHE[keys[0]] is frame  # reused, not re-pinned
-    dropped = qc.evict_fit_caches(app_id=app, sf_dir=SMOKE_SF_DIR)
+    assert memo_entry(spark, "clustering.split", key) is frame  # reused
+    dropped = memo.evict(app, SMOKE_SF_DIR)
     assert dropped >= 1
-    assert not [
-        k for k in qc._SPLIT_CACHE if k[0] == app and k[1] == SMOKE_SF_DIR
-    ]
+    assert memo_entry(spark, "clustering.split", key) is None

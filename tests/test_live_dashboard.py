@@ -22,8 +22,8 @@ def server(spark):
     yield srv
     srv.shutdown()
     # full lifecycle: release the socket AND this server's cache ref
-    # (eviction is refcounted per (app_id, sf_dir) — a shut-down-but-
-    # never-closed server would pin the clustering caches forever)
+    # (eviction is refcounted per (session, sf_dir) — a shut-down-but-
+    # never-closed server would pin the sf_dir's memo entries forever)
     srv.server_close()
 
 
@@ -132,29 +132,35 @@ def test_query_endpoint_ignores_sf_dir_override(server):
 
 def test_server_close_evicts_clustering_caches_refcounted(spark):
     """A long-lived dashboard server must release this sf_dir's
-    session-memoized fits and persisted assignment frames on close
-    (r7 advice: the caches otherwise accumulate per sf_dir forever) —
-    but ONLY when it is the LAST server on that (app_id, sf_dir): with
-    two concurrent servers, closing one must not drop fits the other
-    (or a concurrent bench) still uses (r8 advice). Runs on its own
-    sf_dir so the module fixture's server can't interfere."""
-    from conftest import PARITY_SF_DIR
+    session-memoized fits and persisted assignment frames on close (the
+    memo otherwise holds them per sf_dir for the session) — but ONLY
+    when it is the LAST server on that (session, sf_dir): with two
+    concurrent servers, closing one must not drop fits the other (or a
+    concurrent bench) still uses. Runs on its own sf_dir so the module
+    fixture's server can't interfere."""
+    from conftest import PARITY_SF_DIR, memo_entry
+    from trino_adaptive_partitioning_tool_spark import memo
     from trino_adaptive_partitioning_tool_spark.queries import (
         clustering as qc,
     )
 
-    app = spark.sparkContext.applicationId
+    key = (PARITY_SF_DIR,)
     srv_a = live.serve_dashboard(spark, PARITY_SF_DIR, port=0)
     srv_b = live.serve_dashboard(spark, PARITY_SF_DIR, port=0)
     try:
-        qc._assignments(spark, PARITY_SF_DIR)
-        assert (app, PARITY_SF_DIR) in qc._ASSIGN_CACHE
+        frame = qc._assignments(spark, PARITY_SF_DIR)
+        assert memo_entry(spark, "clustering.fit", key) is not None
     finally:
         srv_a.server_close()
         srv_a.server_close()  # double close must not double-decrement
-        # first close: the sibling server still owns the caches
-        assert (app, PARITY_SF_DIR) in qc._ASSIGN_CACHE
+        # first close: the sibling server still owns the entries
+        assert memo_entry(spark, "clustering.fit", key) is not None
         srv_b.server_close()
-    # last close: evicted
-    assert (app, PARITY_SF_DIR) not in qc._ASSIGN_CACHE
-    assert (app, PARITY_SF_DIR) not in qc._FIT_CACHE
+    # last close: evicted and unpersisted
+    assert memo_entry(spark, "clustering.fit", key) is None
+    assert not frame.storageLevel.useMemory
+    # a later server on the same sf_dir counts from zero again
+    srv_c = live.serve_dashboard(spark, PARITY_SF_DIR, port=0)
+    memo.session_memo(spark, "t", (PARITY_SF_DIR,), object)
+    srv_c.server_close()
+    assert memo_entry(spark, "t", (PARITY_SF_DIR,)) is None

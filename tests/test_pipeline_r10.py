@@ -413,20 +413,17 @@ def _is_corrupt(doc_id: int) -> bool:
 
 
 def test_embench_cache_evicts_through_fit_cache_seam(spark):
-    """r11 review: the decontamination bench matrix is session-cached
-    like the k-means fits and must release through the SAME seam."""
-    from trino_adaptive_partitioning_tool_spark.queries import (
-        clustering as qc,
-    )
-    from trino_adaptive_partitioning_tool_spark.queries import (
-        similarity as qs,
-    )
+    """The decontamination bench matrix is session-memoized like the
+    k-means fits and must release through the SAME seam."""
+    from conftest import memo_entry
+    from trino_adaptive_partitioning_tool_spark import memo
     from trino_adaptive_partitioning_tool_spark.queries.similarity import (
         decontamination_embedding_scan,
     )
 
     decontamination_embedding_scan(spark, PARITY_SF_DIR).count()
     app = spark.sparkContext.applicationId
-    assert (app, PARITY_SF_DIR) in qs._EMBENCH_CACHE
-    qc.evict_fit_caches(app_id=app, sf_dir=PARITY_SF_DIR)
-    assert (app, PARITY_SF_DIR) not in qs._EMBENCH_CACHE
+    key = (PARITY_SF_DIR,)
+    assert memo_entry(spark, "similarity.embench", key) is not None
+    memo.evict(app, PARITY_SF_DIR)
+    assert memo_entry(spark, "similarity.embench", key) is None

@@ -56,18 +56,20 @@ _JOIN_QUERIES = [
 def _confs(spark, **kv):
     # memoized (prepared-plan) queries would otherwise return a
     # DataFrame whose physical plan was already finalized under the
-    # DEFAULT confs — clearing the plan cache on entry and exit makes
-    # every plan assertion in here observe the overridden regime
-    from trino_adaptive_partitioning_tool_spark.queries import registry
+    # DEFAULT confs — evicting the session memo's entries for the smoke
+    # data on entry and exit makes every plan assertion in here observe
+    # the overridden regime
+    from trino_adaptive_partitioning_tool_spark import memo
 
+    app = spark.sparkContext.applicationId
     old = {k: spark.conf.get(k, None) for k in kv}
-    registry._PLAN_CACHE.clear()
+    memo.evict(app, SMOKE_SF_DIR)
     try:
         for k, v in kv.items():
             spark.conf.set(k, v)
         yield
     finally:
-        registry._PLAN_CACHE.clear()
+        memo.evict(app, SMOKE_SF_DIR)
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)

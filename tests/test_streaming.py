@@ -240,9 +240,10 @@ def test_outer_attribution_stream_equals_batch(spark):
         )
     )
     # batch twin over the SAME json feed (ms truncation included)
-    tmp = sq._FEED_CACHE[
-        (spark.sparkContext.applicationId, SMOKE_SF_DIR, "clickpurchase_outer")
-    ]
+    def _no_rewrite(d):
+        raise AssertionError("the feed must be memoized for the session")
+
+    tmp = sq._memo_feed(spark, "clickpurchase_outer", SMOKE_SF_DIR, _no_rewrite)
     batch = spark.read.schema(sj.EVENT_SCHEMA).json(f"{tmp}/events")
     want = sorted(
         map(

@@ -62,9 +62,13 @@ def test_partition_layout_discovery(spark, tmp_path):
 
 
 def test_plan_cache_keyed_on_application_id(spark):
-    """A memoized plan must be keyed by applicationId, not id(spark):
-    a stopped session's id() can be reused by a new SparkSession object,
-    which would resurrect a DataFrame bound to a dead session."""
+    """A memoized plan lives in the session memo, which scopes it by
+    applicationId, not id(spark): a stopped session's id() can be reused
+    by a new SparkSession object, which would resurrect a DataFrame
+    bound to a dead session. The cross-session drop itself is checked
+    in test_session_memo.py."""
+    from conftest import memo_entry
+    from trino_adaptive_partitioning_tool_spark import memo
     from trino_adaptive_partitioning_tool_spark.queries import registry
 
     calls = {"n": 0}
@@ -76,14 +80,11 @@ def test_plan_cache_keyed_on_application_id(spark):
 
     try:
         fn = registry._QUERIES["_cache_probe_test"]
-        fn(spark, "/x")
-        fn(spark, "/x")
+        first = fn(spark, "/x")
+        assert fn(spark, "/x") is first
         assert calls["n"] == 1  # memoized within one session
-        app_id = spark.sparkContext.applicationId
-        key = (app_id, "/x", "_cache_probe_test")
-        assert key in registry._PLAN_CACHE
-        # a different applicationId (fresh context after stop()) misses
-        assert (id(spark), "/x", "_cache_probe_test") not in registry._PLAN_CACHE
+        key = ("/x", "_cache_probe_test")
+        assert memo_entry(spark, "registry.plan", key) is first
     finally:
         registry._QUERIES.pop("_cache_probe_test", None)
-        registry._PLAN_CACHE.pop((spark.sparkContext.applicationId, "/x", "_cache_probe_test"), None)
+        memo.evict(spark.sparkContext.applicationId, "/x")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..memo import session_memo
 from ..sources import fixtures, tables
 from . import mining, scoring, stats, transforms
 
@@ -58,46 +59,23 @@ def view_columns_df(
     )
 
 
-# Session-memoized default-args analyses: several registered queries
-# (flagship recommendations, their exact twin, the drift triggers, the
-# dashboard) each consume run_analysis output, but mapInPandas closures
-# canonicalize differently per plan build, so the .cache() marks inside
-# one call NEVER hit from a separately-built call — without this memo
-# each consumer re-materializes the whole mining+profiling pipeline.
-# Keyed on applicationId so a new session starts clean; only the
-# default-input path memoizes (custom logs/views/filters are caller
-# state the key can't see).
-_ANALYSIS_CACHE: dict[tuple, dict[str, DataFrame]] = {}
-
-# r14 (r13 verdict #7): ONE session-memoized mined-token frame over the
-# fixture log, shared by every advisor query that mines the default log
-# (mined_workload, workload_drift_report, bucket_join_advice,
-# partition_recommendation_drift, and run_analysis's default path).
-# Each of those previously built its own mapInPandas mining plan — and,
-# per the canonicalization note above, Spark's CacheManager never
-# matches python-closure plans across separate builds, so the Arrow
-# mining stage re-executed per query family member (~0.3-0.8s of each
-# cold). Dimension-sized (tokens per fixture query), persisted,
-# evictable; consumers filter/project from it lazily.
-_MINED_LOGS_CACHE: dict[str, DataFrame] = {}
-
-
+# The session's one mined-token frame over the fixture log, shared by
+# every advisor query that mines the default log (mined_workload,
+# workload_drift_report, bucket_join_advice,
+# partition_recommendation_drift and run_analysis's default path).
+# Spark's CacheManager never matches python-closure plans across separate
+# builds, so without it the Arrow mining stage re-ran per consumer.
+# Dimension-sized (tokens per fixture query), persisted.
 def mined_fixture_logs(spark: SparkSession) -> DataFrame:
-    key = spark.sparkContext.applicationId
-    hit = _MINED_LOGS_CACHE.get(key)
-    if hit is None:
-        hit = _MINED_LOGS_CACHE[key] = mining.mine_query_log(
-            fixtures.query_logs_df(spark)
-        ).persist()
-    return hit
+    return session_memo(
+        spark, "recommend.mined_logs", (None,),
+        lambda: mining.mine_query_log(fixtures.query_logs_df(spark)).persist(),
+    )
 
 
-# r14: session-memoized exact/approx table profiles (see the call site
-# in run_analysis below) — the profile is log-independent, so every
-# as-of window shares one materialization per (table set, mode).
-_PROFILE_CACHE: dict[tuple, DataFrame] = {}
-
-
+# A table profile is a pure function of the tables, not of the log window
+# or the views filter, so every as-of window (the spec-history query runs
+# three) shares one persisted exact-NDV aggregation per table set and mode.
 def _profiled_tables(
     spark: SparkSession,
     sf_dir: str,
@@ -105,21 +83,15 @@ def _profiled_tables(
     exact: bool,
     percentiles: bool,
 ) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        tuple(table_names),
-        exact,
-        percentiles,
-    )
-    hit = _PROFILE_CACHE.get(key)
-    if hit is None:
-        hit = _PROFILE_CACHE[key] = stats.profile_tables(
+    return session_memo(
+        spark, "recommend.profile",
+        (sf_dir, tuple(table_names), exact, percentiles),
+        lambda: stats.profile_tables(
             {t: tables.load_table(spark, sf_dir, t) for t in table_names},
             exact=exact,
             percentiles=percentiles,
-        ).persist()
-    return hit
+        ).persist(),
+    )
 
 
 class Analysis(dict):
@@ -155,17 +127,29 @@ def run_analysis(
     reference splices a raw SQL string — an injection surface, SURVEY
     §8.5; we require a Column expression).
     """
-    memo_key = None
     if logs_df is None and views_df is None and time_filter is None:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            exact_stats,
-            profile_percentiles,
-        )
-        hit = _ANALYSIS_CACHE.get(memo_key)
-        if hit is not None:
-            return Analysis(hit)
+        # Several consumers (the flagship recommendations, their exact
+        # twin, the drift triggers, the dashboard) read the default-input
+        # analysis, and mapInPandas closures canonicalize differently per
+        # plan build, so one call's cache() marks never hit from another
+        # call's plan: memoize the whole result for the session. The
+        # build passes the default views explicitly, which takes the
+        # unmemoized path; the entry owns the frames that call cached.
+        # Custom logs, views or filters are caller state the key cannot
+        # see.
+        def build() -> tuple:
+            res = run_analysis(
+                spark, sf_dir, views_df=fixtures.catalog_views_df(spark),
+                exact_stats=exact_stats,
+                profile_percentiles=profile_percentiles,
+            )
+            return (dict(res), *res.call_cached)
+
+        frames = session_memo(
+            spark, "recommend.analysis",
+            (sf_dir, exact_stats, profile_percentiles), build,
+        )[0]
+        return Analysis(frames)
     logs = logs_df if logs_df is not None else fixtures.query_logs_df(spark)
     views = views_df if views_df is not None else fixtures.catalog_views_df(spark)
     views = views.where(F.col("table_type") == "MATERIALIZED VIEW")
@@ -196,12 +180,6 @@ def run_analysis(
         cached.append(mined_logs)
     candidates, table_names = view_columns_df(spark, sf_dir, views)
 
-    # r14 (r13 verdict #7): table profiles are a pure function of the
-    # TABLES — they do not depend on the log window or the views filter
-    # beyond the table set — yet every as-of invocation (the
-    # spec-history query runs three) re-ran the exact-NDV aggregation
-    # per generation. Session-memoized per (table set, exact,
-    # percentiles); persisted (dimension-sized: one row per column).
     profiled = _profiled_tables(
         spark, sf_dir, table_names, exact_stats, profile_percentiles
     )
@@ -243,10 +221,6 @@ def run_analysis(
         "top_candidates": top,
         "recommendations": scripts,
     }
-    if memo_key is not None:
-        # memoized for the session: nothing here is this call's own
-        _ANALYSIS_CACHE[memo_key] = result
-        return Analysis(result)
     return Analysis(result, cached)
 
 

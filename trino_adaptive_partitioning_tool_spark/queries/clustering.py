@@ -26,11 +26,10 @@ queries/similarity.py.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from ..operators import clustering as ops
 from ..operators.dedup import md5_60, md5_60_sql
 from ..sources import tables
@@ -41,93 +40,28 @@ _ITERS = 3
 _BALANCE_CAP = 40  # per-cluster sample cap
 _BALANCE_SALT = "cluster-balance"
 
-# One fit per (session, sf_dir): every query here (and the streaming
-# ingest twin in queries/streaming_q.py) composes the same fit, so the
-# k*dim driver-side Lloyd collects happen once, not per query (same
-# pattern as operators/recommend.run_analysis's session memo).
-_FIT_CACHE: dict[tuple[str, str], list[list[int]]] = {}
-_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-# split-mode refined assignments, keyed (app_id, sf_dir, ceiling,
-# sub_k): split_oversized_assignments persists its output (multiple
-# consumers), so un-cached repeat calls would each pin a fresh
-# assignment-sized frame for the app's lifetime (r9 review finding #3).
-# Evicted by evict_fit_caches like every other per-(app, sf_dir) cache.
-_SPLIT_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-# the live dashboard serves queries from ThreadingHTTPServer threads;
-# an unsynchronized check-then-set would run duplicate Lloyd fits and
-# leak the loser's persisted assignment frame
-_FIT_LOCK = threading.Lock()
+
+# (centroids, persisted assignments) of the session's corpus fit. Every
+# query here and the streaming ingest twin in queries/streaming_q.py
+# compose the same fit, so the k*dim driver-side Lloyd collects run once
+# per (session, sf_dir).
+def _fit(spark: SparkSession, sf_dir: str) -> tuple:
+    def build() -> tuple:
+        emb = tables.load_table(spark, sf_dir, "embeddings")
+        centroids, quantized = ops.kmeans_fit(emb, k=_K, iters=_ITERS)
+        return centroids, ops.assign_clusters(quantized, centroids).persist()
+
+    return session_memo(spark, "clustering.fit", (sf_dir,), build)
 
 
 def fitted_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     """Session-memoized integer centroids of the corpus fit — the static
     model the streaming assignment twin applies per micro-batch."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _FIT_LOCK:
-        if key not in _FIT_CACHE:
-            emb = tables.load_table(spark, sf_dir, "embeddings")
-            centroids, quantized = ops.kmeans_fit(emb, k=_K, iters=_ITERS)
-            _FIT_CACHE[key] = centroids
-            _ASSIGN_CACHE[key] = ops.assign_clusters(
-                quantized, centroids
-            ).persist()
-        return _FIT_CACHE[key]
+    return _fit(spark, sf_dir)[0]
 
 
 def _assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # check-then-read under the lock: evict_fit_caches (wired into
-    # live-dashboard server_close) may pop the key between an unlocked
-    # membership test and the read; loop so a concurrent eviction just
-    # triggers a re-fit instead of a KeyError on a live request thread
-    key = (spark.sparkContext.applicationId, sf_dir)
-    while True:
-        with _FIT_LOCK:
-            df = _ASSIGN_CACHE.get(key)
-        if df is not None:
-            return df
-        fitted_centroids(spark, sf_dir)
-
-
-def evict_fit_caches(
-    app_id: str | None = None, sf_dir: str | None = None
-) -> int:
-    """Release the session-memoized fits and persisted assignment
-    frames. The module caches are keyed by (applicationId, sf_dir) and
-    otherwise live for the process — fine for one bench/driver run, but
-    a long-lived live-dashboard server cycling through many sf_dirs
-    would accumulate persisted frames indefinitely (r7 advice). Filters
-    are ANDed; with both None everything is evicted. Returns the number
-    of cache entries dropped; unpersist failures (e.g. a stopped
-    SparkContext) are swallowed — eviction must always succeed."""
-    # the decontamination bench matrix lives in queries/similarity but
-    # is keyed identically — evicted through the same seam (r11 review)
-    from . import similarity as _sim
-
-    dropped = 0
-    with _FIT_LOCK:
-        for cache in (
-            _FIT_CACHE,
-            _ASSIGN_CACHE,
-            _SPLIT_CACHE,
-            _DOC_ASSIGN_CACHE,
-            _GREEDY_ASSIGN_CACHE,
-            _DRIFT_REPORT_CACHE,
-            _sim._EMBENCH_CACHE,
-        ):
-            for key in [
-                k
-                for k in cache
-                if (app_id is None or k[0] == app_id)
-                and (sf_dir is None or k[1] == sf_dir)
-            ]:
-                val = cache.pop(key)
-                dropped += 1
-                if isinstance(val, DataFrame):
-                    try:
-                        val.unpersist()
-                    except Exception:
-                        pass
-    return dropped
+    return _fit(spark, sf_dir)[1]
 
 
 def _with_cte(select: str) -> str:
@@ -448,25 +382,16 @@ def _semdedup(
     ).withColumn("nrm", _norm(F.col("vec")))
     assigned = _assignments(spark, sf_dir).select("vec_id", "cluster")
     if split_oversized:
-        # session-memoized like the parent fit: the refined frame is
-        # persisted (multiple consumers), so repeat calls must reuse
-        # one frame, not pin a new one each time; evict_fit_caches
-        # releases it with the rest of the per-(app, sf_dir) caches
-        key = (
-            spark.sparkContext.applicationId, sf_dir, ceiling, sub_k,
+        # split_oversized_assignments persists the refined frame (several
+        # consumers), so repeat calls share the session's one frame
+        # instead of pinning a new one each
+        parent = assigned
+        assigned = session_memo(
+            spark, "clustering.split", (sf_dir, ceiling, sub_k),
+            lambda: split_oversized_assignments(
+                parent, emb, ceiling=ceiling, sub_k=sub_k
+            ),
         )
-        # the fill holds the lock across the refit, like
-        # fitted_centroids: a check-compute-setdefault race would run
-        # duplicate grouped refits (minutes of driver-blocking Lloyd
-        # jobs) and throw one away — the exact scenario _FIT_LOCK
-        # exists to prevent
-        with _FIT_LOCK:
-            cached = _SPLIT_CACHE.get(key)
-            if cached is None:
-                cached = _SPLIT_CACHE[key] = split_oversized_assignments(
-                    assigned, emb, ceiling=ceiling, sub_k=sub_k
-                )
-        assigned = cached
     else:
         guard_cluster_sizes(assigned, ceiling)
     # r13 (guide §2.4): the assignment⋈vector join runs ONCE and both
@@ -620,25 +545,22 @@ def _doc_kmeans_oracle() -> str:
     return f"WITH {cte}\n    SELECT doc_id, cluster, dist2 FROM {final}"
 
 
-_DOC_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _doc_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized document topic assignment (one fit per
     (session, sf_dir) — shared by document_topic_clusters and the
     cluster-aware mixture plan)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _FIT_LOCK:
-        if key not in _DOC_ASSIGN_CACHE:
-            vecs = _doc_vectors(spark, sf_dir)
-            centroids, quantized = ops.kmeans_fit(
-                vecs, k=_DOC_K, iters=_DOC_ITERS, id_col="doc_id",
-                vec_col="v", quantize=False,
-            )
-            _DOC_ASSIGN_CACHE[key] = ops.assign_clusters(
-                quantized, centroids, id_col="doc_id"
-            ).persist()
-        return _DOC_ASSIGN_CACHE[key]
+
+    def build() -> DataFrame:
+        vecs = _doc_vectors(spark, sf_dir)
+        centroids, quantized = ops.kmeans_fit(
+            vecs, k=_DOC_K, iters=_DOC_ITERS, id_col="doc_id",
+            vec_col="v", quantize=False,
+        )
+        return ops.assign_clusters(
+            quantized, centroids, id_col="doc_id"
+        ).persist()
+
+    return session_memo(spark, "clustering.doc_assign", (sf_dir,), build)
 
 
 @register(
@@ -821,7 +743,6 @@ def cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GREEDY_K = 6
 _GREEDY_ITERS = 2
-_GREEDY_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _greedy_oracle() -> str:
@@ -829,20 +750,6 @@ def _greedy_oracle() -> str:
         _GREEDY_K, _GREEDY_ITERS, init="greedy"
     )
     return f"WITH {cte}\n    SELECT vec_id, cluster, dist2 FROM {final}"
-
-
-def _greedy_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _FIT_LOCK:  # threaded dashboard: no duplicate fits/leaked frames
-        if key not in _GREEDY_ASSIGN_CACHE:
-            emb = tables.load_table(spark, sf_dir, "embeddings")
-            centroids, quantized = ops.kmeans_fit(
-                emb, k=_GREEDY_K, iters=_GREEDY_ITERS, init="greedy"
-            )
-            _GREEDY_ASSIGN_CACHE[key] = ops.assign_clusters(
-                quantized, centroids
-            ).persist()
-        return _GREEDY_ASSIGN_CACHE[key]
 
 
 @register(
@@ -858,7 +765,11 @@ def embedding_kmeans_greedy_assign(
     k-1 greedy selection rounds (min-dist-to-chosen argmax, integer d2,
     ties by lowest id) AND the Lloyd iterations — every stage
     bit-identical across engines. Assignment itself stays map-only."""
-    return _greedy_assignments(spark, sf_dir)
+    emb = tables.load_table(spark, sf_dir, "embeddings")
+    centroids, quantized = ops.kmeans_fit(
+        emb, k=_GREEDY_K, iters=_GREEDY_ITERS, init="greedy"
+    )
+    return ops.assign_clusters(quantized, centroids).persist()
 
 
 _DOC_BALANCE_CAP = 50
@@ -963,9 +874,6 @@ def _embedding_drift_oracle() -> str:
     """
 
 
-_DRIFT_REPORT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "embedding_drift_report", memo=True, oracle=_embedding_drift_oracle()
 )
@@ -981,24 +889,20 @@ def embedding_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-oracled: the oracle replays the fit on the even slice and the
     full-corpus assignment. Map-only scoring over one corpus pass +
     one k-sized rollup."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _FIT_LOCK:  # threaded dashboard: no duplicate fits/leaked frames
-        if key in _DRIFT_REPORT_CACHE:
-            return _DRIFT_REPORT_CACHE[key]
-        emb = tables.load_table(spark, sf_dir, "embeddings")
-        fit_slice = emb.where(F.pmod(F.col("vec_id"), F.lit(2)) == 0)
-        centroids, fit_quantized = ops.kmeans_fit(
-            fit_slice, k=_DRIFT_K, iters=_DRIFT_ITERS
-        )
-        # the fit-slice cache serves no further reads here — the drift
-        # scoring re-quantizes the FULL corpus in one map-only pass
-        fit_quantized.unpersist()
-        quant_all = emb.select(
-            "vec_id", ops.quantize_expr(F.col("embedding")).alias("v")
-        )
-        assigned = ops.assign_clusters(quant_all, centroids)
-        is_new = F.pmod(F.col("vec_id"), F.lit(2)) == 1
-        _DRIFT_REPORT_CACHE[key] = report = (
+    emb = tables.load_table(spark, sf_dir, "embeddings")
+    fit_slice = emb.where(F.pmod(F.col("vec_id"), F.lit(2)) == 0)
+    centroids, fit_quantized = ops.kmeans_fit(
+        fit_slice, k=_DRIFT_K, iters=_DRIFT_ITERS
+    )
+    # the fit-slice cache serves no further reads here — the drift
+    # scoring re-quantizes the FULL corpus in one map-only pass
+    fit_quantized.unpersist()
+    quant_all = emb.select(
+        "vec_id", ops.quantize_expr(F.col("embedding")).alias("v")
+    )
+    assigned = ops.assign_clusters(quant_all, centroids)
+    is_new = F.pmod(F.col("vec_id"), F.lit(2)) == 1
+    return (
         assigned.groupBy("cluster")
         .agg(
             F.sum(F.when(~is_new, 1).otherwise(0))
@@ -1021,5 +925,4 @@ def embedding_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("stable")),
         )
         .orderBy("cluster")
-        )
-        return report
+    )

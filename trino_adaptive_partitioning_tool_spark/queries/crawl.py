@@ -18,10 +18,16 @@ the extraction stage itself, so nothing wide ever crosses a shuffle.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from ..operators import crawl as cops
+from ..sources import tables
 from .registry import register
 
 _N_SHARDS = 64  # x 4 records/shard = 256 records
@@ -242,23 +248,21 @@ from ..operators import jsonl as jops
 
 jops_corrupt_sql = jops.corrupt_pred_sql() + " AS corrupt"
 
-_JSONL_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _jsonl_shards(spark: SparkSession, sf_dir: str) -> str:
     """Write-once gzip JSONL shards derived from the documents table
     (operators/jsonl.write_jsonl_gz), memoized per (session, sf_dir) so
-    bench repetitions price the READ path, not the synth write."""
-    import tempfile
+    bench repetitions price the READ path, not the synth write. The
+    directory is removed at interpreter exit."""
 
-    from ..sources import tables as _tables
+    def write() -> str:
+        tmp = tempfile.mkdtemp(prefix="tapt_jsonl_")
+        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+        path = tmp + "/docs"
+        jops.write_jsonl_gz(tables.load_table(spark, sf_dir, "documents"), path)
+        return path
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _JSONL_CACHE:
-        path = tempfile.mkdtemp(prefix="tapt_jsonl_") + "/docs"
-        jops.write_jsonl_gz(_tables.load_table(spark, sf_dir, "documents"), path)
-        _JSONL_CACHE[key] = path
-    return _JSONL_CACHE[key]
+    return session_memo(spark, "crawl.jsonl", (sf_dir,), write)
 
 
 # shared by the batch query below and the streaming twin

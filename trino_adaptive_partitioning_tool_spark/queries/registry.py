@@ -15,19 +15,10 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..memo import session_memo
+
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
-
-# Prepared-plan cache (opt-in via register(..., memo=True)) for queries
-# whose LOGICAL PLAN construction alone costs real driver time (hundreds
-# of Py4J column-expression round trips). The plan for a given (session,
-# sf_dir, query) is immutable — rebuilding it per call is pure waste,
-# exactly what prepared statements avoid. Execution still runs normally
-# on every call; only the lazy DataFrame object is reused.
-# Keyed by applicationId (unique per SparkContext lifetime), NOT
-# id(spark): a stopped session's id() can be reused by a new one, which
-# would hand back a DataFrame bound to a dead session.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def register(
@@ -35,11 +26,15 @@ def register(
 ) -> Callable[[Callable[..., Any]], Callable[..., Any]]:
     def deco(fn: Callable[..., Any]) -> Callable[..., Any]:
         if memo:
+            # a prepared plan: for queries whose logical-plan build alone
+            # costs real driver time (hundreds of Py4J column-expression
+            # round trips), the plan per (session, sf_dir) is built once;
+            # every call still executes it
             def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = (spark.sparkContext.applicationId, sf_dir, name)
-                if key not in _PLAN_CACHE:
-                    _PLAN_CACHE[key] = fn(spark, sf_dir)
-                return _PLAN_CACHE[key]
+                return session_memo(
+                    spark, "registry.plan", (sf_dir, name),
+                    lambda: fn(spark, sf_dir),
+                )
 
             wrapped.__doc__ = fn.__doc__
             wrapped.__name__ = fn.__name__

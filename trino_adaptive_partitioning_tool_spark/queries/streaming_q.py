@@ -9,32 +9,34 @@ equivalence is asserted in tests/test_streaming.py.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..memo import session_memo
 from ..sources import fixtures
 from ..streaming import query_log_stream as qls
 from .multimodal import MIXED_CORPUS_ORACLE
 from .registry import register
 
 
-# Session-cached streaming feed directories: feed CONTENTS are a pure
-# function of (sf_dir, variant), and each streaming query runs several
-# times per session (digest fold + direct row + parity tests), so the
-# feed is written once per session. Checkpoint dirs are NEVER cached —
-# a reused checkpoint replays committed offsets and drains nothing.
-_FEED_CACHE: dict[tuple, str] = {}
-
-
+# Session-memoized streaming feed directories, removed at interpreter
+# exit: feed CONTENTS are a pure function of (sf_dir, variant), and each
+# streaming query runs several times per session (digest fold + direct
+# row + parity tests), so the feed is written once per session.
+# Checkpoint dirs are NEVER memoized — a reused checkpoint replays
+# committed offsets and drains nothing.
 def _memo_feed(spark: SparkSession, variant: str, sf_dir: str, write) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key not in _FEED_CACHE:
+    def build() -> str:
         tmp = tempfile.mkdtemp(prefix=f"tapt_feed_{variant}_")
+        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
         write(tmp)
-        _FEED_CACHE[key] = tmp
-    return _FEED_CACHE[key]
+        return tmp
+
+    return session_memo(spark, "streaming_q.feed", (sf_dir, variant), build)
 
 
 def _fresh_ckpt() -> str:

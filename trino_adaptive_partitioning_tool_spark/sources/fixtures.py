@@ -24,6 +24,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..memo import session_memo
+
 QUERY_LOG_COLUMNS = (
     "query_id",
     "query",
@@ -270,21 +272,15 @@ VIEW_COLUMN_ROWS: list[tuple[str, str]] = [
 # LocalRelations together) drops the per-query fixed cost ~5x. If a
 # test's clearCache() evicts the blocks the frame silently recomputes —
 # correctness never depends on the cache.
-_FIXTURE_DF_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _memo_df(spark: SparkSession, key: str, rows, schema) -> DataFrame:
     from pyspark import StorageLevel
 
-    k = (spark.sparkContext.applicationId, key)
-    df = _FIXTURE_DF_CACHE.get(k)
-    if df is None:
-        df = spark.createDataFrame(
+    return session_memo(
+        spark, "fixtures.frame", (None, key),
+        lambda: spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 2), schema=schema
-        )
-        df.persist(StorageLevel.MEMORY_ONLY)
-        _FIXTURE_DF_CACHE[k] = df
-    return df
+        ).persist(StorageLevel.MEMORY_ONLY),
+    )
 
 
 def view_columns_fixture_df(spark: SparkSession) -> DataFrame:

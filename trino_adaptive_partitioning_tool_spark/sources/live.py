@@ -26,12 +26,15 @@ service.
 from __future__ import annotations
 
 import json
+import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..memo import evict, session_memo
 
 _ROW_CAP = 500
 
@@ -188,12 +191,8 @@ class _Handler(BaseHTTPRequestHandler):
         return html.replace("<body>", "<body>" + toolbar, 1)
 
 
-# live servers per (applicationId, sf_dir): the clustering fit caches
-# are keyed the same way, so eviction on close must wait for the LAST
-# server sharing the key — closing one of two concurrent dashboards
-# (or one racing a bench on the same sf_dir) used to drop fits still
-# in use and trigger silent re-fits (r8 advice)
-_SERVER_REFS: dict[tuple[str, str], int] = {}
+# servers open and close on different threads
+_REFS_LOCK = threading.Lock()
 
 
 def serve_dashboard(
@@ -202,18 +201,22 @@ def serve_dashboard(
     """Bind the live dashboard on localhost:port (0 = ephemeral) and
     return the server (caller drives serve_forever / shutdown — the CLI
     runs it in the foreground, tests in a thread). server_close()
-    additionally releases this sf_dir's session-memoized clustering
-    fits and persisted assignment frames (queries/clustering caches) —
-    a long-lived server cycling through many sf_dirs must not
-    accumulate executor memory (r7 advice). Eviction is
-    reference-counted per (applicationId, sf_dir): with several servers
-    (or repeated open/close cycles) on the same key, only the last
-    close evicts."""
+    additionally evicts this sf_dir's session-memo entries and
+    unpersists their frames, so a long-lived process cycling through
+    many sf_dirs does not accumulate executor memory. Eviction is
+    reference-counted per (session, sf_dir): with several servers (or a
+    server and a bench) on the same sf_dir, only the last close evicts;
+    an earlier one would drop fits still in use and force silent
+    re-fits."""
     handler = type(
         "BoundHandler", (_Handler,), {"spark": spark, "sf_dir": sf_dir}
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _SERVER_REFS[key] = _SERVER_REFS.get(key, 0) + 1
+    app_id = spark.sparkContext.applicationId
+    # live servers on this (session, sf_dir); its key leads with None so
+    # the eviction it triggers does not reset it
+    refs = session_memo(spark, "live.servers", (None, sf_dir), lambda: [0])
+    with _REFS_LOCK:
+        refs[0] += 1
 
     class _Server(ThreadingHTTPServer):
         _closed = False
@@ -223,15 +226,9 @@ def serve_dashboard(
             if self._closed:
                 return  # stdlib allows repeated close; decrement once
             self._closed = True
-            _SERVER_REFS[key] = _SERVER_REFS.get(key, 1) - 1
-            if _SERVER_REFS[key] > 0:
-                return  # other servers still share this key's caches
-            _SERVER_REFS.pop(key, None)
-            try:
-                from ..queries.clustering import evict_fit_caches
-
-                evict_fit_caches(app_id=key[0], sf_dir=sf_dir)
-            except Exception:
-                pass  # eviction is best-effort; closing must not raise
+            with _REFS_LOCK:
+                refs[0] -= 1
+                if refs[0] == 0:
+                    evict(app_id, sf_dir)
 
     return _Server(("127.0.0.1", port), handler)
