@@ -467,7 +467,10 @@ def main() -> None:
     except OSError:  # pragma: no cover - platform without getloadavg
         load_start_1m = None
 
-    from trino_adaptive_partitioning_tool_spark.session import get_spark
+    from trino_adaptive_partitioning_tool_spark.session import (
+        default_parallelism,
+        get_spark,
+    )
     from trino_adaptive_partitioning_tool_spark.queries import registry
 
     spark = get_spark(app_name="bench")
@@ -668,7 +671,7 @@ def main() -> None:
     # session-memo fits and persist materialization again: the cold-rep
     # pricing the regression budget relies on stays honest.
     quiet_start = load_start_1m is not None and load_start_1m <= QUIET_LOAD_GATE
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     anchor_gate = _anchor_quiet_gate(cpus)
     slow_anchor = (
         anchor_gate is not None

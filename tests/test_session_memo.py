@@ -109,8 +109,19 @@ def test_fixture_log_query_ids_are_unique():
     assert len(ids) == len(set(ids))
 
 
+def _last_line_of(script: str) -> str:
+    """Run ``script`` in a fresh interpreter; its last stdout line."""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=120, cwd=_REPO,
+        env={**os.environ, "PYTHONPATH": _REPO},
+    )
+    assert out.returncode == 0, out.stderr
+    return out.stdout.strip().splitlines()[-1]
+
+
 def test_memoized_feed_dir_removed_at_exit():
-    script = (
+    feed = _last_line_of(
         "import types\n"
         "from trino_adaptive_partitioning_tool_spark.queries import streaming_q\n"
         "spark = types.SimpleNamespace(\n"
@@ -119,12 +130,18 @@ def test_memoized_feed_dir_removed_at_exit():
         "    open(d + '/part-0.json', 'w').write('{}')\n"
         "print(streaming_q._memo_feed(spark, 'probe', '/data', write))\n"
     )
-    out = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True, text=True, timeout=120, cwd=_REPO,
-        env={**os.environ, "PYTHONPATH": _REPO},
-    )
-    assert out.returncode == 0, out.stderr
-    feed = out.stdout.strip().splitlines()[-1]
     assert "tapt_feed_probe_" in feed
     assert not os.path.exists(feed)
+
+
+def test_checkpoint_dir_removed_at_exit():
+    ckpt = _last_line_of(
+        "import os\n"
+        "from trino_adaptive_partitioning_tool_spark.queries import streaming_q\n"
+        "ckpt = streaming_q._fresh_ckpt()\n"
+        "os.makedirs(ckpt + '/offsets')\n"
+        "print(ckpt)\n"
+    )
+    tmp = os.path.dirname(ckpt)
+    assert os.path.basename(tmp).startswith("tapt_ckpt_")
+    assert not os.path.exists(tmp)

@@ -188,3 +188,18 @@ def test_mined_fixture_logs_shared_and_equal(spark):
     assert sorted(map(tuple, a.collect())) == sorted(
         map(tuple, direct.collect())
     )
+
+
+def test_relative_sf_dir_loads_every_table(spark, monkeypatch):
+    """Run from the data dir's parent, a relative sf_dir still loads
+    every table with its original row count: the twin's symlinks point
+    at absolute paths, not at paths relative to the twin."""
+    monkeypatch.delenv("SPARK_GRAFT_SPLIT_LAYOUT", raising=False)
+    monkeypatch.chdir(os.path.dirname(PARITY_SF_DIR))
+    rel = os.path.basename(PARITY_SF_DIR)
+    twin = tables.split_layout_dir(rel)
+    assert twin != rel
+    for t in tables.TABLES:
+        n = pq.ParquetFile(f"{PARITY_SF_DIR}/{t}.parquet").metadata.num_rows
+        assert os.path.exists(f"{twin}/{t}.parquet"), t
+        assert tables.load_table(spark, rel, t).count() == n, t

@@ -24,7 +24,7 @@ implementations exist behind one dispatch seam:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Protocol, runtime_checkable
 
 import numpy as np
@@ -131,8 +131,8 @@ def synth_ppm_assets(
     )
 
 
-# shared by every real-format synth generator (PNG/WAV/Y4M): the asset
-# table contract — (asset_id, media_type, payload, typed meta struct)
+# the asset table every real-format synth generator emits:
+# (asset_id, media_type, payload, typed meta struct)
 SYNTH_ASSET_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -155,6 +155,73 @@ SYNTH_ASSET_SCHEMA = T.StructType(
 )
 
 
+def _encoded_assets(
+    spark: SparkSession,
+    n: int,
+    partitions: int,
+    encode: Callable[[int], tuple],
+) -> DataFrame:
+    """The Arrow encode stage every real-format generator runs: one
+    SYNTH_ASSET_SCHEMA row per id of spark.range(0, n, 1, partitions),
+    ``(asset_id, *encode(asset_id))`` where ``encode`` returns
+    ``(media_type, payload, meta)`` — batched pandas over binary
+    columns, the same stage shape as the production decode path."""
+
+    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(aid, *encode(aid)) for aid in map(int, pdf["id"])],
+                columns=SYNTH_ASSET_SCHEMA.names,
+            )
+
+    return spark.range(0, n, 1, partitions).mapInPandas(
+        _encode, schema=SYNTH_ASSET_SCHEMA
+    )
+
+
+def _digest(key) -> bytes:
+    return hashlib.md5(str(key).encode()).digest()
+
+
+def _digest_cycle(key, need: int) -> bytes:
+    """``need`` bytes cycling the 16 md5 digest bytes of ``key`` (byte j
+    is d[j % 16]): the no-RNG convention the oracles replay."""
+    return (_digest(key) * (need // 16 + 1))[:need]
+
+
+def _block_stream(key, need: int) -> bytes:
+    """``need`` bytes of md5(f"{key}|0") + md5(f"{key}|1") + ...: a
+    full-entropy stream, one md5 per 16-byte block. The single-digest
+    cycle repeats gray values every 16/gcd(ch,16) pixels, which would
+    collapse a hash space that has to keep unrelated assets ~N/2 bits
+    apart."""
+    return b"".join(
+        _digest(f"{key}|{blk}") for blk in range(need // 16 + 1)
+    )[:need]
+
+
+def _digest_raster(key, h: int, w: int, ch: int) -> np.ndarray:
+    return np.frombuffer(_digest_cycle(key, h * w * ch), np.uint8).reshape(
+        h, w, ch
+    )
+
+
+def _block_plane(values, mh: int, mw: int) -> np.ndarray:
+    """An (8*mh, 8*mw) plane of constant 8x8 blocks, block m (raster
+    order) = values[m]."""
+    blocks = np.array(values, np.uint8).reshape(mh, mw)
+    return np.repeat(np.repeat(blocks, 8, 0), 8, 1)
+
+
+def _ycc_planes(d: bytes, mh: int, mw: int) -> tuple[np.ndarray, ...]:
+    """Y/Cb/Cr block planes of the constant-block JPEG convention: block
+    m has Y = d[m % 16], Cb = d[(3m+5) % 16], Cr = d[(3m+11) % 16]."""
+    return tuple(
+        _block_plane([d[(k * m + off) % 16] for m in range(mw * mh)], mh, mw)
+        for k, off in ((1, 0), (3, 5), (3, 11))
+    )
+
+
 def synth_png_assets(
     spark: SparkSession, n: int = 256, partitions: int = 8
 ) -> DataFrame:
@@ -173,48 +240,17 @@ def synth_png_assets(
     decoder must reassemble passes and/or materialize the palette.
     Encoding runs in the SAME Arrow mapInPandas stage shape as the
     production decode path (batched pandas over binary columns)."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 6 + 2).cast("int").alias("w"),
-        (F.col("id") % 4 + 2).cast("int").alias("h"),
-        F.element_at(
-            F.array(F.lit(1), F.lit(3), F.lit(4)),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("ch"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        w, h, ch = aid % 6 + 2, aid % 4 + 2, (1, 3, 4)[aid % 3]
+        payload = PixmapCodec._encode_png(
+            _digest_raster(aid, h, w, ch),
+            interlace=aid % 5 == 2,
+            palette=aid % 7 == 3 and ch != 1,
+        )
+        return "image", payload, (w, h, None, None, "png")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h, ch in zip(
-                pdf["asset_id"], pdf["w"], pdf["h"], pdf["ch"]
-            ):
-                aid, w, h, ch = int(aid), int(w), int(h), int(ch)
-                digest = hashlib.md5(str(aid).encode()).digest()
-                need = w * h * ch
-                px = np.frombuffer(
-                    (digest * (need // 16 + 1))[:need], dtype=np.uint8
-                ).reshape(h, w, ch)
-                rows.append(
-                    (
-                        aid,
-                        "image",
-                        PixmapCodec._encode_png(
-                            px,
-                            interlace=aid % 5 == 2,
-                            palette=aid % 7 == 3 and ch != 1,
-                        ),
-                        (w, h, None, None, "png"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_webp_assets(
@@ -227,43 +263,13 @@ def synth_webp_assets(
     digest-arithmetic oracle applies. VP8L is always RGB(A): channel
     count alternates 3/4 via asset_id % 2 and rides the header's
     alpha-hint bit, so both paths are separately certified."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 6 + 2).cast("int").alias("w"),
-        (F.col("id") % 4 + 2).cast("int").alias("h"),
-        F.element_at(
-            F.array(F.lit(3), F.lit(4)), (F.col("id") % 2 + 1).cast("int")
-        ).alias("ch"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        w, h, ch = aid % 6 + 2, aid % 4 + 2, (3, 4)[aid % 2]
+        payload = PixmapCodec._encode_webp(_digest_raster(aid, h, w, ch))
+        return "image", payload, (w, h, None, None, "webp")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h, ch in zip(
-                pdf["asset_id"], pdf["w"], pdf["h"], pdf["ch"]
-            ):
-                aid, w, h, ch = int(aid), int(w), int(h), int(ch)
-                digest = hashlib.md5(str(aid).encode()).digest()
-                need = w * h * ch
-                px = np.frombuffer(
-                    (digest * (need // 16 + 1))[:need], dtype=np.uint8
-                ).reshape(h, w, ch)
-                rows.append(
-                    (
-                        aid,
-                        "image",
-                        PixmapCodec._encode_webp(px),
-                        (w, h, None, None, "webp"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def _WEBP_LZ_VARIANTS(aid: int) -> dict:
@@ -301,52 +307,18 @@ def synth_webp_lz_assets(
     The decoded image's mean equals the BASE tile's mean (each base
     pixel appears exactly r times), so the digest-arithmetic DuckDB
     oracle convention still applies without parsing VP8L."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 5 + 3).cast("int").alias("w"),
-        (F.col("id") % 7 + 2).cast("int").alias("h0"),
-        (F.col("id") % 3 + 2).cast("int").alias("r"),
-        F.element_at(
-            F.array(F.lit(3), F.lit(4)), (F.col("id") % 2 + 1).cast("int")
-        ).alias("ch"),
-        (F.col("id") % 11 + 1).cast("int").alias("cache_bits"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        w, h0, r, ch = aid % 5 + 3, aid % 7 + 2, aid % 3 + 2, (3, 4)[aid % 2]
+        payload = PixmapCodec._encode_webp(
+            np.tile(_digest_raster(aid, h0, w, ch), (r, 1, 1)),
+            backrefs=True,
+            cache_bits=aid % 11 + 1,
+            **_WEBP_LZ_VARIANTS(aid),
+        )
+        return "image", payload, (w, h0 * r, None, None, "webp")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h0, r, ch, cb in zip(
-                pdf["asset_id"], pdf["w"], pdf["h0"], pdf["r"],
-                pdf["ch"], pdf["cache_bits"],
-            ):
-                aid, w, h0, r, ch, cb = (
-                    int(aid), int(w), int(h0), int(r), int(ch), int(cb)
-                )
-                digest = hashlib.md5(str(aid).encode()).digest()
-                need = h0 * w * ch
-                tile = np.frombuffer(
-                    (digest * (need // 16 + 1))[:need], dtype=np.uint8
-                ).reshape(h0, w, ch)
-                px = np.tile(tile, (r, 1, 1))
-                rows.append(
-                    (
-                        aid,
-                        "image",
-                        PixmapCodec._encode_webp(
-                            px, backrefs=True, cache_bits=cb,
-                            **_WEBP_LZ_VARIANTS(aid),
-                        ),
-                        (w, h0 * r, None, None, "webp"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_png_depth_assets(
@@ -360,68 +332,23 @@ def synth_png_depth_assets(
     MSB-first. Every fifth asset is Adam7-interlaced so the packed and
     16-bit scanline math is exercised per-pass, not just sequentially.
     The decoded mean stays digest-arithmetic for the DuckDB oracle."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 6 + 2).cast("int").alias("w"),
-        (F.col("id") % 4 + 2).cast("int").alias("h"),
-        F.element_at(
-            F.array(F.lit(1), F.lit(2), F.lit(4), F.lit(16)),
-            (F.col("id") % 4 + 1).cast("int"),
-        ).alias("depth"),
-        F.element_at(
-            F.array(F.lit(1), F.lit(3), F.lit(4)),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("ch16"),
-        (F.col("id") % 5 == 0).alias("interlace"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        w, h, depth = aid % 6 + 2, aid % 4 + 2, (1, 2, 4, 16)[aid % 4]
+        if depth == 16:
+            ch = (1, 3, 4)[aid % 3]
+            raw = np.frombuffer(
+                _digest_cycle(aid, w * h * ch * 2), np.uint8
+            ).astype(np.uint16)
+            px = ((raw[0::2] << 8) | raw[1::2]).reshape(h, w, ch)
+        else:
+            px = (_digest_raster(aid, h, w, 1) % (1 << depth)).astype(np.uint8)
+        payload = PixmapCodec._encode_png(
+            px, interlace=aid % 5 == 0, depth=depth
+        )
+        return "image", payload, (w, h, None, None, "png")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h, depth, ch16, inter in zip(
-                pdf["asset_id"], pdf["w"], pdf["h"], pdf["depth"],
-                pdf["ch16"], pdf["interlace"],
-            ):
-                aid, w, h, depth, ch16 = (
-                    int(aid), int(w), int(h), int(depth), int(ch16)
-                )
-                digest = hashlib.md5(str(aid).encode()).digest()
-                if depth == 16:
-                    ch = ch16
-                    need = w * h * ch * 2
-                    raw = np.frombuffer(
-                        (digest * (need // 16 + 1))[:need], np.uint8
-                    ).astype(np.uint16)
-                    px = (
-                        (raw[0::2] << 8) | raw[1::2]
-                    ).reshape(h, w, ch)
-                else:
-                    ch = 1
-                    need = w * h
-                    raw = np.frombuffer(
-                        (digest * (need // 16 + 1))[:need], np.uint8
-                    )
-                    px = (raw % (1 << depth)).astype(np.uint8).reshape(
-                        h, w, 1
-                    )
-                rows.append(
-                    (
-                        aid,
-                        "image",
-                        PixmapCodec._encode_png(
-                            px, interlace=bool(inter), depth=depth
-                        ),
-                        (w, h, None, None, "png"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_wav_assets(
@@ -434,39 +361,17 @@ def synth_wav_assets(
     re-derives the decoded amplitude stats without parsing WAV. Frame
     count and channel count vary per asset so chunk walking and
     block-align handling are exercised, not a fixed offset."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 50 + 10).cast("int").alias("frames"),
-        (F.col("id") % 2 + 1).cast("int").alias("channels"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        frames, ch = aid % 50 + 10, aid % 2 + 1
+        samples = np.frombuffer(_digest_cycle(aid, frames * ch * 2), "<i2")
+        return (
+            "audio",
+            PixmapCodec._encode_wav(samples, ch),
+            (frames, ch, 16000, frames * 1000 // 16000, "wav"),
+        )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, frames, ch in zip(
-                pdf["asset_id"], pdf["frames"], pdf["channels"]
-            ):
-                aid, frames, ch = int(aid), int(frames), int(ch)
-                digest = hashlib.md5(str(aid).encode()).digest()
-                need = frames * ch * 2
-                raw = (digest * (need // 16 + 1))[:need]
-                samples = np.frombuffer(raw, dtype="<i2")
-                rows.append(
-                    (
-                        aid,
-                        "audio",
-                        PixmapCodec._encode_wav(samples, ch),
-                        (frames, ch, 16000, frames * 1000 // 16000, "wav"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_adpcm_assets(
@@ -481,42 +386,22 @@ def synth_adpcm_assets(
     quantizer state machine from the same digest arithmetic with a
     recursive CTE, so a green row certifies every predictor update,
     step-ladder move and clamp across every sample."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 3 + 1).cast("int").alias("n_blocks"),
-        (F.col("id") % 5 + 3).cast("int").alias("half_nibs"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        n_nib = 2 * (aid % 5 + 3)
+        blocks = []
+        for b in range(aid % 3 + 1):
+            hb = _digest(f"{aid}|{b}")
+            nibs = [
+                (hb[(3 + j // 2) % 16] >> (4 * (j % 2))) & 0xF
+                for j in range(n_nib)
+            ]
+            pred = int.from_bytes(hb[0:2], "little", signed=True)
+            blocks.append((pred, hb[2] % 89, nibs))
+        payload = PixmapCodec._encode_wav_adpcm(blocks)
+        return "audio", payload, (None, None, 8000, None, "wav")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, n_blocks, half in zip(
-                pdf["asset_id"], pdf["n_blocks"], pdf["half_nibs"]
-            ):
-                aid, n_blocks, half = int(aid), int(n_blocks), int(half)
-                n_nib = 2 * half
-                blocks = []
-                for b in range(n_blocks):
-                    hb = hashlib.md5(f"{aid}|{b}".encode()).digest()
-                    pred = int.from_bytes(hb[0:2], "little", signed=True)
-                    idx = hb[2] % 89
-                    nibs = [
-                        (hb[(3 + j // 2) % 16] >> (4 * (j % 2))) & 0xF
-                        for j in range(n_nib)
-                    ]
-                    blocks.append((pred, idx, nibs))
-                payload = PixmapCodec._encode_wav_adpcm(blocks)
-                rows.append(
-                    (aid, "audio", payload, (None, None, 8000, None, "wav"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_aiff_assets(
@@ -528,39 +413,17 @@ def synth_aiff_assets(
     samples little-endian produces different amplitudes and fails the
     oracle. Exercises the FORM/COMM/SSND chunk walk and the 80-bit
     extended sample-rate parse."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 50 + 10).cast("int").alias("frames"),
-        (F.col("id") % 2 + 1).cast("int").alias("channels"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        frames, ch = aid % 50 + 10, aid % 2 + 1
+        samples = np.frombuffer(_digest_cycle(aid, frames * ch * 2), ">i2")
+        return (
+            "audio",
+            PixmapCodec._encode_aiff(samples, ch),
+            (frames, ch, 16000, frames * 1000 // 16000, "aiff"),
+        )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, frames, ch in zip(
-                pdf["asset_id"], pdf["frames"], pdf["channels"]
-            ):
-                aid, frames, ch = int(aid), int(frames), int(ch)
-                d = hashlib.md5(str(aid).encode()).digest()
-                need = frames * ch * 2
-                raw = (d * (need // 16 + 1))[:need]
-                samples = np.frombuffer(raw, dtype=">i2")
-                rows.append(
-                    (
-                        aid,
-                        "audio",
-                        PixmapCodec._encode_aiff(samples, ch),
-                        (frames, ch, 16000, frames * 1000 // 16000, "aiff"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_mulaw_assets(
@@ -572,38 +435,19 @@ def synth_mulaw_assets(
     digest — pure integer arithmetic a DuckDB oracle replays. Frame and
     channel counts vary per asset (odd frame counts exercise the RIFF
     even-pad path)."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 49 + 10).cast("int").alias("frames"),
-        (F.col("id") % 2 + 1).cast("int").alias("channels"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        frames, ch = aid % 49 + 10, aid % 2 + 1
+        return (
+            "audio",
+            PixmapCodec._encode_wav_mulaw(_digest_cycle(aid, frames * ch), ch),
+            (frames, ch, 8000, frames * 1000 // 8000, "wav"),
+        )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, frames, ch in zip(
-                pdf["asset_id"], pdf["frames"], pdf["channels"]
-            ):
-                aid, frames, ch = int(aid), int(frames), int(ch)
-                d = hashlib.md5(str(aid).encode()).digest()
-                need = frames * ch
-                raw = (d * (need // 16 + 1))[:need]
-                rows.append(
-                    (
-                        aid,
-                        "audio",
-                        PixmapCodec._encode_wav_mulaw(raw, ch),
-                        (frames, ch, 8000, frames * 1000 // 8000, "wav"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
+    return _encoded_assets(spark, n, partitions, encode)
 
-    return base.mapInPandas(_encode, schema=schema)
+
+_FLAC_STEREO_MODES = ("independent", "left_side", "right_side", "mid_side")
 
 
 def synth_flac_assets(
@@ -621,69 +465,31 @@ def synth_flac_assets(
     subframe/residual path of the encoder round-trips through the
     decoder, whose CRC-8/CRC-16/MD5 gates make a silently-wrong decode
     impossible."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 50 + 10).cast("int").alias("frames"),
-        (F.col("id") % 2 + 1).cast("int").alias("channels"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
-    modes = ("independent", "left_side", "right_side", "mid_side")
+    def encode(aid: int):
+        frames, ch = aid % 50 + 10, aid % 2 + 1
+        samples = np.frombuffer(_digest_cycle(aid, frames * ch * 2), "<i2")
+        if aid % 7 == 0:
+            samples = np.full(frames * ch, samples[0], dtype=np.int16)
+        payload = PixmapCodec._encode_flac(
+            samples,
+            ch,
+            block_size=8 << (aid % 3),
+            stereo_mode=_FLAC_STEREO_MODES[(aid // 2) % 4 if ch == 2 else 0],
+            force_verbatim=aid % 11 == 3,
+            partition_order=1 if aid % 5 == 0 else 0,
+            force_escape=aid % 13 == 5,
+        )
+        return "audio", payload, (frames, ch, 16000, frames * 1000 // 16000, "flac")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, frames, ch in zip(
-                pdf["asset_id"], pdf["frames"], pdf["channels"]
-            ):
-                aid, frames, ch = int(aid), int(frames), int(ch)
-                digest = hashlib.md5(str(aid).encode()).digest()
-                if aid % 7 == 0:
-                    v = int(
-                        np.frombuffer(digest[:2], dtype="<i2")[0]
-                    )
-                    samples = np.full(frames * ch, v, dtype=np.int16)
-                else:
-                    need = frames * ch * 2
-                    raw = (digest * (need // 16 + 1))[:need]
-                    samples = np.frombuffer(raw, dtype="<i2")
-                payload = PixmapCodec._encode_flac(
-                    samples,
-                    ch,
-                    block_size=8 << (aid % 3),
-                    stereo_mode=modes[(aid // 2) % 4]
-                    if ch == 2
-                    else "independent",
-                    force_verbatim=aid % 11 == 3,
-                    partition_order=1 if aid % 5 == 0 else 0,
-                    force_escape=aid % 13 == 5,
-                )
-                rows.append(
-                    (
-                        aid,
-                        "audio",
-                        payload,
-                        (frames, ch, 16000, frames * 1000 // 16000, "flac"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
-def _y4m_base(spark: SparkSession, n: int, partitions: int) -> DataFrame:
-    """The pre-encode Y4M asset arithmetic (id → even dims, frame
-    count) — shared by the payload generator and y4m_dims so consumers
-    never re-run the encode stage just to read dimensions."""
-    return spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        ((F.col("id") % 3 + 1) * 2).cast("int").alias("w"),
-        ((F.col("id") % 2 + 1) * 2).cast("int").alias("h"),
-        (F.col("id") % 5 + 2).cast("int").alias("nf"),
-    )
+def _y4m_shape(i):
+    """(w, h, frames) of Y4M asset ``i`` — even dims (4:2:0 requires
+    them). Evaluated on the int id inside the encode stage and on the
+    id Column in y4m_dims, so the two share one formula."""
+    return (i % 3 + 1) * 2, (i % 2 + 1) * 2, i % 5 + 2
 
 
 def y4m_dims(
@@ -693,7 +499,12 @@ def y4m_dims(
     generation arithmetic alone. Column pruning cannot reach through
     mapInPandas, so selecting meta.width off synth_y4m_assets would
     re-run the whole encode stage — this projection costs nothing."""
-    return _y4m_base(spark, n, partitions).select("asset_id", "w", "h")
+    w, h, _nf = _y4m_shape(F.col("id"))
+    return spark.range(0, n, 1, partitions).select(
+        F.col("id").alias("asset_id"),
+        w.cast("int").alias("w"),
+        h.cast("int").alias("h"),
+    )
 
 
 def synth_y4m_assets(
@@ -706,39 +517,18 @@ def synth_y4m_assets(
     re-derive any frame's luma-plane mean positionally. Even dims (4:2:0
     requires them) and frame counts vary per asset, exercising the real
     stream walk, not a fixed offset."""
-    import hashlib
 
-    base = _y4m_base(spark, n, partitions)
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        w, h, nf = _y4m_shape(aid)
+        fsz = w * h * 3 // 2
+        data = _digest_cycle(aid, nf * fsz)
+        header = f"YUV4MPEG2 W{w} H{h} F10:1 Ip A1:1 C420\n".encode()
+        payload = header + b"".join(
+            b"FRAME\n" + data[k * fsz : (k + 1) * fsz] for k in range(nf)
+        )
+        return "video", payload, (w, h, None, nf * 100, "y4m")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h, nf in zip(
-                pdf["asset_id"], pdf["w"], pdf["h"], pdf["nf"]
-            ):
-                aid, w, h, nf = int(aid), int(w), int(h), int(nf)
-                digest = hashlib.md5(str(aid).encode()).digest()
-                fsz = w * h * 3 // 2
-                data = (digest * (nf * fsz // 16 + 1))[: nf * fsz]
-                payload = bytearray(
-                    f"YUV4MPEG2 W{w} H{h} F10:1 Ip A1:1 C420\n".encode()
-                )
-                for k in range(nf):
-                    payload += b"FRAME\n" + data[k * fsz : (k + 1) * fsz]
-                rows.append(
-                    (
-                        aid,
-                        "video",
-                        bytes(payload),
-                        (w, h, None, nf * 100, "y4m"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_jpeg_assets(
@@ -762,77 +552,38 @@ def synth_jpeg_assets(
       * MCU m chroma: Cb = d[(3m+5) % 16], Cr = d[(3m+11) % 16]
     where d = md5(asset_id) digest bytes. MCU grid is
     (id//3) % 3 + 1 wide by (id//9) % 2 + 1 tall."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 3).cast("int").alias("mode"),
-        ((F.col("id") / 3).cast("long") % 3 + 1).cast("int").alias("mw"),
-        ((F.col("id") / 9).cast("long") % 2 + 1).cast("int").alias("mh"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, mode, mw, mh in zip(
-                pdf["asset_id"], pdf["mode"], pdf["mw"], pdf["mh"]
-            ):
-                aid, mode, mw, mh = int(aid), int(mode), int(mw), int(mh)
-                d = hashlib.md5(str(aid).encode()).digest()
-                n_mcus = mw * mh
-                # every 4th asset carries restart markers (DRI + RSTn
-                # every 2 MCUs): the decoder's restart path is certified
-                # by the same oracle rows — decoded stats are identical
-                # with or without restarts
-                dri = 2 if aid % 4 == 3 else 0
-                cb_b = np.array(
-                    [d[(3 * m + 5) % 16] for m in range(n_mcus)], np.uint8
-                ).reshape(mh, mw)
-                cr_b = np.array(
-                    [d[(3 * m + 11) % 16] for m in range(n_mcus)], np.uint8
-                ).reshape(mh, mw)
-                if mode == 2:  # 4:2:0 — 4 raster-ordered luma blocks/MCU
-                    yb = np.zeros((2 * mh, 2 * mw), np.uint8)
-                    for m in range(n_mcus):
-                        my, mx = divmod(m, mw)
-                        for k in range(4):
-                            by, bx = divmod(k, 2)
-                            yb[2 * my + by, 2 * mx + bx] = d[(4 * m + k) % 16]
-                    payload = PixmapCodec._encode_jpeg(
-                        np.repeat(np.repeat(yb, 8, 0), 8, 1),
-                        np.repeat(np.repeat(cb_b, 8, 0), 8, 1),
-                        np.repeat(np.repeat(cr_b, 8, 0), 8, 1),
-                        subsampling="420",
-                        restart_interval=dri,
-                    )
-                    w, h = 16 * mw, 16 * mh
-                else:
-                    yb = np.array(
-                        [d[m % 16] for m in range(n_mcus)], np.uint8
-                    ).reshape(mh, mw)
-                    yp = np.repeat(np.repeat(yb, 8, 0), 8, 1)
-                    if mode == 0:  # grayscale
-                        payload = PixmapCodec._encode_jpeg(
-                            yp, restart_interval=dri
-                        )
-                    else:  # 4:4:4
-                        payload = PixmapCodec._encode_jpeg(
-                            yp,
-                            np.repeat(np.repeat(cb_b, 8, 0), 8, 1),
-                            np.repeat(np.repeat(cr_b, 8, 0), 8, 1),
-                            subsampling="444",
-                            restart_interval=dri,
-                        )
-                    w, h = 8 * mw, 8 * mh
-                rows.append(
-                    (aid, "image", payload, (w, h, None, None, "jpeg"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
+    def encode(aid: int):
+        mode, mw, mh = aid % 3, (aid // 3) % 3 + 1, (aid // 9) % 2 + 1
+        d = _digest(aid)
+        y, cb, cr = _ycc_planes(d, mh, mw)
+        # every 4th asset carries restart markers (DRI + RSTn every 2
+        # MCUs): the decoder's restart path is certified by the same
+        # oracle rows — decoded stats are identical with or without
+        # restarts
+        dri = 2 if aid % 4 == 3 else 0
+        if mode == 2:  # 4:2:0 — 4 raster-ordered luma blocks/MCU
+            y = _block_plane(
+                [
+                    d[(4 * ((r // 2) * mw + c // 2) + 2 * (r % 2) + c % 2) % 16]
+                    for r in range(2 * mh)
+                    for c in range(2 * mw)
+                ],
+                2 * mh,
+                2 * mw,
             )
+        if mode == 0:  # grayscale
+            payload = PixmapCodec._encode_jpeg(y, restart_interval=dri)
+        else:
+            payload = PixmapCodec._encode_jpeg(
+                y, cb, cr,
+                subsampling="420" if mode == 2 else "444",
+                restart_interval=dri,
+            )
+        h, w = y.shape
+        return "image", payload, (w, h, None, None, "jpeg")
 
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_progressive_jpeg_assets(
@@ -846,54 +597,17 @@ def synth_progressive_jpeg_assets(
     Cr = d[(3m+11) % 16] — so the oracle re-derives decoded statistics
     with the same arithmetic; mode alternates gray / YCbCr 4:4:4 via
     asset_id % 2, grid is (id//2) % 3 + 1 by (id//6) % 2 + 1 blocks."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 2).cast("int").alias("mode"),
-        ((F.col("id") / 2).cast("long") % 3 + 1).cast("int").alias("mw"),
-        ((F.col("id") / 6).cast("long") % 2 + 1).cast("int").alias("mh"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        mw, mh = (aid // 2) % 3 + 1, (aid // 6) % 2 + 1
+        y, cb, cr = _ycc_planes(_digest(aid), mh, mw)
+        if aid % 2 == 0:  # grayscale
+            payload = PixmapCodec._encode_jpeg_progressive(y)
+        else:  # 4:4:4
+            payload = PixmapCodec._encode_jpeg_progressive(y, cb, cr)
+        return "image", payload, (8 * mw, 8 * mh, None, None, "jpeg")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, mode, mw, mh in zip(
-                pdf["asset_id"], pdf["mode"], pdf["mw"], pdf["mh"]
-            ):
-                aid, mode, mw, mh = int(aid), int(mode), int(mw), int(mh)
-                d = hashlib.md5(str(aid).encode()).digest()
-                n_blocks = mw * mh
-                yb = np.array(
-                    [d[m % 16] for m in range(n_blocks)], np.uint8
-                ).reshape(mh, mw)
-                yp = np.repeat(np.repeat(yb, 8, 0), 8, 1)
-                if mode == 0:
-                    payload = PixmapCodec._encode_jpeg_progressive(yp)
-                else:
-                    cb_b = np.array(
-                        [d[(3 * m + 5) % 16] for m in range(n_blocks)],
-                        np.uint8,
-                    ).reshape(mh, mw)
-                    cr_b = np.array(
-                        [d[(3 * m + 11) % 16] for m in range(n_blocks)],
-                        np.uint8,
-                    ).reshape(mh, mw)
-                    payload = PixmapCodec._encode_jpeg_progressive(
-                        yp,
-                        np.repeat(np.repeat(cb_b, 8, 0), 8, 1),
-                        np.repeat(np.repeat(cr_b, 8, 0), 8, 1),
-                    )
-                rows.append(
-                    (aid, "image", payload,
-                     (8 * mw, 8 * mh, None, None, "jpeg"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_avi_assets(
@@ -910,60 +624,23 @@ def synth_avi_assets(
     idx1 index, and Huffman-decode each frame to reach the same sums.
     MCU grid (asset_id % 3 + 1) x ((asset_id // 3) % 2 + 1), frame
     count asset_id % 6 + 2, 10 fps."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 3 + 1).cast("int").alias("mw"),
-        ((F.col("id") / 3).cast("long") % 2 + 1).cast("int").alias("mh"),
-        (F.col("id") % 6 + 2).cast("int").alias("nf"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, mw, mh, nf in zip(
-                pdf["asset_id"], pdf["mw"], pdf["mh"], pdf["nf"]
-            ):
-                aid, mw, mh, nf = int(aid), int(mw), int(mh), int(nf)
-                n_mcus = mw * mh
-                frames = []
-                for f in range(nf):
-                    d = hashlib.md5(str(aid * 131 + f).encode()).digest()
-                    yb = np.array(
-                        [d[m % 16] for m in range(n_mcus)], np.uint8
-                    ).reshape(mh, mw)
-                    cb = np.array(
-                        [d[(3 * m + 5) % 16] for m in range(n_mcus)],
-                        np.uint8,
-                    ).reshape(mh, mw)
-                    cr = np.array(
-                        [d[(3 * m + 11) % 16] for m in range(n_mcus)],
-                        np.uint8,
-                    ).reshape(mh, mw)
-                    frames.append(
-                        PixmapCodec._encode_jpeg(
-                            np.repeat(np.repeat(yb, 8, 0), 8, 1),
-                            np.repeat(np.repeat(cb, 8, 0), 8, 1),
-                            np.repeat(np.repeat(cr, 8, 0), 8, 1),
-                            subsampling="444",
-                        )
-                    )
-                w, h = 8 * mw, 8 * mh
-                rows.append(
-                    (
-                        aid,
-                        "video",
-                        PixmapCodec._encode_avi(frames, w, h, fps=10),
-                        (w, h, None, nf * 100, "avi"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
+    def encode(aid: int):
+        mw, mh, nf = aid % 3 + 1, (aid // 3) % 2 + 1, aid % 6 + 2
+        frames = [
+            PixmapCodec._encode_jpeg(
+                *_ycc_planes(_digest(aid * 131 + f), mh, mw), subsampling="444"
             )
+            for f in range(nf)
+        ]
+        w, h = 8 * mw, 8 * mh
+        return (
+            "video",
+            PixmapCodec._encode_avi(frames, w, h, fps=10),
+            (w, h, None, nf * 100, "avi"),
+        )
 
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 AVI_FRAME_SCHEMA = T.StructType(
@@ -1028,6 +705,12 @@ def avi_frame_stats(
     )
 
 
+_GIF_PALETTE = np.array(
+    [[(7 * i) % 256, (11 * i) % 256, (13 * i) % 256] for i in range(256)],
+    np.uint8,
+)
+
+
 def synth_gif_assets(
     spark: SparkSession, n: int = 256, partitions: int = 8
 ) -> DataFrame:
@@ -1041,42 +724,17 @@ def synth_gif_assets(
     decoded raster is identical, so a decoder that skipped the 4-pass
     reassembly produces the same MEAN yet fails any position-weighted
     statistic — the query checks one."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 6 + 2).cast("int").alias("w"),
-        (F.col("id") % 4 + 2).cast("int").alias("h"),
-        (F.col("id") % 3 == 2).alias("interlaced"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
-    palette = np.array(
-        [[(7 * i) % 256, (11 * i) % 256, (13 * i) % 256] for i in range(256)],
-        np.uint8,
-    )
+    def encode(aid: int):
+        w, h = aid % 6 + 2, aid % 4 + 2
+        payload = PixmapCodec._encode_gif(
+            np.frombuffer(_digest_cycle(aid, w * h), np.uint8).reshape(h, w),
+            _GIF_PALETTE,
+            interlace=aid % 3 == 2,
+        )
+        return "image", payload, (w, h, None, None, "gif")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h, inter in zip(
-                pdf["asset_id"], pdf["w"], pdf["h"], pdf["interlaced"]
-            ):
-                aid, w, h = int(aid), int(w), int(h)
-                d = hashlib.md5(str(aid).encode()).digest()
-                idx = np.array(
-                    [d[j % 16] for j in range(w * h)], np.uint8
-                ).reshape(h, w)
-                payload = PixmapCodec._encode_gif(
-                    idx, palette, interlace=bool(inter)
-                )
-                rows.append(
-                    (aid, "image", payload, (w, h, None, None, "gif"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_bmp_assets(
@@ -1089,38 +747,13 @@ def synth_bmp_assets(
     reversal + re-stride of the decoded raster — a decoder that forgot
     the flip reproduces every mean (row permutation) but fails the
     position-weighted checksum the query carries."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 6 + 2).cast("int").alias("w"),
-        (F.col("id") % 4 + 2).cast("int").alias("h"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        w, h = aid % 6 + 2, aid % 4 + 2
+        payload = PixmapCodec._encode_bmp(_digest_raster(aid, h, w, 3))
+        return "image", payload, (w, h, None, None, "bmp")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h in zip(pdf["asset_id"], pdf["w"], pdf["h"]):
-                aid, w, h = int(aid), int(w), int(h)
-                d = hashlib.md5(str(aid).encode()).digest()
-                need = w * h * 3
-                px = np.frombuffer(
-                    (d * (need // 16 + 1))[:need], np.uint8
-                ).reshape(h, w, 3)
-                rows.append(
-                    (
-                        aid,
-                        "image",
-                        PixmapCodec._encode_bmp(px),
-                        (w, h, None, None, "bmp"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_tiff_assets(
@@ -1136,40 +769,18 @@ def synth_tiff_assets(
     one DuckDB oracle covers every structural combination. Strip
     misordering is a row permutation a mean can't see; the query
     checks the position-weighted checksum."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id"),
-        (F.col("id") % 6 + 2).cast("int").alias("w"),
-        (F.col("id") % 4 + 2).cast("int").alias("h"),
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        w, h, ch = aid % 6 + 2, aid % 4 + 2, 3 if aid % 2 == 0 else 1
+        payload = PixmapCodec._encode_tiff(
+            _digest_raster(aid, h, w, ch),
+            byte_order="MM" if aid % 5 == 0 else "II",
+            packbits=aid % 3 == 0,
+            rows_per_strip=aid % 3 + 1,
+        )
+        return "image", payload, (w, h, None, None, "tiff")
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, w, h in zip(pdf["asset_id"], pdf["w"], pdf["h"]):
-                aid, w, h = int(aid), int(w), int(h)
-                ch = 3 if aid % 2 == 0 else 1
-                d = hashlib.md5(str(aid).encode()).digest()
-                need = w * h * ch
-                px = np.frombuffer(
-                    (d * (need // 16 + 1))[:need], np.uint8
-                ).reshape(h, w, ch)
-                payload = PixmapCodec._encode_tiff(
-                    px,
-                    byte_order="MM" if aid % 5 == 0 else "II",
-                    packbits=aid % 3 == 0,
-                    rows_per_strip=aid % 3 + 1,
-                )
-                rows.append(
-                    (aid, "image", payload, (w, h, None, None, "tiff"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 # Composition spec for the mixed-modality corpus: (format label,
@@ -3807,7 +3418,6 @@ class PixmapCodec:
         blocking frames. stereo_mode (2-channel only) selects the
         channel assignment: independent / left_side / right_side /
         mid_side."""
-        import hashlib
         import struct
 
         x = np.asarray(samples, dtype=np.int64)
@@ -4082,8 +3692,6 @@ class PixmapCodec:
         frame CRC-16 and the STREAMINFO MD5 of the decoded stream —
         any corruption or mis-assembly raises instead of returning
         wrong-but-plausible samples."""
-        import hashlib
-
         if payload[:4] != b"fLaC":
             raise ValueError("not a FLAC payload")
         pos = 4
@@ -6054,50 +5662,21 @@ def synth_afp_assets(
     so planted pairs that straddle the boundary certify the dedup gate
     CROSS-CONTAINER (the same recording exported as .wav by one
     pipeline and .aiff by another must still collapse)."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id")
-    )
-    schema = SYNTH_ASSET_SCHEMA
+    def encode(aid: int):
+        key = aid - 3 if aid % 4 == 3 else aid
+        n_samp = AFP_WINDOW + (key % 3) * 18
+        samples = np.frombuffer(_block_stream(key, n_samp * 2), "<i2").copy()
+        if aid % 8 == 7:
+            samples[0] = samples[1] = 30000
+            samples[4] = samples[5] = -30000
+        if aid % 5 == 2:
+            payload, fmt = PixmapCodec._encode_aiff(samples, 1), "aiff"
+        else:
+            payload, fmt = PixmapCodec._encode_wav(samples, 1), "wav"
+        return "audio", payload, (n_samp, 1, 16000, n_samp * 1000 // 16000, fmt)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf["asset_id"]:
-                aid = int(aid)
-                key = aid - 3 if aid % 4 == 3 else aid
-                n_samp = AFP_WINDOW + (key % 3) * 18
-                need = n_samp * 2
-                stream = b"".join(
-                    hashlib.md5(f"{key}|{blk}".encode()).digest()
-                    for blk in range(need // 16 + 1)
-                )
-                samples = np.frombuffer(
-                    stream[:need], dtype="<i2"
-                ).copy()
-                if aid % 8 == 7:
-                    samples[0] = samples[1] = 30000
-                    samples[4] = samples[5] = -30000
-                if aid % 5 == 2:
-                    payload = PixmapCodec._encode_aiff(samples, 1)
-                    fmt = "aiff"
-                else:
-                    payload = PixmapCodec._encode_wav(samples, 1)
-                    fmt = "wav"
-                rows.append(
-                    (
-                        aid,
-                        "audio",
-                        payload,
-                        (n_samp, 1, 16000, n_samp * 1000 // 16000, fmt),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "media_type", "payload", "meta"]
-            )
-
-    return base.mapInPandas(_encode, schema=schema)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def synth_phash_assets(
@@ -6117,50 +5696,21 @@ def synth_phash_assets(
     when its raster is non-gray — the dedup gate is certified
     cross-format, the realistic shape (the same image saved as .png by
     one site and .webp by another must still collapse)."""
-    import hashlib
 
-    base = spark.range(0, n, 1, partitions).select(
-        F.col("id").alias("asset_id")
-    )
+    def encode(aid: int):
+        key = aid - 3 if aid % 4 == 3 else aid
+        w, h, ch = key % 6 + 6, key % 4 + 6, (1, 3, 4)[key % 3]
+        px = np.frombuffer(_block_stream(key, w * h * ch), np.uint8)
+        px = px.reshape(h, w, ch).copy()
+        if aid % 8 == 7:
+            px[0, 0, 0] = (int(px[0, 0, 0]) + 16) % 256
+        if ch != 1 and aid % 2 == 1:
+            payload, fmt = PixmapCodec._encode_webp(px), "webp"
+        else:
+            payload, fmt = PixmapCodec._encode_png(px), "png"
+        return "image", payload, (w, h, None, None, fmt)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf["asset_id"]:
-                aid = int(aid)
-                key = aid - 3 if aid % 4 == 3 else aid
-                w, h = key % 6 + 6, key % 4 + 6
-                ch = (1, 3, 4)[key % 3]
-                need = w * h * ch
-                # full-entropy stream: one md5 per 16-byte BLOCK (the
-                # single-digest cycle of the other synths would repeat
-                # gray values every 16/gcd(ch,16) pixels and collapse
-                # the hash space — unrelated assets must sit ~N/2 bits
-                # apart for the near-dup gate to mean anything)
-                stream = b"".join(
-                    hashlib.md5(f"{key}|{blk}".encode()).digest()
-                    for blk in range(need // 16 + 1)
-                )
-                px = np.frombuffer(
-                    stream[:need], dtype=np.uint8
-                ).reshape(h, w, ch).copy()
-                if aid % 8 == 7:
-                    px[0, 0, 0] = (int(px[0, 0, 0]) + 16) % 256
-                if ch != 1 and aid % 2 == 1:
-                    payload = PixmapCodec._encode_webp(px)
-                    fmt = "webp"
-                else:
-                    payload = PixmapCodec._encode_png(px)
-                    fmt = "png"
-                rows.append(
-                    (aid, "image", payload, (w, h, None, None, fmt))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "media_type", "payload", "meta"],
-            )
-
-    return base.mapInPandas(_encode, schema=SYNTH_ASSET_SCHEMA)
+    return _encoded_assets(spark, n, partitions, encode)
 
 
 def perceptual_hashes(

@@ -18,16 +18,13 @@ the extraction stage itself, so nothing wide ever crosses a shuffle.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..memo import session_memo
 from ..operators import crawl as cops
 from ..sources import tables
+from ..tempdirs import exit_tempdir
 from .registry import register
 
 _N_SHARDS = 64  # x 4 records/shard = 256 records
@@ -256,9 +253,7 @@ def _jsonl_shards(spark: SparkSession, sf_dir: str) -> str:
     directory is removed at interpreter exit."""
 
     def write() -> str:
-        tmp = tempfile.mkdtemp(prefix="tapt_jsonl_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = tmp + "/docs"
+        path = exit_tempdir("tapt_jsonl_") + "/docs"
         jops.write_jsonl_gz(tables.load_table(spark, sf_dir, "documents"), path)
         return path
 

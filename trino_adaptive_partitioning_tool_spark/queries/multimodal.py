@@ -15,12 +15,46 @@ reproduces the float64 cosines bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import multimodal as mm
 from ..operators import similarity
 from .registry import register
+
+
+def _decoded(assets: DataFrame) -> DataFrame:
+    """decode_assets through the real PixmapCodec, require_codec on."""
+    return mm.decode_assets(assets, require_codec=True, codec=mm.PixmapCodec())
+
+
+def _image_rollup(decoded: DataFrame, **keys: Column) -> DataFrame:
+    """Per-key rollup of a decode_assets frame: asset count, summed
+    decoded dims, mean intensity rounded to 4 places."""
+    return (
+        decoded.withColumns(keys)
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("n_assets"),
+            F.sum("decoded_width").cast("bigint").alias("sum_width"),
+            F.sum("decoded_height").cast("bigint").alias("sum_height"),
+            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
+        )
+    )
+
+
+def _audio_rollup(decoded: DataFrame, **keys: Column) -> DataFrame:
+    """Per-key rollup of decoded PCM: asset count, summed frames
+    (decoded_width), mean |amplitude| rounded to 4 places."""
+    return (
+        decoded.withColumns(keys)
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("n_assets"),
+            F.sum("decoded_width").cast("bigint").alias("sum_frames"),
+            F.round(F.avg("mean_intensity"), 4).alias("avg_abs_amplitude"),
+        )
+    )
 
 # DuckDB replay of synth_assets(n): asset ids, media types and the
 # 128-byte payload (= unhex(repeat(md5(id), 8)), so any byte statistic
@@ -216,11 +250,7 @@ def multimodal_real_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed dimensions and true pixel-mean from the md5-generated pixel
     bytes, so the check certifies actual header parsing and pixel
     arithmetic — not stub arithmetic."""
-    decoded = mm.decode_assets(
-        mm.synth_ppm_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_ppm_assets(spark, n=256))
     return decoded.agg(
         F.count(F.lit(1)).alias("n_assets"),
         F.sum("decoded_width").cast("bigint").alias("sum_width"),
@@ -272,25 +302,12 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoding are each separately certified. The oracle re-derives every
     number from the md5 pixel convention — green means the inflate +
     de-filter pipeline reconstructed the exact pixel bytes."""
-    decoded = mm.decode_assets(
-        mm.synth_png_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_png_assets(spark, n=256))
     channels = F.element_at(
         F.array(F.lit(1), F.lit(3), F.lit(4)),
         (F.col("asset_id") % 3 + 1).cast("int"),
     )
-    return (
-        decoded.withColumn("channels", channels)
-        .groupBy("channels")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    return _image_rollup(decoded, channels=channels)
 
 
 @register(
@@ -341,24 +358,11 @@ def multimodal_webp_decode_stats(
     separately certified. The oracle re-derives every number from the
     md5 pixel convention — green means the full prefix-code machinery
     reconstructed the exact pixel bytes."""
-    decoded = mm.decode_assets(
-        mm.synth_webp_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_webp_assets(spark, n=256))
     channels = F.element_at(
         F.array(F.lit(3), F.lit(4)), (F.col("asset_id") % 2 + 1).cast("int")
     )
-    return (
-        decoded.withColumn("channels", channels)
-        .groupBy("channels")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    return _image_rollup(decoded, channels=channels)
 
 
 @register(
@@ -666,25 +670,12 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention INCLUDING the integer color transform — green means the
     Huffman decode, IDCT and upsampling reconstructed the exact
     samples."""
-    decoded = mm.decode_assets(
-        mm.synth_jpeg_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_jpeg_assets(spark, n=256))
     jpeg_mode = F.element_at(
         F.array(F.lit("gray"), F.lit("ycbcr444"), F.lit("ycbcr420")),
         (F.col("asset_id") % 3 + 1).cast("int"),
     )
-    return (
-        decoded.withColumn("jpeg_mode", jpeg_mode)
-        .groupBy("jpeg_mode")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    return _image_rollup(decoded, jpeg_mode=jpeg_mode)
 
 
 @register(
@@ -736,25 +727,12 @@ def multimodal_progressive_jpeg_stats(
     transform for the 4:4:4 mode); additionally, every progressive
     payload decodes IDENTICALLY to its baseline-encoded twin on
     arbitrary rasters (fuzz-pinned in test_codec_fuzz)."""
-    decoded = mm.decode_assets(
-        mm.synth_progressive_jpeg_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_progressive_jpeg_assets(spark, n=256))
     jpeg_mode = F.element_at(
         F.array(F.lit("gray"), F.lit("ycbcr444")),
         (F.col("asset_id") % 2 + 1).cast("int"),
     )
-    return (
-        decoded.withColumn("jpeg_mode", jpeg_mode)
-        .groupBy("jpeg_mode")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    return _image_rollup(decoded, jpeg_mode=jpeg_mode)
 
 
 @register(
@@ -994,16 +972,7 @@ def mixed_corpus_rollup(decoded: DataFrame) -> DataFrame:
         ),
         (F.floor(F.col("asset_id") / 1000) + 1).cast("int"),
     )
-    return (
-        decoded.withColumn("fmt", fmt)
-        .groupBy("fmt")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    return _image_rollup(decoded, fmt=fmt)
 
 
 @register("multimodal_mixed_corpus_stats", oracle=MIXED_CORPUS_ORACLE)
@@ -1018,13 +987,7 @@ def multimodal_mixed_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     positionally (PNG pixel cycle, JPEG block convention + integer
     color transform, WAV/FLAC int16 amplitude, Y4M full-stream plane
     walk, AVI per-frame RGB sums, WebP digest cycle)."""
-    return mixed_corpus_rollup(
-        mm.decode_assets(
-            mm.synth_mixed_assets(spark),
-            require_codec=True,
-            codec=mm.PixmapCodec(),
-        )
-    )
+    return mixed_corpus_rollup(_decoded(mm.synth_mixed_assets(spark)))
 
 
 @register(
@@ -1076,13 +1039,10 @@ def multimodal_resize_real_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         require_codec=True,
         codec=mm.PixmapCodec(),
     )
-    re_decoded = mm.decode_assets(
+    re_decoded = _decoded(
         resized.select(
-            "asset_id", "media_type",
-            F.col("resized_payload").alias("payload"),
-        ),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
+            "asset_id", "media_type", F.col("resized_payload").alias("payload")
+        )
     )
     return re_decoded.agg(
         F.count(F.lit(1)).alias("n_assets"),
@@ -1223,20 +1183,8 @@ def multimodal_aiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention with BIG-endian word assembly — the byte-order mirror of
     the WAV row, so the pair certifies both endiannesses of the PCM
     path."""
-    decoded = mm.decode_assets(
-        mm.synth_aiff_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
-    return (
-        decoded.withColumnRenamed("decoded_height", "channels")
-        .groupBy("channels")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_frames"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_abs_amplitude"),
-        )
-    )
+    decoded = _decoded(mm.synth_aiff_assets(spark, n=256))
+    return _audio_rollup(decoded, channels=F.col("decoded_height"))
 
 
 # canonical CCITT ulaw2linear over a digest byte b: complement, bias
@@ -1288,20 +1236,8 @@ def multimodal_mulaw_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     the oracle replays the full companding table positionally from the
     md5 stream — a wrong segment shift or sign convention flips the
     amplitude sums immediately."""
-    decoded = mm.decode_assets(
-        mm.synth_mulaw_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
-    return (
-        decoded.withColumnRenamed("decoded_height", "channels")
-        .groupBy("channels")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_frames"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_abs_amplitude"),
-        )
-    )
+    decoded = _decoded(mm.synth_mulaw_assets(spark, n=256))
+    return _audio_rollup(decoded, channels=F.col("decoded_height"))
 
 
 def _adpcm_oracle() -> str:
@@ -1409,23 +1345,9 @@ def multimodal_adpcm_decode_stats(
     every decoded sample, not a header check. Grouped by
     samples-per-block so each block geometry is separately
     certified."""
-    decoded = mm.decode_assets(
-        mm.synth_adpcm_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_adpcm_assets(spark, n=256))
     spb = (2 * (F.col("asset_id") % 5 + 3) + 1).cast("bigint")
-    return (
-        decoded.withColumn("samples_per_block", spb)
-        .groupBy("samples_per_block")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_frames"),
-            F.round(F.avg("mean_intensity"), 4).alias(
-                "avg_abs_amplitude"
-            ),
-        )
-    )
+    return _audio_rollup(decoded, samples_per_block=spb)
 
 
 @register(
@@ -1592,20 +1514,8 @@ def multimodal_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds on (silence / clipping detection); the oracle re-derives
     it from the md5 convention without parsing WAV — green means the
     chunk walk + int16 frame decode reconstructed the exact samples."""
-    decoded = mm.decode_assets(
-        mm.synth_wav_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
-    return (
-        decoded.withColumnRenamed("decoded_height", "channels")
-        .groupBy("channels")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_frames"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_abs_amplitude"),
-        )
-    )
+    decoded = _decoded(mm.synth_wav_assets(spark, n=256))
+    return _audio_rollup(decoded, channels=F.col("decoded_height"))
 
 
 @register(
@@ -1656,20 +1566,11 @@ def multimodal_flac_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictor/rice path certify separately. The decoder's STREAMINFO
     MD5 gate makes frame-order bugs un-fakeable: a scrambled assembly
     raises instead of averaging to the same mean."""
-    decoded = mm.decode_assets(
-        mm.synth_flac_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
-    return (
-        decoded.withColumnRenamed("decoded_height", "channels")
-        .withColumn("is_const", F.col("asset_id") % 7 == 0)
-        .groupBy("channels", "is_const")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_frames"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_abs_amplitude"),
-        )
+    decoded = _decoded(mm.synth_flac_assets(spark, n=256))
+    return _audio_rollup(
+        decoded,
+        channels=F.col("decoded_height"),
+        is_const=F.col("asset_id") % 7 == 0,
     )
 
 
@@ -1986,21 +1887,8 @@ def multimodal_progressive_png_stats(
     the interlaced group while the sequential group stays green. Both
     groups' oracle rows re-derive from the identical pixel convention —
     green means the reassembly is byte-exact."""
-    decoded = mm.decode_assets(
-        mm.synth_png_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
-    return (
-        decoded.withColumn("interlaced", F.col("asset_id") % 5 == 2)
-        .groupBy("interlaced")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    decoded = _decoded(mm.synth_png_assets(spark, n=256))
+    return _image_rollup(decoded, interlaced=F.col("asset_id") % 5 == 2)
 
 
 @register(
@@ -2050,24 +1938,9 @@ def multimodal_palette_png_stats(
     Palette PNGs are the most common icon/screenshot format a real
     crawl ingests — the last mainstream PNG color type the codec
     lacked."""
-    decoded = mm.decode_assets(
-        mm.synth_png_assets(spark, n=256),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
-    return (
-        decoded.withColumn(
-            "indexed",
-            (F.col("asset_id") % 7 == 3) & (F.col("asset_id") % 3 != 0),
-        )
-        .groupBy("indexed")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    decoded = _decoded(mm.synth_png_assets(spark, n=256))
+    indexed = (F.col("asset_id") % 7 == 3) & (F.col("asset_id") % 3 != 0)
+    return _image_rollup(decoded, indexed=indexed)
 
 
 # --- media-to-corpus pipeline (r12 flagship) -----------------------------
@@ -2330,24 +2203,11 @@ def multimodal_webp_lz_decode_stats(
     PixmapCodec._parse_webp reconstructs the exact pixels through the
     production decode stage with require_codec=True. Grouped by
     channel count so RGB and RGBA are separately certified."""
-    decoded = mm.decode_assets(
-        mm.synth_webp_lz_assets(spark, n=192),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_webp_lz_assets(spark, n=192))
     channels = F.element_at(
         F.array(F.lit(3), F.lit(4)), (F.col("asset_id") % 2 + 1).cast("int")
     )
-    return (
-        decoded.withColumn("channels", channels)
-        .groupBy("channels")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    return _image_rollup(decoded, channels=channels)
 
 
 _AFP_N = 256
@@ -2576,25 +2436,12 @@ def multimodal_png_depth_stats(
     (MSB-first bit groups, 1-byte filter offset), sequential AND Adam7,
     decoded through the production mapInPandas stage with
     require_codec=True and grouped by bit depth."""
-    decoded = mm.decode_assets(
-        mm.synth_png_depth_assets(spark, n=192),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    decoded = _decoded(mm.synth_png_depth_assets(spark, n=192))
     depth = F.element_at(
         F.array(F.lit(1), F.lit(2), F.lit(4), F.lit(16)),
         (F.col("asset_id") % 4 + 1).cast("int"),
     )
-    return (
-        decoded.withColumn("depth", depth)
-        .groupBy("depth")
-        .agg(
-            F.count(F.lit(1)).alias("n_assets"),
-            F.sum("decoded_width").cast("bigint").alias("sum_width"),
-            F.sum("decoded_height").cast("bigint").alias("sum_height"),
-            F.round(F.avg("mean_intensity"), 4).alias("avg_intensity"),
-        )
-    )
+    return _image_rollup(decoded, depth=depth)
 
 
 # Synth-data census for the bench rebaseline trigger (r12, closing the

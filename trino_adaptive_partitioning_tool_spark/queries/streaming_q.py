@@ -9,9 +9,6 @@ equivalence is asserted in tests/test_streaming.py.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..memo import session_memo
 from ..sources import fixtures
 from ..streaming import query_log_stream as qls
+from ..tempdirs import exit_tempdir
 from .multimodal import MIXED_CORPUS_ORACLE
 from .registry import register
 
@@ -31,8 +29,7 @@ from .registry import register
 # committed offsets and drains nothing.
 def _memo_feed(spark: SparkSession, variant: str, sf_dir: str, write) -> str:
     def build() -> str:
-        tmp = tempfile.mkdtemp(prefix=f"tapt_feed_{variant}_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+        tmp = exit_tempdir(f"tapt_feed_{variant}_")
         write(tmp)
         return tmp
 
@@ -40,7 +37,7 @@ def _memo_feed(spark: SparkSession, variant: str, sf_dir: str, write) -> str:
 
 
 def _fresh_ckpt() -> str:
-    return tempfile.mkdtemp(prefix="tapt_ckpt_") + "/ckpt"
+    return exit_tempdir("tapt_ckpt_") + "/ckpt"
 
 
 def _ensure_outer_feed(spark: SparkSession, sf_dir: str) -> str:
@@ -204,7 +201,7 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     from ..streaming import stateful
 
     name = f"stream_s_{_uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="tapt_state_")
+    tmp = exit_tempdir("tapt_state_")
     out = stateful.running_user_totals(stateful.stream_events(spark, sf_dir))
     q = (
         out.writeStream.format("memory")
@@ -1008,8 +1005,6 @@ def streaming_drift_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced multi-batch drain), and the result equals
     partition_recommendation_drift row-for-row — certified by sharing
     its full DuckDB oracle."""
-    import tempfile as _tempfile
-
     from ..streaming import usage_store
     from .advisor import _DRIFT_CUTOFF, drift_triggers_from_usage
 
@@ -1020,7 +1015,7 @@ def streaming_drift_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .json(f"{d}/logs"),
     )
-    store = _tempfile.mkdtemp(prefix="tapt_usage_store_") + "/usage"
+    store = exit_tempdir("tapt_usage_store_") + "/usage"
     stream = qls.stream_query_logs(spark, f"{tmp}/logs")
     usage_store.maintain_usage_store(
         stream, store, _fresh_ckpt(), _DRIFT_CUTOFF

@@ -4,7 +4,8 @@ Replaces the reference's DBAPI connection bootstrap
 (reference: src/trino_client.py:7-20 get_connection) — in the rebuild the
 "connection" is a SparkSession and Spark SQL is the execution engine.
 
-Tuned for the driver's local[32] harness but with cluster-safe defaults:
+Sized from the host by default (every core this process may use, a driver
+heap of at most half the physical memory), with cluster-safe settings:
 AQE (runtime re-plan, skew-join splitting, partition coalescing) is always
 on, shuffle partitions default to the local core count instead of 200, and
 Arrow is enabled for every pandas hand-off.
@@ -18,7 +19,19 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else the smaller of 16g and half of
+    physical memory (a 16g heap on a 16 GB host gets the JVM killed)."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
 
 
 def get_spark(
@@ -44,7 +57,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # r13 (guide §3.1/§9) — shuffled-hash join enablement tried and

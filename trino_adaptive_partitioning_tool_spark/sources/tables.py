@@ -13,10 +13,7 @@ single-file inputs.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import threading
 from functools import lru_cache
 
@@ -24,6 +21,8 @@ import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
+
+from ..tempdirs import exit_tempdir
 
 TABLES = (
     "region",
@@ -97,10 +96,10 @@ def split_layout_dir(sf_dir: str) -> str:
         if not names:
             _SPLIT_CACHE[sf_dir] = sf_dir
             return sf_dir
-        twin = tempfile.mkdtemp(prefix="tapt_split_layout_")
-        atexit.register(shutil.rmtree, twin, ignore_errors=True)
+        twin = exit_tempdir("tapt_split_layout_")
         for fn in names:
-            src = os.path.join(sf_dir, fn)
+            # absolute: a relative target would resolve against the twin
+            src = os.path.abspath(os.path.join(sf_dir, fn))
             dst = os.path.join(twin, fn)
             try:
                 pf = _pq.ParquetFile(src)
