@@ -1,8 +1,8 @@
-"""r14 split-layout loader fixture (sources/tables.split_layout_dir):
-the multi-row-group twin must be a pure LAYOUT rewrite — same rows, same
+"""Split-layout loader fixture (sources/tables.split_layout_dir): the
+multi-row-group twin must be a pure LAYOUT rewrite — same rows, same
 order, byte-equal schema — and every read path must see identical data
-through it. Also pins the r14 jsonl sharding and the bench quiet-retry
-envelope additions."""
+through it. Also pins the jsonl sharding and the bench quiet-retry
+envelope."""
 from __future__ import annotations
 
 import os
@@ -18,7 +18,7 @@ SF01 = "/root/testdata/sf0.1"
 def test_twin_is_pure_layout_rewrite():
     """Every table in the twin holds exactly the original rows in the
     original order with the original schema; big single-row-group
-    tables gain row groups."""
+    tables gain row groups of max(1024, ceil(rows / 32)) rows."""
     twin = tables.split_layout_dir(SF01)
     assert twin != SF01  # something was rewritten at sf0.1
     for t in tables.TABLES:
@@ -29,6 +29,13 @@ def test_twin_is_pure_layout_rewrite():
         assert a.num_rows == b.num_rows, t
         # order-sensitive equality, not just set equality
         assert a.equals(b.combine_chunks().cast(a.schema)), t
+        if not os.path.islink(dst):
+            md = pq.ParquetFile(dst).metadata
+            group = max(1024, -(-a.num_rows // tables._SPLIT_ROW_GROUPS))
+            full, rest = divmod(a.num_rows, group)
+            assert [
+                md.row_group(i).num_rows for i in range(md.num_row_groups)
+            ] == [group] * full + ([rest] if rest else []), t
     # the large tables actually split
     assert pq.ParquetFile(f"{twin}/lineitem.parquet").num_row_groups >= 8
     assert pq.ParquetFile(f"{twin}/events.parquet").num_row_groups >= 8
@@ -79,7 +86,7 @@ def test_footer_probes_unaffected_by_twin():
 
 
 def test_jsonl_write_shards_to_core_count(spark, tmp_path):
-    """r14: the gzip JSONL write must shard (read parallelism = shard
+    """The gzip JSONL write must shard (read parallelism = shard
     count) and the sharded read must equal the unsharded rollup."""
     from trino_adaptive_partitioning_tool_spark.operators import jsonl
 
@@ -136,7 +143,7 @@ def test_bench_quiet_gate_helpers():
 
 
 def test_pagerank_single_iteration_skips_repartition(spark):
-    """r14: n_iterations=1 must not pay the src pre-shuffle (one join
+    """n_iterations=1 must not pay the src pre-shuffle (one join
     cannot amortize it); the iterated path keeps it."""
     from pyspark.sql import functions as F
 
@@ -173,7 +180,7 @@ def test_pagerank_single_iteration_skips_repartition(spark):
 
 
 def test_mined_fixture_logs_shared_and_equal(spark):
-    """r14: the session-shared mined frame is one object per session and
+    """The session-shared mined frame is one object per session and
     value-identical to a directly-built mining pass."""
     from trino_adaptive_partitioning_tool_spark.operators import (
         mining,
@@ -203,3 +210,30 @@ def test_relative_sf_dir_loads_every_table(spark, monkeypatch):
         n = pq.ParquetFile(f"{PARITY_SF_DIR}/{t}.parquet").metadata.num_rows
         assert os.path.exists(f"{twin}/{t}.parquet"), t
         assert tables.load_table(spark, rel, t).count() == n, t
+
+
+def test_directory_tables_link_into_the_twin(spark, tmp_path, monkeypatch):
+    """A data dir mixing a file table with a Spark directory table
+    (name.parquet/ holding part files) loads both through the twin, with
+    the original row counts: the file table is rewritten, the directory
+    table is linked whole."""
+    import shutil
+
+    monkeypatch.delenv("SPARK_GRAFT_SPLIT_LAYOUT", raising=False)
+    data = tmp_path / "data"
+    data.mkdir()
+    shutil.copy(f"{PARITY_SF_DIR}/lineitem.parquet", data / "lineitem.parquet")
+    orders = spark.read.parquet(f"{PARITY_SF_DIR}/orders.parquet")
+    orders.repartition(3).write.parquet(str(data / "orders.parquet"))
+    twin = tables.split_layout_dir(str(data))
+    assert twin != str(data)
+    assert not os.path.islink(f"{twin}/lineitem.parquet")
+    assert os.path.islink(f"{twin}/orders.parquet")
+    want = {
+        "lineitem": pq.ParquetFile(
+            f"{PARITY_SF_DIR}/lineitem.parquet"
+        ).metadata.num_rows,
+        "orders": orders.count(),
+    }
+    for t, n in want.items():
+        assert tables.load_table(spark, str(data), t).count() == n, t

@@ -40,13 +40,13 @@ from __future__ import annotations
 import gzip
 import hashlib
 import zlib
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import rowmap
 
 # -- deterministic shard synthesis --------------------------------------
 
@@ -176,23 +176,14 @@ def synth_warc_shards(
         F.col("id").alias("shard_id")
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid in pdf["shard_id"]:
-                sid = int(sid)
-                members = [
-                    gzip.compress(
-                        synth_record(sid * records_per_shard + j), mtime=0
-                    )
-                    for j in range(records_per_shard)
-                ]
-                rows.append((sid, b"".join(members), records_per_shard))
-            yield pd.DataFrame(
-                rows, columns=["shard_id", "payload", "n_records"]
-            )
+    def encode(sid: int):
+        members = [
+            gzip.compress(synth_record(sid * records_per_shard + j), mtime=0)
+            for j in range(records_per_shard)
+        ]
+        yield sid, b"".join(members), records_per_shard
 
-    return base.mapInPandas(_encode, schema=SHARD_SCHEMA)
+    return rowmap.map_rows(base, SHARD_SCHEMA, encode)
 
 
 # -- WARC parsing --------------------------------------------------------
@@ -298,39 +289,17 @@ def parse_warc_records(shards: DataFrame) -> DataFrame:
     parse and HTTP envelope parse all happen executor-side; nothing
     shuffles and nothing touches the driver."""
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                sid = int(sid)
-                for idx, member in enumerate(
-                    split_gzip_members(bytes(payload))
-                ):
-                    rec = parse_warc_record(member)
-                    rows.append(
-                        (
-                            sid,
-                            idx,
-                            rec["warc_type"],
-                            rec["uri"],
-                            rec["status"],
-                            rec["content_type"],
-                            rec["body"],
-                            len(rec["body"]),
-                            rec["record_bytes"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard_id", "record_idx", "warc_type", "uri",
-                    "status", "content_type", "body", "body_bytes",
-                    "record_bytes",
-                ],
+    def parse(sid: int, payload: bytes):
+        for idx, member in enumerate(split_gzip_members(payload)):
+            rec = parse_warc_record(member)
+            yield (
+                sid, idx, rec["warc_type"], rec["uri"], rec["status"],
+                rec["content_type"], rec["body"], len(rec["body"]),
+                rec["record_bytes"],
             )
 
-    return shards.select("shard_id", "payload").mapInPandas(
-        _parse, schema=RECORD_SCHEMA
+    return rowmap.map_rows(
+        shards.select("shard_id", "payload"), RECORD_SCHEMA, parse
     )
 
 
@@ -400,6 +369,12 @@ def extract_text(html: bytes) -> tuple[str, str, int]:
     return title, text, p.n_links
 
 
+def _extracted(html: bytes) -> tuple[str, str, int, int]:
+    """(title, text, n_words, n_links): the extraction stage's fields."""
+    title, text, n_links = extract_text(html)
+    return title, text, len(text.split()), n_links
+
+
 EXTRACT_SCHEMA = T.StructType(
     [
         T.StructField("shard_id", T.LongType(), False),
@@ -444,8 +419,8 @@ def extract_html_text(
     the original EXTRACT_SCHEMA contract (no status column; title/text/
     n_words/n_links non-nullable — every row passed the HTML filter),
     the funnel mode carries status and nullable extraction fields for
-    the rows that didn't (r10 advice: the default path must not
-    silently weaken its nullability contract)."""
+    the rows that didn't, so the default path never weakens its
+    nullability contract."""
     is_html = (F.col("status") == 200) & F.col(
         "content_type"
     ).startswith("text/html")
@@ -455,60 +430,17 @@ def extract_html_text(
             is_html.alias("parse_me"),
         )
 
-        def _extract(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for sid, idx, st, uri, body, parse_me in zip(
-                    pdf["shard_id"], pdf["record_idx"], pdf["status"],
-                    pdf["uri"], pdf["body"], pdf["parse_me"],
-                ):
-                    if parse_me:
-                        title, text, n_links = extract_text(bytes(body))
-                        rows.append(
-                            (int(sid), int(idx), int(st), uri, title,
-                             text, len(text.split()), n_links)
-                        )
-                    else:
-                        rows.append(
-                            (int(sid), int(idx), int(st), uri, None,
-                             None, None, None)
-                        )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "shard_id", "record_idx", "status", "uri",
-                        "title", "text", "n_words", "n_links",
-                    ],
-                )
+        def extract(sid, idx, status, uri, body, parse_me):
+            fields = _extracted(body) if parse_me else (None,) * 4
+            yield (sid, idx, status, uri, *fields)
 
-        return base.mapInPandas(_extract, schema=FUNNEL_EXTRACT_SCHEMA)
+        return rowmap.map_rows(base, FUNNEL_EXTRACT_SCHEMA, extract)
 
     base = records.filter(is_html).select(
         "shard_id", "record_idx", "uri", "body"
     )
 
-    def _extract_html(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, idx, uri, body in zip(
-                pdf["shard_id"], pdf["record_idx"], pdf["uri"],
-                pdf["body"],
-            ):
-                title, text, n_links = extract_text(bytes(body))
-                rows.append(
-                    (int(sid), int(idx), uri, title, text,
-                     len(text.split()), n_links)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard_id", "record_idx", "uri", "title", "text",
-                    "n_words", "n_links",
-                ],
-            )
+    def extract_html(sid, idx, uri, body):
+        yield (sid, idx, uri, *_extracted(body))
 
-    return base.mapInPandas(_extract_html, schema=EXTRACT_SCHEMA)
+    return rowmap.map_rows(base, EXTRACT_SCHEMA, extract_html)

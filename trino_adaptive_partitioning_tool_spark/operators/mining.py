@@ -70,13 +70,13 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import rowmap
 
 _TOKEN_RE = re.compile(
     r"""
@@ -198,7 +198,7 @@ def _mine_tokens(
     base tables and filters inside them). Aliases and CTE names are
     scoped: inherited from enclosing scopes, never leaked back out.
 
-    Two suppression sets with different reach (r8 advice): ``aliases``
+    Two suppression sets with different reach: ``aliases``
     (table aliases, CTE names) suppress BARE references — a bare `t`
     in an expression is a table ref, never a column. Derived-OUTPUT
     column names (`t(x, y)` lists, MEASURES aliases) live in
@@ -403,7 +403,7 @@ def _mine_tokens(
             # block, not the table's alias (same guard as
             # read_table_ref) — swallowing it here parsed the MR parens
             # as a derived-column list and poisoned derived_cols with
-            # every identifier in the block (r9 review finding #1)
+            # every identifier in the block
             and low[i] != "match_recognize"
         ):
             aliases.add(_base_name(toks[i]))
@@ -476,10 +476,10 @@ def _mine_tokens(
 
     def consume_match_recognize(i: int) -> int:
         """toks[i] is MATCH_RECOGNIZE followed by '(': mine the
-        block section by section (r8 verdict #6) and consume the
+        block section by section and consume the
         optional [AS] alias; returns the next index. Shared by the
         FROM-list loop (a pattern relation inside a comma join must
-        not end the list — r9 fuzz finding) and the main walk (the
+        not end the list) and the main walk (the
         JOIN-context form). Section semantics documented inline.
         """
         skipped["match_recognize"] += 1
@@ -587,7 +587,7 @@ def _mine_tokens(
                     break
                 # a pattern relation inside a comma-joined FROM list:
                 # consume the MR block here so the list keeps scanning
-                # (r9 fuzz finding — breaking out dropped later tables)
+                # (breaking out here would drop the later tables)
                 if (
                     i + 1 < len(toks)
                     and low[i] == "match_recognize"
@@ -725,6 +725,10 @@ def _explode_mined(query_id: str, mined: dict[str, Any]) -> list[tuple]:
     return rows
 
 
+def _mine_row(key: str, sql: str) -> list[tuple]:
+    return _explode_mined(key, mine_statement(sql))
+
+
 def mine_query_log(logs_df: DataFrame) -> DataFrame:
     """query_logs(query_id, query, ...) → (query_id, kind, name, cnt) rows.
 
@@ -745,21 +749,13 @@ def mine_query_log(logs_df: DataFrame) -> DataFrame:
     oversubscribe: at 32 on those 4 cores the 8-file log took 3.95 s
     instead of 2.13 s.
     """
-
-    def _mine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for qid, sql in zip(pdf["query_id"], pdf["query"]):
-                out.extend(_explode_mined(qid, mine_statement(sql)))
-            yield pd.DataFrame(
-                out, columns=["query_id", "kind", "name", "cnt"]
-            )
-
     parallelism = logs_df.sparkSession.sparkContext.defaultParallelism
-    return (
-        logs_df.select("query_id", "query")
-        .repartition(parallelism, "query_id")
-        .mapInPandas(_mine, schema=MINED_SCHEMA)
+    return rowmap.map_rows(
+        logs_df.select("query_id", "query").repartition(
+            parallelism, "query_id"
+        ),
+        MINED_SCHEMA,
+        _mine_row,
     )
 
 
@@ -767,21 +763,11 @@ def mine_view_ddl(views_df: DataFrame) -> DataFrame:
     """catalog_views(.., ddl) → (view, kind, name, cnt) rows keyed by the
     fq view name (reference walks each MV's underlying query the same way,
     src/partitioning.py:80-90)."""
-
-    def _mine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            fq = pdf["table_schema"] + "." + pdf["table_name"]
-            for view, ddl in zip(fq, pdf["ddl"]):
-                out.extend(_explode_mined(view, mine_statement(ddl)))
-            yield pd.DataFrame(
-                out, columns=["query_id", "kind", "name", "cnt"]
-            )
-
-    return (
-        views_df.select("table_schema", "table_name", "ddl")
-        .mapInPandas(_mine, schema=MINED_SCHEMA)
-        .withColumnRenamed("query_id", "view")
+    keyed = views_df.select(
+        F.concat_ws(".", "table_schema", "table_name").alias("view"), "ddl"
+    )
+    return rowmap.map_rows(keyed, MINED_SCHEMA, _mine_row).withColumnRenamed(
+        "query_id", "view"
     )
 
 

@@ -24,14 +24,15 @@ implementations exist behind one dispatch seam:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Protocol, runtime_checkable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import rowmap
 
 ASSET_SCHEMA = T.StructType(
     [
@@ -167,15 +168,10 @@ def _encoded_assets(
     ``(media_type, payload, meta)`` — batched pandas over binary
     columns, the same stage shape as the production decode path."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [(aid, *encode(aid)) for aid in map(int, pdf["id"])],
-                columns=SYNTH_ASSET_SCHEMA.names,
-            )
-
-    return spark.range(0, n, 1, partitions).mapInPandas(
-        _encode, schema=SYNTH_ASSET_SCHEMA
+    return rowmap.map_rows(
+        spark.range(0, n, 1, partitions),
+        SYNTH_ASSET_SCHEMA,
+        lambda aid: [(aid, *encode(aid))],
     )
 
 
@@ -232,8 +228,8 @@ def synth_png_assets(
     re-derive the decoded statistics without parsing PNG at all. Color
     type varies per asset (gray / RGB / RGBA via asset_id % 3) and the
     filter cycle means decoding exercises every filter inverse; the
-    asset_id % 5 == 2 subset is written PROGRESSIVE (Adam7 interlace,
-    r12) and the asset_id % 7 == 3 non-gray subset INDEXED (palette /
+    asset_id % 5 == 2 subset is written PROGRESSIVE (Adam7 interlace)
+    and the asset_id % 7 == 3 non-gray subset INDEXED (palette /
     color type 3, with tRNS alphas for the RGBA assets; the two
     layouts compose where the moduli coincide) — same pixels, different
     file layout, so every PNG oracle carries over unchanged while the
@@ -324,8 +320,8 @@ def synth_webp_lz_assets(
 def synth_png_depth_assets(
     spark: SparkSession, n: int = 192, partitions: int = 8
 ) -> DataFrame:
-    """Deterministic PNG assets across the NON-8-bit sample grid (r12
-    verdict "what's missing" #3): depth cycles 1/2/4/16 per asset_id%4.
+    """Deterministic PNG assets across the NON-8-bit sample grid:
+    depth cycles 1/2/4/16 per asset_id%4.
     16-bit assets take big-endian digest byte PAIRS as uint16 samples
     over gray/RGB/RGBA (asset_id%3); packed 1/2/4-bit assets take
     digest bytes mod 2^depth as single-channel gray samples, packed
@@ -656,52 +652,24 @@ AVI_FRAME_SCHEMA = T.StructType(
 )
 
 
-def avi_frame_stats(
-    assets: DataFrame,
-    require_codec: bool = False,
-    codec: Codec | None = None,
-) -> DataFrame:
+def avi_frame_stats(assets: DataFrame) -> DataFrame:
     """Per-frame decoded statistics for MJPEG-AVI payloads: one row per
     frame with the exact integer RGB sum (the position-weightable
     order certificate) and the mean. Container walk + per-frame JPEG
-    decode run in one Arrow stage; only scalar stats leave it."""
-    codec = _check_codec(codec, require_codec)
+    decode run in one Arrow stage with PixmapCodec; only scalar stats
+    leave it."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                aid = int(aid)
-                raw = bytes(payload)
-                w, h, fps, jpegs = PixmapCodec._parse_avi(raw)
-                for idx, j in enumerate(jpegs):
-                    fw, fh, px = PixmapCodec._parse_jpeg(j)
-                    if (fw, fh) != (w, h):
-                        raise ValueError(
-                            "AVI frame dims disagree with header"
-                        )
-                    s = int(px.astype(np.int64).sum())
-                    out.append(
-                        (
-                            aid,
-                            idx,
-                            idx * 1000 // fps,
-                            w,
-                            h,
-                            s,
-                            s / px.size,
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "frame_idx", "ms", "width", "height",
-                    "rgb_sum", "mean_rgb",
-                ],
-            )
+    def stats(aid: int, payload: bytes):
+        w, h, fps, jpegs = PixmapCodec._parse_avi(payload)
+        for idx, j in enumerate(jpegs):
+            fw, fh, px = PixmapCodec._parse_jpeg(j)
+            if (fw, fh) != (w, h):
+                raise ValueError("AVI frame dims disagree with header")
+            s = int(px.astype(np.int64).sum())
+            yield aid, idx, idx * 1000 // fps, w, h, s, s / px.size
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        _stats, schema=AVI_FRAME_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "payload"), AVI_FRAME_SCHEMA, stats
     )
 
 
@@ -785,10 +753,10 @@ def synth_tiff_assets(
 
 # Composition spec for the mixed-modality corpus: (format label,
 # generator, id offset, assets per format). SINGLE SOURCE OF TRUTH for
-# both synth_mixed_assets and mixed_asset_census() — the r11 close
-# proved that growing this list (WEBP, +7000) without a census signal
-# leaves bench.py's append-only median stale forever, because a
-# mapInPandas plan manifest does not change when its generator grows.
+# both synth_mixed_assets and mixed_asset_census(): growing this list
+# (WEBP, +7000) without a census signal leaves bench.py's append-only
+# median stale forever, because a mapInPandas plan manifest does not
+# change when its generator grows.
 # gen_bench_baseline.py folds the census into its rebaseline key, so
 # ANY edit here (format added/removed, per-format n changed) resets the
 # affected medians with the census diff as the recorded justification.
@@ -1126,14 +1094,14 @@ class PixmapCodec:
       * PNG: 8-bit gray / gray+alpha / RGB / RGBA, non-interlaced —
         stdlib-zlib IDAT inflate plus all five scanline filters
         (None/Sub/Up/Average/Paeth); the first MAINSTREAM compressed
-        format a real corpus contains (r7 verdict "what's missing" #1)
+        format a real corpus contains
       * JPEG: baseline sequential DCT (ITU-T T.81) — marker walk,
         DHT-carried Huffman tables, dequantize, de-zigzag, float
         separable IDCT, chroma upsampling (4:4:4 / 4:2:0 / 4:2:2),
         restart markers, and a FIXED-POINT integer YCbCr→RGB
         (libjpeg-style 16.16 constants) so decoded RGB is exact
         integer arithmetic a SQL oracle can replay; the #1 format of
-        any real multimodal corpus (r8 verdict "what's missing" #1)
+        any real multimodal corpus
       * WAV (RIFF PCM, 16-bit): chunk-walked fmt/data parse — the
         audio modality's real decoder (decode reports frames-per-
         channel as width, channels as height, mean |sample| as
@@ -1157,8 +1125,8 @@ class PixmapCodec:
     @classmethod
     def _parse_png(cls, payload: bytes):
         """(width, height, pixel_array[h, w, channels]) for 8-bit
-        gray/gray-alpha/RGB/RGBA PNGs, progressive (Adam7 interlace,
-        r12) or not. Inflates the IDAT stream with stdlib zlib and
+        gray/gray-alpha/RGB/RGBA PNGs, progressive (Adam7 interlace)
+        or not. Inflates the IDAT stream with stdlib zlib and
         reverses the per-scanline filter (types 0-4) — per Adam7 PASS
         when interlaced, since each pass is its own filtered sub-image
         whose rows predict only from that pass. Sub reverses as a
@@ -1182,7 +1150,7 @@ class PixmapCodec:
             length, ctype = struct.unpack_from(">I4s", payload, pos)
             data = payload[pos + 8 : pos + 8 + length]
             # the +4 covers the CRC word: a payload cut inside it must
-            # raise the contract ValueError, not struct.error (r9 fuzz)
+            # raise the contract ValueError, not struct.error
             if len(data) != length or pos + 12 + length > len(payload):
                 raise ValueError("truncated PNG chunk")
             if struct.unpack_from(">I", payload, pos + 8 + length)[0] != (
@@ -1425,14 +1393,14 @@ class PixmapCodec:
         depth: int = 8,
     ) -> bytes:
         """Encode [h, w, channels] pixels as a valid PNG — sequential,
-        or progressive (Adam7, r12) with each of the seven passes
+        or progressive (Adam7) with each of the seven passes
         gathered by the spec strides and filtered as its own sub-image
         (matching how every real encoder lays passes out and how
-        _parse_png reverses them). palette=True (r12) writes indexed
+        _parse_png reverses them). palette=True writes indexed
         color (type 3): RGB input emits PLTE + a filtered index plane;
         RGBA input additionally emits per-entry tRNS alphas (distinct
         colors must fit 256 entries — ValueError otherwise, like any
-        real quantizer-less palette writer). depth (r13) extends the
+        real quantizer-less palette writer). depth extends the
         sample grid: 16 takes uint16 samples as big-endian pairs for
         any non-palette color type; 1/2/4 pack gray samples or palette
         indices MSB-first per spec 7.2."""
@@ -5071,13 +5039,23 @@ class PixmapCodec:
 DEFAULT_CODEC: Codec = StubCodec()
 
 
-def _check_codec(codec: Codec | None, require_codec: bool) -> Codec:
+def _check_codec(
+    codec: Codec | None, require_codec: bool, needs: str | None = None
+) -> Codec:
+    """The codec a stage runs (DEFAULT_CODEC when none is given), refusing
+    the stub under require_codec and any codec without the ``needs``
+    method (``pixels`` or ``pcm``) the stage calls."""
     codec = codec if codec is not None else DEFAULT_CODEC
     if require_codec and not codec.is_real:
         raise NotImplementedError(
             "real image/audio/video codecs are not available in this "
             "environment; pass a Codec implementation with is_real=True "
             "or run with require_codec=False for the deterministic stub"
+        )
+    if needs is not None and not hasattr(codec, needs):
+        raise NotImplementedError(
+            f"this stage needs a codec exposing {needs}(payload); the "
+            "deterministic stub has none"
         )
     return codec
 
@@ -5158,53 +5136,27 @@ def decode_assets_with_phash(
     dominant cost, so fusing halves it and drops the join. Non-raster
     rows (audio/video) fall back to codec.decode with NULL hash fields;
     corrupt rows quarantine with identity + decode_ok=False."""
-    codec = _check_codec(codec, require_codec)
-    if not hasattr(codec, "pixels"):
-        raise NotImplementedError(
-            "decode_assets_with_phash needs a codec exposing "
-            "pixels(payload)"
-        )
+    codec = _check_codec(codec, require_codec, needs="pixels")
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, mt, payload in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["payload"]
-            ):
-                raw = bytes(payload)
-                try:
-                    if _is_raster(raw):
-                        px = codec.pixels(raw).astype(np.int64)
-                        h_, w_, ch = px.shape
-                        # same value decode()'s raster branch returns:
-                        # mean of exact small ints in float64
-                        mean = float(px.mean())
-                        out.append(
-                            (int(aid), mt, w_, h_, mean, len(raw), True,
-                             ch, w_ * h_, _avg_hash(px))
-                        )
-                    else:
-                        w, h, mi = codec.decode(raw, mt)
-                        out.append(
-                            (int(aid), mt, w, h, mi, len(raw), True,
-                             None, None, None)
-                        )
-                except Exception:
-                    out.append(
-                        (int(aid), mt, None, None, None, len(raw), False,
-                         None, None, None)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "media_type", "decoded_width",
-                    "decoded_height", "mean_intensity", "payload_bytes",
-                    "decode_ok", "ch", "n_pixels", "phash",
-                ],
-            )
+    def decode(aid: int, mt: str, raw: bytes):
+        try:
+            if _is_raster(raw):
+                px = codec.pixels(raw).astype(np.int64)
+                h_, w_, ch = px.shape
+                # same value decode()'s raster branch returns: mean of
+                # exact small ints in float64
+                yield (aid, mt, w_, h_, float(px.mean()), len(raw), True,
+                       ch, w_ * h_, _avg_hash(px))
+            else:
+                w, h, mi = codec.decode(raw, mt)
+                yield aid, mt, w, h, mi, len(raw), True, None, None, None
+        except Exception:
+            yield aid, mt, None, None, None, len(raw), False, None, None, None
 
-    return assets.select("asset_id", "media_type", "payload").mapInPandas(
-        _decode, schema=DECODED_PHASH_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "media_type", "payload"),
+        DECODED_PHASH_SCHEMA,
+        decode,
     )
 
 
@@ -5231,37 +5183,24 @@ def decode_assets(
         raise ValueError(f"on_error must be raise|quarantine: {on_error!r}")
     quarantine = on_error == "quarantine"
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, mt, payload in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["payload"]
-            ):
-                raw = bytes(payload)
-                if quarantine:
-                    try:
-                        w, h, mi = codec.decode(raw, mt)
-                        out.append((int(aid), mt, w, h, mi, len(raw), True))
-                    except Exception:
-                        # corrupt/truncated/unsupported payload: the row
-                        # survives with its identity so the pipeline can
-                        # count and route it; stats stay NULL
-                        out.append(
-                            (int(aid), mt, None, None, None, len(raw), False)
-                        )
-                else:
-                    w, h, mi = codec.decode(raw, mt)
-                    out.append((int(aid), mt, w, h, mi, len(raw)))
-            cols = [
-                "asset_id", "media_type", "decoded_width",
-                "decoded_height", "mean_intensity", "payload_bytes",
-            ]
-            if quarantine:
-                cols.append("decode_ok")
-            yield pd.DataFrame(out, columns=cols)
+    def decode(aid: int, mt: str, raw: bytes):
+        try:
+            w, h, mi = codec.decode(raw, mt)
+        except Exception:
+            if not quarantine:
+                raise
+            # corrupt/truncated/unsupported payload: the row survives
+            # with its identity so the pipeline can count and route it;
+            # stats stay NULL
+            yield aid, mt, None, None, None, len(raw), False
+            return
+        row = (aid, mt, w, h, mi, len(raw))
+        yield (*row, True) if quarantine else row
 
-    return assets.select("asset_id", "media_type", "payload").mapInPandas(
-        _decode, schema=DECODED_Q_SCHEMA if quarantine else DECODED_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "media_type", "payload"),
+        DECODED_Q_SCHEMA if quarantine else DECODED_SCHEMA,
+        decode,
     )
 
 
@@ -5287,30 +5226,16 @@ def channel_stats(
     this stage does). Arrow mapInPandas over the same batch shape as
     decode_assets; needs a pixels-capable codec (PixmapCodec — the
     stub has no pixel planes to report)."""
-    codec = _check_codec(codec, require_codec)
-    if not hasattr(codec, "pixels"):
-        raise NotImplementedError(
-            "channel_stats needs a codec exposing pixels(payload); the "
-            "deterministic stub has no pixel planes"
-        )
+    codec = _check_codec(codec, require_codec, needs="pixels")
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                px = codec.pixels(bytes(payload))
-                ch = px.shape[2]
-                for k in range(ch):
-                    rows.append(
-                        (int(aid), k, ch, float(px[:, :, k].mean()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "channel", "n_channels", "mean_value"],
-            )
+    def stats(aid: int, payload: bytes):
+        px = codec.pixels(payload)
+        ch = px.shape[2]
+        for k in range(ch):
+            yield aid, k, ch, float(px[:, :, k].mean())
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        _stats, schema=CHANNEL_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "payload"), CHANNEL_SCHEMA, stats
     )
 
 
@@ -5337,33 +5262,16 @@ def position_weighted_stats(
     and row-ordering bugs (GIF 4-pass interlace, BMP bottom-up rows)
     that every average-based statistic is provably blind to. Same Arrow
     batch shape as channel_stats; needs a pixels-capable codec."""
-    codec = _check_codec(codec, require_codec)
-    if not hasattr(codec, "pixels"):
-        raise NotImplementedError(
-            "position_weighted_stats needs a codec exposing "
-            "pixels(payload); the deterministic stub has no pixel planes"
-        )
+    codec = _check_codec(codec, require_codec, needs="pixels")
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                px = codec.pixels(bytes(payload))
-                flat = px.reshape(-1, px.shape[2]).astype(np.int64).sum(1)
-                pw = int(
-                    ((np.arange(len(flat), dtype=np.int64) + 1) * flat)
-                    .sum()
-                )
-                rows.append(
-                    (int(aid), len(flat), pw, float(px.mean()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "n_pixels", "pw_sum", "mean_value"],
-            )
+    def stats(aid: int, payload: bytes):
+        px = codec.pixels(payload)
+        flat = px.reshape(-1, px.shape[2]).astype(np.int64).sum(1)
+        pw = int(((np.arange(len(flat), dtype=np.int64) + 1) * flat).sum())
+        yield aid, len(flat), pw, float(px.mean())
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        _stats, schema=PW_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "payload"), PW_SCHEMA, stats
     )
 
 
@@ -5388,18 +5296,12 @@ def extract_features(assets: DataFrame, dim: int = 64) -> DataFrame:
     oracle replay the similarity search bit-for-bit
     (queries/multimodal.multimodal_feature_search)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats = [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim)
-                feats.append(hist.astype(np.float32))
-                ids.append(int(aid))
-            yield pd.DataFrame({"asset_id": ids, "feature": feats})
+    def extract(aid: int, payload: bytes):
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        yield aid, np.bincount(arr % dim, minlength=dim).astype(np.float32)
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        _extract, schema=FEATURE_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "payload"), FEATURE_SCHEMA, extract
     )
 
 
@@ -5424,26 +5326,16 @@ def sample_frames(
     the decoded frame). UDTF shape: one asset row → many frame rows."""
     codec = _check_codec(codec, require_codec)
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, payload, dur in zip(
-                pdf["asset_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                raw = bytes(payload)
-                for idx, ms, frame in codec.frames(
-                    raw, int(dur or 0), every_ms
-                ):
-                    out.append((int(aid), idx, ms, frame))
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "frame_idx", "frame_ms", "frame_payload"],
-            )
+    def sample(aid: int, payload: bytes, dur):
+        for idx, ms, frame in codec.frames(payload, int(dur or 0), every_ms):
+            yield aid, idx, ms, frame
 
-    return (
-        assets.where(F.col("media_type") == "video")
-        .select("asset_id", "payload", F.col("meta.duration_ms").alias("duration_ms"))
-        .mapInPandas(_sample, schema=FRAME_SCHEMA)
+    return rowmap.map_rows(
+        assets.where(F.col("media_type") == "video").select(
+            "asset_id", "payload", F.col("meta.duration_ms")
+        ),
+        FRAME_SCHEMA,
+        sample,
     )
 
 
@@ -5464,24 +5356,16 @@ def frame_luma_stats(frames: DataFrame, dims: DataFrame) -> DataFrame:
     slice the Y plane (first w*h bytes of each frame payload); the join
     is frame-count-sized and the Arrow stage is map-only after it."""
 
-    def _luma(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, idx, ms, payload, w, h in zip(
-                pdf["asset_id"], pdf["frame_idx"], pdf["frame_ms"],
-                pdf["frame_payload"], pdf["w"], pdf["h"],
-            ):
-                y = np.frombuffer(
-                    bytes(payload)[: int(w) * int(h)], dtype=np.uint8
-                )
-                rows.append((int(aid), int(idx), int(ms), float(y.mean())))
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "frame_idx", "frame_ms", "luma_mean"],
-            )
+    def luma(aid: int, idx: int, ms: int, payload: bytes, w: int, h: int):
+        y = np.frombuffer(payload[: int(w) * int(h)], dtype=np.uint8)
+        yield aid, idx, ms, float(y.mean())
 
-    return frames.join(dims, "asset_id").mapInPandas(
-        _luma, schema=LUMA_SCHEMA
+    return rowmap.map_rows(
+        frames.join(dims, "asset_id").select(
+            "asset_id", "frame_idx", "frame_ms", "frame_payload", "w", "h"
+        ),
+        LUMA_SCHEMA,
+        luma,
     )
 
 
@@ -5513,42 +5397,24 @@ def resize_assets(
     plumbing a thumbnailing / model-input-prep pass uses."""
     codec = _check_codec(codec, require_codec)
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, mt, payload, w, h in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["payload"],
-                pdf["width"], pdf["height"],
-            ):
-                raw = bytes(payload)
-                resized = codec.resize(raw, target_width, target_height)
-                sx = float(target_width) / float(w) if w else None
-                sy = float(target_height) / float(h) if h else None
-                out.append(
-                    (int(aid), mt, target_width, target_height, sx, sy,
-                     resized, len(resized))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "media_type", "target_width", "target_height",
-                    "scale_x", "scale_y", "resized_payload", "resized_bytes",
-                ],
-            )
+    def resize(aid: int, mt: str, payload: bytes, w, h):
+        resized = codec.resize(payload, target_width, target_height)
+        sx = float(target_width) / float(w) if w else None
+        sy = float(target_height) / float(h) if h else None
+        yield (aid, mt, target_width, target_height, sx, sy, resized,
+               len(resized))
 
-    return (
-        assets.where(F.col("media_type").isin("image", "video"))
-        .select(
-            "asset_id", "media_type", "payload",
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-        )
-        .mapInPandas(_resize, schema=RESIZED_SCHEMA)
+    return rowmap.map_rows(
+        assets.where(F.col("media_type").isin("image", "video")).select(
+            "asset_id", "media_type", "payload", "meta.width", "meta.height"
+        ),
+        RESIZED_SCHEMA,
+        resize,
     )
 
 
 # ---------------------------------------------------------------------------
-# Perceptual-hash image dedup (r10): the missing modality in the dedup
+# Perceptual-hash image dedup: the missing modality in the dedup
 # layer (text has MinHash/SimHash/spans, embeddings have SemDeDup; images
 # had nothing). Bit-per-pixel average-hash over DECODED rasters, exact
 # integer arithmetic end to end so the DuckDB oracle re-derives every
@@ -5624,24 +5490,14 @@ def audio_fingerprints(
     """Per-asset audio fingerprint over the decoded channel-0 PCM —
     Arrow mapInPandas over the same batch shape as decode_assets; the
     codec must expose pcm(payload)."""
-    codec = _check_codec(codec, require_codec)
-    if not hasattr(codec, "pcm"):
-        raise NotImplementedError(
-            "audio_fingerprints needs a codec exposing pcm(payload)"
-        )
+    codec = _check_codec(codec, require_codec, needs="pcm")
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                s = codec.pcm(bytes(payload))
-                rows.append((int(aid), len(s), audio_fingerprint(s)))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "n_samples", "afp"]
-            )
+    def fingerprint(aid: int, payload: bytes):
+        s = codec.pcm(payload)
+        yield aid, len(s), audio_fingerprint(s)
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        _fp, schema=AFP_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "payload"), AFP_SCHEMA, fingerprint
     )
 
 
@@ -5724,26 +5580,15 @@ def perceptual_hashes(
     — the mean threshold CROSS-MULTIPLIED so there is no division and
     no float anywhere; the hash is bit-reproducible in any engine.
     Arrow mapInPandas over the same batch shape as decode_assets."""
-    codec = _check_codec(codec, require_codec)
-    if not hasattr(codec, "pixels"):
-        raise NotImplementedError(
-            "perceptual_hashes needs a codec exposing pixels(payload)"
-        )
+    codec = _check_codec(codec, require_codec, needs="pixels")
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                px = codec.pixels(bytes(payload)).astype(np.int64)
-                h_, w_, ch = px.shape
-                rows.append((int(aid), w_, h_, ch, w_ * h_, _avg_hash(px)))
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "w", "h", "ch", "n_pixels", "phash"],
-            )
+    def phash(aid: int, payload: bytes):
+        px = codec.pixels(payload).astype(np.int64)
+        h_, w_, ch = px.shape
+        yield aid, w_, h_, ch, w_ * h_, _avg_hash(px)
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        _hash, schema=PHASH_SCHEMA
+    return rowmap.map_rows(
+        assets.select("asset_id", "payload"), PHASH_SCHEMA, phash
     )
 
 

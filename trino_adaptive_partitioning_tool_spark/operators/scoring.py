@@ -23,7 +23,7 @@ separable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .mining import mine_query_log, mine_view_ddl, mined_tables
@@ -66,6 +66,25 @@ def resource_scores(logs_df: DataFrame) -> DataFrame:
     )
 
 
+def _limit_in_text() -> Column:
+    """The reference's LIMIT test: "LIMIT" in the upper-cased query."""
+    return F.upper(F.col("query")).contains("LIMIT")
+
+
+def interactive_rule(has_limit: Column | None = None) -> Column:
+    """The reference's interactive rule (src/partitioning.py:223-229):
+    execution_time_ms under 10 s (NULL counts as not under) OR a LIMIT.
+    ``has_limit`` defaults to the reference's text check."""
+    if has_limit is None:
+        has_limit = _limit_in_text()
+    return (
+        F.coalesce(
+            F.col("execution_time_ms") < INTERACTIVE_LATENCY_MS, F.lit(False)
+        )
+        | has_limit
+    )
+
+
 def classify_queries(logs_df: DataFrame, mined_df: DataFrame | None = None) -> DataFrame:
     """Interactive vs batch classification (reference src/partitioning.py:205-238).
 
@@ -84,23 +103,13 @@ def classify_queries(logs_df: DataFrame, mined_df: DataFrame | None = None) -> D
             "has_limit", F.coalesce("has_limit", F.lit(False))
         )
     else:
-        df = logs_df.withColumn(
-            "has_limit", F.upper(F.col("query")).contains("LIMIT")
-        )
+        df = logs_df.withColumn("has_limit", _limit_in_text())
+    interactive = interactive_rule(F.col("has_limit"))
     return df.withColumns(
         {
-            "is_interactive": (
-                (F.col("execution_time_ms") < INTERACTIVE_LATENCY_MS)
-                & F.col("execution_time_ms").isNotNull()
-            )
-            | F.col("has_limit"),
+            "is_interactive": interactive,
             "partition_priority": F.when(
-                (
-                    (F.col("execution_time_ms") < INTERACTIVE_LATENCY_MS)
-                    & F.col("execution_time_ms").isNotNull()
-                )
-                | F.col("has_limit"),
-                F.lit(INTERACTIVE_PRIORITY),
+                interactive, F.lit(INTERACTIVE_PRIORITY)
             ).otherwise(F.lit(BATCH_PRIORITY)),
         }
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import scoring, stats, transforms
 from ..sources import fixtures, tables
@@ -118,10 +119,7 @@ def top_resource_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def query_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs = fixtures.query_logs_df(spark)
-    interactive = (
-        F.coalesce(F.col("execution_time_ms") < 10000, F.lit(False))
-        | F.upper(F.col("query")).contains("LIMIT")
-    )
+    interactive = scoring.interactive_rule()
     return logs.select(
         "query_id",
         interactive.alias("is_interactive"),
@@ -391,7 +389,7 @@ def _mined_fixture_rows() -> list[tuple]:
 
     rows: list[tuple] = []
     for r in fixtures.QUERY_LOG_ROWS:
-        rows.extend(mining._explode_mined(r[0], mining.mine_statement(r[1])))
+        rows.extend(mining._mine_row(r[0], r[1]))
     # limit_marker rows carry name='' — harmless, filtered by kind below
     return rows
 
@@ -416,7 +414,7 @@ def mined_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
     path reproduces the driver-side result exactly."""
     from ..operators import recommend
 
-    # r14: session-shared mined frame (operators/recommend.
+    # session-shared mined frame (operators/recommend.
     # mined_fixture_logs) — the Arrow mining stage runs once per
     # session across the advisor family, not once per query
     return recommend.mined_fixture_logs(spark).select(
@@ -482,7 +480,7 @@ def workload_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import recommend
 
     logs = fixtures.query_logs_df(spark)
-    # r14: session-shared mined frame (see mined_workload)
+    # session-shared mined frame (see mined_workload)
     mined = recommend.mined_fixture_logs(spark).where(
         F.col("kind").isin("join_column", "where_column")
         & (F.col("name") != "")
@@ -591,7 +589,7 @@ def bucket_join_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregation per table over only the mined columns."""
     from ..operators import recommend, sizing
 
-    # r14: session-shared mined frame (see mined_workload)
+    # session-shared mined frame (see mined_workload)
     mined = recommend.mined_fixture_logs(spark).where(
         (F.col("kind") == "join_column") & (F.col("name") != "")
     )
@@ -701,25 +699,23 @@ def rollup_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     always-fresh aggregate; near 1.0 means the rollup buys nothing).
     The reference advises partition layouts only; this extends the same
     mined-workload evidence to aggregate materialization."""
-    from ..operators import mining
+    from ..operators import mining, rowmap
 
     logs = fixtures.query_logs_df(spark)
 
-    # mine GROUP BY columns distributed (same Arrow pattern as
+    # mine GROUP BY columns distributed (the same row stage as
     # mine_query_log), then roll up per column
-    import pandas as pd
-
-    def _mine(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for sql in pdf["query"]:
-                for col, n in mining.mine_group_columns(sql).items():
-                    rows.append((col, n))
-            yield pd.DataFrame(rows, columns=["column_name", "cnt"])
-
     mined = (
-        logs.select("query")
-        .mapInPandas(_mine, schema="column_name string, cnt long")
+        rowmap.map_rows(
+            logs.select("query"),
+            T.StructType(
+                [
+                    T.StructField("column_name", T.StringType()),
+                    T.StructField("cnt", T.LongType()),
+                ]
+            ),
+            lambda sql: mining.mine_group_columns(sql).items(),
+        )
         .groupBy("column_name")
         .agg(F.sum("cnt").cast("bigint").alias("groupby_freq"))
     )
@@ -782,9 +778,7 @@ def _mined_ddl_fixture_rows() -> list[tuple]:
     rows: list[tuple] = []
     for cat, schema, name, ttype, ddl, qc in fixtures.CATALOG_VIEW_ROWS:
         if ttype == "MATERIALIZED VIEW":
-            rows.extend(
-                mining._explode_mined(f"{schema}.{name}", mining.mine_statement(ddl))
-            )
+            rows.extend(mining._mine_row(f"{schema}.{name}", ddl))
     return rows
 
 
@@ -1212,7 +1206,7 @@ def partition_recommendation_drift(spark: SparkSession, sf_dir: str) -> DataFram
     from ..operators import recommend
 
     logs = fixtures.query_logs_df(spark)
-    # r14: session-shared mined frame (see mined_workload)
+    # session-shared mined frame (see mined_workload)
     mined = recommend.mined_fixture_logs(spark).where(
         F.col("kind").isin("join_column", "where_column")
         & (F.col("name") != "")
@@ -1294,7 +1288,7 @@ def _spec_history_oracle() -> str:
     """
 
 
-# plan-growth bound (r12 verdict "what's wrong" #2): the history union
+# plan-growth bound: the history union
 # adds ~100 physical nodes per generation, so past this many legs each
 # k-th leg is lineage-truncated with an eager localCheckpoint — the leg
 # is dimension-sized (views x 1 rows), so the checkpoint materializes
@@ -1612,7 +1606,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = incremental.cms_partials(
         events, F.to_date("ts"), F.col("user_id"), depth=4, width=width
     )
-    # r13: the merged sketch is referenced twice (the estimate join AND
+    # the merged sketch is referenced twice (the estimate join AND
     # the row-0 total) — persist the <= depth*width-row frame so the
     # corpus-sized sketch build (explode x depth + two shuffles over
     # events) runs once, not once per reference.
@@ -1719,7 +1713,7 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r5 — Spark-native sizing advice: the reference advises TABLE partition
+# Spark-native sizing advice: the reference advises TABLE partition
 # layouts; on Spark the same adaptive-partitioning question recurs for
 # shuffles (spark.sql.shuffle.partitions / repartition sizing) and for
 # the quantitative cost of each candidate layout.
@@ -1962,7 +1956,7 @@ def skew_salt_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r7: the last step of the adaptive loop — drift triggers rendered as
+# The last step of the adaptive loop — drift triggers rendered as
 # executable DDL. partition_recommendation_drift says WHICH (view,
 # column) pairs drifted into relevance; this emits the REPLACE PARTITION
 # SPEC a user would apply: current transforms kept, drifted columns

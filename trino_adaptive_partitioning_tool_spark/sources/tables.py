@@ -40,19 +40,19 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # ---------------------------------------------------------------------------
-# Split-layout loader fixture (r14, guide §6 / §2.2; r13 verdict "Next
-# round" #2). The local testdata parquet is ONE row group per table, so
-# every scan — and everything map-side of the first exchange — runs as a
-# single task no matter how many cores exist: at sf0.1 the whole bench
-# was floored on single-threaded scans and 11 queries measured FLAT from
-# 8 to 32 cores (BENCH_r13_c8). 100 TB tables never look like that: they
+# Split-layout loader fixture. The local testdata parquet is ONE row
+# group per table, so every scan — and everything map-side of the first
+# exchange — runs as a single task no matter how many cores exist: at
+# sf0.1 the whole bench was floored on single-threaded scans and 11
+# queries measured FLAT from 8 to 32 cores (BENCH_r13_c8.json). 100 TB tables never look like that: they
 # arrive as many files / many >=128 MB row groups and Spark's default
 # split math parallelizes them. This fixture makes the LOCAL layout look
 # like the production one: each single-row-group table file above a size
 # floor is rewritten — same rows, same order, byte-identical schema
 # (asserted) — into _SPLIT_ROW_GROUPS row groups in a per-process temp
-# dir; small dimension tables are symlinked. Row-group parallelism then
-# comes from Spark's own scale-adaptive split formula
+# dir; small dimension tables and directory tables are symlinked.
+# Row-group parallelism then comes from Spark's own scale-adaptive split
+# formula
 #   maxSplitBytes = min(maxPartitionBytes,
 #                       max(openCostInBytes, totalBytes/minPartitionNum))
 # (session.py lowers openCostInBytes so the formula can reach row-group
@@ -89,9 +89,7 @@ def split_layout_dir(sf_dir: str) -> str:
         if cached is not None and os.path.isdir(cached):
             return cached
         names = [
-            fn for fn in sorted(os.listdir(sf_dir))
-            if fn.endswith(".parquet")
-            and os.path.isfile(os.path.join(sf_dir, fn))
+            fn for fn in sorted(os.listdir(sf_dir)) if fn.endswith(".parquet")
         ] if os.path.isdir(sf_dir) else []
         if not names:
             _SPLIT_CACHE[sf_dir] = sf_dir
@@ -102,44 +100,47 @@ def split_layout_dir(sf_dir: str) -> str:
             src = os.path.abspath(os.path.join(sf_dir, fn))
             dst = os.path.join(twin, fn)
             try:
-                pf = _pq.ParquetFile(src)
-                rewrite = (
-                    pf.metadata.num_row_groups == 1
-                    and os.path.getsize(src) >= _SPLIT_MIN_BYTES
-                    and pf.metadata.num_rows >= _SPLIT_ROW_GROUPS
-                )
-                if rewrite:
-                    tbl = _pq.read_table(src)
-                    # 1024-row floor: tables smaller than 32k rows get
-                    # proportionally fewer groups instead of degenerate
-                    # hundred-row ones (per-group reader state is a
-                    # fixed cost; guide §6 small-files reasoning at
-                    # row-group granularity)
-                    _pq.write_table(
-                        tbl, dst,
-                        row_group_size=max(
-                            1024, -(-tbl.num_rows // _SPLIT_ROW_GROUPS)
-                        ),
-                    )
-                    # hard guarantee: a rewrite that changes the logical
-                    # schema must never reach a query — fall back to the
-                    # original file instead
-                    if not _pq.read_schema(src).equals(
-                        _pq.read_schema(dst)
-                    ):
-                        os.remove(dst)
-                        os.symlink(src, dst)
-                else:
-                    os.symlink(src, dst)
+                # a directory table (Spark's name.parquet/ of part files)
+                # is already split: link it whole
+                if os.path.isfile(src) and _rewrite_row_groups(src, dst):
+                    continue
             except Exception:
                 # unreadable/corrupt candidate: keep the original path
                 # visible so the query fails (or succeeds) exactly as it
                 # would have without the fixture
                 if os.path.lexists(dst):
                     os.remove(dst)
-                os.symlink(src, dst)
+            os.symlink(src, dst)
         _SPLIT_CACHE[sf_dir] = twin
         return twin
+
+
+def _rewrite_row_groups(src: str, dst: str) -> bool:
+    """Write ``src`` to ``dst`` as _SPLIT_ROW_GROUPS row groups when it is
+    one big row group; False (nothing left at ``dst``) when it should
+    stay as it is. Streams one row group's worth of rows at a time, so
+    no whole table is ever held in memory."""
+    pf = _pq.ParquetFile(src)
+    rows = pf.metadata.num_rows
+    if (
+        pf.metadata.num_row_groups != 1
+        or os.path.getsize(src) < _SPLIT_MIN_BYTES
+        or rows < _SPLIT_ROW_GROUPS
+    ):
+        return False
+    # 1024-row floor: tables smaller than 32k rows get proportionally
+    # fewer groups instead of degenerate hundred-row ones (per-group
+    # reader state is a fixed cost)
+    group_rows = max(1024, -(-rows // _SPLIT_ROW_GROUPS))
+    with _pq.ParquetWriter(dst, pf.schema_arrow) as writer:
+        for batch in pf.iter_batches(batch_size=group_rows):
+            writer.write_batch(batch, row_group_size=group_rows)
+    # hard guarantee: a rewrite that changes the logical schema must
+    # never reach a query — fall back to the original file instead
+    if _pq.read_schema(src).equals(_pq.read_schema(dst)):
+        return True
+    os.remove(dst)
+    return False
 
 
 @lru_cache(maxsize=None)
@@ -176,7 +177,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     but it means caller-built sessions doing local-timezone timestamp
     work after a load will see UTC semantics from then on.
     """
-    # r14: data reads go through the split-layout twin (same rows, same
+    # data reads go through the split-layout twin (same rows, same
     # schema, multi-row-group — see split_layout_dir above); footer
     # probes elsewhere keep reading sf_dir originals.
     path = os.path.join(split_layout_dir(sf_dir), f"{name}.parquet")

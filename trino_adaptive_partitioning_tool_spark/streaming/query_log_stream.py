@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import scoring
 from ..sources.fixtures import QUERY_LOG_SCHEMA
 
 
@@ -64,13 +65,9 @@ def interactive_share_stream(
 ) -> DataFrame:
     """Streaming interactive-vs-batch classification share per window
     (the reference's 10 s / LIMIT heuristic, src/partitioning.py:223-229)."""
-    interactive = (
-        F.coalesce(F.col("execution_time_ms") < 10000, F.lit(False))
-        | F.upper(F.col("query")).contains("LIMIT")
-    )
     return (
         logs_stream.withWatermark("create_time", watermark)
-        .withColumn("is_interactive", interactive)
+        .withColumn("is_interactive", scoring.interactive_rule())
         .groupBy(
             F.window("create_time", window_duration).alias("w"),
             "is_interactive",
