@@ -28,12 +28,10 @@ QUIET_LOAD_GATE = 4.0
 # with zero change to the per-attempt timing methodology:
 #   1. before building the session, wait (bounded) for the 1-min load
 #      to fall under QUIET_LOAD_GATE;
-#   2. after a full attempt, if the start load was still over the gate
-#      OR the frozen-anchor ratio sits above the recorded quiet band
-#      for this core count (BENCH_ANCHOR.json "quiet_band_max", absent
-#      -> load gate only), re-exec this script for a fresh attempt —
-#      fresh JVM, fresh session caches, so the retry's cold numbers
-#      stay honest — up to SPARK_GRAFT_BENCH_MAX_ATTEMPTS (default 2).
+#   2. after a full attempt, if the start load was still over the gate,
+#      re-exec this script for a fresh attempt — fresh JVM, fresh
+#      session caches, so the retry's cold numbers stay honest — up to
+#      SPARK_GRAFT_BENCH_MAX_ATTEMPTS (default 2).
 #   3. the LAST attempt always emits (a loaded sample with quiet:false
 #      beats no sample), and every attempt's summary line goes to
 #      stderr for the record.
@@ -60,19 +58,6 @@ def _wait_for_quiet_start() -> None:
         time.sleep(15)
         waited += 15
 
-
-def _anchor_quiet_gate(cpus: int) -> float | None:
-    """Recorded quiet-band ceiling for this core count, or None (gate
-    disabled) when BENCH_ANCHOR.json predates the band."""
-    try:
-        with open(os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_ANCHOR.json"
-        )) as fh:
-            band = json.load(fh).get("quiet_band_max") or {}
-        v = band.get(str(cpus))
-        return float(v) if v else None
-    except (OSError, ValueError):  # pragma: no cover - resilience path
-        return None
 
 HEADLINE_QUERIES = [
     # core relational surface
@@ -467,10 +452,7 @@ def main() -> None:
     except OSError:  # pragma: no cover - platform without getloadavg
         load_start_1m = None
 
-    from trino_adaptive_partitioning_tool_spark.session import (
-        default_parallelism,
-        get_spark,
-    )
+    from trino_adaptive_partitioning_tool_spark.session import get_spark
     from trino_adaptive_partitioning_tool_spark.queries import registry
 
     spark = get_spark(app_name="bench")
@@ -664,28 +646,17 @@ def main() -> None:
     except (OSError, ValueError):
         pass
 
-    # r14 quiet-host discipline, step 2: a loaded start OR an anchor
-    # ratio above the recorded quiet band means this attempt measured
-    # the host, not the code — re-exec for a fresh attempt (bounded).
+    # r14 quiet-host discipline, step 2: a loaded start means this
+    # attempt measured the host, not the code — re-exec for a fresh
+    # attempt (bounded).
     # Re-exec (not an in-process loop) so the retry pays plan build,
     # session-memo fits and persist materialization again: the cold-rep
     # pricing the regression budget relies on stays honest.
     quiet_start = load_start_1m is not None and load_start_1m <= QUIET_LOAD_GATE
-    cpus = default_parallelism()
-    anchor_gate = _anchor_quiet_gate(cpus)
-    slow_anchor = (
-        anchor_gate is not None
-        and anchor_ratio_r1 is not None
-        and anchor_ratio_r1 > anchor_gate
-    )
-    if (not quiet_start or slow_anchor) and attempt < MAX_ATTEMPTS:
-        reason = (
-            f"start load {load_start_1m} > {QUIET_LOAD_GATE}"
-            if not quiet_start
-            else f"anchor {anchor_ratio_r1} > quiet band {anchor_gate}"
-        )
+    if not quiet_start and attempt < MAX_ATTEMPTS:
         print(
-            f"# attempt {attempt}/{MAX_ATTEMPTS} not quiet ({reason}) - "
+            f"# attempt {attempt}/{MAX_ATTEMPTS} not quiet (start load "
+            f"{load_start_1m} > {QUIET_LOAD_GATE}) - "
             f"re-running; discarded total {total:.3f}s",
             file=sys.stderr,
         )

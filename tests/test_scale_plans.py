@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 
+from trino_adaptive_partitioning_tool_spark import memo
+from trino_adaptive_partitioning_tool_spark.operators import recommend
 from trino_adaptive_partitioning_tool_spark.plans import inspect
 
 from conftest import SMOKE_SF_DIR
@@ -59,8 +61,6 @@ def _confs(spark, **kv):
     # DEFAULT confs — evicting the session memo's entries for the smoke
     # data on entry and exit makes every plan assertion in here observe
     # the overridden regime
-    from trino_adaptive_partitioning_tool_spark import memo
-
     app = spark.sparkContext.applicationId
     old = {k: spark.conf.get(k, None) for k in kv}
     memo.evict(app, SMOKE_SF_DIR)
@@ -132,6 +132,11 @@ def test_aqe_splits_skewed_sort_merge_join(spark, tmp_path):
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            # skew means > factor x the MEDIAN partition; with as few
+            # partitions as a 2-core session's default (2) the median is
+            # the hot partition itself, so pin a count that leaves it an
+            # outlier on any host
+            "spark.sql.shuffle.partitions": "8",
         },
     ):
         joined = fact.join(dim, "k").groupBy("grp").agg(
@@ -304,7 +309,7 @@ _SHUFFLE_CEILINGS = {
     # r11: the end-to-end crawl->corpus funnel — minhash signature
     # groupBy + banded self-join + candidate rollup on the doc-grain
     # survivors, plus the doc-grain flag joins (broadcast at smoke
-    # scale) and the two 1-row aggregates; never all-pairs
+    # scale) and the 1-row rollup; never all-pairs
     "crawl_to_corpus_pipeline": 6,
     # r12: the media funnel — banded phash self-join (candidate
     # distinct) + dominated/semi doc-grain joins (broadcast at smoke
@@ -323,14 +328,17 @@ _SHUFFLE_CEILINGS = {
     # r6: one shuffle by source (cap window; the groupBy reuses its
     # partitioning) + the final range sort
     "source_cap_report": 2,
-    # r7: the log-attach join lost its forced broadcast hint (the log is
-    # unbounded over time), so the INITIAL plan carries the two join-side
-    # shuffles; AQE converts back to broadcast at runtime when the
-    # projection actually fits
-    "workload_drift_report": 5,
-    # r7: embeds the full exact-stats advisor pipeline (dimension-sized
+    # The two drift queries read the session's persisted mined query log
+    # and are measured in one stated state (_MINED_LOG_READERS below):
+    # nothing else cached, the mined log materialized, as in a session
+    # whose advisor has mined the log once. The log-attach join carries
+    # no broadcast hint (the log is unbounded over time); Catalyst
+    # broadcasts it because the materialized log is small, and plans a
+    # sort-merge join (6 and 22 exchanges) while it is not materialized.
+    "workload_drift_report": 4,
+    # embeds the full exact-stats advisor pipeline (dimension-sized
     # aggregations) + the drift aggregation + the trigger joins
-    "partition_recommendation_drift": 21,
+    "partition_recommendation_drift": 17,
     # r7: map-only scoring above the scan — the only exchange is the
     # 1-row broadcast of the bucket->weight map
     "text_model_quality_scores_loaded": 0,
@@ -364,11 +372,25 @@ _SHUFFLE_CEILINGS = {
 }
 
 
+# queries whose plan depends on whether recommend.mined_fixture_logs is
+# materialized: a materialized cache carries its real size, which
+# decides the broadcast of the log-attach join
+_MINED_LOG_READERS = {"workload_drift_report", "partition_recommendation_drift"}
+
 
 @pytest.mark.parametrize(
     "name", sorted(_SHUFFLE_CEILINGS), ids=sorted(_SHUFFLE_CEILINGS)
 )
 def test_flagship_shuffle_ceilings(spark, name):
+    if name in _MINED_LOG_READERS:
+        # one cache state in every test order: a session with nothing
+        # cached and nothing memoized but the materialized mined log.
+        # Frames other tests cached (advisor calls outside the session
+        # memo release nothing) move this count too.
+        app = spark.sparkContext.applicationId
+        memo._release(memo._ENTRIES.pop(app, {}).values())
+        spark.catalog.clearCache()
+        recommend.mined_fixture_logs(spark).count()
     df = _QUERIES[name](spark, SMOKE_SF_DIR)
     n = inspect.shuffle_count(df)
     assert n <= _SHUFFLE_CEILINGS[name], (

@@ -123,9 +123,6 @@ def test_jsonl_write_shards_to_core_count(spark, tmp_path):
 def test_bench_quiet_gate_helpers():
     import bench
 
-    # absent/legacy BENCH_ANCHOR (no quiet_band_max) -> gate disabled
-    gate = bench._anchor_quiet_gate(12345)
-    assert gate is None
     # attempts key rides the full output line
     lines = bench.emit_output_lines(
         total=1.0,

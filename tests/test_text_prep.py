@@ -122,22 +122,26 @@ def test_chunk_reconstruction_property(spark):
             assert rebuilt == text, (text, c, o, ordered)
 
 
-def test_corpus_filter_funnel_monotone_and_complete(spark):
-    """The preprocessing funnel must enumerate every stage in order with
+@pytest.mark.parametrize("name, stages", [
+    ("corpus_filter_funnel", [
+        "input", "lang_consistent", "quality", "repetition",
+        "exact_dedup", "near_dedup",
+    ]),
+    ("corpus_filter_funnel_extended", [
+        "input", "lang_consistent", "quality", "repetition",
+        "model_quality", "exact_dedup", "near_dedup", "span_dedup",
+    ]),
+], ids=["corpus_filter_funnel", "corpus_filter_funnel_extended"])
+def test_corpus_filter_funnel_monotone_and_complete(spark, name, stages):
+    """Each preprocessing funnel must enumerate every stage in order with
     non-increasing document and token counts (each stage filters the
     previous stage's survivors)."""
     from trino_adaptive_partitioning_tool_spark.queries import registry
 
     from conftest import SMOKE_SF_DIR
 
-    rows = (
-        registry.queries()["corpus_filter_funnel"](spark, SMOKE_SF_DIR)
-        .collect()
-    )
-    assert [r["stage"] for r in rows] == [
-        "input", "lang_consistent", "quality", "repetition",
-        "exact_dedup", "near_dedup",
-    ]
+    rows = registry.queries()[name](spark, SMOKE_SF_DIR).collect()
+    assert [r["stage"] for r in rows] == stages
     docs = [r["n_docs"] for r in rows]
     toks = [r["n_tokens"] for r in rows]
     assert docs == sorted(docs, reverse=True)

@@ -233,37 +233,39 @@ _TRANSFORM_COLUMNS = [
 ]
 
 
+def _transform_leg(table: str, col: str, kind: str) -> str:
+    """The transform policy for one column as a DuckDB scalar subquery;
+    `kind` picks the CASE branch (see _TRANSFORM_COLUMNS)."""
+    if kind == "date":
+        return f"""(SELECT CASE
+          WHEN COUNT(DISTINCT CAST({col} AS DATE)) > 20 * COUNT(DISTINCT date_trunc('month', {col}))
+            THEN 'day({col})'
+          WHEN COUNT(DISTINCT date_trunc('month', {col})) > 8 * COUNT(DISTINCT year({col}))
+            THEN 'month({col})'
+          ELSE 'year({col})'
+        END FROM {table})"""
+    if kind == "str":
+        return f"""(SELECT CASE WHEN COUNT(DISTINCT {col}) > 10000
+          THEN 'bucket(16, {col})' ELSE '{col}' END FROM {table})"""
+    if kind == "int":
+        return f"""(SELECT CASE
+          WHEN COUNT(DISTINCT {col}) > 1000 THEN
+            'bucket(' || CAST(LEAST(GREATEST(CAST(FLOOR(COUNT(DISTINCT {col}) / 500.0) AS INTEGER), 4), 32) AS VARCHAR) || ', {col})'
+          WHEN MAX({col}) - MIN({col}) > 10000 THEN 'truncate({col}, 100)'
+          ELSE '{col}'
+        END FROM {table})"""
+    return f"'{col}'"
+
+
 def _transform_oracle() -> str:
     """Per-column stats subqueries + the reference's §2.11 CASE policy
     (varchar bucket>10000→bucket(16); int card>1000→bucket(clamp(card/500,
     4,32)) else range>10000→truncate(col,100); date→granularity probe)."""
-    legs = []
-    for table, col, kind in _TRANSFORM_COLUMNS:
-        if kind == "date":
-            expr = f"""(SELECT CASE
-                 WHEN COUNT(DISTINCT CAST({col} AS DATE)) > 20 * COUNT(DISTINCT date_trunc('month', {col}))
-                   THEN 'day({col})'
-                 WHEN COUNT(DISTINCT date_trunc('month', {col})) > 8 * COUNT(DISTINCT year({col}))
-                   THEN 'month({col})'
-                 ELSE 'year({col})'
-               END FROM {table})"""
-        elif kind == "str":
-            expr = f"""(SELECT CASE WHEN COUNT(DISTINCT {col}) > 10000
-                 THEN 'bucket(16, {col})' ELSE '{col}' END FROM {table})"""
-        elif kind == "int":
-            expr = f"""(SELECT CASE
-                 WHEN COUNT(DISTINCT {col}) > 1000 THEN
-                   'bucket(' || CAST(LEAST(GREATEST(CAST(FLOOR(COUNT(DISTINCT {col}) / 500.0) AS INTEGER), 4), 32) AS VARCHAR) || ', {col})'
-                 WHEN MAX({col}) - MIN({col}) > 10000 THEN 'truncate({col}, 100)'
-                 ELSE '{col}'
-               END FROM {table})"""
-        else:
-            expr = f"'{col}'"
-        legs.append(
-            f"SELECT '{table}' AS table_name, '{col}' AS column_name,\n"
-            f"       {expr} AS transform"
-        )
-    return "\nUNION ALL\n".join(legs)
+    return "\nUNION ALL\n".join(
+        f"SELECT '{table}' AS table_name, '{col}' AS column_name,\n"
+        f"       {_transform_leg(table, col, kind)} AS transform"
+        for table, col, kind in _TRANSFORM_COLUMNS
+    )
 
 
 @register("transform_selection", oracle=_transform_oracle(), memo=True)
@@ -959,28 +961,6 @@ _CANDIDATE_KINDS: dict[str, str] = {
     "p_partkey": "int", "p_name": "str", "p_brand": "str", "p_type": "str",
     "p_size": "int", "p_retailprice": "other",
 }
-
-
-def _transform_leg(table: str, col: str, kind: str) -> str:
-    if kind == "date":
-        return f"""(SELECT CASE
-          WHEN COUNT(DISTINCT CAST({col} AS DATE)) > 20 * COUNT(DISTINCT date_trunc('month', {col}))
-            THEN 'day({col})'
-          WHEN COUNT(DISTINCT date_trunc('month', {col})) > 8 * COUNT(DISTINCT year({col}))
-            THEN 'month({col})'
-          ELSE 'year({col})'
-        END FROM {table})"""
-    if kind == "str":
-        return f"""(SELECT CASE WHEN COUNT(DISTINCT {col}) > 10000
-          THEN 'bucket(16, {col})' ELSE '{col}' END FROM {table})"""
-    if kind == "int":
-        return f"""(SELECT CASE
-          WHEN COUNT(DISTINCT {col}) > 1000 THEN
-            'bucket(' || CAST(LEAST(GREATEST(CAST(FLOOR(COUNT(DISTINCT {col}) / 500.0) AS INTEGER), 4), 32) AS VARCHAR) || ', {col})'
-          WHEN MAX({col}) - MIN({col}) > 10000 THEN 'truncate({col}, 100)'
-          ELSE '{col}'
-        END FROM {table})"""
-    return f"'{col}'"
 
 
 def _all_transform_legs() -> str:

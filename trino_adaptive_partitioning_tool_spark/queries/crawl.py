@@ -323,7 +323,7 @@ def jsonl_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# End-to-end crawl-to-corpus pipeline (r11, verdict #5): WARC parse ->
+# End-to-end crawl-to-corpus pipeline: WARC parse ->
 # HTML extract -> language-ID -> MinHash-LSH dedup -> quality filter ->
 # train split, ONE oracled funnel with per-stage retention counts — the
 # C4/RefinedWeb shape. Every stage is individually oracled elsewhere;
@@ -368,8 +368,8 @@ def _pipeline_oracle() -> str:
       )
     """
     # classifier ranking + quality composite come from the SHARED
-    # builders the standalone text oracles use (r11 review: a marker /
-    # weight / rounding change must have ONE SQL copy to edit); the
+    # builders the standalone text oracles use (a marker / weight /
+    # rounding change must have ONE SQL copy to edit); the
     # lang CTEs are named tok/hits because that is the contract those
     # builders expect, so the minhash CTEs take the "m" prefix
     return f"""
@@ -465,23 +465,26 @@ def crawl_to_corpus_pipeline(
     that certifies the marker matching + tie-break through the
     composition (the oracle replays both over its text reconstruction).
 
-    Scale shape: the extraction output is persisted ONCE (the natural
-    pipeline barrier — language-ID, the MinHash sketch, the quality
-    scorer and the final rollup all consume it; Spark's CacheManager
-    dedups repeat invocations by canonicalized plan). Every stage is
-    doc-grain: the only non-map stages are the MinHash groupBy, the
-    banded self-join (equi-join on band hash, never all-pairs) and the
-    doc-grain flag joins. Nothing corpus-wide ever collects."""
+    Scale shape: the annotated extraction output is persisted ONCE
+    (the natural pipeline barrier — the MinHash sketch and the final
+    rollup both consume it). Every stage is doc-grain: the only non-map
+    stages are the MinHash groupBy, the banded self-join (equi-join on
+    band hash, never all-pairs), the doc-grain flag join and the one
+    1-row rollup. Nothing corpus-wide ever collects."""
     from pyspark import StorageLevel
 
     from ..operators import dedup as dedup_ops
     from ..operators import sampling
     from ..operators import text as text_ops
+    from .funnel import stage_counts
 
     records = cops.parse_warc_records(
         cops.synth_warc_shards(spark, n_shards=n_shards)
     )
-    base = (
+    # Language and quality are column expressions, annotated inline
+    # over every fetched record, so they run once at materialization
+    # instead of once per consumer (the LSH branch and the rollup).
+    flagged = (
         cops.extract_html_text(records, include_non_html=True)
         .select(
             (
@@ -492,38 +495,27 @@ def crawl_to_corpus_pipeline(
             "text",
             "n_words",
         )
-        # r14 (guide §5; r13 verdict #3): corpus-sized, text-carrying,
-        # two consumers (the flag chain + the fetched-total) — spill to
-        # disk under pressure instead of evict-and-re-extract. `text`
-        # stays: the annotator pass below consumes it.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    docs200 = base.where(F.col("status") == 200)
-    # r13 (guide §2.4): language and quality are pure column
-    # expressions — annotate INLINE and persist the annotated frame,
-    # instead of projecting each annotator into its own frame and
-    # joining it back on doc_id (two doc-grain joins gone; the
-    # annotators now run ONCE at materialization instead of once per
-    # consumer of this frame — the LSH branch and the final rollup).
-    flagged = (
-        docs200.withColumn(
+        .withColumn(
             "predicted_lang", text_ops.predicted_lang_col("text")
         )
-        .withColumn("f_words", F.col("n_words") >= _PIPE_MIN_WORDS)
+        .withColumn(
+            "f_words",
+            (F.col("status") == 200)
+            & (F.col("n_words") >= _PIPE_MIN_WORDS),
+        )
         .withColumn(
             "f_lang",
             F.col("f_words") & (F.col("predicted_lang") == "de"),
         )
-        # gated like the old structure (quality was computed over the
-        # lang SURVIVORS only): NULL for gate failures, whose f_qual is
-        # false via f_uniq regardless — value-identical, less CPU
+        # computed over the lang SURVIVORS only: NULL for gate
+        # failures, whose f_qual is false via f_uniq regardless
         .withColumn(
             "quality_score",
             F.when(F.col("f_lang"), text_ops.quality_score_col("text")),
         )
-        # r14: corpus-sized + text payload (the LSH branch consumes
-        # text); MEMORY_AND_DISK so eviction never re-runs the
-        # annotators per consumer at scale
+        # MEMORY_AND_DISK: corpus-sized with the text payload (the LSH
+        # branch consumes text), so eviction at scale would re-run the
+        # extraction and the annotators per consumer
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     s_lang = flagged.where(F.col("f_lang")).select("doc_id", "text")
@@ -553,32 +545,18 @@ def crawl_to_corpus_pipeline(
         )
     )
 
-    def _n(flag: str) -> F.Column:
-        return (
-            F.sum(F.when(F.col(flag), 1).otherwise(0))
-            .cast("bigint")
-            .alias(flag)
-        )
-
-    tot = base.agg(F.count(F.lit(1)).cast("bigint").alias("fetched"))
-    agg = enriched.agg(
-        F.count(F.lit(1)).cast("bigint").alias("http_ok"),
-        _n("f_words"),
-        _n("f_lang"),
-        _n("f_uniq"),
-        _n("f_qual"),
-        _n("f_train"),
-    )
-    return tot.crossJoin(agg).selectExpr(
-        "stack(7, "
-        "0L, 'fetched', fetched, "
-        "1L, 'http_ok', http_ok, "
-        "2L, 'min_words', f_words, "
-        "3L, 'lang_ok', f_lang, "
-        "4L, 'minhash_unique', f_uniq, "
-        "5L, 'quality_ok', f_qual, "
-        "6L, 'train_split', f_train"
-        ") AS (stage_idx, stage, n_records)"
+    return stage_counts(
+        enriched,
+        [
+            ("fetched", F.lit(True)),
+            ("http_ok", F.col("status") == 200),
+            ("min_words", F.col("f_words")),
+            ("lang_ok", F.col("f_lang")),
+            ("minhash_unique", F.col("f_uniq")),
+            ("quality_ok", F.col("f_qual")),
+            ("train_split", F.col("f_train")),
+        ],
+        count="n_records",
     )
 
 

@@ -11,6 +11,11 @@ funnel and reports one row per stage:
 
     (stage_idx, stage, n_docs, n_tokens)
 
+Both registered funnels come from one ordered stage list: the extended
+funnel adds a model-quality gate before exact dedup and a span-level
+dedup cut after near dedup. One Spark builder and one oracle builder
+walk the list.
+
 The oracle nests the REGISTERED sub-oracles verbatim (language, quality,
 repetition — each already hash-green), chains the same filters in SQL,
 replays the minhash sketch over the filtered CTE (the `source` parameter
@@ -19,15 +24,21 @@ one digest row certifies the whole pipeline composition, not just its
 parts.
 
 Scale shape: every stage is a filter or equi-join keyed on doc_id/text
-(shuffle-safe); pair generation runs over stage-4 SURVIVORS only (the
+(shuffle-safe); pair generation runs over the gate SURVIVORS only (the
 standard pipeline order — dedup last, on the already-shrunk corpus), and
 clustering goes through the size-adaptive connected components.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Sequence
+from itertools import accumulate
+from operator import and_
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..operators import dedup as dops
 from ..operators import graph
@@ -41,6 +52,11 @@ from .registry import register
 QUALITY_MIN = 37.0
 REPETITION_MAX = 0.08
 JACCARD_MIN = 0.7
+SPAN_RATIO_MAX = 0.35
+SPAN_STAGE_N = 3  # trigram spans: post-dedup survivors share no 8-gram
+# spans at parity scale, so the stage would be a no-op there; trigram
+# granularity makes the cut observable (and therefore certified) while
+# the operator itself defaults to n=8 for production corpora
 
 _STAGES = (
     "input",
@@ -50,64 +66,97 @@ _STAGES = (
     "exact_dedup",
     "near_dedup",
 )
+# the model-quality gate (hashed linear classifier, weight_sum >= 0)
+# before dedup, and the span-level dedup cut (cross-document
+# duplicated-span ratio over the near-dedup SURVIVORS) after it
+_EXT_STAGES = _STAGES[:4] + ("model_quality",) + _STAGES[4:] + ("span_dedup",)
 
 
-def _funnel_oracle() -> str:
-    # nest the REGISTERED sub-oracles verbatim (qtext is imported above,
-    # so they are in the registry by the time this builder runs)
-    from . import registry as _registry
-
-    lang_sql = _registry._ORACLES["text_language_id"]
-    quality_sql = _registry._ORACLES["text_quality_scores"]
-    rep_sql = _registry._ORACLES["text_repetition_stats"]
-    toks = qtext._TOKS
-    # same scoped MATERIALIZED treatment as the extended funnel: DuckDB
-    # inlines CTEs per reference, re-executing the sketch per stage leg
-    # (measured 49s -> 0.5s at sf0.01); execution hint only
-    sig_ctes = qdedup._minhash_sig_ctes(source="s4", prefix="m").replace(
-        "msig AS (", "msig AS MATERIALIZED (")
-    banded = qdedup._minhash_banded_cte(source="msig").replace(
-        "banded AS (", "banded AS MATERIALIZED (")
-    jac = (
-        "ROUND(CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)"
-        " / len(list_distinct(list_concat(ta.toks, tb.toks))), 4)"
-    )
-    stage_legs = "\nUNION ALL\n".join(
-        f"SELECT {i} AS stage_idx, '{name}' AS stage,"
-        f" COUNT(*) AS n_docs,"
-        f" CAST(COALESCE(SUM(n_tokens), 0) AS BIGINT) AS n_tokens"
-        f" FROM {src}"
-        for i, (name, src) in enumerate(
-            zip(_STAGES, ["base", "s1", "s2", "s3", "s4", "s5"])
+def stage_counts(
+    df: DataFrame,
+    stages: Sequence[tuple[str, Column]],
+    count: str,
+    tokens: str | None = None,
+    idx_type: str = "bigint",
+) -> DataFrame:
+    """One row per (stage name, boolean flag), in order, from a single
+    aggregate over df: (stage_idx, stage, <count>[, <tokens>]), where
+    <count> counts the rows whose flag is true (a null flag counts as
+    dropped) and <tokens> sums df's `tokens` column over them."""
+    aggs, legs = [], []
+    for i, (name, flag) in enumerate(stages):
+        aggs.append(
+            F.sum(F.when(flag, 1).otherwise(0)).cast("bigint").alias(f"n{i}")
         )
+        leg = f"CAST({i} AS {idx_type}), '{name}', n{i}"
+        if tokens:
+            aggs.append(
+                F.coalesce(F.sum(F.when(flag, F.col(tokens))), F.lit(0))
+                .cast("bigint")
+                .alias(f"t{i}")
+            )
+            leg += f", t{i}"
+        legs.append(leg)
+    out = ", ".join(["stage_idx", "stage", count] + ([tokens] if tokens else []))
+    return df.agg(*aggs).selectExpr(
+        f"stack({len(legs)}, {', '.join(legs)}) AS ({out})"
     )
-    return f"""
-    WITH RECURSIVE base AS (
-      SELECT doc_id, lang, text, len({toks}) AS n_tokens FROM documents
-    ),
-    langp AS (SELECT doc_id, predicted_lang FROM ({lang_sql}) q),
-    quals AS (SELECT doc_id, quality_score FROM ({quality_sql}) q),
-    reps AS (SELECT doc_id, dup_bigram_ratio FROM ({rep_sql}) q),
-    s1 AS (
-      SELECT b.* FROM base b JOIN langp l USING (doc_id)
-      WHERE l.predicted_lang = b.lang
-    ),
-    s2 AS (
-      SELECT s1.* FROM s1 JOIN quals USING (doc_id)
-      WHERE quality_score >= {QUALITY_MIN}
-    ),
-    s3 AS MATERIALIZED (
-      SELECT s2.* FROM s2 LEFT JOIN reps USING (doc_id)
-      WHERE COALESCE(dup_bigram_ratio, 0.0) <= {REPETITION_MAX}
-    ),
-    s4 AS MATERIALIZED (
-      SELECT s3.* FROM s3
-      JOIN (SELECT text, MIN(doc_id) AS mn FROM s3 GROUP BY text) c
-        ON s3.text = c.text AND s3.doc_id = c.mn
-    ),
-    {sig_ctes},
-    {banded},
-    cand AS (
+
+
+def _oracle_stage(name: str, prev: str) -> tuple[list[str], str]:
+    """The helper CTEs a stage needs and the SELECT of its survivors
+    from the previous stage's CTE `prev`."""
+    from . import registry as _registry
+    from .text import _model_weight_sum_sql, _ngram_hash_cte
+
+    def sub(query: str) -> str:
+        return _registry._ORACLES[query]
+
+    toks = qtext._TOKS
+    keep = f"SELECT p.* FROM {prev} p"
+    if name == "lang_consistent":
+        return [
+            f"langp AS (SELECT doc_id, predicted_lang"
+            f" FROM ({sub('text_language_id')}) q)"
+        ], f"{keep} JOIN langp l USING (doc_id) WHERE l.predicted_lang = p.lang"
+    if name == "quality":
+        return [
+            f"quals AS (SELECT doc_id, quality_score"
+            f" FROM ({sub('text_quality_scores')}) q)"
+        ], f"{keep} JOIN quals USING (doc_id) WHERE quality_score >= {QUALITY_MIN}"
+    if name == "repetition":
+        return [
+            f"reps AS (SELECT doc_id, dup_bigram_ratio"
+            f" FROM ({sub('text_repetition_stats')}) q)"
+        ], (
+            f"{keep} LEFT JOIN reps USING (doc_id)"
+            f" WHERE COALESCE(dup_bigram_ratio, 0.0) <= {REPETITION_MAX}"
+        )
+    if name == "model_quality":
+        return [
+            f"mq AS (SELECT doc_id, {_model_weight_sum_sql(toks)} AS weight_sum"
+            f" FROM documents)"
+        ], f"{keep} JOIN mq USING (doc_id) WHERE weight_sum >= 0"
+    if name == "exact_dedup":
+        return [], (
+            f"{keep} JOIN (SELECT text, MIN(doc_id) AS mn FROM {prev} GROUP BY text) c"
+            f" ON p.text = c.text AND p.doc_id = c.mn"
+        )
+    if name == "near_dedup":
+        # MATERIALIZED sketch: the 16 banded legs would otherwise
+        # re-execute it per reference. Applied per fragment: "sig" is
+        # shadowed inside the nested quality sub-oracle, and a global
+        # replace trips DuckDB's duplicate-alias binder check.
+        jac = (
+            "ROUND(CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)"
+            " / len(list_distinct(list_concat(ta.toks, tb.toks))), 4)"
+        )
+        return [
+            qdedup._minhash_sig_ctes(source=prev, prefix="m").replace(
+                "msig AS (", "msig AS MATERIALIZED ("),
+            qdedup._minhash_banded_cte(source="msig").replace(
+                "banded AS (", "banded AS MATERIALIZED ("),
+            f"""cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a
       JOIN banded b
@@ -131,102 +180,74 @@ def _funnel_oracle() -> str:
       UNION
       SELECT e.dst AS node, r.root FROM reach r JOIN edges e ON e.src = r.node
     ),
-    labels AS MATERIALIZED (SELECT node, MIN(root) AS rep FROM reach GROUP BY node),
-    s5 AS (
-      SELECT s4.* FROM s4
-      LEFT JOIN labels ON s4.doc_id = labels.node
-      WHERE labels.node IS NULL OR labels.rep = s4.doc_id
+    labels AS MATERIALIZED (SELECT node, MIN(root) AS rep FROM reach GROUP BY node)""",
+        ], (
+            f"{keep} LEFT JOIN labels ON p.doc_id = labels.node"
+            f" WHERE labels.node IS NULL OR labels.rep = p.doc_id"
+        )
+    assert name == "span_dedup", name
+    return [
+        _ngram_hash_cte(SPAN_STAGE_N, source=prev, prefix="sp_").replace(
+            "sp_e AS (", "sp_e AS MATERIALIZED ("),
+        "sp_df AS (SELECT h, COUNT(*) AS ndocs FROM sp_e GROUP BY h)",
+        """sp_ratio AS (
+      SELECT e.doc_id,
+             CAST(ROUND(CAST(SUM(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END)
+               / CAST(COUNT(*) AS DOUBLE) AS VARCHAR)::DECIMAL(38,12), 6)
+               AS DOUBLE) AS ratio
+      FROM sp_e e JOIN sp_df USING (h)
+      GROUP BY e.doc_id
+    )""",
+    ], (
+        f"{keep} LEFT JOIN sp_ratio r ON p.doc_id = r.doc_id"
+        f" WHERE r.doc_id IS NULL OR r.ratio <= {SPAN_RATIO_MAX}"
     )
+
+
+def _funnel_oracle(stages: Sequence[str]) -> str:
+    """The funnel as one DuckDB CTE chain: stage i's survivors are CTE
+    s{i}, selected from s{i-1}; one count leg per stage."""
+    ctes = [
+        f"base AS (SELECT doc_id, lang, text, len({qtext._TOKS}) AS n_tokens"
+        f" FROM documents)"
+    ]
+    prev = "base"
+    for i, name in enumerate(stages[1:], 1):
+        helpers, survivors = _oracle_stage(name, prev)
+        # MATERIALIZED: every survivor CTE is read by the next stage and
+        # by its count leg, and DuckDB inlines a CTE per reference, so
+        # the whole chain up to the sketch would re-execute per leg
+        # (measured 49 s -> 0.5 s at sf0.01). Execution hint only.
+        ctes += helpers + [f"s{i} AS MATERIALIZED ({survivors})"]
+        prev = f"s{i}"
+    legs = "\nUNION ALL\n".join(
+        f"SELECT {i} AS stage_idx, '{name}' AS stage,"
+        f" COUNT(*) AS n_docs,"
+        f" CAST(COALESCE(SUM(n_tokens), 0) AS BIGINT) AS n_tokens"
+        f" FROM {'s' + str(i) if i else 'base'}"
+        for i, name in enumerate(stages)
+    )
+    chain = ",\n    ".join(ctes)
+    return f"""
+    WITH RECURSIVE {chain}
     SELECT * FROM (
-    {stage_legs}
+    {legs}
     ) funnel ORDER BY stage_idx
     """
 
 
-@register("corpus_filter_funnel", oracle=_funnel_oracle(), memo=True)
-def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-stage document/token attrition of the full preprocessing
-    funnel (see module docstring). Composes only already-verified
-    operators; the oracle replays the identical chain in SQL, including
-    the minhash sketch over survivors and a recursive-CTE closure for
-    the near-dup clusters."""
-    from pyspark import StorageLevel
-    from pyspark.sql.window import Window
-
-    from ..operators.dedup import ensure_parallelism
-
-    docs = tables.load_table(spark, sf_dir, "documents")
-    # r13 (guide §2.4): the language and quality annotators are pure
-    # column expressions, so they are computed INLINE in the one
-    # annotated pass — the previous structure projected each into its
-    # own frame and joined it back on doc_id, paying two doc-grain
-    # joins (and two extra corpus scans) for values derivable in the
-    # scan projection. Repetition stays a left join: it is an
-    # aggregation-based annotator (its map-only array form measured
-    # 2.4x slower — see operators/text.repetition_stats r13 note).
-    # ensure_parallelism spreads the now-single annotator projection
-    # when the scan cannot (single-row-group local files); a no-op on
-    # well-split 100 TB inputs.
-    reps = tops.repetition_stats(docs).select("doc_id", "dup_bigram_ratio")
-
-    # ONE annotated pass instead of six sequential sub-DataFrames: each
-    # per-stage predicate becomes a boolean column, sequential survival
-    # is the prefix-AND, and the funnel counts come from conditional
-    # sums over a single aggregate — six stage legs re-executing the
-    # whole filter chain (6x corpus scans and ~100 plan exchanges at
-    # scale) collapse into one.
-    lang_ok = F.col("predicted_lang") == F.col("lang")
-    qual_ok = F.col("quality_score") >= QUALITY_MIN
-    rep_ok = F.coalesce(F.col("dup_bigram_ratio"), F.lit(0.0)) <= REPETITION_MAX
-    # The repetition annotator joins left so stage 0 is unconditionally
-    # the full corpus (the stage predicates null-guard via the boolean
-    # columns: a null flag counts as not-surviving, never as dropped
-    # from the input row count). The annotated frame is persisted: BOTH
-    # consumers (the survivor chain and the final conditional
-    # aggregate) previously re-ran the annotator joins per reference.
-    ann = (
-        ensure_parallelism(docs)
-        .select(
-            "doc_id", "lang", "text",
-            F.size(tokens_expr("text")).cast("bigint").alias("n_tokens"),
-            tops.predicted_lang_col("text").alias("predicted_lang"),
-            tops.quality_score_col("text").alias("quality_score"),
-        )
-        .join(reps, "doc_id", "left")
-        .select(
-            "doc_id", "text", "n_tokens",
-            lang_ok.alias("lang_ok"),
-            (lang_ok & qual_ok).alias("s2_ok"),
-            (lang_ok & qual_ok & rep_ok).alias("s3_ok"),
-        )
-        # r14 (guide §5; r13 verdict #3): MEMORY_AND_DISK — this frame
-        # is corpus-sized AND carries the text payload, so MEMORY_ONLY
-        # eviction at scale would re-run both annotators per consumer
-        # (the exact cost the persist exists to kill). `text` cannot be
-        # projected out: the dedup leg below consumes it (window
-        # partition key + minhash input); the flags-only alternative
-        # re-attaches text with an extra doc-grain join + corpus scan.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # exact dedup among stage-3 survivors: canonical = lowest doc_id per
-    # text (rank-1 window over the survivor partition)
+def _exact_dedup(s: DataFrame) -> tuple[DataFrame, Column]:
+    # canonical = lowest doc_id per text (rank-1 window per text)
     w = Window.partitionBy("text").orderBy("doc_id")
-    s4 = (
-        ann.where("s3_ok")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-        # referenced by pair generation, the near-dup flag join and the
-        # final aggregate — cache one materialization (memo keeps the
-        # plan, so the cache is hit on every call). MEMORY_AND_DISK
-        # (r14): survivor-sized but text-carrying — spill, don't evict.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    return s.withColumn("rn", F.row_number().over(w)), F.col("rn") == 1
+
+
+def _near_dedup(s: DataFrame) -> tuple[DataFrame, Column]:
     cands = dops.minhash_lsh_pairs(
-        s4.select("doc_id", "text"), jaccard_threshold=0.0
+        s.select("doc_id", "text"), jaccard_threshold=0.0
     ).select("id_a", "id_b")
     verified = dops.token_jaccard_pairs(
-        s4.select("doc_id", "text"), cands, threshold=JACCARD_MIN
+        s.select("doc_id", "text"), cands, threshold=JACCARD_MIN
     ).select("id_a", "id_b")
     comp = graph.connected_components(verified, "id_a", "id_b")
     non_reps = comp.where(F.col("node") != F.col("component")).select(
@@ -235,213 +256,63 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No broadcast hint: non_reps is proportional to the duplicate count
     # (30-50 % of a web corpus), i.e. corpus-scale — let AQE broadcast
     # only when it actually fits.
-    flagged = (
-        s4.join(non_reps, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.lit(True).alias("s4_ok"),
-            F.coalesce(~F.col("is_dup"), F.lit(True)).alias("s5_ok"),
-        )
+    return (
+        s.join(non_reps, "doc_id", "left"),
+        F.coalesce(~F.col("is_dup"), F.lit(True)),
     )
-    final = ann.join(flagged, "doc_id", "left").select(
-        "n_tokens", "lang_ok", "s2_ok", "s3_ok",
-        F.coalesce(F.col("s4_ok"), F.lit(False)).alias("s4_ok"),
-        F.coalesce(F.col("s5_ok"), F.lit(False)).alias("s5_ok"),
+
+
+def _span_dedup(s: DataFrame) -> tuple[DataFrame, Column]:
+    # skew_safe pinned False: the span stage runs over near-dedup
+    # SURVIVORS (boilerplate documents largely removed), and the
+    # composed pipeline wants a build-time-action-free, stable plan
+    spans = tops.duplicate_span_stats(
+        s.select("doc_id", "text"), n=SPAN_STAGE_N, skew_safe=False
+    ).select("doc_id", "shared_span_ratio")
+    ratio = F.col("shared_span_ratio")
+    return (
+        s.join(spans, "doc_id", "left"),
+        ratio.isNull() | (ratio <= SPAN_RATIO_MAX),
     )
-    flags = [F.lit(True), F.col("lang_ok"), F.col("s2_ok"),
-             F.col("s3_ok"), F.col("s4_ok"), F.col("s5_ok")]
-    aggs = []
-    for i, flag in enumerate(flags):
-        aggs.append(
-            F.sum(F.when(flag, 1).otherwise(0)).cast("bigint").alias(f"n{i}")
-        )
-        aggs.append(
-            F.coalesce(F.sum(F.when(flag, F.col("n_tokens"))), F.lit(0))
-            .cast("bigint")
-            .alias(f"t{i}")
-        )
-    one = final.agg(*aggs)
-    stack_args = ", ".join(
-        f"{i}, '{name}', n{i}, t{i}" for i, name in enumerate(_STAGES)
-    )
-    return one.selectExpr(
-        f"stack(6, {stack_args}) AS (stage_idx, stage, n_docs, n_tokens)"
-    ).orderBy("stage_idx")
 
 
-# ---------------------------------------------------------------------------
-# Extended funnel: v1's five filters plus the round-6 stages — the
-# model-quality gate (hashed linear classifier, weight_sum >= 0) before
-# dedup, and a span-level dedup cut (cross-document duplicated-span
-# ratio over the near-dedup SURVIVORS) after it. Registered separately
-# so the certified v1 flagship stays untouched.
-# ---------------------------------------------------------------------------
-SPAN_RATIO_MAX = 0.35
-SPAN_STAGE_N = 3  # trigram spans: post-dedup survivors share no 8-gram
-# spans at parity scale, so the stage would be a no-op there; trigram
-# granularity makes the cut observable (and therefore certified) while
-# the operator itself defaults to n=8 for production corpora
-_EXT_STAGES = (
-    "input",
-    "lang_consistent",
-    "quality",
-    "repetition",
-    "model_quality",
-    "exact_dedup",
-    "near_dedup",
-    "span_dedup",
-)
+_DEDUP = {
+    "exact_dedup": _exact_dedup,
+    "near_dedup": _near_dedup,
+    "span_dedup": _span_dedup,
+}
 
 
-def _funnel_extended_oracle() -> str:
-    from . import registry as _registry
-    from .text import _model_weight_sum_sql, _ngram_hash_cte
-
-    lang_sql = _registry._ORACLES["text_language_id"]
-    quality_sql = _registry._ORACLES["text_quality_scores"]
-    rep_sql = _registry._ORACLES["text_repetition_stats"]
-    toks = qtext._TOKS
-    # MATERIALIZED: DuckDB inlines CTEs per reference, and the 16
-    # banded legs + stage legs would re-execute the minhash sketch per
-    # reference (minutes at sf0.01). Execution hint only — results
-    # unchanged. Applied per-fragment: "sig" is shadowed inside the
-    # nested quality sub-oracle and a global replace trips DuckDB's
-    # duplicate-alias binder check.
-    sig_ctes = qdedup._minhash_sig_ctes(source="s5", prefix="m").replace(
-        "msig AS (", "msig AS MATERIALIZED (")
-    banded = qdedup._minhash_banded_cte(source="msig").replace(
-        "banded AS (", "banded AS MATERIALIZED (")
-    jac = (
-        "ROUND(CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)"
-        " / len(list_distinct(list_concat(ta.toks, tb.toks))), 4)"
-    )
-    stage_legs = "\nUNION ALL\n".join(
-        f"SELECT {i} AS stage_idx, '{name}' AS stage,"
-        f" COUNT(*) AS n_docs,"
-        f" CAST(COALESCE(SUM(n_tokens), 0) AS BIGINT) AS n_tokens"
-        f" FROM {src}"
-        for i, (name, src) in enumerate(
-            zip(_EXT_STAGES, ["base", "s1", "s2", "s3", "s4", "s5", "s6", "s7"])
-        )
-    )
-    return f"""
-    WITH RECURSIVE base AS (
-      SELECT doc_id, lang, text, len({toks}) AS n_tokens FROM documents
-    ),
-    langp AS (SELECT doc_id, predicted_lang FROM ({lang_sql}) q),
-    quals AS (SELECT doc_id, quality_score FROM ({quality_sql}) q),
-    reps AS (SELECT doc_id, dup_bigram_ratio FROM ({rep_sql}) q),
-    mq AS (
-      SELECT doc_id, {_model_weight_sum_sql(toks)} AS weight_sum
-      FROM documents
-    ),
-    s1 AS (
-      SELECT b.* FROM base b JOIN langp l USING (doc_id)
-      WHERE l.predicted_lang = b.lang
-    ),
-    s2 AS (
-      SELECT s1.* FROM s1 JOIN quals USING (doc_id)
-      WHERE quality_score >= {QUALITY_MIN}
-    ),
-    s3 AS MATERIALIZED (
-      SELECT s2.* FROM s2 LEFT JOIN reps USING (doc_id)
-      WHERE COALESCE(dup_bigram_ratio, 0.0) <= {REPETITION_MAX}
-    ),
-    s4 AS MATERIALIZED (
-      SELECT s3.* FROM s3 JOIN mq USING (doc_id) WHERE weight_sum >= 0
-    ),
-    s5 AS MATERIALIZED (
-      SELECT s4.* FROM s4
-      JOIN (SELECT text, MIN(doc_id) AS mn FROM s4 GROUP BY text) c
-        ON s4.text = c.text AND s4.doc_id = c.mn
-    ),
-    {sig_ctes},
-    {banded},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a
-      JOIN banded b
-        ON a.band = b.band AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ),
-    dtok AS MATERIALIZED (SELECT doc_id, list_distinct({toks}) AS toks FROM documents),
-    verified AS (
-      SELECT c.id_a, c.id_b FROM cand c
-      JOIN dtok ta ON ta.doc_id = c.id_a
-      JOIN dtok tb ON tb.doc_id = c.id_b
-      WHERE {jac} >= {JACCARD_MIN}
-    ),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM verified
-      UNION
-      SELECT id_b AS src, id_a AS dst FROM verified
-    ),
-    reach(node, root) AS (
-      SELECT DISTINCT src AS node, src AS root FROM edges
-      UNION
-      SELECT e.dst AS node, r.root FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    labels AS MATERIALIZED (SELECT node, MIN(root) AS rep FROM reach GROUP BY node),
-    s6 AS MATERIALIZED (
-      SELECT s5.* FROM s5
-      LEFT JOIN labels ON s5.doc_id = labels.node
-      WHERE labels.node IS NULL OR labels.rep = s5.doc_id
-    ),
-    {_ngram_hash_cte(SPAN_STAGE_N, source="s6", prefix="sp_").replace(
-        "sp_e AS (", "sp_e AS MATERIALIZED (")},
-    sp_df AS (SELECT h, COUNT(*) AS ndocs FROM sp_e GROUP BY h),
-    sp_ratio AS (
-      SELECT e.doc_id,
-             CAST(ROUND(CAST(SUM(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END)
-               / CAST(COUNT(*) AS DOUBLE) AS VARCHAR)::DECIMAL(38,12), 6)
-               AS DOUBLE) AS ratio
-      FROM sp_e e JOIN sp_df USING (h)
-      GROUP BY e.doc_id
-    ),
-    s7 AS (
-      SELECT s6.* FROM s6
-      LEFT JOIN sp_ratio r ON s6.doc_id = r.doc_id
-      WHERE r.doc_id IS NULL OR r.ratio <= {SPAN_RATIO_MAX}
-    )
-    SELECT * FROM (
-    {stage_legs}
-    ) funnel ORDER BY stage_idx
-    """
-
-
-@register(
-    "corpus_filter_funnel_extended",
-    oracle=_funnel_extended_oracle(),
-    memo=True,
-)
-def corpus_filter_funnel_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The v1 funnel plus two round-6 stages: a model-quality gate
-    (hashed-linear-classifier weight_sum >= 0, map-only) before dedup,
-    and a span-level dedup cut (cross-document duplicated-span ratio
-    over the NEAR-DEDUP SURVIVORS <= SPAN_RATIO_MAX = 0.35) after it — the full
-    eight-stage corpus curation pipeline, composed exclusively from
-    individually-oracled operators, certified end to end as one row per
-    stage."""
-    from pyspark import StorageLevel
-    from pyspark.sql.window import Window
-
-    from ..operators import text as textops
-    from ..operators.dedup import ensure_parallelism
-
+def _funnel(spark: SparkSession, sf_dir: str, stages: Sequence[str]) -> DataFrame:
+    """Per-stage document/token attrition of `stages` (see the module
+    docstring). Stage i's survival is the boolean column ok{i}; the
+    counts come from one conditional aggregate over the annotated
+    corpus instead of one leg per stage re-running the filter chain."""
     docs = tables.load_table(spark, sf_dir, "documents")
-    # r13: same restructure as the v1 funnel (see corpus_filter_funnel)
-    # — language/quality/model annotators are inline column expressions
-    # in ONE spread projection; repetition (aggregation-based) stays the
-    # single annotator left join; the annotated frame is persisted for
-    # its two consumers.
+    # Language, quality and model quality are column expressions over
+    # the text, computed in the one annotated projection. Repetition is
+    # aggregation-based, so it stays a left join (its map-only array
+    # form measured 2.4x slower — see operators/text.repetition_stats);
+    # left, so stage 0 is the whole corpus.
     reps = tops.repetition_stats(docs).select("doc_id", "dup_bigram_ratio")
-
-    lang_ok = F.col("predicted_lang") == F.col("lang")
-    qual_ok = F.col("quality_score") >= QUALITY_MIN
-    rep_ok = F.coalesce(F.col("dup_bigram_ratio"), F.lit(0.0)) <= REPETITION_MAX
-    model_ok = textops.model_weight_sum_col("text") >= 0
+    gate = {
+        "lang_consistent": lambda: F.col("predicted_lang") == F.col("lang"),
+        "quality": lambda: F.col("quality_score") >= QUALITY_MIN,
+        "repetition": lambda: (
+            F.coalesce(F.col("dup_bigram_ratio"), F.lit(0.0)) <= REPETITION_MAX
+        ),
+        "model_quality": lambda: tops.model_weight_sum_col("text") >= 0,
+    }
+    # gates are per-document predicates, evaluated in one annotated
+    # pass; from the first dedup stage on, each stage reads the
+    # survivors of the stage before it
+    n_gated = next(i for i, name in enumerate(stages) if name in _DEDUP)
+    oks = accumulate((gate[name]() for name in stages[1:n_gated]), and_)
+    gate_flags = [ok.alias(f"ok{i}") for i, ok in enumerate(oks, 1)]
     ann = (
-        ensure_parallelism(docs)
+        # spreads the annotator projection when the scan cannot
+        # (single-row-group local files); a no-op on well-split inputs
+        dops.ensure_parallelism(docs)
         .select(
             "doc_id", "lang", "text",
             F.size(tokens_expr("text")).cast("bigint").alias("n_tokens"),
@@ -449,85 +320,80 @@ def corpus_filter_funnel_extended(spark: SparkSession, sf_dir: str) -> DataFrame
             tops.quality_score_col("text").alias("quality_score"),
         )
         .join(reps, "doc_id", "left")
-        .select(
-            "doc_id", "text", "n_tokens",
-            lang_ok.alias("lang_ok"),
-            (lang_ok & qual_ok).alias("s2_ok"),
-            (lang_ok & qual_ok & rep_ok).alias("s3_ok"),
-            (lang_ok & qual_ok & rep_ok & model_ok).alias("s4_ok"),
-        )
-        # r14 (guide §5): corpus-sized + text payload — spill, don't
-        # evict (see corpus_filter_funnel's ann for the full rationale)
+        .select("doc_id", "text", "n_tokens", *gate_flags)
+        # MEMORY_AND_DISK: the survivor chain and the final aggregate
+        # both read this frame, which is corpus-sized AND carries the
+        # text payload, so MEMORY_ONLY eviction at scale would re-run
+        # both annotators per consumer (the exact cost the persist
+        # exists to kill). `text` cannot be projected out: the dedup
+        # stages consume it (window partition key + minhash input); the
+        # flags-only alternative re-attaches text with an extra
+        # doc-grain join + corpus scan.
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    w = Window.partitionBy("text").orderBy("doc_id")
-    s5 = (
-        ann.where("s4_ok")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cands = dops.minhash_lsh_pairs(
-        s5.select("doc_id", "text"), jaccard_threshold=0.0
-    ).select("id_a", "id_b")
-    verified = dops.token_jaccard_pairs(
-        s5.select("doc_id", "text"), cands, threshold=JACCARD_MIN
-    ).select("id_a", "id_b")
-    comp = graph.connected_components(verified, "id_a", "id_b")
-    non_reps = comp.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id"), F.lit(True).alias("is_dup")
-    )
-    s6 = (
-        s5.join(non_reps, "doc_id", "left")
-        .where(F.coalesce(~F.col("is_dup"), F.lit(True)))
-        .drop("is_dup")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # skew_safe pinned False: the span stage runs over near-dedup
-    # SURVIVORS (boilerplate documents largely removed), and the
-    # composed pipeline wants a build-time-action-free, stable plan
-    spans = textops.duplicate_span_stats(
-        s6.select("doc_id", "text"), n=SPAN_STAGE_N, skew_safe=False
-    ).select("doc_id", "shared_span_ratio")
-    flagged = (
-        s6.join(spans, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.lit(True).alias("s6_ok"),
-            (
-                F.col("shared_span_ratio").isNull()
-                | (F.col("shared_span_ratio") <= SPAN_RATIO_MAX)
-            ).alias("s7_ok"),
+    # Each dedup stage reads the persisted survivors of the stage before
+    # it: chain[k] survives stage n_gated - 1 + k.
+    chain = [ann.where(f"ok{n_gated - 1}")]
+    for name in stages[n_gated:-1]:
+        joined, keep = _DEDUP[name](chain[-1])
+        chain.append(
+            joined.where(keep)
+            .select(*chain[-1].columns)
+            # read by the next stage's pair or span generation, its
+            # flag join and the final aggregate — one materialization
+            # (memo keeps the plan, so the cache is hit on every call).
+            # MEMORY_AND_DISK: survivor-sized but text-carrying — spill,
+            # don't evict.
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-    )
-    s5_flags = s5.select("doc_id", F.lit(True).alias("s5_ok"))
-    final = (
-        ann.join(s5_flags, "doc_id", "left")
-        .join(flagged, "doc_id", "left")
-        .select(
-            "n_tokens", "lang_ok", "s2_ok", "s3_ok", "s4_ok",
-            F.coalesce(F.col("s5_ok"), F.lit(False)).alias("s5_ok"),
-            F.coalesce(F.col("s6_ok"), F.lit(False)).alias("s6_ok"),
-            F.coalesce(F.col("s7_ok"), F.lit(False)).alias("s7_ok"),
+    # The last stage's joined frame already holds its input's survivors,
+    # so it carries the last two flags in one join.
+    joined, keep = _DEDUP[stages[-1]](chain[-1])
+    last = len(stages) - 1
+    flag_frames = [
+        s.select("doc_id", F.lit(True).alias(f"ok{i}"))
+        for i, s in enumerate(chain[1:-1], n_gated)
+    ] + [
+        joined.select(
+            "doc_id", F.lit(True).alias(f"ok{last - 1}"), keep.alias(f"ok{last}")
         )
-    )
-    flags = [F.lit(True), F.col("lang_ok"), F.col("s2_ok"), F.col("s3_ok"),
-             F.col("s4_ok"), F.col("s5_ok"), F.col("s6_ok"), F.col("s7_ok")]
-    aggs = []
-    for i, flag in enumerate(flags):
-        aggs.append(
-            F.sum(F.when(flag, 1).otherwise(0)).cast("bigint").alias(f"n{i}")
-        )
-        aggs.append(
-            F.coalesce(F.sum(F.when(flag, F.col("n_tokens"))), F.lit(0))
-            .cast("bigint")
-            .alias(f"t{i}")
-        )
-    one = final.agg(*aggs)
-    stack_args = ", ".join(
-        f"{i}, '{name}', n{i}, t{i}" for i, name in enumerate(_EXT_STAGES)
-    )
-    return one.selectExpr(
-        f"stack(8, {stack_args}) AS (stage_idx, stage, n_docs, n_tokens)"
+    ]
+    final = ann
+    for flags in flag_frames:
+        final = final.join(flags, "doc_id", "left")
+    # a document missing from a dedup stage's flag frame has a null
+    # flag, which stage_counts counts as dropped
+    return stage_counts(
+        final,
+        [("input", F.lit(True))]
+        + [(stages[i], F.col(f"ok{i}")) for i in range(1, len(stages))],
+        count="n_docs",
+        tokens="n_tokens",
+        idx_type="int",
     ).orderBy("stage_idx")
+
+
+@register("corpus_filter_funnel", oracle=_funnel_oracle(_STAGES), memo=True)
+def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-stage document/token attrition of the six-stage preprocessing
+    funnel (see module docstring). Composes only already-verified
+    operators; the oracle replays the identical chain in SQL, including
+    the minhash sketch over survivors and a recursive-CTE closure for
+    the near-dup clusters."""
+    return _funnel(spark, sf_dir, _STAGES)
+
+
+@register(
+    "corpus_filter_funnel_extended",
+    oracle=_funnel_oracle(_EXT_STAGES),
+    memo=True,
+)
+def corpus_filter_funnel_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The six-stage funnel plus a model-quality gate
+    (hashed-linear-classifier weight_sum >= 0, map-only) before dedup,
+    and a span-level dedup cut (cross-document duplicated-span ratio
+    over the NEAR-DEDUP SURVIVORS <= SPAN_RATIO_MAX = 0.35) after it —
+    the full eight-stage corpus curation pipeline, composed exclusively
+    from individually-oracled operators, certified end to end as one
+    row per stage."""
+    return _funnel(spark, sf_dir, _EXT_STAGES)

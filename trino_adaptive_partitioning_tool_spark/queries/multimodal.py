@@ -1938,7 +1938,7 @@ def multimodal_palette_png_stats(
     return _image_rollup(decoded, indexed=indexed)
 
 
-# --- media-to-corpus pipeline (r12 flagship) -----------------------------
+# --- media-to-corpus pipeline -------------------------------------------
 # The multimodal twin of crawl_to_corpus_pipeline: mixed-container
 # assets -> magic-byte decode (corrupt rows quarantined, not fatal) ->
 # phash near-dup dedup -> per-modality quality gate -> train manifest,
@@ -2055,6 +2055,7 @@ def media_to_corpus_pipeline(
     from pyspark import StorageLevel
 
     from ..operators import sampling
+    from .funnel import stage_counts
 
     # the id-offset convention needs the legs' id spaces disjoint
     assert img_n < _MEDIA_PIPE_WAV_OFF
@@ -2082,7 +2083,7 @@ def media_to_corpus_pipeline(
     # dedup branch and the flag rollup both consume it.
     decoded = mm.decode_assets_with_phash(
         corpus, require_codec=True, codec=codec
-        # r14 (guide §5): recompute = the fused decode+phash pass —
+        # MEMORY_AND_DISK: recompute = the fused decode+phash pass —
         # spill under pressure, never evict-and-redecode
     ).persist(StorageLevel.MEMORY_AND_DISK)
     hashes = decoded.where(
@@ -2122,30 +2123,16 @@ def media_to_corpus_pipeline(
         )
     )
 
-    def _n(flag: str) -> F.Column:
-        return (
-            F.sum(F.when(F.col(flag), 1).otherwise(0))
-            .cast("bigint")
-            .alias(flag)
-        )
-
-    agg = flagged.agg(
-        F.count(F.lit(1)).cast("bigint").alias("ingested"),
-        F.sum(F.when(F.col("decode_ok"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("f_decode"),
-        _n("f_uniq"),
-        _n("f_qual"),
-        _n("f_train"),
-    )
-    return agg.selectExpr(
-        "stack(5, "
-        "0L, 'ingested', ingested, "
-        "1L, 'decode_ok', f_decode, "
-        "2L, 'near_dup_unique', f_uniq, "
-        "3L, 'quality_ok', f_qual, "
-        "4L, 'train_split', f_train"
-        ") AS (stage_idx, stage, n_records)"
+    return stage_counts(
+        flagged,
+        [
+            ("ingested", F.lit(True)),
+            ("decode_ok", F.col("decode_ok")),
+            ("near_dup_unique", F.col("f_uniq")),
+            ("quality_ok", F.col("f_qual")),
+            ("train_split", F.col("f_train")),
+        ],
+        count="n_records",
     )
 
 
