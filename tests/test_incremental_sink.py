@@ -29,9 +29,7 @@ def test_streamed_store_equals_batch_recompute(spark, tmp_path):
         .json(in_dir)
     )
     stats_path = str(tmp_path / "stats")
-    isink.maintain_partition_stats(
-        stream, stats_path, str(tmp_path / "ckpt"), KEYS
-    )
+    isink.maintain_partition_stats(stream, stats_path, KEYS)
 
     got = incremental.merge_sketch_stats(
         spark.read.parquet(stats_path), KEYS

@@ -137,8 +137,9 @@ def test_memoized_feed_dir_removed_at_exit():
 def test_checkpoint_dir_removed_at_exit():
     ckpt = _last_line_of(
         "import os\n"
-        "from trino_adaptive_partitioning_tool_spark.queries import streaming_q\n"
-        "ckpt = streaming_q._fresh_ckpt()\n"
+        "from trino_adaptive_partitioning_tool_spark.streaming import (\n"
+        "    query_log_stream)\n"
+        "ckpt = query_log_stream._fresh_ckpt()\n"
         "os.makedirs(ckpt + '/offsets')\n"
         "print(ckpt)\n"
     )

@@ -3,6 +3,7 @@ stream must match the equivalent batch aggregation on the same rows."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from trino_adaptive_partitioning_tool_spark.sources import fixtures
@@ -15,14 +16,12 @@ def _write_log_files(spark, path: str) -> None:
 
 def test_windowed_rollup_matches_batch(spark, tmp_path):
     in_dir = str(tmp_path / "logs")
-    ckpt = str(tmp_path / "ckpt1")
     _write_log_files(spark, in_dir)
 
     stream = qls.stream_query_logs(spark, in_dir)
     assert stream.isStreaming
-    result = qls.run_available_now(
-        qls.windowed_resource_rollup(stream, "1 day", "2 days"),
-        "rollup_test", ckpt,
+    result = qls.drain(
+        qls.windowed_resource_rollup(stream, "1 day", "2 days")
     ).collect()
 
     batch = (
@@ -46,13 +45,11 @@ def test_windowed_rollup_matches_batch(spark, tmp_path):
 
 def test_interactive_share_stream(spark, tmp_path):
     in_dir = str(tmp_path / "logs2")
-    ckpt = str(tmp_path / "ckpt2")
     _write_log_files(spark, in_dir)
 
     stream = qls.stream_query_logs(spark, in_dir)
-    rows = qls.run_available_now(
-        qls.interactive_share_stream(stream, "1 day", "2 days"),
-        "share_test", ckpt,
+    rows = qls.drain(
+        qls.interactive_share_stream(stream, "1 day", "2 days")
     ).collect()
     total = sum(r["query_count"] for r in rows)
     assert total == len(fixtures.QUERY_LOG_ROWS)
@@ -75,10 +72,8 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
 
     stream = sj.stream_events_json(spark, in_dir)
     assert stream.isStreaming
-    got = sj.run_append_available_now(
-        sj.click_purchase_interval_join(stream),
-        "sjoin_test",
-        str(tmp_path / "ckpt"),
+    got = qls.drain(
+        sj.click_purchase_interval_join(stream), "append"
     ).collect()
 
     want = sj.click_purchase_interval_join(events).collect()
@@ -112,9 +107,7 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
     stream = sj.stream_events_json(spark, in_dir)
     got = ss.user_session_rollup(stream, "30 minutes", "0 seconds")
     assert got.isStreaming
-    got = sj.run_append_available_now(
-        got, "sess_eq_test", str(tmp_path / "ckpt_sess")
-    )
+    got = qls.drain(got, "append")
 
     # batch twin over the SAME JSON files (the JSON sink truncates
     # timestamps to millis, so reading parquet directly would mismatch)
@@ -157,11 +150,7 @@ def test_streaming_dedup_matches_batch_distinct(spark, tmp_path):
     in_dir = str(tmp_path / "events_dup")
     _write_event_files(spark, in_dir, dupes=True)
     stream = sj.stream_events_json(spark, in_dir)
-    deduped = sj.run_append_available_now(
-        ss.dedup_events_stream(stream),
-        "dedup_eq_test",
-        str(tmp_path / "ckpt_dd"),
-    )
+    deduped = qls.drain(ss.dedup_events_stream(stream), "append")
     n_events = tables.load_table(spark, SMOKE_SF_DIR, "events").count()
     assert deduped.count() == n_events
     assert deduped.select("event_id").distinct().count() == n_events
@@ -185,9 +174,7 @@ def test_stream_static_enrichment_matches_batch(spark, tmp_path):
     stream = sj.stream_events_json(spark, in_dir)
     enriched = sj.enriched_segment_rollup(stream, customer)
     assert enriched.isStreaming
-    got = qls.run_available_now(
-        enriched, "enrich_eq_test", str(tmp_path / "ckpt_enr")
-    )
+    got = qls.drain(enriched)
 
     batch = sj.enriched_segment_rollup(
         spark.read.schema(sj.EVENT_SCHEMA).json(in_dir), customer
@@ -213,7 +200,7 @@ def test_feed_cache_reuses_dir_and_never_checkpoints_inside(spark):
     assert dd != d1
     assert os.path.isdir(f"{d1}/events")
     assert not os.path.exists(f"{d1}/ckpt")
-    c1, c2 = sq._fresh_ckpt(), sq._fresh_ckpt()
+    c1, c2 = qls._fresh_ckpt(), qls._fresh_ckpt()
     assert c1 != c2
 
 
@@ -312,9 +299,7 @@ def test_usage_store_multi_batch_equals_batch_drift(spark, tmp_path):
         .json(feed)
     )
     store = str(tmp_path / "store")
-    usage_store.maintain_usage_store(
-        stream, store, str(tmp_path / "ckpt"), _DRIFT_CUTOFF
-    )
+    usage_store.maintain_usage_store(stream, store, _DRIFT_CUTOFF)
 
     # store == batch one-shot increments over the whole log
     got_usage = sorted(
@@ -346,13 +331,9 @@ def test_usage_store_multi_batch_equals_batch_drift(spark, tmp_path):
     assert got == want
 
 
-def test_usage_store_replay_and_corrupt_store(spark, tmp_path):
-    """foreachBatch replay contract: the same batch_id applied twice
-    folds once (crash-replay must not double-count); a corrupt store
-    raises instead of silently resetting history; a missing store
-    still reads as empty on the first batch."""
-    import pytest as _pytest
-
+def _usage_store_case(spark):
+    """(fold(store, batch_id, run_token), counts(store)) for the
+    mined-usage store; counts are the additive columns per key."""
     from trino_adaptive_partitioning_tool_spark.queries.advisor import (
         _DRIFT_CUTOFF,
     )
@@ -361,55 +342,113 @@ def test_usage_store_replay_and_corrupt_store(spark, tmp_path):
     )
 
     logs = fixtures.query_logs_df(spark)
+
+    def fold(store, batch_id, run_token=None):
+        usage_store.upsert_usage_batch(
+            spark, logs, store, _DRIFT_CUTOFF,
+            batch_id=batch_id, run_token=run_token,
+        )
+
+    def counts(store):
+        return {
+            r["column_name"]: (r["n_early"], r["n_late"])
+            for r in spark.read.parquet(store).collect()
+        }
+
+    return fold, counts
+
+
+def _sketch_store_case(spark):
+    """The same pair for the HLL sketch store: n_rows per ingest day is
+    its additive column (sketch union is idempotent, so a double fold
+    shows only in the row counts)."""
+    from conftest import SMOKE_SF_DIR
+
+    from trino_adaptive_partitioning_tool_spark.sources import tables
+    from trino_adaptive_partitioning_tool_spark.streaming import (
+        incremental_sink as isink,
+    )
+
+    events = tables.load_table(spark, SMOKE_SF_DIR, "events")
+
+    def fold(store, batch_id, run_token=None):
+        isink.upsert_batch(
+            spark, events, store, ["user_id", "event_type"],
+            batch_id=batch_id, run_token=run_token,
+        )
+
+    def counts(store):
+        return {
+            r["part"]: (r["n_rows"],)
+            for r in spark.read.parquet(store).collect()
+        }
+
+    return fold, counts
+
+
+@pytest.mark.parametrize(
+    "store_case", [_usage_store_case, _sketch_store_case],
+    ids=["usage", "sketch"],
+)
+def test_usage_store_replay_and_corrupt_store(spark, tmp_path, store_case):
+    """foreachBatch replay contract, for both stores that fold through
+    usage_store.fold_batch: the same batch_id applied twice folds once
+    (crash-replay must not double-count); a corrupt store raises
+    instead of silently resetting history; a missing store still reads
+    as empty on the first batch."""
+    import os
+
+    fold, counts = store_case(spark)
     store = str(tmp_path / "store")
-    usage_store.upsert_usage_batch(
-        spark, logs, store, _DRIFT_CUTOFF, batch_id=0, run_token="ckptA"
-    )
-    once = sorted(
-        tuple(r) for r in spark.read.parquet(store).collect()
-    )
+    fold(store, 0, "ckptA")
+    once = counts(store)
+    assert once
+
+    def times(k):
+        return {key: tuple(k * v for v in vals) for key, vals in once.items()}
+
     # replay of batch 0 under the SAME checkpoint token: no-op
-    usage_store.upsert_usage_batch(
-        spark, logs, store, _DRIFT_CUTOFF, batch_id=0, run_token="ckptA"
-    )
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(store).collect()
-    ) == once
+    fold(store, 0, "ckptA")
+    assert counts(store) == once
     # a NEW batch id folds (counts double since it's the same frame)
-    usage_store.upsert_usage_batch(
-        spark, logs, store, _DRIFT_CUTOFF, batch_id=1, run_token="ckptA"
-    )
-    twice = {
-        r["column_name"]: (r["n_early"], r["n_late"])
-        for r in spark.read.parquet(store).collect()
-    }
-    for name, (e, l) in twice.items():
-        base = dict(
-            (t[0], (t[1], t[2])) for t in once
-        )[name]
-        assert (e, l) == (base[0] * 2, base[1] * 2)
+    fold(store, 1, "ckptA")
+    assert counts(store) == times(2)
     # a FRESH checkpoint restarts batch ids at 0 — with a different
-    # token, batch 0 must FOLD (r8 second review: the uncoupled marker
-    # silently dropped every real batch of a reprocessing run)
-    usage_store.upsert_usage_batch(
-        spark, logs, store, _DRIFT_CUTOFF, batch_id=0, run_token="ckptB"
-    )
-    thrice = {
-        r["column_name"]: (r["n_early"], r["n_late"])
-        for r in spark.read.parquet(store).collect()
-    }
-    base = dict((t[0], (t[1], t[2])) for t in once)
-    for name, (e, l) in thrice.items():
-        assert (e, l) == (base[name][0] * 3, base[name][1] * 3)
+    # token, batch 0 must FOLD, not be dropped as a replay
+    fold(store, 0, "ckptB")
+    assert counts(store) == times(3)
 
     # corrupt store: must raise, never silently reset to one batch
     bad = str(tmp_path / "bad_store")
-    import os
-
     os.makedirs(bad)
     with open(f"{bad}/part-00000.parquet", "wb") as fh:
         fh.write(b"not parquet at all")
-    with _pytest.raises(Exception):
-        usage_store.upsert_usage_batch(
-            spark, logs, bad, _DRIFT_CUTOFF, batch_id=0
-        )
+    with pytest.raises(Exception):
+        fold(bad, 0)
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_window_rollup", "streaming_sessionize"]
+)
+def test_repeated_drains_leave_no_view(spark, name):
+    """A drain drops its memory sink's temp view: calling a complete-mode
+    and an append-mode query several times adds no stream_* entry to the
+    session catalog, and every call returns the same rows."""
+    from conftest import SMOKE_SF_DIR
+
+    from trino_adaptive_partitioning_tool_spark.queries import registry
+
+    def stream_views():
+        return {
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("stream_")
+        }
+
+    query = registry.queries()[name]
+    before = stream_views()
+    runs = [
+        sorted(map(tuple, query(spark, SMOKE_SF_DIR).collect()))
+        for _ in range(3)
+    ]
+    assert stream_views() == before
+    assert runs[0] and runs[1] == runs[0] and runs[2] == runs[0]

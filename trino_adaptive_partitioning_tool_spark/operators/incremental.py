@@ -46,6 +46,14 @@ def sketch_partition_stats(
     return df.groupBy(partition_expr.alias("part")).agg(*aggs)
 
 
+def partition_merge_aggs(key_cols: list[str]) -> list[Column]:
+    """Re-merge of stats rows sharing a partition: row counts add,
+    sketches union."""
+    return [F.sum("n_rows").alias("n_rows")] + [
+        F.hll_union_agg(F.col(f"hll_{c}")).alias(f"hll_{c}") for c in key_cols
+    ]
+
+
 def merge_sketch_stats(stats: DataFrame, key_cols: list[str]) -> DataFrame:
     """Roll persisted partial-sketch rows up to global estimates. Input is
     partition-stats-sized (tiny), so this runs in one stage regardless of
@@ -74,15 +82,10 @@ def incremental_update(
     the delta, then union per-partition (re-merging sketches where a
     partition receives late rows). Base data is never rescanned."""
     delta_stats = sketch_partition_stats(delta, partition_expr, key_cols, lg_k)
-    merged_aggs = [F.sum("n_rows").alias("n_rows")]
-    for c in key_cols:
-        merged_aggs.append(
-            F.hll_union_agg(F.col(f"hll_{c}")).alias(f"hll_{c}")
-        )
     return (
         persisted_stats.unionByName(delta_stats)
         .groupBy("part")
-        .agg(*merged_aggs)
+        .agg(*partition_merge_aggs(key_cols))
     )
 
 

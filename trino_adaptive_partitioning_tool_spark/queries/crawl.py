@@ -54,9 +54,9 @@ _P_EXPR = f"({_kp('15')} % 3 + 2)"
 _L_EXPR = f"({_kp('14')} % 3)"
 
 
-@register(
-    "warc_ingest_stats",
-    oracle=f"""
+# shared by the batch query below and the streaming twin
+# (queries/streaming_q.streaming_warc_ingest)
+WARC_INGEST_ORACLE = f"""
     WITH {_R_BASE}, d AS (
       SELECT rid, status,
              md5(CAST(key AS VARCHAR)) AS hx
@@ -79,8 +79,10 @@ _L_EXPR = f"({_kp('14')} % 3)"
            ROUND(AVG(body_len), 4) AS avg_body_bytes
     FROM b
     GROUP BY status
-    """,
-)
+    """
+
+
+@register("warc_ingest_stats", oracle=WARC_INGEST_ORACLE)
 def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.warc.gz shard ingestion certified end-to-end: gzip member walk,
     WARC header parse, HTTP envelope parse (both Content-Length

@@ -1,32 +1,70 @@
 """Structured Streaming queries surfaced through the driver contract.
 
 Each call provisions a fresh file-stream source from the deterministic
-fixture log, drains it with an availableNow trigger, and returns the
-materialized result — a real streaming execution (watermark, windowed
-state), not a batch rewrite. rows-only checks: the stream==batch
-equivalence is asserted in tests/test_streaming.py.
+fixture log, drains it with an availableNow trigger
+(streaming/query_log_stream.drain), and returns the materialized
+result — a real streaming execution (watermark, windowed state), not a
+batch rewrite. rows-only checks: the stream==batch equivalence is
+asserted in tests/test_streaming.py.
 """
 
 from __future__ import annotations
 
-import uuid
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from ..memo import session_memo
-from ..sources import fixtures
+from ..operators import clustering as clops
+from ..operators import crawl as crawl_ops
+from ..operators import dedup as dops
+from ..operators import incremental
+from ..operators import jsonl as jops
+from ..operators import multimodal as mm
+from ..operators import similarity as sim_ops
+from ..operators import text as text_ops
+from ..sources import fixtures, tables
+from ..streaming import incremental_sink as isink
 from ..streaming import query_log_stream as qls
+from ..streaming import sessions as ss
+from ..streaming import stateful, usage_store, vector_ingest
+from ..streaming import stream_join as sj
 from ..tempdirs import exit_tempdir
-from .multimodal import MIXED_CORPUS_ORACLE
+from .advisor import (
+    _DRIFT_CUTOFF,
+    _DRIFT_TRIGGERS_ORACLE,
+    drift_triggers_from_usage,
+)
+from .clustering import _ITERS, _K, fitted_centroids
+from .crawl import (
+    JSONL_INGEST_ORACLE,
+    WARC_INGEST_ORACLE,
+    _jsonl_shards,
+    jsonl_quarantine_rollup,
+)
+from .dedup import _minhash_banded_cte, _minhash_sig_ctes
+from .multimodal import (
+    _AFP_N,
+    _PHASH_BAND_BITS,
+    _PHASH_BAND_MASK,
+    _PHASH_BANDS,
+    _PHASH_HAMMING_MAX,
+    _PHASH_N,
+    MIXED_CORPUS_ORACLE,
+    _afp_oracle,
+    _phash_oracle,
+    mixed_corpus_rollup,
+)
 from .registry import register
+from .similarity import _lsh_topk_oracle
 
 
 # Session-memoized streaming feed directories, removed at interpreter
 # exit: feed CONTENTS are a pure function of (sf_dir, variant), and each
 # streaming query runs several times per session (digest fold + direct
 # row + parity tests), so the feed is written once per session.
-# Checkpoint dirs are NEVER memoized — a reused checkpoint replays
-# committed offsets and drains nothing.
+# Checkpoints are never memoized: qls.drain makes a fresh one per run.
 def _memo_feed(spark: SparkSession, variant: str, sf_dir: str, write) -> str:
     def build() -> str:
         tmp = exit_tempdir(f"tapt_feed_{variant}_")
@@ -34,10 +72,6 @@ def _memo_feed(spark: SparkSession, variant: str, sf_dir: str, write) -> str:
         return tmp
 
     return session_memo(spark, "streaming_q.feed", (sf_dir, variant), build)
-
-
-def _fresh_ckpt() -> str:
-    return exit_tempdir("tapt_ckpt_") + "/ckpt"
 
 
 def _ensure_outer_feed(spark: SparkSession, sf_dir: str) -> str:
@@ -50,9 +84,6 @@ def _ensure_outer_feed(spark: SparkSession, sf_dir: str) -> str:
     independent of the engine's internal eviction-boundary arithmetic.
     The sentinels themselves never emit (their own windows never close)
     and consumers filter user_id >= 0 defensively."""
-    from pyspark.sql import functions as F
-
-    from ..sources import tables
 
     def _write(d: str) -> None:
         ev = tables.load_table(spark, sf_dir, "events").where(
@@ -82,21 +113,18 @@ def _assert_single_batch(feed_subdir: str) -> None:
     stream_join.MAX_FILES_PER_TRIGGER). The feed writers coalesce(4),
     so this holds with a wide margin — but the two constants live in
     different modules, so pin the invariant where the feed is built."""
-    import os
-
-    from ..streaming.stream_join import MAX_FILES_PER_TRIGGER
-
     n = len(
         [f for f in os.listdir(feed_subdir) if f.endswith(".json")]
     )
-    assert 0 < n <= MAX_FILES_PER_TRIGGER, (
+    assert 0 < n <= sj.MAX_FILES_PER_TRIGGER, (
         f"feed {feed_subdir} has {n} files > maxFilesPerTrigger="
-        f"{MAX_FILES_PER_TRIGGER}: the availableNow drain would be "
+        f"{sj.MAX_FILES_PER_TRIGGER}: the availableNow drain would be "
         "multi-batch and the single-batch streaming oracles unsound"
     )
 
 
-def _drain(spark: SparkSession, build) -> DataFrame:
+def _logs_feed(spark: SparkSession) -> DataFrame:
+    """The fixture query log tailed as a stream (session-cached feed)."""
     tmp = _memo_feed(
         spark, "logs", "fixture",
         lambda d: fixtures.query_logs_df(spark)
@@ -104,9 +132,7 @@ def _drain(spark: SparkSession, build) -> DataFrame:
         .write.mode("overwrite")
         .json(f"{d}/logs"),
     )
-    stream = qls.stream_query_logs(spark, f"{tmp}/logs")
-    name = f"stream_q_{uuid.uuid4().hex[:8]}"
-    return qls.run_available_now(build(stream), name, _fresh_ckpt())
+    return qls.stream_query_logs(spark, f"{tmp}/logs")
 
 
 @register(
@@ -136,8 +162,8 @@ def streaming_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     align with calendar days — so unlike the other streaming rows this
     one carries a full DuckDB oracle (date_trunc twin): the hash check
     proves stream == SQL, not just stream == batch."""
-    return _drain(
-        spark, lambda s: qls.windowed_resource_rollup(s, "1 day", "2 days")
+    return qls.drain(
+        qls.windowed_resource_rollup(_logs_feed(spark), "1 day", "2 days")
     ).orderBy("window_start")
 
 
@@ -163,8 +189,8 @@ def streaming_interactive_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow drain of a static fixture, UTC day windows), so it
     carries a full DuckDB oracle replaying the reference's 10s/LIMIT
     classification heuristic per day window."""
-    return _drain(
-        spark, lambda s: qls.interactive_share_stream(s, "1 day", "2 days")
+    return qls.drain(
+        qls.interactive_share_stream(_logs_feed(spark), "1 day", "2 days")
     ).orderBy("window_start", "is_interactive")
 
 
@@ -184,7 +210,7 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     per-user running totals kept in managed executor state, drained with
     an availableNow trigger.
 
-    Full oracle (r5): the FINAL state per user is slicing-invariant — no
+    Full oracle: the FINAL state per user is slicing-invariant — no
     matter how the feed micro-batches, the last emitted (n_events,
     total_value) per user equals the batch aggregate over all events —
     and the rn=1 extraction below selects exactly that final row, so the
@@ -194,34 +220,17 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     Python round() (banker's), so exact 4-decimal ties agree.
     stream==batch equivalence per micro-batch stays asserted in
     tests/test_stateful_streaming.py."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from ..streaming import stateful
-
-    name = f"stream_s_{_uuid.uuid4().hex[:8]}"
-    tmp = exit_tempdir("tapt_state_")
-    out = stateful.running_user_totals(stateful.stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update-mode memory sink appends one row per (batch, user); keep the
+    # the update-mode sink appends one row per (batch, user); keep the
     # final state per user
-    from pyspark.sql import Window
-
+    updates = qls.drain(
+        stateful.running_user_totals(stateful.stream_events(spark, sf_dir)),
+        "update",
+    )
     w = Window.partitionBy("user_id").orderBy(
         F.col("n_events").desc(), F.col("total_value").desc()
     )
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
+        updates.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .drop("rn")
         .withColumn("total_value", F.round(F.col("total_value"), 4))
@@ -231,7 +240,6 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
 def _events_json_dir(spark: SparkSession, sf_dir: str, dupes: bool = False) -> str:
     """Session-cached JSON-lines event feed for file-source streams; with
     dupes=True each row appears twice (an at-least-once feed)."""
-    from ..sources import tables
 
     def _write(tmp: str) -> None:
         ev = tables.load_table(spark, sf_dir, "events")
@@ -291,18 +299,10 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (session end = last event + gap) is a full oracle; the
     stream==batch equivalence remains asserted in
     tests/test_streaming.py."""
-    import uuid as _uuid
-
-    from ..streaming import sessions as ss
-    from ..streaming import stream_join as sj
-
     tmp = _events_json_dir(spark, sf_dir)
     stream = sj.stream_events_json(spark, f"{tmp}/events")
-    name = f"stream_sess_{_uuid.uuid4().hex[:8]}"
-    return sj.run_append_available_now(
-        ss.user_session_rollup(stream, "30 minutes", "0 seconds"),
-        name,
-        _fresh_ckpt(),
+    return qls.drain(
+        ss.user_session_rollup(stream, "30 minutes", "0 seconds"), "append"
     )
 
 
@@ -322,7 +322,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a doubled (at-least-once) event feed, rolled up per event_type
     batch-side after the drain.
 
-    Full oracle (r5): event_id is unique in the fixture, so deduping the
+    Full oracle: event_id is unique in the fixture, so deduping the
     doubled feed by event_id keeps exactly one copy of each original row
     (both copies are byte-identical — first-arrival choice cannot
     matter), making the rollup equal to the plain batch rollup over
@@ -330,20 +330,10 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains in a single availableNow batch (maxFilesPerTrigger=16), so no
     duplicate pair ever straddles an evicted watermark. The deduped
     stream == batch DISTINCT assertion stays in tests/test_streaming.py."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from ..streaming import sessions as ss
-    from ..streaming import stream_join as sj
-
     tmp = _events_json_dir(spark, sf_dir, dupes=True)
     _assert_single_batch(f"{tmp}/events")
     stream = sj.stream_events_json(spark, f"{tmp}/events")
-    name = f"stream_dd_{_uuid.uuid4().hex[:8]}"
-    deduped = sj.run_append_available_now(
-        ss.dedup_events_stream(stream), name, _fresh_ckpt()
-    )
+    deduped = qls.drain(ss.dedup_events_stream(stream), "append")
     return (
         deduped.groupBy("event_type")
         .agg(
@@ -390,20 +380,12 @@ def _attribution_oracle(join_kw: str) -> str:
 
 
 def _run_attribution(
-    spark: SparkSession, sf_dir: str, join_fn_name: str, prefix: str,
-    outer_feed: bool,
+    spark: SparkSession, sf_dir: str, join_fn_name: str, outer_feed: bool
 ) -> DataFrame:
     """Drain one attribution-join variant. Outer variants use the
     sentinel feed (_ensure_outer_feed) and drop the sentinel rows by
     their reserved NEGATIVE user ids — real rows, including any with a
     NULL user_id (which the batch oracles keep), pass through."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from ..sources import tables
-    from ..streaming import stream_join as sj
-
     if outer_feed:
         tmp = _ensure_outer_feed(spark, sf_dir)
     else:
@@ -417,11 +399,7 @@ def _run_attribution(
         )
     _assert_single_batch(f"{tmp}/events")
     stream = sj.stream_events_json(spark, f"{tmp}/events")
-    out = sj.run_append_available_now(
-        getattr(sj, join_fn_name)(stream),
-        f"{prefix}_{_uuid.uuid4().hex[:8]}",
-        _fresh_ckpt(),
-    )
+    out = qls.drain(getattr(sj, join_fn_name)(stream), "append")
     if outer_feed:
         out = out.where(
             F.col("user_id").isNull() | (F.col("user_id") >= 0)
@@ -437,14 +415,14 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: purchases attributed to a same-user
     click within 1 hour, both sides watermarked (append mode).
 
-    Full oracle (r5): the 4-file feed drains in ONE availableNow
+    Full oracle: the 4-file feed drains in ONE availableNow
     micro-batch (maxFilesPerTrigger=16 > 4 files), so every click is in
     state when every purchase probes and the inner interval join emits
     exactly the batch join result — no cross-batch watermark eviction
     can drop a match. The oracle replays the JSON feed's millisecond
     timestamp truncation and the same interval predicate."""
     return _run_attribution(
-        spark, sf_dir, "click_purchase_interval_join", "stream_j", False
+        spark, sf_dir, "click_purchase_interval_join", False
     )
 
 
@@ -470,8 +448,7 @@ def streaming_click_attribution_outer(
     by their reserved negative user ids. The emitted set then equals the
     batch LEFT JOIN over real events exactly."""
     return _run_attribution(
-        spark, sf_dir, "click_purchase_interval_join_outer", "stream_jo",
-        True,
+        spark, sf_dir, "click_purchase_interval_join_outer", True
     )
 
 
@@ -487,8 +464,7 @@ def streaming_click_attribution_full(
     AND unmatched purchases emit null-padded rows). Same sentinel pin as
     the left-outer variant."""
     return _run_attribution(
-        spark, sf_dir, "click_purchase_interval_join_full", "stream_jf",
-        True,
+        spark, sf_dir, "click_purchase_interval_join_full", True
     )
 
 
@@ -510,7 +486,7 @@ def streaming_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-micro-batch HLL sketches into a persisted per-day stats table;
     the returned rollup reads ONLY that table.
 
-    Full oracle (r5): the deterministic parts of the store — partition
+    Full oracle: the deterministic parts of the store — partition
     count and exact row count (a plain sum of per-batch counts, slicing
     invariant) — are hash-checked directly; the HLL estimates, which no
     other engine reproduces bit-for-bit, are certified through a ±2 %
@@ -519,20 +495,11 @@ def streaming_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged estimate itself is micro-batch-slicing invariant; streaming ==
     batch-recompute equality stays asserted in
     tests/test_incremental_sink.py."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators import incremental
-    from ..sources import tables
-    from ..streaming import incremental_sink as isink
-    from ..streaming import stream_join as sj
-
     keys = ["user_id", "event_type"]
     tmp = _events_json_dir(spark, sf_dir)
-    stats_path = f"{tmp}/stats_{_uuid.uuid4().hex[:8]}"
+    stats_path = exit_tempdir("tapt_stats_") + "/stats"
     stream = sj.stream_events_json(spark, f"{tmp}/events")
-    isink.maintain_partition_stats(stream, stats_path, _fresh_ckpt(), keys)
+    isink.maintain_partition_stats(stream, stats_path, keys)
     merged = incremental.merge_sketch_stats(
         spark.read.parquet(stats_path), keys
     )
@@ -579,18 +546,11 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle over the same events/customer tables (stream == SQL, not
     just stream == batch; tests/test_streaming.py keeps the
     stream==batch assertion)."""
-    import uuid as _uuid
-
-    from ..sources import tables
-    from ..streaming import query_log_stream as qls
-    from ..streaming import stream_join as sj
-
     tmp = _events_json_dir(spark, sf_dir)
     stream = sj.stream_events_json(spark, f"{tmp}/events")
     customer = tables.load_table(spark, sf_dir, "customer")
-    name = f"stream_enr_{_uuid.uuid4().hex[:8]}"
-    return qls.run_available_now(
-        sj.enriched_segment_rollup(stream, customer), name, _fresh_ckpt()
+    return qls.drain(
+        sj.enriched_segment_rollup(stream, customer)
     ).orderBy("c_mktsegment", "event_type")
 
 
@@ -628,10 +588,7 @@ def streaming_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     The map-only scrub plus a complete-mode aggregate is deterministic,
     so this is the one streaming query with a full DuckDB oracle — the
     hash check proves stream == SQL, not just stream == batch."""
-    from pyspark.sql import functions as F
-
-    from ..operators import text as text_ops
-    from ..sources import tables
+    # imported here: queries/text registers after this module
     from .text import _pii_suffix_col
 
     def _write(d: str) -> None:
@@ -653,25 +610,13 @@ def streaming_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_url").cast("bigint").alias("total_urls"),
         F.sum("n_phone").cast("bigint").alias("total_phones"),
     )
-    name = f"stream_pii_{uuid.uuid4().hex[:8]}"
-    q = (
-        rollup.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", _fresh_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("lang")
+    return qls.drain(rollup).orderBy("lang")
 
 
 _INGEST_LO, _INGEST_HI = 40, 60  # the streamed "new vector" id range
 
 
 def _ingest_oracle() -> str:
-    from .similarity import _lsh_topk_oracle
-
     return _lsh_topk_oracle(
         f"q.vec_id >= {_INGEST_LO} AND q.vec_id < {_INGEST_HI}"
     )
@@ -690,12 +635,6 @@ def streaming_similarity_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch inner joins against static state), so the drained result
     equals batch lsh_bucketed_topk for the same query set — the oracle
     IS the batch LSH SQL with this query-id range."""
-    from pyspark.sql import functions as F
-
-    from ..operators import similarity as sim_ops
-    from ..sources import tables
-    from ..streaming import vector_ingest
-
     emb = tables.load_table(spark, sf_dir, "embeddings")
     new_vecs = emb.where(
         (F.col("vec_id") >= _INGEST_LO) & (F.col("vec_id") < _INGEST_HI)
@@ -713,18 +652,9 @@ def streaming_similarity_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema("vec_id long, embedding array<double>")
         .json(f"{tmp}/vecs")
     )
-    cand = vector_ingest.ingest_candidates(stream, emb)
-    name = f"stream_vec_{uuid.uuid4().hex[:8]}"
-    q = (
-        cand.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", _fresh_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cand_ids = spark.table(name).distinct()
+    cand_ids = qls.drain(
+        vector_ingest.ingest_candidates(stream, emb), "append"
+    ).distinct()
     queries = new_vecs.select(F.col("vec_id").alias("query_id"), "embedding")
     return sim_ops.rank_candidates(emb, queries, cand_ids, k=5)
 
@@ -734,9 +664,6 @@ _GATE_THRESHOLD = 0.6
 
 
 def _dedup_gate_oracle() -> str:
-    from ..operators import dedup as dops
-    from .dedup import _minhash_banded_cte, _minhash_sig_ctes
-
     n = dops.DEFAULT_NUM_HASHES
     eq_sum = " + ".join(
         f"(CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END)" for i in range(n)
@@ -799,11 +726,6 @@ def streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing-invariant; scoring (signature-agreement Jaccard, exact
     /64 binary rational) and the per-document best-match rollup run
     once at drain time, so the result equals the batch replay in SQL."""
-    from pyspark.sql import Window, functions as F
-
-    from ..operators import dedup as dops
-    from ..sources import tables
-
     docs = tables.load_table(spark, sf_dir, "documents")
     is_new = (F.col("doc_id") % _GATE_MOD) == _GATE_REM
     corpus = docs.where(~is_new)
@@ -833,18 +755,7 @@ def streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_stream = stream_banded.join(
         corpus_banded, ["band", "band_hash"]
     ).select("new_id", "corpus_id")
-
-    name = f"stream_gate_{uuid.uuid4().hex[:8]}"
-    q = (
-        cand_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", _fresh_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cand = spark.table(name).distinct()
+    cand = qls.drain(cand_stream, "append").distinct()
 
     n_hashes = dops.DEFAULT_NUM_HASHES
     new_sigs = dops.minhash_signatures(new_docs).select(
@@ -906,10 +817,7 @@ _CLUSTER_INGEST_LO, _CLUSTER_INGEST_HI = 420, 470
 
 
 def _cluster_ingest_oracle() -> str:
-    from ..operators import clustering as cops
-    from .clustering import _ITERS, _K
-
-    cte, final = cops.kmeans_oracle_cte(_K, _ITERS)
+    cte, final = clops.kmeans_oracle_cte(_K, _ITERS)
     return (
         f"WITH {cte}\n    SELECT vec_id, cluster, dist2 FROM {final}"
         f" WHERE vec_id >= {_CLUSTER_INGEST_LO}"
@@ -933,12 +841,6 @@ def streaming_cluster_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the full k-means fit (unrolled CTEs) filtered to the
     streamed ids — exact integer arithmetic end to end, so this
     streaming query is fully hash-checked, not rows-only."""
-    from pyspark.sql import functions as F
-
-    from ..operators import clustering as cops
-    from ..sources import tables
-    from .clustering import fitted_centroids
-
     centroids = fitted_centroids(spark, sf_dir)
     emb = tables.load_table(spark, sf_dir, "embeddings")
     new_vecs = emb.where(
@@ -960,33 +862,16 @@ def streaming_cluster_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(f"{tmp}/vecs")
     )
     quantized = stream.select(
-        "vec_id", cops.quantize_expr(F.col("embedding")).alias("v")
+        "vec_id", clops.quantize_expr(F.col("embedding")).alias("v")
     )
-    assigned = cops.assign_clusters(quantized, centroids)
-    name = f"stream_cluster_{uuid.uuid4().hex[:8]}"
-    q = (
-        assigned.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", _fresh_ckpt())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return qls.drain(clops.assign_clusters(quantized, centroids), "append")
 
 
-def _drift_triggers_oracle() -> str:
-    # The streaming increment store sums EXACTLY what the batch drift
-    # query aggregates in one shot (per-column early/late mention
-    # counts are additive over micro-batches), so the streaming twin
-    # shares the batch query's full DuckDB oracle verbatim.
-    from .advisor import _DRIFT_TRIGGERS_ORACLE
-
-    return _DRIFT_TRIGGERS_ORACLE
-
-
-@register("streaming_drift_triggers", oracle=_drift_triggers_oracle())
+# The streaming increment store sums EXACTLY what the batch drift query
+# aggregates in one shot (per-column early/late mention counts are
+# additive over micro-batches), so the streaming twin shares the batch
+# query's full DuckDB oracle verbatim.
+@register("streaming_drift_triggers", oracle=_DRIFT_TRIGGERS_ORACLE)
 def streaming_drift_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming half of the adaptive partitioning loop: the
     query-log stream drains through a foreachBatch-maintained
@@ -995,8 +880,8 @@ def streaming_drift_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
     KB-sized table), and the drift trigger logic
     (advisor.drift_triggers_from_usage) runs off ONLY that store. The
     reference re-runs its one-shot analysis on a fresh log window by
-    hand (src/partitioning.py:294-325); the r7 batch loop scheduled it;
-    this makes "fresh" continuous — triggers re-derive per drain with
+    hand (src/partitioning.py:294-325); the batch drift query schedules
+    it; this makes "fresh" continuous — triggers re-derive per drain with
     no log re-scan.
 
     Determinism argument: the store holds pure sums of per-row counts,
@@ -1005,21 +890,8 @@ def streaming_drift_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced multi-batch drain), and the result equals
     partition_recommendation_drift row-for-row — certified by sharing
     its full DuckDB oracle."""
-    from ..streaming import usage_store
-    from .advisor import _DRIFT_CUTOFF, drift_triggers_from_usage
-
-    tmp = _memo_feed(
-        spark, "logs", "fixture",
-        lambda d: fixtures.query_logs_df(spark)
-        .coalesce(2)
-        .write.mode("overwrite")
-        .json(f"{d}/logs"),
-    )
     store = exit_tempdir("tapt_usage_store_") + "/usage"
-    stream = qls.stream_query_logs(spark, f"{tmp}/logs")
-    usage_store.maintain_usage_store(
-        stream, store, _fresh_ckpt(), _DRIFT_CUTOFF
-    )
+    usage_store.maintain_usage_store(_logs_feed(spark), store, _DRIFT_CUTOFF)
     return drift_triggers_from_usage(
         spark, sf_dir, spark.read.parquet(store)
     )
@@ -1040,8 +912,6 @@ def streaming_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional in the md5 conventions, so hash-green here proves
     stream == SQL across all eight real decoders, not just
     stream == batch."""
-    from ..operators import multimodal as mm
-    from .multimodal import mixed_corpus_rollup
 
     def _write(d: str) -> None:
         mm.synth_mixed_assets(spark).coalesce(4).write.mode(
@@ -1055,15 +925,10 @@ def streaming_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded = mm.decode_assets(
         stream, require_codec=True, codec=mm.PixmapCodec()
     )
-    rollup = mixed_corpus_rollup(decoded)
-    name = f"stream_mm_{uuid.uuid4().hex[:8]}"
-    return qls.run_available_now(rollup, name, _fresh_ckpt()).orderBy("fmt")
+    return qls.drain(mixed_corpus_rollup(decoded)).orderBy("fmt")
 
 
-from .crawl import JSONL_INGEST_ORACLE as _JSONL_ORACLE
-
-
-@register("streaming_jsonl_ingest", oracle=_JSONL_ORACLE)
+@register("streaming_jsonl_ingest", oracle=JSONL_INGEST_ORACLE)
 def streaming_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gzip JSONL corpus ingestion as a Structured Streaming pipeline:
     the same shards the batch twin reads (queries/crawl._jsonl_shards)
@@ -1073,13 +938,10 @@ def streaming_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     in complete mode with availableNow.
 
     Oracle: the batch twin's table-derived SQL (crawl.JSONL_INGEST_
-    ORACLE), attached after definition — hash-green proves
+    ORACLE) — hash-green proves
     stream == batch == source-table arithmetic, including that the
     quarantine routing is slicing-invariant (a malformed line is
     malformed in whatever micro-batch it lands)."""
-    from ..operators import jsonl as jops
-    from .crawl import _jsonl_shards, jsonl_quarantine_rollup
-
     feed = _jsonl_shards(spark, sf_dir)
     stream = (
         spark.readStream.schema(jops.READ_SCHEMA)
@@ -1087,17 +949,10 @@ def streaming_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(feed)
     )
-    rollup = jsonl_quarantine_rollup(stream)
-    name = f"stream_jsonl_{uuid.uuid4().hex[:8]}"
-    return qls.run_available_now(rollup, name, _fresh_ckpt()).orderBy("lang")
+    return qls.drain(jsonl_quarantine_rollup(stream)).orderBy("lang")
 
 
-from .registry import _ORACLES as _oracle_registry
-
-
-@register(
-    "streaming_warc_ingest", oracle=None  # attached below from the twin
-)
+@register("streaming_warc_ingest", oracle=WARC_INGEST_ORACLE)
 def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC crawl ingestion as a Structured Streaming pipeline: the
     same .warc.gz shard table the batch twin parses
@@ -1113,42 +968,26 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-member gzip walk on the streaming side, including that
     record framing is slicing-invariant (a shard parses identically
     in whatever micro-batch it lands)."""
-    from pyspark.sql import functions as F
-
-    from ..operators import crawl as cops
 
     def _write(d: str) -> None:
-        cops.synth_warc_shards(spark, n_shards=64).coalesce(4).write.mode(
+        crawl_ops.synth_warc_shards(spark, n_shards=64).coalesce(4).write.mode(
             "overwrite"
         ).parquet(f"{d}/shards")
 
     tmp = _memo_feed(spark, "warc_shards", "synth", _write)
-    stream = spark.readStream.schema(cops.SHARD_SCHEMA).parquet(
+    stream = spark.readStream.schema(crawl_ops.SHARD_SCHEMA).parquet(
         f"{tmp}/shards"
     )
-    records = cops.parse_warc_records(stream)
+    records = crawl_ops.parse_warc_records(stream)
     rollup = records.groupBy("status").agg(
         F.count(F.lit(1)).alias("n_records"),
         F.sum("body_bytes").cast("bigint").alias("total_body_bytes"),
         F.round(F.avg("body_bytes"), 4).alias("avg_body_bytes"),
     )
-    name = f"stream_warc_{uuid.uuid4().hex[:8]}"
-    return qls.run_available_now(rollup, name, _fresh_ckpt()).orderBy(
-        "status"
-    )
+    return qls.drain(rollup).orderBy("status")
 
 
-# the twin's oracle string is registered under the batch name; reuse it
-# verbatim so the two can never drift
-_oracle_registry["streaming_warc_ingest"] = _oracle_registry[
-    "warc_ingest_stats"
-]
-
-
-from .multimodal import _phash_oracle as _phash_oracle_sql
-
-
-@register("streaming_phash_ingest", oracle=_phash_oracle_sql())
+@register("streaming_phash_ingest", oracle=_phash_oracle())
 def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup detection on a STREAM: the planted-duplicate PNG
     corpus streams from parquet files, the Arrow perceptual-hash stage
@@ -1162,16 +1001,6 @@ def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same convention-arithmetic oracle as the batch twin
     (multimodal_phash_near_dup): hash-green proves stream == batch ==
     synth arithmetic through a REAL PNG decode on the streaming side."""
-    from pyspark.sql import functions as F
-
-    from ..operators import multimodal as mm
-    from .multimodal import (
-        _PHASH_BAND_BITS,
-        _PHASH_BAND_MASK,
-        _PHASH_BANDS,
-        _PHASH_HAMMING_MAX,
-        _PHASH_N,
-    )
 
     def _write(d: str) -> None:
         mm.synth_phash_assets(spark, n=_PHASH_N).coalesce(4).write.mode(
@@ -1223,22 +1052,14 @@ def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup = cand.groupBy("hamming").agg(
         F.count(F.lit(1)).alias("n_pairs")
     )
-    name = f"stream_phash_{uuid.uuid4().hex[:8]}"
-    return qls.run_available_now(rollup, name, _fresh_ckpt()).orderBy(
-        "hamming"
-    )
+    return qls.drain(rollup).orderBy("hamming")
 
 
-from .multimodal import _afp_oracle as _afp_oracle_sql
-
-
-@register(
-    "streaming_audio_fingerprint_ingest", oracle=_afp_oracle_sql()
-)
+@register("streaming_audio_fingerprint_ingest", oracle=_afp_oracle())
 def streaming_audio_fingerprint_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Audio near-dup detection on a STREAM (r13, the audio twin of
+    """Audio near-dup detection on a STREAM (the audio twin of
     streaming_phash_ingest): the planted-duplicate WAV/AIFF corpus
     streams from parquet, the Arrow fingerprint stage applies
     unchanged (stateless mapInPandas), and the pigeonhole-banded join
@@ -1246,16 +1067,6 @@ def streaming_audio_fingerprint_ingest(
     table — the online "does this incoming clip duplicate the corpus"
     ingest gate, drained equal to the batch pair set. Same
     integer-exact oracle as multimodal_audio_fingerprint_near_dup."""
-    from pyspark.sql import functions as F
-
-    from ..operators import multimodal as mm
-    from .multimodal import (
-        _AFP_N,
-        _PHASH_BAND_BITS,
-        _PHASH_BAND_MASK,
-        _PHASH_BANDS,
-        _PHASH_HAMMING_MAX,
-    )
 
     def _write(d: str) -> None:
         mm.synth_afp_assets(spark, n=_AFP_N).coalesce(4).write.mode(
@@ -1305,7 +1116,4 @@ def streaming_audio_fingerprint_ingest(
     rollup = cand.groupBy("hamming").agg(
         F.count(F.lit(1)).alias("n_pairs")
     )
-    name = f"stream_afp_{uuid.uuid4().hex[:8]}"
-    return qls.run_available_now(rollup, name, _fresh_ckpt()).orderBy(
-        "hamming"
-    )
+    return qls.drain(rollup).orderBy("hamming")

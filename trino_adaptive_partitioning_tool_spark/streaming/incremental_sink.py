@@ -11,15 +11,21 @@ makes the result identical to a full batch recompute no matter how the
 stream is micro-batched (asserted in tests/test_incremental_sink.py).
 
 At 100 TB: base events never re-read; per-batch cost is O(batch); the
-stats table stays KB-sized. For exactly-once on a real deployment the
-swap-write below becomes a transactional table (Iceberg/Delta) MERGE —
-the checkpoint already makes the batch ids replay-stable.
+stats table stays KB-sized. The fold is the usage store's
+(usage_store.fold_batch), replay marker included; for exactly-once on
+a real deployment its swap-write becomes a transactional table
+(Iceberg/Delta) MERGE — the checkpoint already makes the batch ids
+replay-stable.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators import incremental
+from .query_log_stream import drain_batches
+from .usage_store import fold_batch
 
 
 def upsert_batch(
@@ -28,50 +34,38 @@ def upsert_batch(
     stats_path: str,
     key_cols: list[str],
     lg_k: int = 12,
+    batch_id: int | None = None,
+    run_token: str | None = None,
 ) -> None:
     """Sketch one micro-batch and fold it into the persisted stats table
-    (read-merge-overwrite; the table is partition-stats-sized, so the
-    rewrite is trivially small)."""
-    from ..operators import incremental
-
-    new = incremental.sketch_partition_stats(
-        batch_df, F.to_date("ts"), key_cols, lg_k
+    through the usage store's read-merge-overwrite (usage_store.
+    fold_batch: a missing table reads as empty, any other read failure
+    raises, a replayed batch id is skipped)."""
+    fold_batch(
+        spark,
+        incremental.sketch_partition_stats(
+            batch_df, F.to_date("ts"), key_cols, lg_k
+        ),
+        stats_path,
+        "part",
+        incremental.partition_merge_aggs(key_cols),
+        batch_id,
+        run_token,
     )
-    try:
-        existing = spark.read.parquet(stats_path)
-        has_existing = True
-    except Exception:
-        has_existing = False
-    if has_existing:
-        aggs = [F.sum("n_rows").alias("n_rows")]
-        for c in key_cols:
-            aggs.append(F.hll_union_agg(F.col(f"hll_{c}")).alias(f"hll_{c}"))
-        merged = existing.unionByName(new).groupBy("part").agg(*aggs)
-    else:
-        merged = new
-    # break lineage from the path we are about to overwrite
-    merged = merged.localCheckpoint(eager=True)
-    merged.coalesce(1).write.mode("overwrite").parquet(stats_path)
 
 
 def maintain_partition_stats(
     events_stream: DataFrame,
     stats_path: str,
-    checkpoint_dir: str,
     key_cols: list[str],
     lg_k: int = 12,
 ) -> None:
     """Drain the stream (availableNow), maintaining the sketch store one
     micro-batch at a time."""
     spark = events_stream.sparkSession
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_batch(spark, batch_df, stats_path, key_cols, lg_k)
-
-    q = (
-        events_stream.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_batches(
+        events_stream,
+        lambda batch_df, batch_id, token: upsert_batch(
+            spark, batch_df, stats_path, key_cols, lg_k, batch_id, token
+        ),
     )
-    q.awaitTermination()

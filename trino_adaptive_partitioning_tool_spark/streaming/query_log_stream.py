@@ -7,15 +7,24 @@ stream aggregates them incrementally with event-time windows + a
 watermark for late rows, and the same resource-scoring arithmetic rolls
 up per window. At scale this is the standard file-source → windowed-agg →
 sink topology; checkpointing gives exactly-once per sink epoch.
+
+Every streaming query in the package starts here: ``drain`` runs a
+stream into an in-memory sink and ``drain_batches`` into a foreachBatch
+store, both through one availableNow start on a fresh checkpoint.
 """
 
 from __future__ import annotations
 
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators import scoring
 from ..sources.fixtures import QUERY_LOG_SCHEMA
+from ..tempdirs import exit_tempdir
 
 
 def stream_query_logs(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -81,19 +90,51 @@ def interactive_share_stream(
     )
 
 
-def run_available_now(
-    stream_df: DataFrame, query_name: str, checkpoint_dir: str
-) -> DataFrame:
-    """Drain everything currently in the source into an in-memory table
-    (complete mode) and return it — used by tests and batch-style catchup
-    runs. Returns the materialized result as a batch DataFrame."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def _fresh_ckpt() -> str:
+    # never reused: a reused checkpoint replays committed offsets and
+    # drains nothing
+    return exit_tempdir("tapt_ckpt_") + "/ckpt"
+
+
+def _available_now(writer: DataStreamWriter, ckpt: str) -> None:
+    writer.option("checkpointLocation", ckpt).trigger(
+        availableNow=True
+    ).start().awaitTermination()
+
+
+def drain(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Drain everything currently in the source (availableNow, fresh
+    checkpoint) into an in-memory sink and return the result as a batch
+    DataFrame. The sink's temp view is dropped before returning: the
+    returned frame already holds the resolved sink, and a view left per
+    call would grow the session catalog without bound. ``output_mode``
+    is complete (aggregates), append (joins, session windows, stateless
+    projections) or update (arbitrary stateful operators)."""
+    spark = stream_df.sparkSession
+    name = f"stream_{uuid.uuid4().hex}"
+    try:
+        _available_now(
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode),
+            _fresh_ckpt(),
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def drain_batches(
+    stream_df: DataFrame, fold: Callable[[DataFrame, int, str], None]
+) -> None:
+    """foreachBatch twin of ``drain``: every micro-batch goes to
+    ``fold(batch_df, batch_id, run_token)``. The token is the fresh
+    checkpoint location, so a store's replay marker lives exactly as
+    long as the batch ids it records."""
+    ckpt = _fresh_ckpt()
+    _available_now(
+        stream_df.writeStream.foreachBatch(
+            lambda batch_df, batch_id: fold(batch_df, batch_id, ckpt)
+        ),
+        ckpt,
     )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)

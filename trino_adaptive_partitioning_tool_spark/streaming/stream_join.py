@@ -152,23 +152,6 @@ def click_purchase_interval_join_full(
     return _attribution_join(events, "full_outer", max_gap, watermark)
 
 
-def run_append_available_now(
-    stream_df: DataFrame, query_name: str, checkpoint_dir: str
-) -> DataFrame:
-    """Drain an append-mode stream (joins can't run in complete mode)
-    into an in-memory table and return the materialized result."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
-
-
 def enriched_segment_rollup(events: DataFrame, customer: DataFrame) -> DataFrame:
     """Stream-static enrichment: the event stream joined to a static
     customer dimension (user_id -> c_custkey) and rolled up per

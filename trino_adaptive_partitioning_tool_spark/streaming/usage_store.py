@@ -2,9 +2,9 @@
 
 The streaming half of the adaptive partitioning loop: the reference's
 whole pitch is re-running its analysis on a fresh query-log window
-(reference src/partitioning.py:294-325, a manual one-shot); batch
-round 7 closed that loop on a schedule (drift -> triggers -> patched
-DDL), and this module makes "fresh" CONTINUOUS. Each micro-batch of
+(reference src/partitioning.py:294-325, a manual one-shot); the batch
+drift query closes that loop on a schedule (drift -> triggers ->
+patched DDL), and this module makes "fresh" CONTINUOUS. Each micro-batch of
 the query-log stream is mined (the same Arrow-batched miner the batch
 advisor uses), reduced to per-column early/late mention counts, and
 folded into a persisted usage table; the trigger logic
@@ -25,12 +25,13 @@ equivalence slicing-proof.
 
 Replay safety: Spark re-executes a foreachBatch micro-batch with the
 SAME batch_id after a crash between the sink write and the checkpoint
-commit; upsert_usage_batch records the last applied (run_token,
-batch_id) next to the store and skips replays, so counts are never
-folded twice. The token is the checkpoint location, coupling the
-marker to the checkpoint lifecycle: a FRESH checkpoint (reprocessing a
-corrected feed into the same store) restarts ids at 0 and must fold,
-not skip.
+commit; fold_batch records the last applied (run_token, batch_id) next
+to the store and skips replays, so counts are never folded twice. The
+token is the checkpoint location, coupling the marker to the
+checkpoint lifecycle: a FRESH checkpoint (reprocessing a corrected feed
+into the same store) restarts ids at 0 and must fold, not skip. The
+sketch store (streaming/incremental_sink.py) folds through the same
+fold_batch.
 
 At 100 TB: the log stream is consumed once, per-batch cost is one
 miner pass over just the batch (map-side combined into <= distinct
@@ -41,11 +42,14 @@ a real deployment (one atomic commit instead of two files).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .query_log_stream import drain_batches
 
 
 def usage_increments(
@@ -82,8 +86,66 @@ def usage_increments(
     )
 
 
-def _marker_path(store_path: str) -> str:
-    return store_path.rstrip("/") + ".last_batch"
+def fold_batch(
+    spark: SparkSession,
+    increment: DataFrame,
+    store_path: str,
+    key: str,
+    aggs: list[Column],
+    batch_id: int | None = None,
+    run_token: str | None = None,
+) -> None:
+    """Fold one micro-batch's ``increment`` rows into the persisted
+    store: read, union, re-aggregate per ``key`` with ``aggs``, and
+    overwrite (the stores are KB-sized, so the rewrite is trivially
+    small). Only a MISSING store reads as empty; any other read failure
+    (partial overwrite, transient FS error) propagates rather than
+    silently resetting the accumulated history. When ``batch_id`` is
+    given (foreachBatch replay contract), a replayed batch — same id
+    already recorded in the sidecar marker UNDER THE SAME run_token —
+    is a no-op, so crash-replay never double-counts. The token (the
+    checkpoint location drain_batches passes) couples the marker's
+    lifecycle to the checkpoint's: a fresh checkpoint restarts batch
+    ids at 0, and without the token match those real batches would read
+    as replays and be silently dropped."""
+    marker = store_path.rstrip("/") + ".last_batch"
+    if batch_id is not None and os.path.exists(marker):
+        with open(marker) as fh:
+            try:
+                rec = json.loads(fh.read() or "{}")
+            except ValueError:
+                rec = {}
+        if (
+            rec.get("token") == run_token
+            and batch_id <= rec.get("batch_id", -1)
+        ):
+            return  # checkpointed replay of an already-applied batch
+    try:
+        existing = spark.read.parquet(store_path)
+    except AnalysisException as exc:
+        # PATH_NOT_FOUND on the first batch is the expected empty-store
+        # case; anything else (corrupt store, permissions) must surface
+        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
+            raise
+        merged = increment
+    else:
+        merged = existing.unionByName(increment).groupBy(key).agg(*aggs)
+    # break lineage from the path we are about to overwrite
+    merged = merged.localCheckpoint(eager=True)
+    merged.coalesce(1).write.mode("overwrite").parquet(store_path)
+    if batch_id is not None:
+        # Marker trails the store write, so the exposure is exactly the
+        # gap between these two statements: a crash there replays a
+        # batch the store already folded (double-count), while the
+        # pre-marker ordering would instead LOSE a batch on a crash
+        # before the write. Without the marker every replay would
+        # double-count; only a transactional table's single commit
+        # closes the remaining window (module docstring) — the
+        # checkpointed batch_id makes that MERGE idempotent for free.
+        tmp = f"{marker}.tmp"
+        with open(tmp, "w") as fh:
+            fh.write(json.dumps({"token": run_token, "batch_id": batch_id}))
+        os.replace(tmp, marker)
 
 
 def upsert_usage_batch(
@@ -94,95 +156,30 @@ def upsert_usage_batch(
     batch_id: int | None = None,
     run_token: str | None = None,
 ) -> None:
-    """Fold one micro-batch's usage increments into the persisted store
-    (read-merge-overwrite; the store is distinct-column-count-sized, so
-    the rewrite is trivially small). When ``batch_id`` is given
-    (foreachBatch replay contract), a replayed batch — same id already
-    recorded in the sidecar marker UNDER THE SAME run_token — is a
-    no-op, so crash-replay never double-counts. The token (the
-    checkpoint location; maintain_usage_store passes it) couples the
-    marker's lifecycle to the checkpoint's: a fresh checkpoint restarts
-    batch ids at 0, and without the token match those real batches
-    would read as replays and be silently dropped (r8 second review).
-    Only a MISSING store reads as empty; any other read failure
-    (partial overwrite, transient FS error) propagates rather than
-    silently resetting the accumulated history."""
-    import json as _json
-
-    marker = _marker_path(store_path)
-    if batch_id is not None and os.path.exists(marker):
-        with open(marker) as fh:
-            try:
-                rec = _json.loads(fh.read() or "{}")
-            except ValueError:
-                rec = {}
-        if (
-            rec.get("token") == run_token
-            and batch_id <= rec.get("batch_id", -1)
-        ):
-            return  # checkpointed replay of an already-applied batch
-    inc = usage_increments(batch_df, cutoff)
-    try:
-        existing = spark.read.parquet(store_path)
-        has_existing = True
-    except AnalysisException as exc:
-        # PATH_NOT_FOUND on the first batch is the expected empty-store
-        # case; anything else (corrupt store, permissions) must surface
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        has_existing = False
-    if has_existing:
-        merged = (
-            existing.unionByName(inc)
-            .groupBy("column_name")
-            .agg(
-                F.sum("n_early").cast("bigint").alias("n_early"),
-                F.sum("n_late").cast("bigint").alias("n_late"),
-            )
-        )
-    else:
-        merged = inc
-    # break lineage from the path we are about to overwrite
-    merged = merged.localCheckpoint(eager=True)
-    merged.coalesce(1).write.mode("overwrite").parquet(store_path)
-    if batch_id is not None:
-        # Marker trails the store write, so the exposure is exactly the
-        # gap between these two statements: a crash there replays a
-        # batch the store already folded (double-count), while the
-        # pre-marker ordering would instead LOSE a batch on a crash
-        # before the write. The marker shrinks the r8-review finding
-        # (every replay double-counts) to that one-statement window;
-        # only a transactional table's single commit closes it fully
-        # (module docstring) — the checkpointed batch_id makes that
-        # MERGE idempotent for free.
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write(
-                _json.dumps({"token": run_token, "batch_id": batch_id})
-            )
-        os.replace(tmp, marker)
+    """Fold one micro-batch's usage increments into the store."""
+    fold_batch(
+        spark,
+        usage_increments(batch_df, cutoff),
+        store_path,
+        "column_name",
+        [
+            F.sum("n_early").cast("bigint").alias("n_early"),
+            F.sum("n_late").cast("bigint").alias("n_late"),
+        ],
+        batch_id,
+        run_token,
+    )
 
 
 def maintain_usage_store(
-    logs_stream: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    cutoff: str,
+    logs_stream: DataFrame, store_path: str, cutoff: str
 ) -> None:
     """Drain the query-log stream (availableNow), maintaining the
     mined-usage store one micro-batch at a time."""
     spark = logs_stream.sparkSession
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_usage_batch(
-            spark, batch_df, store_path, cutoff,
-            batch_id=batch_id, run_token=checkpoint_dir,
-        )
-
-    q = (
-        logs_stream.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_batches(
+        logs_stream,
+        lambda batch_df, batch_id, token: upsert_usage_batch(
+            spark, batch_df, store_path, cutoff, batch_id, token
+        ),
     )
-    q.awaitTermination()
