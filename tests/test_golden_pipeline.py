@@ -5,10 +5,22 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from conftest import SMOKE_SF_DIR
 
+from trino_adaptive_partitioning_tool_spark import memo
 from trino_adaptive_partitioning_tool_spark.operators import recommend, scoring
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _drop_cached_analyses(spark):
+    """Leave the session's cache as this module found it: the memoized
+    default-input analysis and its profiles are evicted when the module
+    ends, so a later advisor query plans over the same cache whether or
+    not these tests ran first."""
+    yield
+    memo.evict(spark.sparkContext.applicationId, SMOKE_SF_DIR)
 
 
 def test_golden_recommendations(spark):
@@ -56,9 +68,11 @@ def test_release_analysis_drops_only_what_the_call_cached(spark):
     )
     own = [res[k] for k in
            ("mined_logs", "usage", "column_performance", "column_scores")]
-    assert sorted(map(id, res.call_cached)) == sorted(map(id, own))
-    res["recommendations"].collect()
-    recommend.release_analysis(res)
+    try:
+        assert sorted(map(id, res.call_cached)) == sorted(map(id, own))
+        res["recommendations"].collect()
+    finally:
+        recommend.release_analysis(res)
     assert not any(df.is_cached for df in own)
     recommend.release_analysis(shared)
     assert shared["profiles"].is_cached and shared["mined_logs"].is_cached

@@ -24,3 +24,45 @@ def test_default_driver_memory_is_half_physical_capped_at_16g(monkeypatch):
     assert session.default_driver_memory() == "16384m"
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert session.default_driver_memory() == "2g"
+
+
+def test_advisor_refresh_compiles_each_class_once(spark, tmp_path):
+    """One advisor refresh (run_analysis over a log window, the top-5 and
+    recommendation collects, the result writes) runs more generated
+    classes than Spark's stock 100-entry codegen cache holds. Repeated
+    with the same window, the second pass must find every class cached
+    and hand Janino nothing to compile."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from conftest import SMOKE_SF_DIR
+    from trino_adaptive_partitioning_tool_spark.operators import recommend
+    from trino_adaptive_partitioning_tool_spark.sources import (
+        fixtures,
+        results_io,
+    )
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    window = (F.col("create_time") >= F.lit(dt.datetime(2025, 5, 1))) & (
+        F.col("create_time") < F.lit(dt.datetime(2025, 6, 15))
+    )
+
+    def refresh() -> int:
+        compiled = codegen.METRIC_SOURCE_CODE_SIZE().getCount()
+        res = recommend.run_analysis(
+            spark, SMOKE_SF_DIR, logs_df=fixtures.query_logs_df(spark),
+            time_filter=window,
+        )
+        try:
+            assert res["resource_scores"].orderBy(
+                F.col("resource_score").desc(), "query_id"
+            ).limit(5).collect()
+            assert res["recommendations"].collect()
+            results_io.save_analysis_results(res, out_dir=str(tmp_path))
+        finally:
+            recommend.release_analysis(res)
+        return codegen.METRIC_SOURCE_CODE_SIZE().getCount() - compiled
+
+    refresh()
+    assert refresh() == 0

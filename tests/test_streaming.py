@@ -452,3 +452,26 @@ def test_repeated_drains_leave_no_view(spark, name):
     ]
     assert stream_views() == before
     assert runs[0] and runs[1] == runs[0] and runs[2] == runs[0]
+
+
+def test_repeated_drains_leave_no_checkpoint(spark, tmp_path, monkeypatch):
+    """A drain removes its checkpoint when it returns: a memory sink has
+    nothing that replays against it, so repeated drains in one process
+    (a live dashboard) leave no tapt_ckpt_* directory behind."""
+    import os
+    import tempfile
+
+    in_dir = str(tmp_path / "logs")
+    _write_log_files(spark, in_dir)
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    stream = qls.stream_query_logs(spark, in_dir)
+    want = fixtures.query_logs_df(spark).count()
+    for mode, out in [
+        ("complete", stream.groupBy().count()),
+        ("append", stream.select("query_id")),
+    ] * 2:
+        rows = qls.drain(out, mode).collect()
+        assert (rows[0][0] if mode == "complete" else len(rows)) == want
+    assert not [d for d in os.listdir(scratch) if d.startswith("tapt_ckpt_")]

@@ -7,8 +7,9 @@ Replaces the reference's DBAPI connection bootstrap
 Sized from the host by default (every core this process may use, a driver
 heap of at most half the physical memory), with cluster-safe settings:
 AQE (runtime re-plan, skew-join splitting, partition coalescing) is always
-on, shuffle partitions default to the local core count instead of 200, and
-Arrow is enabled for every pandas hand-off.
+on, shuffle partitions default to the local core count instead of 200,
+Arrow is enabled for every pandas hand-off, and the codegen cache holds a
+repeated workload's generated classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -60,39 +61,45 @@ def get_spark(
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # r13 (guide §3.1/§9) — shuffled-hash join enablement tried and
-        # REJECTED: both the static preferSortMergeJoin=false flip and
-        # the AQE maxShuffledHashJoinLocalMapThreshold runtime rewrite
-        # measured ~5-8% faster on the join-heavy flagships at sf0.1,
-        # but switching the join algorithm reorders double summation
-        # and nation_market_share's round(sum(double),2) flips a cent
-        # under the no-broadcast plan regime
-        # (tests/test_scale_plans.py::test_joins_survive_no_broadcast_regime
-        # guards exactly this cross-plan result stability). Sort-merge
-        # keeps aggregate input order deterministic across plan
-        # regimes; a deployment that accepts last-ulp drift on rounded
-        # double sums can re-enable SHJ via extra_conf.
+        # Joins stay sort-merge (no shuffled-hash joins): switching the
+        # algorithm reorders double summation, and nation_market_share's
+        # round(sum(double), 2) flips a cent under the no-broadcast plan
+        # regime (tests/test_scale_plans.py::
+        # test_joins_survive_no_broadcast_regime). Shuffled-hash joins
+        # measured ~5-8% faster on the join-heavy flagships at sf0.1; a
+        # deployment that accepts last-ulp drift on rounded double sums
+        # can enable them through extra_conf.
         # testdata writes TIMESTAMP(NANOS) parquet (events.ts), which Spark
         # rejects by default; read as long and cast back in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # r14 (guide §6, §2.2): let Spark's own scale-adaptive split
-        # formula  maxSplitBytes = min(maxPartitionBytes,
-        # max(openCostInBytes, totalBytes/minPartitionNum))  track the
-        # core count on small local files. The stock 4 MB open cost
-        # FLOORS split size at 4 MB (a 15 MB table is at most 4 splits
-        # regardless of cores); 1 MB reflects a local-SSD/page-cache
-        # open cost and lets the ~15 MB testdata tables split ~15-way
-        # at local[32] vs ~7-way at local[8] — the scan scales WITH the
-        # cores — while at production sizes totalBytes/cores far
-        # exceeds it and the formula lands on the stock 128 MB
-        # behavior. 1 MB, not smaller: an r14 ABBA sweep measured the
-        # finer 128 KB splits (19-32 tasks per ~2-15 MB file) LOSING
-        # 2x on multi-scan queries to per-task overhead under this
-        # host's virtualization steal (OPTIMIZATION_r14.md). Pairs with
-        # the multi-row-group loader twin (sources/tables.
-        # split_layout_dir): byte-range splits only parallelize when
-        # row groups exist at that granularity.
+        # Spark splits files at min(maxPartitionBytes, max(openCostInBytes,
+        # totalBytes / minPartitionNum)). The stock 4 MB open cost floors
+        # splits at 4 MB, so a 15 MB table is at most 4 splits whatever
+        # the core count; at 1 MB (a local-SSD/page-cache open cost) the
+        # ~15 MB testdata tables split ~15-way at local[32] and ~7-way at
+        # local[8], and at production sizes totalBytes / cores far
+        # exceeds it, which lands on the stock 128 MB. Not smaller: an
+        # ABBA sweep measured 128 KB splits (19-32 tasks per ~2-15 MB
+        # file) 2x slower on multi-scan queries from per-task overhead on
+        # a virtualized host (OPTIMIZATION_r14.md). Byte-range splits
+        # only parallelize where row groups exist at that granularity,
+        # which the loader's multi-row-group twin provides
+        # (sources/tables.split_layout_dir).
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
+        # Spark keeps compiled generated classes in a cache keyed by
+        # source text, 100 entries by default. One advisor refresh runs
+        # ~140 distinct classes (plus ~16 that inline its log window)
+        # and a scan_profile op ~130, so the stock cache evicted most of
+        # them within each op: every refresh recompiled ~130 in Janino,
+        # and the JIT then compiled them again. The bound holds the
+        # largest repeated cycle the package runs: one pass of the
+        # registry compiles 4,619 distinct classes (sf0.001); at 5,000 a
+        # second pass recompiles 861, of which 805 have source that
+        # differs per build and miss at any size. A retained class costs
+        # ~10 KB of Metaspace and ~15 KB of heap (its source key and
+        # bytecode), ~125 MB when full; a refresh loop alone retains a
+        # few hundred.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -15,6 +15,8 @@ store, both through one availableNow start on a fresh checkpoint.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
 from collections.abc import Callable
 
@@ -92,7 +94,8 @@ def interactive_share_stream(
 
 def _fresh_ckpt() -> str:
     # never reused: a reused checkpoint replays committed offsets and
-    # drains nothing
+    # drains nothing. Kept until exit, so that no later mkdtemp can hand
+    # out the same path, which drain_batches uses as its replay token
     return exit_tempdir("tapt_ckpt_") + "/ckpt"
 
 
@@ -105,23 +108,27 @@ def _available_now(writer: DataStreamWriter, ckpt: str) -> None:
 def drain(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain everything currently in the source (availableNow, fresh
     checkpoint) into an in-memory sink and return the result as a batch
-    DataFrame. The sink's temp view is dropped before returning: the
-    returned frame already holds the resolved sink, and a view left per
-    call would grow the session catalog without bound. ``output_mode``
+    DataFrame. The sink's temp view and the checkpoint are both removed
+    before returning: the returned frame already holds the resolved
+    sink, whose rows live in memory with nothing left to replay against
+    the checkpoint, and a view or directory left per call would grow
+    the session catalog and the temp dir without bound. ``output_mode``
     is complete (aggregates), append (joins, session windows, stateless
     projections) or update (arbitrary stateful operators)."""
     spark = stream_df.sparkSession
     name = f"stream_{uuid.uuid4().hex}"
+    ckpt_dir = tempfile.mkdtemp(prefix="tapt_ckpt_")
     try:
         _available_now(
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode),
-            _fresh_ckpt(),
+            ckpt_dir + "/ckpt",
         )
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 
 def drain_batches(

@@ -45,7 +45,6 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -120,16 +119,19 @@ def fold_batch(
             and batch_id <= rec.get("batch_id", -1)
         ):
             return  # checkpointed replay of an already-applied batch
-    try:
-        existing = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        # PATH_NOT_FOUND on the first batch is the expected empty-store
-        # case; anything else (corrupt store, permissions) must surface
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        merged = increment
+    # the first batch finds no store; asking Spark to read the missing
+    # path would log a FileNotFoundException trace per call, so only an
+    # existing store is read, and any error reading it (corrupt store,
+    # permissions) surfaces
+    if os.path.exists(store_path):
+        merged = (
+            spark.read.parquet(store_path)
+            .unionByName(increment)
+            .groupBy(key)
+            .agg(*aggs)
+        )
     else:
-        merged = existing.unionByName(increment).groupBy(key).agg(*aggs)
+        merged = increment
     # break lineage from the path we are about to overwrite
     merged = merged.localCheckpoint(eager=True)
     merged.coalesce(1).write.mode("overwrite").parquet(store_path)
