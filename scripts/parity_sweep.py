@@ -8,7 +8,10 @@ Usage:
     python scripts/parity_sweep.py [sf_dir] [name_substring ...]
 
 Defaults to /root/testdata/sf0.1 and the whole registry; positional
-substrings filter query names (OR-ed). PARITY_SF_DIR is force-pinned
+substrings filter query names (OR-ed). Each passing query prints
+`ok <name> <md5> <rows>`: parity alone cannot catch a refactor that
+moves a Spark builder and its oracle together, so diff these lines
+between two checkouts to prove the results themselves are unchanged. PARITY_SF_DIR is force-pinned
 to the swept dir before the registry import so the footer-metadata
 oracle (table_file_metadata, and the digest folding it) registers
 against the same scale the Spark side runs at — no query is skipped.
@@ -111,8 +114,9 @@ for name in names:
                 ddf[c] = ddf[c].astype("float64")
         hs, ns = canon(sdf)
         hd, nd = canon(ddf)
-        ok = hs == hd and ns == nd
-        if not ok:
+        if hs == hd and ns == nd:
+            print(f"ok {name} {hs} {ns}", flush=True)
+        else:
             fails.append(name)
             print(f"FAIL {name} spark={ns} oracle={nd}", flush=True)
     except Exception as exc:  # noqa: BLE001

@@ -112,12 +112,14 @@ def test_top_candidates_respects_n_and_positive_scores(spark):
 
 
 def test_candidate_kind_map_matches_schemas(spark):
-    """_CANDIDATE_KINDS (drives generated oracle SQL) must agree with the
-    real parquet dtypes and cover every fixture candidate column."""
+    """_COLUMN_KINDS (drives generated oracle SQL) must agree with the
+    real parquet dtypes, cover every fixture candidate column and every
+    transform_selection column, and hold no other entry."""
     from conftest import PARITY_SF_DIR
 
     from trino_adaptive_partitioning_tool_spark.queries.advisor import (
-        _CANDIDATE_KINDS,
+        _COLUMN_KINDS,
+        _TRANSFORM_COLUMNS,
     )
     from trino_adaptive_partitioning_tool_spark.sources import fixtures, tables
 
@@ -131,21 +133,48 @@ def test_candidate_kind_map_matches_schemas(spark):
             return "int"
         return "other"
 
+    pairs = [
+        (view.split(".")[1], col) for view, col in fixtures.VIEW_COLUMN_ROWS
+    ] + list(_TRANSFORM_COLUMNS)
     seen = set()
-    for view, col in fixtures.VIEW_COLUMN_ROWS:
-        table = view.split(".")[1]
+    for table, col in pairs:
         dtypes = dict(
             tables.load_table(spark, PARITY_SF_DIR, table).dtypes
         )
-        assert col in _CANDIDATE_KINDS, f"missing kind for {col}"
-        assert _CANDIDATE_KINDS[col] == kind_of(dtypes[col]), (
-            f"{table}.{col}: map says {_CANDIDATE_KINDS[col]}, "
+        assert col in _COLUMN_KINDS, f"missing kind for {col}"
+        assert _COLUMN_KINDS[col] == kind_of(dtypes[col]), (
+            f"{table}.{col}: map says {_COLUMN_KINDS[col]}, "
             f"schema says {kind_of(dtypes[col])} ({dtypes[col]})"
         )
         seen.add(col)
-    assert seen == set(_CANDIDATE_KINDS), (
-        f"stale kind-map entries: {set(_CANDIDATE_KINDS) - seen}"
+    assert seen == set(_COLUMN_KINDS), (
+        f"stale kind-map entries: {set(_COLUMN_KINDS) - seen}"
     )
+
+
+@pytest.mark.parametrize("name", ["bucket_join_advice", "rollup_advice"])
+def test_ndv_advice_empty_when_no_column_resolves(spark, monkeypatch, name):
+    """Both NDV-advice queries read exact NDV through advisor._exact_ndv.
+    When no mined column resolves to any table schema, it returns an
+    empty frame of its schema, so each query returns an empty frame of
+    its advertised columns and types instead of raising."""
+    from conftest import SMOKE_SF_DIR
+
+    from trino_adaptive_partitioning_tool_spark.queries import advisor
+    from trino_adaptive_partitioning_tool_spark.sources import tables
+
+    query = getattr(advisor, name)
+    want = query(spark, SMOKE_SF_DIR).dtypes
+    monkeypatch.setattr(tables, "TABLES", ())
+    ndv = advisor._exact_ndv(spark, SMOKE_SF_DIR, {"o_custkey"})
+    assert ndv.dtypes == [
+        ("table_name", "string"), ("column_name", "string"),
+        ("ndv", "bigint"), ("table_rows", "bigint"),
+    ]
+    assert ndv.collect() == []
+    got = query(spark, SMOKE_SF_DIR)
+    assert got.dtypes == want
+    assert got.collect() == []
 
 
 def test_spec_history_deep_generation_checkpoint(spark):

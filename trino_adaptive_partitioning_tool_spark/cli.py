@@ -3,7 +3,7 @@
 
     python -m trino_adaptive_partitioning_tool_spark.cli \
         [--sf-dir /root/testdata/sf0.001] [--out results] \
-        [--since 2025-06-01] [--execute] [--top-n 3]
+        [--since 2025-06-01] [--execute]
 
 Differences by design:
   * --since takes a DATE compared against create_time as a Column
@@ -39,7 +39,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="only consider query-log rows with create_time >= this date",
     )
     p.add_argument("--execute", action="store_true")
-    p.add_argument("--top-n", type=int, default=3)
     p.add_argument(
         "--report", action="store_true",
         help="also write a markdown analysis report to <out>/report.md",

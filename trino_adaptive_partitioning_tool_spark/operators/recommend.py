@@ -190,7 +190,7 @@ def run_analysis(
     # frames above — notably usage's DDL-mining mapInPandas leg would
     # otherwise re-run per downstream reference.
     usage = scoring.weighted_column_usage(
-        candidates.select("view", "column"), views, logs, mined_logs
+        candidates.select("view", "column"), views, mined_logs
     ).cache()
     col_perf = scoring.column_performance(logs, mined_logs).cache()
     cached += [usage, col_perf]

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .mining import mine_query_log, mine_view_ddl, mined_tables
+from .mining import mine_view_ddl, mined_tables
 
 # composite resource-score weights (reference src/partitioning.py:159-164)
 RESOURCE_WEIGHTS = {
@@ -147,11 +147,27 @@ def column_performance(logs_df: DataFrame, mined_df: DataFrame) -> DataFrame:
     )
 
 
+def log_usage_legs(mined_logs_df: DataFrame) -> DataFrame:
+    """The two log-derived usage signals (A1) as (name, source,
+    weighted_frequency): join-column occurrences (log_join_column) and
+    table names (log_table_mention) mined from the log."""
+    legs = [
+        mined_logs_df.where(F.col("kind") == kind)
+        .groupBy("name")
+        .agg(F.sum("cnt").alias("weighted_frequency"))
+        .select("name", F.lit(source).alias("source"), "weighted_frequency")
+        for kind, source in (
+            ("join_column", "log_join_column"),
+            ("table", "log_table_mention"),
+        )
+    ]
+    return legs[0].unionByName(legs[1])
+
+
 def weighted_column_usage(
     view_columns_df: DataFrame,
     views_df: DataFrame,
-    logs_df: DataFrame,
-    mined_logs_df: DataFrame | None = None,
+    mined_logs_df: DataFrame,
 ) -> DataFrame:
     """Global usage stats (A1): (name, source, weighted_frequency).
 
@@ -163,7 +179,6 @@ def weighted_column_usage(
       log_join_column   — join-column occurrences mined from the log
       log_table_mention — table names mined from the log
     """
-    mined = mined_logs_df if mined_logs_df is not None else mine_query_log(logs_df)
     mined_ddl = mine_view_ddl(views_df)
 
     view_usage = (
@@ -186,23 +201,40 @@ def weighted_column_usage(
         .agg(F.sum("cnt").alias("weighted_frequency"))
         .withColumn("source", F.lit("ddl_join_column"))
     )
-    log_joins = (
-        mined.where(F.col("kind") == "join_column")
-        .groupBy(F.col("name"))
-        .agg(F.sum("cnt").alias("weighted_frequency"))
-        .withColumn("source", F.lit("log_join_column"))
-    )
-    log_tables = (
-        mined.where(F.col("kind") == "table")
-        .groupBy(F.col("name"))
-        .agg(F.sum("cnt").alias("weighted_frequency"))
-        .withColumn("source", F.lit("log_table_mention"))
-    )
     return (
         view_usage.unionByName(ddl_joins)
-        .unionByName(log_joins)
-        .unionByName(log_tables)
+        .unionByName(log_usage_legs(mined_logs_df))
         .select("name", "source", "weighted_frequency")
+    )
+
+
+def drift_usage(
+    mined_df: DataFrame, logs_df: DataFrame, cutoff: str,
+    keys: list[str | Column],
+) -> DataFrame:
+    """Early/late usage drift: the join/where-column mentions of
+    ``mined_df`` (empty names dropped), attached to each logged query's
+    create_time and summed per ``keys`` into n_early (before ``cutoff``)
+    and n_late (at or after it). The log-attach join is unhinted: the
+    log grows without bound over time, so AQE decides any broadcast at
+    runtime from the real size. Counts are additive, so summing the
+    increments of any slicing of the log gives the whole-log result."""
+    mentions = mined_df.where(
+        F.col("kind").isin("join_column", "where_column")
+        & (F.col("name") != "")
+    )
+    cut = F.lit(cutoff).cast("timestamp")
+    return (
+        mentions.join(logs_df.select("query_id", "create_time"), "query_id")
+        .groupBy(*keys)
+        .agg(
+            F.sum(F.when(F.col("create_time") < cut, F.col("cnt")).otherwise(0))
+            .cast("bigint")
+            .alias("n_early"),
+            F.sum(F.when(F.col("create_time") >= cut, F.col("cnt")).otherwise(0))
+            .cast("bigint")
+            .alias("n_late"),
+        )
     )
 
 

@@ -8,6 +8,8 @@ the SAME Python literals the Spark side reads — one source of truth.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,6 +29,20 @@ _MENTION_TABLES = (
 )
 
 
+# A3 resource score in SQL: each metric over its log-wide max, weighted
+# by scoring.RESOURCE_WEIGHTS (40/30/15/15), NULL contributing 0
+_MAXES_SQL = ", ".join(
+    f"MAX({c}) AS max_{c}" for c in scoring.RESOURCE_WEIGHTS
+)
+_SCORE_SQL = " + ".join(
+    f"COALESCE(CAST({c} AS DOUBLE) / max_{c} * {w:g}, 0)"
+    for c, w in scoring.RESOURCE_WEIGHTS.items()
+)
+_RESOURCE_CTES = f"""{_LOGS_CTE},
+    m AS (SELECT {_MAXES_SQL} FROM query_logs),
+    resource AS (SELECT query_id, {_SCORE_SQL} AS score FROM query_logs, m)"""
+
+
 # ---------------------------------------------------------------------------
 # A3 — composite resource score, 40/30/15/15 max-normalized
 # ---------------------------------------------------------------------------
@@ -34,24 +50,8 @@ _MENTION_TABLES = (
     "resource_scores",
     memo=True,
     oracle=f"""
-    WITH {_LOGS_CTE},
-    m AS (
-      SELECT
-        MAX(execution_time_ms) AS max_exec,
-        MAX(cpu_time_ms)       AS max_cpu,
-        MAX(input_bytes)       AS max_input,
-        MAX(peak_memory_bytes) AS max_mem
-      FROM query_logs
-    )
-    SELECT
-      query_id,
-      ROUND(
-        COALESCE(CAST(execution_time_ms AS DOUBLE) / max_exec * 40, 0)
-        + COALESCE(CAST(cpu_time_ms AS DOUBLE) / max_cpu * 30, 0)
-        + COALESCE(CAST(input_bytes AS DOUBLE) / max_input * 15, 0)
-        + COALESCE(CAST(peak_memory_bytes AS DOUBLE) / max_mem * 15, 0),
-      4) AS resource_score
-    FROM query_logs, m
+    WITH {_RESOURCE_CTES}
+    SELECT query_id, ROUND(score, 4) AS resource_score FROM resource
     """,
 )
 def resource_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,22 +67,8 @@ def resource_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "top_resource_queries",
     oracle=f"""
-    WITH {_LOGS_CTE},
-    m AS (
-      SELECT
-        MAX(execution_time_ms) AS max_exec,
-        MAX(cpu_time_ms)       AS max_cpu,
-        MAX(input_bytes)       AS max_input,
-        MAX(peak_memory_bytes) AS max_mem
-      FROM query_logs
-    )
-    SELECT query_id, ROUND(
-        COALESCE(CAST(execution_time_ms AS DOUBLE) / max_exec * 40, 0)
-        + COALESCE(CAST(cpu_time_ms AS DOUBLE) / max_cpu * 30, 0)
-        + COALESCE(CAST(input_bytes AS DOUBLE) / max_input * 15, 0)
-        + COALESCE(CAST(peak_memory_bytes AS DOUBLE) / max_mem * 15, 0),
-      4) AS resource_score
-    FROM query_logs, m
+    WITH {_RESOURCE_CTES}
+    SELECT query_id, ROUND(score, 4) AS resource_score FROM resource
     ORDER BY resource_score DESC, query_id
     LIMIT 5
     """,
@@ -213,29 +199,51 @@ def table_exec_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.11 — Iceberg transform selection from EXACT per-column stats, the
 # full policy as one CASE expression on both sides.
 # ---------------------------------------------------------------------------
-# (table, column, kind) — kind selects the policy branch at SQL-generation
-# time (DuckDB binds every CASE branch, so a runtime typeof() dispatch
-# can't mix interval and integer comparisons). Schemas are fixed
-# (FIXTURES.md group A); a unit test keeps this map honest.
+# Column -> policy kind for every column an oracle runs the transform
+# policy on. The kind selects the policy branch at SQL-generation time
+# (DuckDB binds every CASE branch, so a runtime typeof() dispatch can't
+# mix interval and integer comparisons): date/timestamp → granularity
+# probe; str → bucket(16)/identity; int → bucket/truncate/identity;
+# other → identity. Schemas are fixed (FIXTURES.md group A);
+# tests/test_policy_units.py checks every entry against the parquet
+# schemas and that every entry is used.
+_COLUMN_KINDS: dict[str, str] = {
+    "o_orderkey": "int", "o_custkey": "int", "o_orderstatus": "str",
+    "o_totalprice": "other", "o_orderdate": "date", "o_orderpriority": "str",
+    "l_orderkey": "int", "l_partkey": "int", "l_suppkey": "int",
+    "l_linenumber": "int", "l_quantity": "other", "l_extendedprice": "other",
+    "l_discount": "other", "l_tax": "other", "l_returnflag": "str",
+    "l_linestatus": "str", "l_shipdate": "date",
+    "c_custkey": "int", "c_name": "str", "c_nationkey": "int",
+    "c_acctbal": "other", "c_mktsegment": "str",
+    "event_id": "int", "ts": "date", "user_id": "int", "event_type": "str",
+    "value": "other", "props": "str",
+    "p_partkey": "int", "p_name": "str", "p_brand": "str", "p_type": "str",
+    "p_size": "int", "p_retailprice": "other",
+    "s_suppkey": "int",
+}
+
+# (table, column) pairs transform_selection profiles
 _TRANSFORM_COLUMNS = [
-    ("orders", "o_orderdate", "date"),
-    ("orders", "o_custkey", "int"),
-    ("orders", "o_orderstatus", "str"),
-    ("customer", "c_mktsegment", "str"),
-    ("customer", "c_acctbal", "other"),
-    ("lineitem", "l_partkey", "int"),
-    ("lineitem", "l_shipdate", "date"),
-    ("lineitem", "l_linenumber", "int"),
-    ("events", "ts", "date"),
-    ("events", "user_id", "int"),
-    ("part", "p_brand", "str"),
-    ("supplier", "s_suppkey", "int"),
+    ("orders", "o_orderdate"),
+    ("orders", "o_custkey"),
+    ("orders", "o_orderstatus"),
+    ("customer", "c_mktsegment"),
+    ("customer", "c_acctbal"),
+    ("lineitem", "l_partkey"),
+    ("lineitem", "l_shipdate"),
+    ("lineitem", "l_linenumber"),
+    ("events", "ts"),
+    ("events", "user_id"),
+    ("part", "p_brand"),
+    ("supplier", "s_suppkey"),
 ]
 
 
-def _transform_leg(table: str, col: str, kind: str) -> str:
+def _transform_leg(table: str, col: str) -> str:
     """The transform policy for one column as a DuckDB scalar subquery;
-    `kind` picks the CASE branch (see _TRANSFORM_COLUMNS)."""
+    the column's kind picks the CASE branch (see _COLUMN_KINDS)."""
+    kind = _COLUMN_KINDS[col]
     if kind == "date":
         return f"""(SELECT CASE
           WHEN COUNT(DISTINCT CAST({col} AS DATE)) > 20 * COUNT(DISTINCT date_trunc('month', {col}))
@@ -257,24 +265,32 @@ def _transform_leg(table: str, col: str, kind: str) -> str:
     return f"'{col}'"
 
 
-def _transform_oracle() -> str:
-    """Per-column stats subqueries + the reference's §2.11 CASE policy
-    (varchar bucket>10000→bucket(16); int card>1000→bucket(clamp(card/500,
-    4,32)) else range>10000→truncate(col,100); date→granularity probe)."""
+def _transform_legs(key: str, rows: list[tuple[str, str, str]]) -> str:
+    """One (key, column_name, transform) row per (key value, table,
+    column) in ``rows``: the reference's §2.11 CASE policy over exact
+    per-column stats (varchar bucket>10000→bucket(16); int card>1000→
+    bucket(clamp(card/500, 4,32)) else range>10000→truncate(col,100);
+    date→granularity probe)."""
     return "\nUNION ALL\n".join(
-        f"SELECT '{table}' AS table_name, '{col}' AS column_name,\n"
-        f"       {_transform_leg(table, col, kind)} AS transform"
-        for table, col, kind in _TRANSFORM_COLUMNS
+        f"SELECT '{k}' AS {key}, '{col}' AS column_name,\n"
+        f"       {_transform_leg(table, col)} AS transform"
+        for k, table, col in rows
     )
 
 
-@register("transform_selection", oracle=_transform_oracle(), memo=True)
+@register(
+    "transform_selection",
+    oracle=_transform_legs(
+        "table_name", [(t, t, c) for t, c in _TRANSFORM_COLUMNS]
+    ),
+    memo=True,
+)
 def transform_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-stats profile → transform policy, via the SAME production code
     path (stats.column_profiles + transforms.transform_expr)."""
     out: DataFrame | None = None
     by_table: dict[str, list[str]] = {}
-    for table, col, _kind in _TRANSFORM_COLUMNS:
+    for table, col in _TRANSFORM_COLUMNS:
         by_table.setdefault(table, []).append(col)
     for table, cols in by_table.items():
         df = tables.load_table(spark, sf_dir, table)
@@ -300,81 +316,6 @@ def transform_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = leg if out is None else out.unionByName(leg)
     assert out is not None
     return out
-
-
-# ---------------------------------------------------------------------------
-# Rows-only checks (miner + full pipeline — not ANSI-SQL-expressible)
-# ---------------------------------------------------------------------------
-# mined_workload is registered below, after _mined_fixture_rows — its
-# oracle is the miner's own deterministic fixture output as literals.
-
-
-_STRIP_BUCKET_RE = r"bucket\(\d+, "
-
-
-def _partition_recommendations_oracle() -> str:
-    """Decision-level oracle for the approx flagship: the exact twin's
-    scored CTEs, projected to the order-insensitive decision — sorted
-    partition-key set + sorted transform KINDS (bucket counts stripped;
-    the exact twin checks the counts). Built lazily: _scored_sql /
-    _all_transform_legs are defined later in this module."""
-    strip = (
-        "REGEXP_REPLACE(tr.transform, 'bucket\\(\\d+, ', 'bucket(', 'g')"
-    )
-    return f"""
-    WITH scored AS ({_scored_sql()}),
-    top3 AS (
-      SELECT view_name, column_name, candidate_rank FROM (
-        SELECT view_name, column_name,
-               ROW_NUMBER() OVER (
-                 PARTITION BY view_name ORDER BY score DESC, column_name
-               ) AS candidate_rank
-        FROM scored WHERE score > 0
-      ) r WHERE candidate_rank <= 3
-    ),
-    trans AS (
-      {_all_transform_legs()}
-    )
-    SELECT t.view_name,
-      string_agg(t.column_name, ', ' ORDER BY t.column_name)
-        AS partition_keys_csv,
-      string_agg({strip}, ', ' ORDER BY {strip})
-        AS transform_kinds_csv
-    FROM top3 t
-    JOIN trans tr
-      ON t.view_name = tr.view_name AND t.column_name = tr.column_name
-    GROUP BY t.view_name
-    """
-
-
-@register("partition_recommendations", memo=True)
-def partition_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship end-to-end pipeline at the given scale factor, run
-    with its production approx (HLL) statistics.
-
-    Checked at DECISION level: the oracle recomputes the pipeline with
-    exact stats in SQL, and both sides canonicalize to the
-    order-insensitive decision — the sorted set of recommended partition
-    keys plus the sorted set of transform KINDS with bucket counts
-    stripped. Scores, ranked key order, and bucket counts legitimately
-    wiggle with NDV estimation error (that exactness is what
-    partition_scores_exact / partition_recommendations_exact pin down);
-    a green row here proves the approx pipeline lands the same
-    partitioning decision as the exact one."""
-    from ..operators import recommend
-
-    rec = recommend.recommendations(spark, sf_dir)
-    kinds = F.transform(
-        "transforms",
-        lambda c: F.regexp_replace(c, _STRIP_BUCKET_RE, "bucket("),
-    )
-    return rec.where(F.size("partition_keys") > 0).select(
-        F.col("view").alias("view_name"),
-        F.array_join(F.array_sort("partition_keys"), ", ").alias(
-            "partition_keys_csv"
-        ),
-        F.array_join(F.array_sort(kinds), ", ").alias("transform_kinds_csv"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -433,22 +374,28 @@ def mined_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DRIFT_CUTOFF = "2025-06-01 00:00:00"
 
 
+def _drift_usage_sql(keys: str) -> str:
+    """SQL twin of scoring.drift_usage over the fixture CTEs (mined,
+    query_logs): join/where-column mentions summed per ``keys`` into
+    n_early / n_late either side of _DRIFT_CUTOFF."""
+    cut = f"TIMESTAMP '{_DRIFT_CUTOFF}'"
+    return f"""SELECT {keys},
+        CAST(SUM(CASE WHEN l.create_time < {cut}
+                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_early,
+        CAST(SUM(CASE WHEN l.create_time >= {cut}
+                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_late
+      FROM mined m JOIN query_logs l USING (query_id)
+      WHERE m.kind IN ('join_column', 'where_column') AND m.name <> ''
+      GROUP BY {keys}"""
+
+
 @register(
     "workload_drift_report",
     memo=True,
     oracle=f"""
     WITH {_LOGS_CTE},
     {_MINED_CTE},
-    usage AS (
-      SELECT m.kind, m.name,
-        CAST(SUM(CASE WHEN l.create_time < TIMESTAMP '{_DRIFT_CUTOFF}'
-                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_early,
-        CAST(SUM(CASE WHEN l.create_time >= TIMESTAMP '{_DRIFT_CUTOFF}'
-                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_late
-      FROM mined m JOIN query_logs l USING (query_id)
-      WHERE m.kind IN ('join_column', 'where_column') AND m.name <> ''
-      GROUP BY m.kind, m.name
-    ),
+    usage AS ({_drift_usage_sql("m.kind, m.name")}),
     ranked AS (
       SELECT kind, name, n_early, n_late,
         CASE WHEN n_early > 0 THEN ROW_NUMBER() OVER (
@@ -481,29 +428,11 @@ def workload_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import recommend
 
-    logs = fixtures.query_logs_df(spark)
-    # session-shared mined frame (see mined_workload)
-    mined = recommend.mined_fixture_logs(spark).where(
-        F.col("kind").isin("join_column", "where_column")
-        & (F.col("name") != "")
-    )
-    cutoff = F.lit(_DRIFT_CUTOFF).cast("timestamp")
-    # No broadcast hint: the query-log projection grows without bound
-    # over time (a year of history is tens of millions of rows), so a
-    # forced broadcast would bypass AQE's size check. AQE broadcasts at
-    # runtime when the side actually fits; plan pinned by
-    # tests/test_scale_plans.py (no BroadcastExchange under
-    # autoBroadcastJoinThreshold=-1).
-    j = mined.join(logs.select("query_id", "create_time"), "query_id")
-    usage = j.groupBy("kind", "name").agg(
-        F.sum(F.when(F.col("create_time") < cutoff, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n_early"),
-        F.sum(
-            F.when(F.col("create_time") >= cutoff, F.col("cnt")).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_late"),
+    # session-shared mined frame (see mined_workload); the log-attach
+    # join forces no broadcast (plan pinned by tests/test_scale_plans.py)
+    usage = scoring.drift_usage(
+        recommend.mined_fixture_logs(spark), fixtures.query_logs_df(spark),
+        _DRIFT_CUTOFF, ["kind", "name"],
     )
     w_early = Window.partitionBy("kind").orderBy(
         F.col("n_early").desc(), "name"
@@ -531,35 +460,77 @@ def workload_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.withColumn("status", status).orderBy("kind", "name")
 
 
-def _bucket_advice_oracle() -> str:
-    """NDV legs resolved at registration time: the mined fixture's join
-    columns (pure miner output) intersected with each table's parquet
-    footer schema — schemas are identical across scale dirs, so unlike
-    footer COUNTS this resolution is scale-independent."""
+def _parity_sf_dir() -> str:
     import os
 
+    return os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
+
+
+def _exact_ndv_sql(wanted: set[str]) -> str:
+    """SQL twin of _exact_ndv: one (table_name, column_name, ndv,
+    table_rows) leg per table column in ``wanted``, resolved at
+    registration against the parquet footer schemas (identical across
+    scale dirs, so unlike footer COUNTS this resolution is
+    scale-independent)."""
     import pyarrow.parquet as pq
 
+    sf = _parity_sf_dir()
+    return "\n      UNION ALL\n      ".join(
+        f"SELECT '{t}' AS table_name, '{c}' AS column_name,"
+        f" COUNT(DISTINCT {c}) AS ndv, COUNT(*) AS table_rows FROM {t}"
+        for t in tables.TABLES
+        for c in sorted(pq.read_schema(f"{sf}/{t}.parquet").names)
+        if c in wanted
+    )
+
+
+def _exact_ndv(
+    spark: SparkSession, sf_dir: str, wanted: set[str]
+) -> DataFrame:
+    """Exact NDV of every ``wanted`` column in each table whose schema
+    holds it, as (table_name, column_name, ndv, table_rows): one
+    aggregation per table over only those columns. When no wanted
+    column resolves to any table, an empty frame of that schema."""
+    frames = []
+    for t in tables.TABLES:
+        cols = [
+            c for c in tables.table_columns(spark, sf_dir, t) if c in wanted
+        ]
+        if not cols:
+            continue
+        agg = tables.load_table(spark, sf_dir, t).agg(
+            F.count(F.lit(1)).alias("__rows"),
+            *[F.count_distinct(F.col(c)).alias(c) for c in cols],
+        )
+        frames.append(
+            agg.selectExpr(
+                f"stack({len(cols)}, "
+                + ", ".join(f"'{c}', {c}" for c in cols)
+                + ") AS (column_name, ndv)",
+                "__rows AS table_rows",
+            ).select(
+                F.lit(t).alias("table_name"), "column_name", "ndv",
+                "table_rows",
+            )
+        )
+    if not frames:
+        return spark.createDataFrame(
+            [],
+            "table_name string, column_name string, ndv long, table_rows long",
+        )
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
+def _bucket_advice_oracle() -> str:
+    """The mined fixture's join columns (pure miner output) with their
+    exact per-table NDV and advised bucket tier."""
     from ..operators import sizing
 
-    join_cols = sorted(
-        {
-            name
-            for (_qid, kind, name, _cnt) in _mined_fixture_rows()
-            if kind == "join_column" and name
-        }
-    )
-    sf = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
-    legs = []
-    for t in tables.TABLES:
-        cols = set(pq.read_schema(f"{sf}/{t}.parquet").names)
-        for c in join_cols:
-            if c in cols:
-                legs.append(
-                    f"SELECT '{t}' AS table_name, '{c}' AS column_name,"
-                    f" COUNT(DISTINCT {c}) AS ndv FROM {t}"
-                )
-    ndv_cte = "\n      UNION ALL\n      ".join(legs)
+    join_cols = {
+        name
+        for (_qid, kind, name, _cnt) in _mined_fixture_rows()
+        if kind == "join_column" and name
+    }
     return f"""
     WITH {_MINED_CTE},
     freq AS (
@@ -568,7 +539,7 @@ def _bucket_advice_oracle() -> str:
       GROUP BY name
     ),
     ndv AS (
-      {ndv_cte}
+      {_exact_ndv_sql(join_cols)}
     )
     SELECT n.table_name, f.column_name, f.join_freq,
            CAST(n.ndv AS BIGINT) AS ndv,
@@ -599,34 +570,7 @@ def bucket_join_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").cast("bigint").alias("join_freq")
     )
     mined_cols = {r["column_name"] for r in freq.collect()}  # dimension-sized
-    ndv_frames = []
-    for t in tables.TABLES:
-        cols = [
-            c for c in tables.table_columns(spark, sf_dir, t)
-            if c in mined_cols
-        ]
-        if not cols:
-            continue
-        agg = tables.load_table(spark, sf_dir, t).agg(
-            *[F.count_distinct(F.col(c)).alias(c) for c in cols]
-        )
-        stacked = agg.selectExpr(
-            f"stack({len(cols)}, "
-            + ", ".join(f"'{c}', {c}" for c in cols)
-            + ") AS (column_name, ndv)"
-        ).select(F.lit(t).alias("table_name"), "column_name", "ndv")
-        ndv_frames.append(stacked)
-    if not ndv_frames:
-        # No mined join column resolves to any table schema: return the
-        # advertised (empty) shape instead of raising IndexError.
-        ndv_frames = [
-            spark.createDataFrame(
-                [], "table_name string, column_name string, ndv long"
-            )
-        ]
-    ndvs = ndv_frames[0]
-    for f_ in ndv_frames[1:]:
-        ndvs = ndvs.unionByName(f_)
+    ndvs = _exact_ndv(spark, sf_dir, mined_cols)
     return (
         freq.join(ndvs, "column_name")
         .select(
@@ -641,33 +585,16 @@ def bucket_join_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rollup_advice_oracle() -> str:
-    """NDV + row-count legs resolved at registration from footer schemas
-    x the pure miner's GROUP BY columns over the fixture log (same
-    resolution pattern as _bucket_advice_oracle)."""
-    import os
-
-    import pyarrow.parquet as pq
-
+    """The pure miner's GROUP BY columns over the fixture log with their
+    exact per-table NDV, table rows and rollup fraction."""
     gb = _mined_groupby_fixture_counts()
     cols_cte = "groupcols(column_name, groupby_freq) AS (VALUES " + ", ".join(
         f"('{c}', {n})" for c, n in sorted(gb.items())
     ) + ")"
-    sf = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
-    legs = []
-    for t in tables.TABLES:
-        tcols = set(pq.read_schema(f"{sf}/{t}.parquet").names)
-        for c in sorted(gb):
-            if c in tcols:
-                legs.append(
-                    f"SELECT '{t}' AS table_name, '{c}' AS column_name,"
-                    f" COUNT(DISTINCT {c}) AS ndv,"
-                    f" COUNT(*) AS table_rows FROM {t}"
-                )
-    ndv_cte = "\n      UNION ALL\n      ".join(legs)
     return f"""
     WITH {cols_cte},
     ndv AS (
-      {ndv_cte}
+      {_exact_ndv_sql(set(gb))}
     )
     SELECT n.table_name, g.column_name,
            CAST(g.groupby_freq AS BIGINT) AS groupby_freq,
@@ -722,40 +649,7 @@ def rollup_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").cast("bigint").alias("groupby_freq"))
     )
     mined_cols = {r["column_name"] for r in mined.collect()}  # dim-sized
-    frames = []
-    for t in tables.TABLES:
-        cols = [
-            c for c in tables.table_columns(spark, sf_dir, t)
-            if c in mined_cols
-        ]
-        if not cols:
-            continue
-        agg = tables.load_table(spark, sf_dir, t).agg(
-            F.count(F.lit(1)).alias("__rows"),
-            *[F.count_distinct(F.col(c)).alias(c) for c in cols],
-        )
-        frames.append(
-            agg.selectExpr(
-                f"stack({len(cols)}, "
-                + ", ".join(f"'{c}', {c}" for c in cols)
-                + ") AS (column_name, ndv)",
-                "__rows AS table_rows",
-            ).select(F.lit(t).alias("table_name"), "column_name", "ndv",
-                     "table_rows")
-        )
-    if not frames:
-        # Same guard as bucket_join_advice: no resolvable GROUP BY
-        # column means an empty advice frame, not an IndexError.
-        frames = [
-            spark.createDataFrame(
-                [],
-                "table_name string, column_name string,"
-                " ndv long, table_rows long",
-            )
-        ]
-    ndvs = frames[0]
-    for f_ in frames[1:]:
-        ndvs = ndvs.unionByName(f_)
+    ndvs = _exact_ndv(spark, sf_dir, mined_cols)
     return (
         mined.join(ndvs, "column_name")
         .select(
@@ -879,6 +773,18 @@ def _scored_sql(time_pred: str | None = None) -> str:
     """
 
 
+def _top3_sql(scored: str) -> str:
+    """O1 in SQL: the per-view top-3 positive-score candidates of the
+    relation ``scored``, ranked by score, then column name."""
+    return f"""SELECT view_name, column_name, score, candidate_rank FROM (
+        SELECT view_name, column_name, score,
+               CAST(ROW_NUMBER() OVER (
+                 PARTITION BY view_name ORDER BY score DESC, column_name
+               ) AS BIGINT) AS candidate_rank
+        FROM {scored} WHERE score > 0
+      ) r WHERE candidate_rank <= 3"""
+
+
 def _scored_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import recommend
 
@@ -909,17 +815,7 @@ def partition_scores_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "top_partition_candidates",
     memo=True,
-    oracle=f"""
-    WITH scored AS ({_scored_sql()})
-    SELECT view_name, column_name, score, candidate_rank FROM (
-      SELECT view_name, column_name, score,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY view_name
-               ORDER BY score DESC, column_name
-             ) AS BIGINT) AS candidate_rank
-      FROM scored WHERE score > 0
-    ) r WHERE candidate_rank <= 3
-    """,
+    oracle=f"WITH scored AS ({_scored_sql()})\n{_top3_sql('scored')}",
 )
 def top_partition_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 per-view top-3 positive-score candidates — hash-checked."""
@@ -939,72 +835,42 @@ def top_partition_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # §2.11/F7 — final DDL assembly, hash-checked. Transform policy legs are
-# generated per candidate column from a static kind map (kept honest by a
-# unit test against the real parquet schemas); the script is compared
+# generated per candidate column from _COLUMN_KINDS; the script is compared
 # without its score-header line because Java's %.1f (HALF_UP) and C
 # printf (half-even) can legitimately differ at x.x5 — total_score is
 # compared separately at 4 digits instead.
 # ---------------------------------------------------------------------------
-_CANDIDATE_KINDS: dict[str, str] = {
-    # date/timestamp → granularity probe; str → bucket(16)/identity;
-    # int → bucket/truncate/identity; other → identity
-    "o_orderkey": "int", "o_custkey": "int", "o_orderstatus": "str",
-    "o_totalprice": "other", "o_orderdate": "date", "o_orderpriority": "str",
-    "l_orderkey": "int", "l_partkey": "int", "l_suppkey": "int",
-    "l_linenumber": "int", "l_quantity": "other", "l_extendedprice": "other",
-    "l_discount": "other", "l_tax": "other", "l_returnflag": "str",
-    "l_linestatus": "str", "l_shipdate": "date",
-    "c_custkey": "int", "c_name": "str", "c_nationkey": "int",
-    "c_acctbal": "other", "c_mktsegment": "str",
-    "event_id": "int", "ts": "date", "user_id": "int", "event_type": "str",
-    "value": "other", "props": "str",
-    "p_partkey": "int", "p_name": "str", "p_brand": "str", "p_type": "str",
-    "p_size": "int", "p_retailprice": "other",
-}
-
-
-def _all_transform_legs() -> str:
-    legs = []
-    for view, col in fixtures.VIEW_COLUMN_ROWS:
-        table = view.split(".")[1]
-        kind = _CANDIDATE_KINDS[col]
-        legs.append(
-            f"SELECT '{view}' AS view_name, '{col}' AS column_name,\n"
-            f"       {_transform_leg(table, col, kind)} AS transform"
-        )
-    return "\nUNION ALL\n".join(legs)
+# The exact flagship's recommendation in SQL, as CTEs: scored, top3,
+# keyed (each top-3 key with its transform) and recs (keys and
+# transforms aggregated per view in rank order)
+_RECS_CTES = f"""scored AS ({_scored_sql()}),
+    top3 AS ({_top3_sql("scored")}),
+    keyed AS (
+      SELECT t.*, tr.transform FROM top3 t
+      JOIN ({_transform_legs("view_name", [
+          (v, v.split(".")[1], c) for v, c in fixtures.VIEW_COLUMN_ROWS
+      ])}) tr
+        ON t.view_name = tr.view_name AND t.column_name = tr.column_name
+    ),
+    recs AS (
+      SELECT view_name,
+        string_agg(column_name, ', ' ORDER BY candidate_rank)
+          AS partition_keys_csv,
+        string_agg(transform, ', ' ORDER BY candidate_rank) AS transforms_csv,
+        ROUND(SUM(score), 4) AS total_score
+      FROM keyed GROUP BY view_name
+    )"""
 
 
 @register(
     "partition_recommendations_exact",
     memo=True,
     oracle=f"""
-    WITH scored AS ({_scored_sql()}),
-    top3 AS (
-      SELECT view_name, column_name, score, candidate_rank FROM (
-        SELECT view_name, column_name, score,
-               ROW_NUMBER() OVER (
-                 PARTITION BY view_name ORDER BY score DESC, column_name
-               ) AS candidate_rank
-        FROM scored WHERE score > 0
-      ) r WHERE candidate_rank <= 3
-    ),
-    trans AS (
-      {_all_transform_legs()}
-    )
-    SELECT t.view_name,
-      string_agg(t.column_name, ', ' ORDER BY t.candidate_rank)
-        AS partition_keys_csv,
-      string_agg(tr.transform, ', ' ORDER BY t.candidate_rank)
-        AS transforms_csv,
-      ROUND(SUM(t.score), 4) AS total_score,
-      'ALTER TABLE ' || t.view_name || ' REPLACE PARTITION SPEC ('
-        || string_agg(tr.transform, ', ' ORDER BY t.candidate_rank) || ');'
-        AS alter_ddl
-    FROM top3 t
-    JOIN trans tr
-      ON t.view_name = tr.view_name AND t.column_name = tr.column_name
-    GROUP BY t.view_name
+    WITH {_RECS_CTES}
+    SELECT view_name, partition_keys_csv, transforms_csv, total_score,
+      'ALTER TABLE ' || view_name || ' REPLACE PARTITION SPEC ('
+        || transforms_csv || ');' AS alter_ddl
+    FROM recs
     """,
 )
 def partition_recommendations_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1026,14 +892,51 @@ def partition_recommendations_exact(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-# The approx flagship's decision-level oracle needs _scored_sql /
-# _all_transform_legs, which are defined above — attach it here (the
-# register() decorator for the flagship ran before they existed).
-from .registry import _ORACLES as _registry_oracles  # noqa: E402
-
-_registry_oracles["partition_recommendations"] = (
-    _partition_recommendations_oracle()
+_STRIP_BUCKET_RE = r"bucket\(\d+, "
+_STRIP_BUCKET_SQL = (
+    f"REGEXP_REPLACE(transform, '{_STRIP_BUCKET_RE}', 'bucket(', 'g')"
 )
+
+
+@register(
+    "partition_recommendations",
+    memo=True,
+    oracle=f"""
+    WITH {_RECS_CTES}
+    SELECT view_name,
+      string_agg(column_name, ', ' ORDER BY column_name) AS partition_keys_csv,
+      string_agg({_STRIP_BUCKET_SQL}, ', ' ORDER BY {_STRIP_BUCKET_SQL})
+        AS transform_kinds_csv
+    FROM keyed GROUP BY view_name
+    """,
+)
+def partition_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship end-to-end pipeline at the given scale factor, run
+    with its production approx (HLL) statistics.
+
+    Checked at DECISION level: the oracle recomputes the pipeline with
+    exact stats in SQL, and both sides canonicalize to the
+    order-insensitive decision — the sorted set of recommended partition
+    keys plus the sorted set of transform KINDS with bucket counts
+    stripped. Scores, ranked key order, and bucket counts legitimately
+    wiggle with NDV estimation error (that exactness is what
+    partition_scores_exact / partition_recommendations_exact pin down);
+    a green row here proves the approx pipeline lands the same
+    partitioning decision as the exact one."""
+    from ..operators import recommend
+
+    rec = recommend.recommendations(spark, sf_dir)
+    kinds = F.transform(
+        "transforms",
+        lambda c: F.regexp_replace(c, _STRIP_BUCKET_RE, "bucket("),
+    )
+    return rec.where(F.size("partition_keys") > 0).select(
+        F.col("view").alias("view_name"),
+        F.array_join(F.array_sort("partition_keys"), ", ").alias(
+            "partition_keys_csv"
+        ),
+        F.array_join(F.array_sort(kinds), ", ").alias("transform_kinds_csv"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1051,30 +954,13 @@ _registry_oracles["partition_recommendations"] = (
 # ---------------------------------------------------------------------------
 _DRIFT_TRIGGERS_ORACLE = f"""
     WITH scored AS ({_scored_sql()}),
-    keys AS (
-      SELECT view_name, column_name FROM (
-        SELECT view_name, column_name,
-               ROW_NUMBER() OVER (
-                 PARTITION BY view_name ORDER BY score DESC, column_name
-               ) AS rk
-        FROM scored WHERE score > 0
-      ) r WHERE rk <= 3
-    ),
+    keys AS ({_top3_sql("scored")}),
     {_LOGS_CTE},
     {_MINED_CTE},
     {_VIEW_COLS_CTE},
-    usage AS (
-      SELECT m.name AS column_name,
-        CAST(SUM(CASE WHEN l.create_time < TIMESTAMP '{_DRIFT_CUTOFF}'
-                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_early,
-        CAST(SUM(CASE WHEN l.create_time >= TIMESTAMP '{_DRIFT_CUTOFF}'
-                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_late
-      FROM mined m JOIN query_logs l USING (query_id)
-      WHERE m.kind IN ('join_column', 'where_column') AND m.name <> ''
-      GROUP BY m.name
-    ),
+    usage AS ({_drift_usage_sql("m.name")}),
     status AS (
-      SELECT column_name, n_early, n_late,
+      SELECT name AS column_name, n_early, n_late,
         CASE WHEN n_early = 0 THEN 'new'
              WHEN n_late = 0 THEN 'dropped'
              WHEN n_late > n_early THEN 'risen'
@@ -1185,30 +1071,10 @@ def partition_recommendation_drift(spark: SparkSession, sf_dir: str) -> DataFram
     increment-store twin (streaming_drift_triggers)."""
     from ..operators import recommend
 
-    logs = fixtures.query_logs_df(spark)
     # session-shared mined frame (see mined_workload)
-    mined = recommend.mined_fixture_logs(spark).where(
-        F.col("kind").isin("join_column", "where_column")
-        & (F.col("name") != "")
-    )
-    cutoff = F.lit(_DRIFT_CUTOFF).cast("timestamp")
-    usage = (
-        mined.join(logs.select("query_id", "create_time"), "query_id")
-        .groupBy(F.col("name").alias("column_name"))
-        .agg(
-            F.sum(
-                F.when(F.col("create_time") < cutoff, F.col("cnt")).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_early"),
-            F.sum(
-                F.when(F.col("create_time") >= cutoff, F.col("cnt")).otherwise(
-                    0
-                )
-            )
-            .cast("bigint")
-            .alias("n_late"),
-        )
+    usage = scoring.drift_usage(
+        recommend.mined_fixture_logs(spark), fixtures.query_logs_df(spark),
+        _DRIFT_CUTOFF, [F.col("name").alias("column_name")],
     )
     return drift_triggers_from_usage(spark, sf_dir, usage)
 
@@ -1238,14 +1104,7 @@ def _spec_history_oracle() -> str:
       SELECT CAST({gen} AS BIGINT) AS generation, view_name,
              string_agg(column_name, ', ' ORDER BY candidate_rank)
                AS partition_keys_csv
-      FROM (
-        SELECT view_name, column_name,
-               ROW_NUMBER() OVER (
-                 PARTITION BY view_name ORDER BY score DESC, column_name
-               ) AS candidate_rank
-        FROM ({_scored_sql(pred)}) scored_g{gen}
-        WHERE score > 0
-      ) top3 WHERE candidate_rank <= 3
+      FROM ({_top3_sql(f"({_scored_sql(pred)}) scored_g{gen}")}) top3
       GROUP BY view_name""")
         # scored_g{gen} carries its own WITH; DuckDB scopes each leg's
         # CTEs inside the derived table, so the three legs cannot clash
@@ -1311,7 +1170,7 @@ def _spec_history(
 ) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from ..operators import recommend, scoring
+    from ..operators import recommend
 
     res = recommend.run_analysis(
         spark, sf_dir, exact_stats=True, profile_percentiles=False
@@ -1339,18 +1198,7 @@ def _spec_history(
         else:
             logs_g, mined_g = logs, mined
 
-        def _log_leg(kind: str, source: str) -> DataFrame:
-            return (
-                mined_g.where(F.col("kind") == kind)
-                .groupBy("name")
-                .agg(F.sum("cnt").alias("weighted_frequency"))
-                .withColumn("source", F.lit(source))
-                .select("name", "source", "weighted_frequency")
-            )
-
-        usage_g = static_usage.unionByName(
-            _log_leg("join_column", "log_join_column")
-        ).unionByName(_log_leg("table", "log_table_mention"))
+        usage_g = static_usage.unionByName(scoring.log_usage_legs(mined_g))
         perf_g = scoring.column_performance(logs_g, mined_g)
         top_g = scoring.top_candidates(
             scoring.partition_scores(candidates, usage_g, profiled, perf_g)
@@ -1399,27 +1247,13 @@ def _spec_history(
 # (ui/app.py:416-421 histogram; app.py:427 interactive/batch counts),
 # here as engine queries with fixture-CTE oracles.
 # ---------------------------------------------------------------------------
-_SCORE_EXPR_SQL = """
-      COALESCE(CAST(execution_time_ms AS DOUBLE) / max_exec * 40, 0)
-      + COALESCE(CAST(cpu_time_ms AS DOUBLE) / max_cpu * 30, 0)
-      + COALESCE(CAST(input_bytes AS DOUBLE) / max_input * 15, 0)
-      + COALESCE(CAST(peak_memory_bytes AS DOUBLE) / max_mem * 15, 0)
-"""
-
-
 @register(
     "resource_score_histogram",
     oracle=f"""
-    WITH {_LOGS_CTE},
-    m AS (
-      SELECT MAX(execution_time_ms) AS max_exec, MAX(cpu_time_ms) AS max_cpu,
-             MAX(input_bytes) AS max_input, MAX(peak_memory_bytes) AS max_mem
-      FROM query_logs
-    )
-    SELECT CAST(LEAST(FLOOR(({_SCORE_EXPR_SQL}) / 10.0), 9.0) AS BIGINT)
-             AS score_bucket,
+    WITH {_RESOURCE_CTES}
+    SELECT CAST(LEAST(FLOOR(score / 10.0), 9.0) AS BIGINT) AS score_bucket,
            COUNT(*) AS n_queries
-    FROM query_logs, m
+    FROM resource
     GROUP BY 1
     """,
 )
@@ -1772,12 +1606,6 @@ def partition_layout_whatif(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _parity_sf_dir() -> str:
-    import os
-
-    return os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
-
-
 def _file_metadata_oracle() -> str:
     # Footer paths are resolved at oracle-build time to the driver's
     # correctness scale (PARITY_SF_DIR, default sf0.01) — the one scale
@@ -1949,49 +1777,17 @@ def skew_salt_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     "drift_repartition_scripts",
     memo=True,
     oracle=f"""
-    WITH scored AS ({_scored_sql()}),
-    top3 AS (
-      SELECT view_name, column_name, candidate_rank FROM (
-        SELECT view_name, column_name,
-               ROW_NUMBER() OVER (
-                 PARTITION BY view_name ORDER BY score DESC, column_name
-               ) AS candidate_rank
-        FROM scored WHERE score > 0
-      ) r WHERE candidate_rank <= 3
-    ),
-    trans AS (
-      {_all_transform_legs()}
-    ),
-    recs AS (
-      SELECT t.view_name,
-        string_agg(t.column_name, ', ' ORDER BY t.candidate_rank)
-          AS keys_csv,
-        string_agg(tr.transform, ', ' ORDER BY t.candidate_rank)
-          AS transforms_csv
-      FROM top3 t
-      JOIN trans tr
-        ON t.view_name = tr.view_name AND t.column_name = tr.column_name
-      GROUP BY t.view_name
-    ),
+    WITH {_RECS_CTES},
     {_LOGS_CTE},
     {_MINED_CTE},
     {_VIEW_COLS_CTE},
-    usage AS (
-      SELECT m.name AS column_name,
-        CAST(SUM(CASE WHEN l.create_time < TIMESTAMP '{_DRIFT_CUTOFF}'
-                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_early,
-        CAST(SUM(CASE WHEN l.create_time >= TIMESTAMP '{_DRIFT_CUTOFF}'
-                 THEN m.cnt ELSE 0 END) AS BIGINT) AS n_late
-      FROM mined m JOIN query_logs l USING (query_id)
-      WHERE m.kind IN ('join_column', 'where_column') AND m.name <> ''
-      GROUP BY m.name
-    ),
+    usage AS ({_drift_usage_sql("m.name")}),
     added AS (
       SELECT vc.view_name,
         string_agg(vc.column_name, ', ' ORDER BY vc.column_name)
           AS added_columns_csv
       FROM view_columns vc
-      JOIN usage u ON vc.column_name = u.column_name
+      JOIN usage u ON vc.column_name = u.name
       LEFT JOIN top3 k
         ON vc.view_name = k.view_name AND vc.column_name = k.column_name
       WHERE k.column_name IS NULL
@@ -1999,7 +1795,7 @@ def skew_salt_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY vc.view_name
     )
     SELECT a.view_name,
-      COALESCE(r.keys_csv, '') AS current_keys_csv,
+      COALESCE(r.partition_keys_csv, '') AS current_keys_csv,
       a.added_columns_csv,
       CASE WHEN r.transforms_csv IS NULL THEN a.added_columns_csv
            ELSE r.transforms_csv || ', ' || a.added_columns_csv

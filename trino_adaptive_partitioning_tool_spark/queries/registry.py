@@ -93,8 +93,9 @@ _PRIORITY: tuple[str, ...] = (
     "top_partition_candidates",
     "partition_recommendations_exact",
     "partition_recommendations",
-    # r7: the closed adaptive loop (drift -> per-table re-partition
-    # triggers); displaces priority_counts_windowed into tpch_digest
+    # the closed adaptive loop (drift -> per-table re-partition
+    # triggers); priority_counts_windowed, which it displaced, is
+    # certified inside tpch_digest
     "partition_recommendation_drift",
     "resource_score_histogram",
     "interactive_batch_counts",
@@ -124,8 +125,8 @@ _PRIORITY: tuple[str, ...] = (
     # digest folds (queries/suites.py): every digest row re-executes its
     # folded queries and hash-reduces them, so one row certifies each
     # listed query against its oracle. 94 queries total across the 10
-    # digests; every query displaced from this window in round 4 is
-    # inside one of them.
+    # digests; every query displaced from this window to make room for
+    # a flagship is inside one of them.
     "relational_ops_digest",
     "grouping_analytics_digest",
     "functions_windows_digest",
@@ -144,12 +145,12 @@ _PRIORITY: tuple[str, ...] = (
     "text_repetition_stats",
     "multimodal_decode_stats",
     "train_test_split_counts",
-    # r6 flagship: cross-document span-level dedup signal (the Q9 shape
-    # it displaces is folded into tpch_digest — still certified)
+    # cross-document span-level dedup signal (the Q9 shape it displaced
+    # is folded into tpch_digest — still certified)
     "duplicate_span_stats",
-    # r7 flagship: the fully-oracled integer-lattice k-means assignment
-    # (displaces approx_distinct_profile into stats_functions_digest —
-    # still certified)
+    # the fully-oracled integer-lattice k-means assignment
+    # (approx_distinct_profile, which it displaced, is folded into
+    # stats_functions_digest — still certified)
     "embedding_kmeans_assign",
 )
 

@@ -5,8 +5,8 @@ Parity target: reference src/ui/generate_ui_data.py:30-92
 Differences, on purpose:
   * named columns everywhere (fixes the tuple-order swap, SURVEY §8.3)
   * `partition_keys` carried as array<string> (fixes the reparse bug §8.2)
-  * written with `df.write` so sinks scale; `single_file=True` coalesces
-    to one part for dashboard-sized outputs.
+  * written with `df.write`, each result coalesced to one part: every
+    result set is dashboard-sized.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ RESULT_KEYS = (
 def save_analysis_results(
     results: dict[str, DataFrame],
     out_dir: str = "results",
-    single_file: bool = True,
 ) -> dict[str, str]:
     """Write each result set; returns {key: path}. `usage` goes to CSV
     (the reference's global_stats.csv), everything else to JSON lines."""
@@ -37,9 +36,7 @@ def save_analysis_results(
     for key in RESULT_KEYS:
         if key not in results:
             continue
-        df = results[key]
-        if single_file:
-            df = df.coalesce(1)
+        df = results[key].coalesce(1)
         path = os.path.join(out_dir, key)
         if key == "usage":
             df.write.mode("overwrite").option("header", True).csv(path)

@@ -56,32 +56,17 @@ def usage_increments(
 ) -> DataFrame:
     """Mine one micro-batch of query-log rows into per-column
     (column_name, n_early, n_late) mention counts — the additive unit
-    the store folds. Same mining + filtering as the batch drift query
-    (join/where mention kinds, empty names dropped). The join back to
-    create_time is batch-local, which matches the batch query's
-    whole-log join exactly when query_id is unique per log row (the
-    module-docstring precondition); duplicated ids split across batches
-    would fan out less here than in the batch join."""
-    from ..operators import mining
+    the store folds, built by the batch drift query's own
+    scoring.drift_usage. The join back to create_time is batch-local,
+    which matches the batch query's whole-log join exactly when
+    query_id is unique per log row (the module-docstring precondition);
+    duplicated ids split across batches would fan out less here than in
+    the batch join."""
+    from ..operators import mining, scoring
 
-    mined = mining.mine_query_log(batch_df).where(
-        F.col("kind").isin("join_column", "where_column")
-        & (F.col("name") != "")
-    )
-    cut = F.lit(cutoff).cast("timestamp")
-    return (
-        mined.join(batch_df.select("query_id", "create_time"), "query_id")
-        .groupBy(F.col("name").alias("column_name"))
-        .agg(
-            F.sum(F.when(F.col("create_time") < cut, F.col("cnt")).otherwise(0))
-            .cast("bigint")
-            .alias("n_early"),
-            F.sum(
-                F.when(F.col("create_time") >= cut, F.col("cnt")).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_late"),
-        )
+    return scoring.drift_usage(
+        mining.mine_query_log(batch_df), batch_df, cutoff,
+        [F.col("name").alias("column_name")],
     )
 
 
