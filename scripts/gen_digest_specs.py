@@ -5,6 +5,10 @@ the DuckDB oracle schema (LIMIT 0). Timestamp columns go in exact_cols
 _STREAMING specs). Helper for authoring queries/suites.py — run
 manually, paste output."""
 import os, sys
+
+# the checkout this script lives in, wherever it was cloned
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 import duckdb
 
 CANDIDATES = sys.argv[1:]

@@ -1,5 +1,5 @@
 """Cross-engine fuzz of the parity substrate: every oracle in this repo
-rests on tokens_expr (Spark) == _TOKS (DuckDB) and md5_60 == md5_60_sql.
+rests on tokens_expr (Spark) == TOKENS_SQL (DuckDB) and md5_60 == md5_60_sql.
 This suite drives both with a seeded adversarial corpus and asserts
 exact agreement over the documented domain.
 
@@ -24,13 +24,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from trino_adaptive_partitioning_tool_spark.operators.dedup import (
+    TOKENS_SQL,
     md5_60,
     md5_60_sql,
     tokens_expr,
-)
-
-_TOKS = (
-    "list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '')"
 )
 
 _SAFE = list("abcXYZ 0189 \t\n\r.,;:!?-_#@/\\'\"()[]{}<>=+*&%$^~`|") + [
@@ -71,7 +68,7 @@ def test_tokens_agree_over_safe_domain(spark, duck):
     duck.executemany("INSERT INTO fuzz_t VALUES (?, ?)", rows)
     dres = {
         r[0]: list(r[1])
-        for r in duck.execute(f"SELECT id, {_TOKS} FROM fuzz_t").fetchall()
+        for r in duck.execute(f"SELECT id, {TOKENS_SQL} FROM fuzz_t").fetchall()
     }
     bad = [
         (i, s, sres[i], dres[i]) for i, s in rows if sres[i] != dres[i]
@@ -114,6 +111,6 @@ def test_divergent_classes_actually_diverge(spark, duck):
     duck.executemany("INSERT INTO fuzz_d VALUES (?, ?)", rows)
     dres = {
         r[0]: list(r[1])
-        for r in duck.execute(f"SELECT id, {_TOKS} FROM fuzz_d").fetchall()
+        for r in duck.execute(f"SELECT id, {TOKENS_SQL} FROM fuzz_d").fetchall()
     }
     assert any(sres[i] != dres[i] for i, _ in rows)

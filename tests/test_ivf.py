@@ -24,7 +24,7 @@ def test_ivf_self_match_and_recall(spark):
     self_hits = [r for r in approx if r["rank"] == 1]
     assert all(r["query_id"] == r["vec_id"] for r in self_hits)
 
-    exact = similarity.cosine_topk(emb, q, k=5).collect()
+    exact = similarity.topk(emb, q, 5).collect()
     exact_pairs = {(r["query_id"], r["vec_id"]) for r in exact}
     approx_pairs = {(r["query_id"], r["vec_id"]) for r in approx}
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
@@ -39,7 +39,7 @@ def test_ivf_production_recall_floor(spark):
     emb = tables.load_table(spark, SMOKE_SF_DIR, "embeddings")
     q = _queries(emb, 8)
     approx = ivf.ivf_topk(emb, q, k=5, n_cells=16, nprobe=8).collect()
-    exact = similarity.cosine_topk(emb, q, k=5).collect()
+    exact = similarity.topk(emb, q, 5).collect()
     exact_pairs = {(r["query_id"], r["vec_id"]) for r in exact}
     approx_pairs = {(r["query_id"], r["vec_id"]) for r in approx}
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
@@ -78,8 +78,8 @@ def test_lsh_near_duplicates_subset_of_exact(spark):
 def test_ivf_deterministic(spark):
     emb = tables.load_table(spark, SMOKE_SF_DIR, "embeddings")
     q = _queries(emb, 3)
-    a = sorted(map(tuple, ivf.ivf_topk(emb, q, k=3).collect()))
-    b = sorted(map(tuple, ivf.ivf_topk(emb, q, k=3).collect()))
+    a = sorted(map(tuple, ivf.ivf_topk(emb, q, k=3, n_cells=16, nprobe=4).collect()))
+    b = sorted(map(tuple, ivf.ivf_topk(emb, q, k=3, n_cells=16, nprobe=4).collect()))
     assert a == b
 
 

@@ -101,7 +101,7 @@ def test_features_flow_into_similarity_ops(spark):
     queries = feats.where(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    top = similarity.cosine_topk(feats, queries, k=3).collect()
+    top = similarity.topk(feats, queries, 3).collect()
     assert len(top) == 6
     self_hits = [r for r in top if r["rank"] == 1]
     assert all(r["query_id"] == r["vec_id"] for r in self_hits)

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from conftest import SMOKE_SF_DIR
 
-from trino_adaptive_partitioning_tool_spark.operators import pq
+from trino_adaptive_partitioning_tool_spark.operators import pq, similarity
 from trino_adaptive_partitioning_tool_spark.sources import tables
 
 
@@ -19,7 +19,7 @@ def _queries(emb, n=5):
 
 def test_encode_shape_and_range(spark):
     emb = tables.load_table(spark, SMOKE_SF_DIR, "embeddings")
-    models = pq.train_codebooks(emb, m=4, k=16)
+    models = pq.train_codebooks(emb)
     codes = pq.encode(emb, models)
     assert codes.count() == emb.count()
     row = codes.select(
@@ -46,7 +46,7 @@ def test_rerank_recall_floor(spark):
     emb = tables.load_table(spark, SMOKE_SF_DIR, "embeddings")
     q = _queries(emb, 8)
     approx = pq.pq_topk_rerank(emb, q, k=5, shortlist=150).collect()
-    exact = pq.l2_topk(emb, q, k=5).collect()
+    exact = similarity.topk(emb, q, 5, "l2").collect()
     e = {(r["query_id"], r["vec_id"]) for r in exact}
     a = {(r["query_id"], r["vec_id"]) for r in approx}
     assert len(e & a) / len(e) >= 0.8
@@ -55,8 +55,8 @@ def test_rerank_recall_floor(spark):
 def test_pq_deterministic(spark):
     emb = tables.load_table(spark, SMOKE_SF_DIR, "embeddings")
     q = _queries(emb, 3)
-    x = sorted(map(tuple, pq.pq_topk_rerank(emb, q, k=3).collect()))
-    y = sorted(map(tuple, pq.pq_topk_rerank(emb, q, k=3).collect()))
+    x = sorted(map(tuple, pq.pq_topk_rerank(emb, q, k=3, shortlist=50).collect()))
+    y = sorted(map(tuple, pq.pq_topk_rerank(emb, q, k=3, shortlist=50).collect()))
     assert x == y
 
 

@@ -12,7 +12,7 @@ one import point:
 
 from ..operators.dedup import shingles_expr, tokens_expr
 from ..operators.scoring import cardinality_band_bonus
-from ..operators.similarity import cosine_expr, hyperplane_signature
+from ..operators.similarity import cosine_expr
 from ..operators.transforms import (
     transform_expr,
     transform_to_partition_column,
@@ -21,7 +21,6 @@ from ..operators.transforms import (
 __all__ = [
     "cardinality_band_bonus",
     "cosine_expr",
-    "hyperplane_signature",
     "shingles_expr",
     "tokens_expr",
     "transform_expr",

@@ -89,6 +89,12 @@ def tokens_expr(text_col: str = "text"):
     )
 
 
+# DuckDB twin of tokens_expr("text") for the oracles
+TOKENS_SQL = (
+    "list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '')"
+)
+
+
 def shingles_expr(tokens, k: int = DEFAULT_SHINGLE_K):
     """k-token shingles of a token array (distinct), JVM-side only:
     transform over a sliding index sequence + concat_ws.

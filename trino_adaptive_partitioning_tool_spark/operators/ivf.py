@@ -7,7 +7,7 @@ bucketed/partitioned BY CELL, so a query touches nprobe partitions
 instead of the full corpus — the classic IVF trade of recall for scan
 fraction.
 
-Training uses pyspark.ml KMeans (seeded) on the corpus sample; cell
+Training uses pyspark.ml KMeans (seeded) over the corpus; cell
 assignment is the model's own JVM-side transform. Query→cell probing
 happens driver-side with numpy over the (tiny) centroid matrix.
 """
@@ -17,41 +17,28 @@ from __future__ import annotations
 import numpy as np
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.functions import array_to_vector
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _as_double, cosine_expr
+from .similarity import _as_double, topk
 
 
-def train_quantizer(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    seed: int = 42,
-    sample_fraction: float = 1.0,
-):
-    """Seeded coarse quantizer. At scale, fit on a sample (the quantizer
-    only needs the coarse geometry, not every vector)."""
+def train_quantizer(corpus: DataFrame, n_cells: int):
+    """Seeded coarse quantizer over every corpus vector. At scale, fit
+    on a sample: the quantizer only needs the coarse geometry."""
     train = corpus.select(
-        array_to_vector(_as_double(F.col(vec_col))).alias("features")
+        array_to_vector(_as_double(F.col("embedding"))).alias("features")
     )
-    if sample_fraction < 1.0:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    return KMeans(k=n_cells, seed=seed, maxIter=20).fit(train)
+    return KMeans(k=n_cells, seed=42, maxIter=20).fit(train)
 
 
-def assign_cells(
-    corpus: DataFrame,
-    model,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_cells(corpus: DataFrame, model) -> DataFrame:
     """(id, cell, vector) — the inverted file. In production this is the
     DataFrame you write out `partitionBy("cell")`."""
     vectored = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        _as_double(F.col(vec_col)).alias("dvec"),
-        array_to_vector(_as_double(F.col(vec_col))).alias("features"),
+        F.col("vec_id"),
+        _as_double(F.col("embedding")).alias("dvec"),
+        array_to_vector(_as_double(F.col("embedding"))).alias("features"),
     )
     return model.transform(vectored).select(
         "vec_id", F.col("prediction").alias("cell"), "dvec"
@@ -59,47 +46,26 @@ def assign_cells(
 
 
 def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    model=None,
+    corpus: DataFrame, queries: DataFrame, k: int, n_cells: int, nprobe: int
 ) -> DataFrame:
-    """Approximate top-k: probe the nprobe nearest cells per query, exact
-    cosine inside them. Returns (query_id, vec_id, cosine, rank)."""
-    spark = corpus.sparkSession
-    model = model or train_quantizer(corpus, vec_col, n_cells)
-    inverted = assign_cells(corpus, model, id_col, vec_col)
-
+    """Approximate top-k: the candidates of a query are the vectors in
+    its nprobe nearest cells, ranked by the exact cosine kernel. Returns
+    (query_id, vec_id, cosine, rank)."""
+    model = train_quantizer(corpus, n_cells)
     centers = np.stack([np.asarray(c) for c in model.clusterCenters()])
     qrows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qvec"),
+        "query_id", _as_double(F.col("embedding")).alias("qvec")
     ).collect()  # query set is small by definition
     probe_rows = []
     for r in qrows:
-        qv = np.array(r["qvec"])
-        d2 = ((centers - qv) ** 2).sum(axis=1)
-        for cell in np.argsort(d2)[:nprobe]:
-            probe_rows.append((r["query_id"], int(cell), r["qvec"]))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, qvec array<double>"
+        d2 = ((centers - np.array(r["qvec"])) ** 2).sum(axis=1)
+        probe_rows += [(r["query_id"], int(c)) for c in np.argsort(d2)[:nprobe]]
+    probes = corpus.sparkSession.createDataFrame(
+        probe_rows, "query_id long, cell int"
     )
-
-    cands = inverted.join(F.broadcast(probes), "cell")
-    scored = cands.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine_expr(F.col("qvec"), F.col("dvec")), 6).alias("cosine"),
+    cand = (
+        assign_cells(corpus, model)
+        .join(F.broadcast(probes), "cell")
+        .select("query_id", "vec_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
+    return topk(corpus, queries, k, candidates=cand)

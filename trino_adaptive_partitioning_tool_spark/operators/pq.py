@@ -22,54 +22,43 @@ from __future__ import annotations
 import numpy as np
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.functions import array_to_vector
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _as_double
+from .similarity import _as_double, rank_topk, topk
+
+M, N_CODES = 4, 16  # subspaces per vector, centroids per subspace
 
 
-def train_codebooks(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    m: int = 4,
-    k: int = 16,
-    seed: int = 42,
-) -> list:
+def train_codebooks(corpus: DataFrame) -> list:
     """One seeded KMeans per subspace. Returns the fitted models (their
     centers are the codebooks). At scale, fit on a sample — codebooks
     only need the coarse geometry per subspace."""
-    dvec = corpus.select(_as_double(F.col(vec_col)).alias("v"))
+    dvec = corpus.select(_as_double(F.col("embedding")).alias("v"))
     head = dvec.first()
     if head is None:
         raise ValueError("cannot train PQ codebooks on an empty corpus")
     dim = len(head["v"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
+    if dim % M:
+        raise ValueError(f"dim {dim} not divisible by m={M}")
+    sub = dim // M
     models = []
-    for i in range(m):
+    for i in range(M):
         train = dvec.select(
             array_to_vector(F.slice("v", i * sub + 1, sub)).alias("features")
         )
-        models.append(KMeans(k=k, seed=seed + i, maxIter=20).fit(train))
+        models.append(KMeans(k=N_CODES, seed=42 + i, maxIter=20).fit(train))
     return models
 
 
-def encode(
-    corpus: DataFrame,
-    models: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def encode(corpus: DataFrame, models: list) -> DataFrame:
     """(id, codes): per vector, the m nearest-centroid indices — the
     compressed representation you would persist instead of raw vectors.
     Assignment runs through the models' own JVM transform, so encoding
     is a map-only pass over the corpus."""
     m = len(models)
     sub = None
-    df = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
+    df = corpus.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     for i, model in enumerate(models):
         if sub is None:
             sub = len(np.asarray(model.clusterCenters()[0]))
@@ -86,24 +75,13 @@ def encode(
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 4,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    models: list | None = None,
-) -> DataFrame:
+def pq_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Approximate L2 top-k by ADC over PQ codes. Returns
     (query_id, vec_id, adc_l2, rank) — adc_l2 is sqrt of the summed
     subspace table lookups, rounded to 6 decimals before ranking so
     ordering is representation-stable."""
-    spark = corpus.sparkSession
-    models = models or train_codebooks(corpus, vec_col, m, n_codes)
-    codes = encode(corpus, models, id_col, vec_col)
+    models = train_codebooks(corpus)
+    codes = encode(corpus, models)
 
     books = [
         np.stack([np.asarray(c) for c in mod.clusterCenters()])
@@ -111,8 +89,7 @@ def pq_topk(
     ]
     sub = books[0].shape[1]
     qrows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qvec"),
+        "query_id", _as_double(F.col("embedding")).alias("qvec")
     ).collect()  # query set is small by definition
     qtab = []
     for r in qrows:
@@ -127,8 +104,8 @@ def pq_topk(
         qtab.append((r["query_id"], dtab))
     # carry the caller's query-id type (string ids are common) instead of
     # assuming long
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    qdf = spark.createDataFrame(
+    qid_type = queries.schema["query_id"].dataType.simpleString()
+    qdf = corpus.sparkSession.createDataFrame(
         qtab, f"query_id {qid_type}, dtab array<array<double>>"
     )
 
@@ -146,106 +123,19 @@ def pq_topk(
             6,
         ).alias("adc_l2"),
     )
-    w = Window.partitionBy("query_id").orderBy("adc_l2", "vec_id")
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).where(F.col("rank") <= k)
-
-
-def l2_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact Euclidean top-k (the baseline PQ recall is measured
-    against): broadcast query side, one corpus scan, JVM zip_with/
-    aggregate arithmetic. Returns (query_id, vec_id, l2, rank)."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        )
-    )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    scored = c.crossJoin(q).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            6,
-        ).alias("l2"),
-    )
-    w = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).where(F.col("rank") <= k)
+    return rank_topk(scored, F.col("adc_l2").asc(), k)
 
 
 def pq_topk_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    shortlist: int = 50,
-    m: int = 4,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    models: list | None = None,
+    corpus: DataFrame, queries: DataFrame, k: int, shortlist: int
 ) -> DataFrame:
     """Production PQ retrieval: ADC over the compressed codes builds a
     per-query SHORTLIST (cheap — m table lookups per candidate, no raw
-    vectors touched), then exact L2 re-ranks only the shortlist. At a
-    10% shortlist the full-precision math runs on 10% of the corpus;
-    the raw vectors are fetched for shortlist ids only (a semi-join),
-    which is the entire point at 100 TB — codes in memory, vectors on
-    disk. Returns (query_id, vec_id, l2, rank) with exact distances."""
-    cand = pq_topk(
-        corpus, queries, k=shortlist, m=m, n_codes=n_codes,
-        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-        models=models,
-    ).select("query_id", "vec_id")
-    vecs = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        )
-    )
-    scored = (
-        cand.join(vecs, "vec_id")  # fetch raw vectors for shortlist only
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(
-                            "qv", "cv", lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ),
-                6,
-            ).alias("l2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("l2", "vec_id")
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).where(F.col("rank") <= k)
+    vectors touched), then the exact L2 kernel re-ranks only the
+    shortlist. At a 10% shortlist the full-precision math runs on 10% of
+    the corpus; the raw vectors are fetched for shortlist ids only (a
+    semi-join), which is the entire point at 100 TB — codes in memory,
+    vectors on disk. Returns (query_id, vec_id, l2, rank) with exact
+    distances."""
+    cand = pq_topk(corpus, queries, shortlist).select("query_id", "vec_id")
+    return topk(corpus, queries, k, "l2", candidates=cand)

@@ -1,8 +1,18 @@
 """Similarity search over embedding columns (array<float>).
 
-Extension operators (BASELINE.json): brute-force cosine top-k as the
-correctness baseline, random-hyperplane LSH bucketing as the scale path,
-and a cosine near-duplicate pair finder.
+Every exact result ends in one kernel, `topk`: score (query, vector)
+pairs exactly, ROUND the score to 6 places, and rank per query with a
+vec_id tie-break. The pairs are either all of them (brute force) or a
+(query_id, vec_id) candidate frame an approximate path pruned the corpus
+to: LSH buckets (here), IVF cells (operators/ivf.py), a PQ shortlist
+(operators/pq.py) or the streaming ingest join
+(streaming/vector_ingest.py). Pruning is pluggable; the refinement is
+shared. `topk_sql` and `score_sql` are the kernel's DuckDB twins for the
+oracles. Near-duplicate pair finders share one norm-once cosine scorer
+(`normed` + `pair_sides` + `cosine_pairs`).
+
+Frames carry `vec_id` (corpus) or `query_id` (query set) beside an
+`embedding` column.
 
 Scale design: the brute-force path broadcasts the (small) query set and
 scans the corpus once — at 100 TB the corpus side stays partitioned and
@@ -20,20 +30,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _sum(a: Column) -> Column:
+    return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
+
+
 def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _sum(F.zip_with(a, b, lambda x, y: x * y))
 
 
 def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
+    return F.sqrt(_sum(F.transform(a, lambda x: x * x)))
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
@@ -41,78 +47,188 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _l2(a: Column, b: Column) -> Column:
+    return F.sqrt(_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y))))
+
+
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def cosine_topk(
+# metric -> (exact pair score, ranking direction, DuckDB function)
+_METRICS = {
+    "cosine": (cosine_expr, "DESC", "list_cosine_similarity"),
+    "l2": (_l2, "ASC", "list_distance"),
+}
+
+
+def rank_topk(scored: DataFrame, order: Column, k: int) -> DataFrame:
+    """Ranks 1..k of each query's (query_id, vec_id, score) rows in
+    `order` (a sort order on the score), ties broken by vec_id for
+    determinism."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
+        F.col("rank") <= k
+    )
+
+
+def topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
+    k: int,
+    metric: str = "cosine",
+    candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact top-k by cosine: broadcast queries × scan corpus once.
+    """Exact top-k: (query_id, vec_id, <metric>, rank). `metric` is
+    "cosine" (ranked high to low) or "l2" (low to high).
 
-    Returns (query_id, vec_id, cosine, rank), rank 1..k, ties broken by
-    vec_id for determinism.
-    """
+    Without `candidates` every (query, vector) pair is scored: broadcast
+    query set × one corpus scan. With a (query_id, vec_id) `candidates`
+    frame only those pairs are scored; vectors are fetched for candidate
+    ids only and the query side broadcasts (query-set-sized)."""
+    score, direction, _ = _METRICS[metric]
     q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qvec"),
-        )
+        queries.select("query_id", _as_double(F.col("embedding")).alias("qvec"))
     )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cvec")
+    c = corpus.select("vec_id", _as_double(F.col("embedding")).alias("cvec"))
+    pairs = (
+        c.crossJoin(q)
+        if candidates is None
+        else candidates.join(c, "vec_id").join(q, "query_id")
     )
-    scored = c.crossJoin(q).select(
+    scored = pairs.select(
         "query_id",
         "vec_id",
-        F.round(cosine_expr(F.col("qvec"), F.col("cvec")), 6).alias("cosine"),
+        F.round(score(F.col("qvec"), F.col("cvec")), 6).alias(metric),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
+    by = F.col(metric)
+    return rank_topk(scored, by.desc() if direction == "DESC" else by.asc(), k)
+
+
+def score_sql(a: str, b: str, metric: str = "cosine") -> str:
+    """DuckDB twin of the kernel's rounded pair score of two double
+    lists."""
+    return f"ROUND({_METRICS[metric][2]}({a}, {b}), 6)"
+
+
+def doubles_sql(col: str) -> str:
+    """DuckDB twin of `_as_double`."""
+    return f"list_transform({col}, x -> CAST(x AS DOUBLE))"
+
+
+def rank_sql(scored: str, k: int, metric: str = "cosine") -> str:
+    """DuckDB twin of `rank_topk`: `scored` is a query yielding
+    (query_id, vec_id, <metric>)."""
+    return f"""
+    SELECT query_id, vec_id, {metric}, rank FROM (
+      SELECT query_id, vec_id, {metric},
+             CAST(ROW_NUMBER() OVER (
+               PARTITION BY query_id ORDER BY {metric} {_METRICS[metric][1]}, vec_id
+             ) AS BIGINT) AS rank
+      FROM ({scored}) s
+    ) t WHERE rank <= {k}
+    """
+
+
+def topk_sql(pairs: str, k: int, metric: str = "cosine") -> str:
+    """DuckDB twin of `topk` over the `embeddings` table: `pairs` is a
+    query yielding (query_id, vec_id)."""
+    score = score_sql(
+        doubles_sql("eq.embedding"), doubles_sql("ec.embedding"), metric
     )
+    return rank_sql(
+        f"""
+      SELECT p.query_id, p.vec_id, {score} AS {metric}
+      FROM ({pairs}) p
+      JOIN embeddings eq ON eq.vec_id = p.query_id
+      JOIN embeddings ec ON ec.vec_id = p.vec_id""",
+        k,
+        metric,
+    )
+
+
+def normed(vecs: DataFrame) -> DataFrame:
+    """(vec_id, vec, nrm): each embedding as doubles with its norm
+    computed ONCE, so a pair join never recomputes both norms per pair
+    (3x the interpreted-HOF work). dot / (nrm_a * nrm_b) evaluates to the
+    same double as `cosine_expr`."""
+    return vecs.select(
+        "vec_id", _as_double(F.col("embedding")).alias("vec")
+    ).withColumn("nrm", _norm(F.col("vec")))
+
+
+_SIDE_COLUMNS = {"vec_id": "id", "vec": "vec", "nrm": "nrm"}
+
+
+def pair_sides(v: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a pair join over a `normed` frame: vec_id, vec
+    and nrm become id_a, vec_a, nrm_a on one and id_b, vec_b, nrm_b on
+    the other; any other column (a blocking key) keeps its name, so the
+    sides can equi-join on it."""
+    return tuple(
+        v.select(
+            *[
+                F.col(c).alias(f"{_SIDE_COLUMNS[c]}_{side}")
+                if c in _SIDE_COLUMNS
+                else c
+                for c in v.columns
+            ]
+        )
+        for side in "ab"
+    )
+
+
+def cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, cosine) of the `pairs` (joined sides from
+    `pair_sides`) with id_a < id_b and ROUND(cosine, 6) >= threshold."""
+    cos = _dot(F.col("vec_a"), F.col("vec_b")) / (F.col("nrm_a") * F.col("nrm_b"))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
+        pairs.where(F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine", F.round(cos, 6))
+        .where(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
     )
 
 
-def hyperplane_signature(
-    vec: Column, planes: list[list[float]]
-) -> Column:
-    """Sign-bit signature of `vec` against fixed hyperplanes → bigint."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(p) for p in plane]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.shiftleft(F.lit(1).cast("bigint"), i),
-        ).otherwise(F.lit(0).cast("bigint"))
-        for i, plane in enumerate(planes)
-    ]
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig.bitwiseOR(b)
-    return sig
+def near_pairs_sql(pairs: str, threshold: float) -> str:
+    """DuckDB twin of `cosine_pairs` over the `embeddings` table: `pairs`
+    is a query yielding (id_a, id_b) with id_a < id_b."""
+    score = score_sql(doubles_sql("ea.embedding"), doubles_sql("eb.embedding"))
+    return f"""
+    SELECT * FROM (
+      SELECT p.id_a, p.id_b, {score} AS cosine
+      FROM ({pairs}) p
+      JOIN embeddings ea ON ea.vec_id = p.id_a
+      JOIN embeddings eb ON eb.vec_id = p.id_b
+    ) s WHERE cosine >= {threshold}
+    """
+
+
+def keep_canonical(emb: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The keep-lowest-id dedup rule over the `embeddings` table: the
+    (vec_id, label) of every vector with no near-duplicate pair
+    (id_a < id_b) of a smaller id."""
+    dominated = pairs.select(F.col("id_b").alias("vec_id")).distinct()
+    return emb.join(dominated, "vec_id", "left_anti").select(
+        "vec_id", F.col("label").cast("bigint").alias("label")
+    )
+
+
+def keep_canonical_sql(pairs: str) -> str:
+    """DuckDB twin of `keep_canonical`: `pairs` is a query yielding the
+    near-duplicate (id_a, id_b) pairs."""
+    return f"""
+    SELECT e.vec_id, CAST(e.label AS BIGINT) AS label FROM embeddings e
+    WHERE e.vec_id NOT IN (SELECT id_b FROM ({pairs}) d)
+    """
 
 
 QUANT_SCALE = 1000  # embedding values are floor(x * QUANT_SCALE) int64
+LSH_DIM = 64
+LSH_PLANES, LSH_TABLES = 12, 4  # bucket shape of the top-k paths
 
 
-def _deterministic_planes(
-    n_planes: int, dim: int, seed: int = 42
-) -> list[list[int]]:
+def _deterministic_planes(n_planes: int, seed: int) -> list[list[int]]:
     """Deterministic ±1 sign-random-projection planes (seeded so
     signatures are stable across runs/executors; each LSH table MUST get
     a distinct seed or the tables are identical and add no recall).
@@ -121,13 +237,11 @@ def _deterministic_planes(
     projection is exact int64 arithmetic, so bucket membership is
     bit-for-bit reproducible in the DuckDB oracle (a float projection's
     sign can flip with summation order near zero)."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
-    return rng.choice([-1, 1], size=(n_planes, dim)).tolist()
+    return rng.choice([-1, 1], size=(n_planes, LSH_DIM)).tolist()
 
 
-def _signature_udf(n_planes: int, n_tables: int, dim: int):
+def _signature_udf(n_planes: int, n_tables: int):
     """Vectorized signature computation: one (batch x dim) @ (dim x
     n_tables*n_planes) int64 matmul per Arrow batch, sign bits packed per
     table. A column-expression formulation needs n_tables x n_planes x
@@ -140,9 +254,7 @@ def _signature_udf(n_planes: int, n_tables: int, dim: int):
 
     planes = np.concatenate(
         [
-            np.array(
-                _deterministic_planes(n_planes, dim, seed=42 + t), dtype=np.int64
-            ).T
+            np.array(_deterministic_planes(n_planes, seed=42 + t), dtype=np.int64).T
             for t in range(n_tables)
         ],
         axis=1,
@@ -151,7 +263,7 @@ def _signature_udf(n_planes: int, n_tables: int, dim: int):
 
     @pandas_udf("array<bigint>")
     def sigs(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())[:, :dim].astype(np.float64)
+        mat = np.stack(vecs.to_numpy())[:, :LSH_DIM].astype(np.float64)
         q = np.floor(mat * QUANT_SCALE).astype(np.int64)
         bits = (q @ planes) > 0  # (batch, n_tables*n_planes)
         out = []
@@ -167,133 +279,58 @@ def _signature_udf(n_planes: int, n_tables: int, dim: int):
     return sigs
 
 
-def lsh_bucketed_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    dim: int = 64,
+def bucket_signatures(
+    vecs: DataFrame,
+    id_col: str,
+    n_planes: int = LSH_PLANES,
+    n_tables: int = LSH_TABLES,
 ) -> DataFrame:
-    """Approximate top-k: `n_tables` independent hyperplane signatures;
+    """(id_col, table_idx, signature): the LSH bucket key of every vector
+    in each of `n_tables` tables. Works identically on a static frame or
+    a streaming one (the signature UDF is stateless)."""
+    sig_udf = _signature_udf(n_planes, n_tables)
+    return vecs.select(
+        id_col,
+        F.posexplode(sig_udf(_as_double(F.col("embedding")))).alias(
+            "table_idx", "signature"
+        ),
+    )
+
+
+def lsh_bucketed_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Approximate top-k: `LSH_TABLES` independent hyperplane signatures;
     query joins corpus on any matching (table, signature) bucket, exact
     cosine + top-k within the candidate set.
 
     Recall/cost dial: more tables → higher recall, more candidates. The
     join key is (table_idx, signature): a hash-partition shuffle, no n²."""
-    sig_udf = _signature_udf(n_planes, n_tables, dim)
-
-    def signatures(df: DataFrame, idc: str, out_id: str) -> DataFrame:
-        return df.select(
-            F.col(idc).alias(out_id),
-            _as_double(F.col(vec_col)).alias("dvec"),
-            F.posexplode(sig_udf(_as_double(F.col(vec_col)))).alias(
-                "table_idx", "signature"
-            ),
-        )
-
-    c = signatures(corpus, id_col, "vec_id")
-    q = signatures(queries, query_id_col, "query_id")
+    c = bucket_signatures(corpus, "vec_id")
+    q = bucket_signatures(queries, "query_id")
     # dedupe candidate pairs on IDS ONLY — running distinct over rows that
     # carry the 64-double vectors hashes/shuffles the arrays themselves
     cand_ids = (
-        c.select("vec_id", "table_idx", "signature")
-        .join(
-            F.broadcast(q.select("query_id", "table_idx", "signature")),
-            ["table_idx", "signature"],
-        )
+        c.join(F.broadcast(q), ["table_idx", "signature"])
         .select("query_id", "vec_id")
         .distinct()
     )
-    return rank_candidates(
-        corpus, queries, cand_ids, k, id_col, vec_col, query_id_col
-    )
-
-
-def rank_candidates(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cand_ids: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact-cosine top-k over a prebuilt (query_id, vec_id) candidate
-    set — the shared scoring tail of every bucketed ANN path (batch LSH
-    and the streaming ingest twin). Vectors are fetched for candidate
-    ids only; the query side broadcasts (query-set-sized)."""
-    cvecs = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cvec")
-    )
-    qvecs = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qvec"),
-    )
-    scored = (
-        cand_ids.join(cvecs, "vec_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_expr(F.col("qvec"), F.col("cvec")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
+    return topk(corpus, queries, k, candidates=cand_ids)
 
 
 def cosine_near_duplicates(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    dim: int = 64,
+    corpus: DataFrame, threshold: float, n_planes: int, n_tables: int
 ) -> DataFrame:
     """Embedding near-dup pairs (id_a < id_b, cosine ≥ threshold) via the
     LSH buckets — self-join on (table, signature), verify with exact
     cosine."""
-    sig_udf = _signature_udf(n_planes, n_tables, dim)
-    base = corpus.select(
-        F.col(id_col).alias("id"),
-        _as_double(F.col(vec_col)).alias("dvec"),
-        F.posexplode(sig_udf(_as_double(F.col(vec_col)))).alias(
-            "table_idx", "signature"
-        ),
-    )
-    ids = base.select("id", "table_idx", "signature")
+    ids = bucket_signatures(corpus, "vec_id", n_planes, n_tables)
     pair_ids = (
-        ids.join(
-            ids.select(
-                F.col("id").alias("id_b"), "table_idx", "signature"
-            ),
-            ["table_idx", "signature"],
+        ids.withColumnRenamed("vec_id", "id_a")
+        .join(
+            ids.withColumnRenamed("vec_id", "id_b"), ["table_idx", "signature"]
         )
-        .where(F.col("id") < F.col("id_b"))
-        .select(F.col("id").alias("id_a"), "id_b")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
         .distinct()  # ids only — never shuffle the vectors through distinct
     )
-    vecs = corpus.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-    )
-    return (
-        pair_ids.join(vecs.withColumnRenamed("vid", "id_a").withColumnRenamed("v", "vec_a"), "id_a")
-        .join(vecs.withColumnRenamed("vid", "id_b").withColumnRenamed("v", "vec_b"), "id_b")
-        .withColumn(
-            "cosine", F.round(cosine_expr(F.col("vec_a"), F.col("vec_b")), 6)
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    a, b = pair_sides(normed(corpus))
+    return cosine_pairs(pair_ids.join(a, "id_a").join(b, "id_b"), threshold)

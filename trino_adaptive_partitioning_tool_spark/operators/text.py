@@ -655,6 +655,20 @@ PII_PATTERNS = {
 }
 
 
+def pii_count_sql(name: str) -> str:
+    """DuckDB twin of redact_pii's n_<name> count over a `text` column
+    (the patterns hold no quote, so they embed as SQL literals)."""
+    return f"len(regexp_extract_all(text, '{PII_PATTERNS[name]}'))"
+
+
+def pii_redact_sql() -> str:
+    """DuckDB twin of redact_pii's redacted_text over a `text` column."""
+    sql = "text"
+    for pat in PII_PATTERNS.values():
+        sql = f"regexp_replace({sql}, '{pat}', '[REDACTED]', 'g')"
+    return sql
+
+
 def redact_pii(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 
 from ..memo import session_memo
 from ..operators import clustering as ops
-from ..operators.dedup import md5_60, md5_60_sql
+from ..operators import similarity as sim
+from ..operators.dedup import TOKENS_SQL, md5_60, md5_60_sql
 from ..sources import tables
 from .registry import register
 
@@ -373,13 +374,7 @@ def _semdedup(
     oracle at any healthy operating point."""
     from pyspark import StorageLevel
 
-    from ..operators.similarity import _dot, _norm
-
     emb = tables.load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    ).withColumn("nrm", _norm(F.col("vec")))
     assigned = _assignments(spark, sf_dir).select("vec_id", "cluster")
     if split_oversized:
         # split_oversized_assignments persists the refined frame (several
@@ -394,64 +389,33 @@ def _semdedup(
         )
     else:
         guard_cluster_sizes(assigned, ceiling)
-    # r13 (guide §2.4): the assignment⋈vector join runs ONCE and both
-    # pair legs are projections of it — previously each leg embedded its
-    # own copy of the corpus-sized join (2 SortMergeJoins where one
-    # suffices). r14 (guide §5; r13 verdict #3): embedding-grain WITH
-    # the vector payload — both pair legs need `vec` (the cosine), so
-    # the payload cannot be projected out; MEMORY_AND_DISK so memory
+    # The assignment⋈vector join runs ONCE and both pair sides are
+    # projections of it (a join per side would be 2 SortMergeJoins where
+    # one suffices). It is embedding-grain WITH the vector payload, since
+    # both sides need `vec` for the cosine; MEMORY_AND_DISK so memory
     # pressure spills instead of evicting and re-running the join per
-    # leg.
+    # side.
     av = (
-        assigned.join(v, "vec_id")
+        assigned.join(sim.normed(emb), "vec_id")
         .select("cluster", "vec_id", "vec", "nrm")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    a = av.select(
-        F.col("cluster"),
-        F.col("vec_id").alias("id_a"),
-        F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = av.select(
-        F.col("cluster"),
-        F.col("vec_id").alias("id_b"),
-        F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-    )
-    dominated = (
-        a.join(b, "cluster")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(cos >= _SEMDEDUP_TAU)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-    )
-    return emb.join(dominated, "vec_id", "left_anti").select(
-        "vec_id", F.col("label").cast("bigint").alias("label")
-    )
+    a, b = sim.pair_sides(av)
+    pairs = sim.cosine_pairs(a.join(b, "cluster"), _SEMDEDUP_TAU)
+    return sim.keep_canonical(emb, pairs)
 
 
 @register(
     "semdedup_keep_canonical",
     oracle=_with_cte(
-        f"""
-    SELECT e.vec_id, CAST(e.label AS BIGINT) AS label FROM embeddings e
-    WHERE e.vec_id NOT IN (
-      SELECT DISTINCT pb.vec_id
-      FROM {{final}} pa
-      JOIN {{final}} pb
-        ON pa.cluster = pb.cluster AND pa.vec_id < pb.vec_id
-      JOIN embeddings ea ON ea.vec_id = pa.vec_id
-      JOIN embeddings eb ON eb.vec_id = pb.vec_id
-      WHERE ROUND(list_cosine_similarity(
-              list_transform(ea.embedding, x -> CAST(x AS DOUBLE)),
-              list_transform(eb.embedding, x -> CAST(x AS DOUBLE))), 6)
-            >= {_SEMDEDUP_TAU}
-    )
-    """
+        sim.keep_canonical_sql(
+            sim.near_pairs_sql(
+                "SELECT pa.vec_id AS id_a, pb.vec_id AS id_b"
+                " FROM {final} pa JOIN {final} pb"
+                " ON pa.cluster = pb.cluster AND pa.vec_id < pb.vec_id",
+                _SEMDEDUP_TAU,
+            )
+        )
     ),
 )
 def semdedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,7 +481,10 @@ def _doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_q_cte() -> str:
-    from .text import _TOKS
+    # queries.text registers here, before the first topic-cluster
+    # oracle: _cluster_quality_oracle nests its text_quality_scores
+    # oracle, and the registry's query order follows this import point
+    from . import text  # noqa: F401
 
     h = md5_60_sql("token")
     sums = ",\n         ".join(
@@ -526,7 +493,7 @@ def _doc_q_cte() -> str:
         for i in range(_DOC_DIM)
     )
     return (
-        f"tok AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),\n"
+        f"tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents),\n"
         f"    b AS (SELECT doc_id, ({h}) % {_DOC_DIM} AS pos FROM tok),\n"
         f"    q AS (SELECT d.doc_id,\n        [{sums}] AS v\n"
         f"      FROM documents d LEFT JOIN b USING (doc_id)\n"
@@ -579,8 +546,6 @@ def document_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_mixture_oracle() -> str:
-    from .text import _TOKS
-
     cte, final = ops.kmeans_oracle_cte(
         _DOC_K, _DOC_ITERS, dim=_DOC_DIM, id_col="doc_id",
         q_cte=_doc_q_cte(),
@@ -588,7 +553,7 @@ def _cluster_mixture_oracle() -> str:
     return f"""
     WITH {cte},
     toklen AS (
-      SELECT doc_id, lang, len({_TOKS}) AS n_tokens FROM documents
+      SELECT doc_id, lang, len({TOKENS_SQL}) AS n_tokens FROM documents
     ),
     grp AS (
       SELECT a.cluster, t.lang,

@@ -346,7 +346,7 @@ _PIPE_TRAIN_BUCKETS = 8000  # of sampling.SPLIT_BUCKETS = 10000 (80%)
 def _pipeline_oracle() -> str:
     from ..operators import dedup as dops
     from ..operators.sampling import split_bucket_sql
-    from .dedup import _TOKS, _minhash_banded_cte, _minhash_sig_ctes
+    from .dedup import _minhash_banded_cte, _minhash_sig_ctes
     from .text import _LANG_PRED_SQL, _lang_hits_legs, quality_scores_sql
 
     n = dops.DEFAULT_NUM_HASHES
@@ -387,7 +387,7 @@ def _pipeline_oracle() -> str:
       SELECT doc_id, text FROM texts WHERE n_words >= {_PIPE_MIN_WORDS}
     ),
     tok AS (
-      SELECT doc_id, list_distinct({_TOKS}) AS toks FROM words_ok
+      SELECT doc_id, list_distinct({dops.TOKENS_SQL}) AS toks FROM words_ok
     ),
     hits AS (
       {_lang_hits_legs()}

@@ -13,12 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as ops
+from ..operators.dedup import TOKENS_SQL
 from ..sources import tables
 from .registry import register
-
-_TOKS = (
-    "list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '')"
-)
 
 
 def _minhash_sig_ctes(
@@ -41,7 +38,7 @@ def _minhash_sig_ctes(
     whole = h("array_to_string(toks, ' ')")
     p = prefix
     return f"""
-    {p}tok AS (SELECT doc_id, {_TOKS} AS toks FROM {source}),
+    {p}tok AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {source}),
     {p}sh AS (
       SELECT doc_id,
         CASE WHEN len(toks) >= {k}
@@ -117,7 +114,7 @@ def _simhash_sig_ctes(bits: int = ops.SIMHASH_BITS) -> str:
         for i in range(bits)
     )
     return f"""
-    tokrows AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
+    tokrows AS (SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents),
     th AS (SELECT doc_id, {h('token')} AS h FROM tokrows),
     votes AS (SELECT doc_id, {votes} FROM th GROUP BY doc_id),
     sig AS (SELECT doc_id, {sim} AS simhash FROM votes)"""
@@ -160,7 +157,7 @@ def _minhash_verified_oracle(threshold: float) -> str:
         ON a.band = b.band AND a.band_hash = b.band_hash
        AND a.doc_id < b.doc_id
     ),
-    dtok AS (SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents)
+    dtok AS (SELECT doc_id, list_distinct({TOKENS_SQL}) AS toks FROM documents)
     SELECT c.id_a, c.id_b,
       ROUND(CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)
             / len(list_distinct(list_concat(ta.toks, tb.toks))), 4) AS jaccard
@@ -372,7 +369,7 @@ def dedup_cluster_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
        AND a.doc_id < b.doc_id
     ),
     dtok AS MATERIALIZED (
-      SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents
+      SELECT doc_id, list_distinct({TOKENS_SQL}) AS toks FROM documents
     ),
     verified AS (
       SELECT c.id_a, c.id_b FROM cand c

@@ -43,10 +43,9 @@ from pyspark.sql.window import Window
 from ..operators import dedup as dops
 from ..operators import graph
 from ..operators import text as tops
-from ..operators.dedup import tokens_expr
+from ..operators.dedup import TOKENS_SQL, tokens_expr
 from ..sources import tables
 from . import dedup as qdedup
-from . import text as qtext
 from .registry import register
 
 QUALITY_MIN = 37.0
@@ -112,7 +111,6 @@ def _oracle_stage(name: str, prev: str) -> tuple[list[str], str]:
     def sub(query: str) -> str:
         return _registry._ORACLES[query]
 
-    toks = qtext._TOKS
     keep = f"SELECT p.* FROM {prev} p"
     if name == "lang_consistent":
         return [
@@ -134,7 +132,7 @@ def _oracle_stage(name: str, prev: str) -> tuple[list[str], str]:
         )
     if name == "model_quality":
         return [
-            f"mq AS (SELECT doc_id, {_model_weight_sum_sql(toks)} AS weight_sum"
+            f"mq AS (SELECT doc_id, {_model_weight_sum_sql(TOKENS_SQL)} AS weight_sum"
             f" FROM documents)"
         ], f"{keep} JOIN mq USING (doc_id) WHERE weight_sum >= 0"
     if name == "exact_dedup":
@@ -163,7 +161,7 @@ def _oracle_stage(name: str, prev: str) -> tuple[list[str], str]:
         ON a.band = b.band AND a.band_hash = b.band_hash
        AND a.doc_id < b.doc_id
     ),
-    dtok AS MATERIALIZED (SELECT doc_id, list_distinct({toks}) AS toks FROM documents),
+    dtok AS MATERIALIZED (SELECT doc_id, list_distinct({TOKENS_SQL}) AS toks FROM documents),
     verified AS (
       SELECT c.id_a, c.id_b FROM cand c
       JOIN dtok ta ON ta.doc_id = c.id_a
@@ -208,7 +206,7 @@ def _funnel_oracle(stages: Sequence[str]) -> str:
     """The funnel as one DuckDB CTE chain: stage i's survivors are CTE
     s{i}, selected from s{i-1}; one count leg per stage."""
     ctes = [
-        f"base AS (SELECT doc_id, lang, text, len({qtext._TOKS}) AS n_tokens"
+        f"base AS (SELECT doc_id, lang, text, len({TOKENS_SQL}) AS n_tokens"
         f" FROM documents)"
     ]
     prev = "base"

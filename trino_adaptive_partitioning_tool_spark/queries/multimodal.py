@@ -102,9 +102,17 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_FEATURE_SCORES = f"""
+      SELECT q.asset_id AS query_id, c.asset_id AS vec_id,
+             {similarity.score_sql(
+                 similarity.doubles_sql("q.feat"), similarity.doubles_sql("c.feat")
+             )} AS cosine
+      FROM f q JOIN f c ON q.asset_id < 4"""
+
+
 @register(
     "multimodal_feature_search",
-    oracle="""
+    oracle=f"""
     WITH a AS (
       SELECT t.asset_id, md5(CAST(t.asset_id AS VARCHAR)) AS hx
       FROM range(0, 128) t(asset_id)
@@ -122,23 +130,8 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
              list_transform(range(0, 64),
                bin -> 8 * len(list_filter(db, x -> x % 64 = bin))) AS feat
       FROM b
-    ), scored AS (
-      SELECT q.asset_id AS query_id, c.asset_id AS vec_id,
-        ROUND(
-          list_sum(list_transform(range(1, 65),
-            i -> CAST(q.feat[i] * c.feat[i] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(q.feat, x -> CAST(x*x AS DOUBLE))))
-           * sqrt(list_sum(list_transform(c.feat, x -> CAST(x*x AS DOUBLE))))),
-        6) AS cosine
-      FROM f q JOIN f c ON q.asset_id < 4
     )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, vec_id
-             ) AS BIGINT) AS rank
-      FROM scored
-    ) r WHERE rank <= 5
+    {similarity.rank_sql(_FEATURE_SCORES, 5)}
     """,
 )
 def multimodal_feature_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,7 +150,7 @@ def multimodal_feature_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = feats.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return similarity.cosine_topk(feats, queries, k=5)
+    return similarity.topk(feats, queries, 5)
 
 
 @register(

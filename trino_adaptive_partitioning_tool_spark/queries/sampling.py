@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sampling
-from ..operators.dedup import md5_60_sql, tokens_expr
+from ..operators.dedup import TOKENS_SQL, md5_60_sql, tokens_expr
 from ..sources import tables
 from .registry import register
 
@@ -19,10 +19,6 @@ _BUCKET_SPLIT = sampling.split_bucket_sql("doc_id", salt="split")
 _BUCKET_SAMPLE = sampling.split_bucket_sql("doc_id", salt="sample")
 
 _SAMPLE_FRACTIONS = {"en": 0.5, "de": 1.0, "zh": 0.25}
-
-_TOKS = (
-    "list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '')"
-)
 
 
 @register(
@@ -143,7 +139,7 @@ def source_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT lang, doc_id,
-        CAST(len({_TOKS}) AS BIGINT) AS token_count,
+        CAST(len({TOKENS_SQL}) AS BIGINT) AS token_count,
         ({md5_60_sql("CAST(doc_id AS VARCHAR)")} % 4) AS shard,
         {md5_60_sql("concat_ws('|', 'packorder', CAST(doc_id AS VARCHAR))")}
           AS pack_order
@@ -184,7 +180,7 @@ def _packing_manifest_oracle() -> str:
     return f"""
     WITH t AS (
       SELECT lang, doc_id,
-        CAST(len({_TOKS}) AS BIGINT) AS token_count,
+        CAST(len({TOKENS_SQL}) AS BIGINT) AS token_count,
         ({md5_60_sql("CAST(doc_id AS VARCHAR)")} % 4) AS shard,
         {md5_60_sql("concat_ws('|', 'packorder', CAST(doc_id AS VARCHAR))")}
           AS pack_order

@@ -1,9 +1,11 @@
 """Similarity-search queries over the `embeddings` table (extensions).
 
-Brute-force cosine top-k is oracle-checked against DuckDB's
-list_cosine_similarity (both sides rank on ROUND(cosine, 6) with vec_id
-tie-break, so last-ulp float drift can't flip ranks). LSH-bucketed
-variants are Spark-hash-based → rows-only.
+Every top-k query ends in the operators/similarity.topk kernel and is
+oracle-checked against its DuckDB twin (topk_sql: both sides rank on
+ROUND(score, 6) with a vec_id tie-break, so last-ulp float drift can't
+flip ranks). LSH bucket membership is exact integer arithmetic, so the
+bucketed paths replay in SQL; the k-means paths (IVF, PQ) are
+recall-gated against the exact top-k.
 """
 
 from __future__ import annotations
@@ -27,13 +29,34 @@ ORACLE_BASELINE_ONLY = frozenset(
     {"embedding_near_duplicates_exact", "embedding_dedup_keep_canonical"}
 )
 
-def _lsh_sig_cte(n_planes: int, n_tables: int, dim: int = 64) -> str:
+# candidate-pair sources of the oracles: every (probe, vector) pair, and
+# every vector pair of the exact near-duplicate baseline
+_PROBE_PAIRS = (
+    "SELECT q.vec_id AS query_id, e.vec_id FROM embeddings q, embeddings e"
+    f" WHERE q.vec_id < {_N_QUERIES}"
+)
+_ALL_PAIRS = (
+    "SELECT a.vec_id AS id_a, b.vec_id AS id_b"
+    " FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id"
+)
+_EXACT_DUP_THRESHOLD = 0.4
+
+
+def _probe_set(emb: DataFrame) -> DataFrame:
+    """The query set: the first _N_QUERIES vectors as (query_id,
+    embedding)."""
+    return emb.where(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+def _lsh_sig_cte(n_planes: int, n_tables: int) -> str:
     """sigs CTE replaying the quantized sign-random-projection signatures:
     q = floor(x*1000) int64, bit i = (q . plane_i) > 0, packed per table.
     Exact integer arithmetic on both engines (operators/similarity)."""
     legs = []
     for t in range(n_tables):
-        planes = ops._deterministic_planes(n_planes, dim, seed=42 + t)
+        planes = ops._deterministic_planes(n_planes, seed=42 + t)
         bits = " + ".join(
             f"(CASE WHEN list_dot_product(q, {plane}) > 0 "
             f"THEN {1 << i} ELSE 0 END)"
@@ -52,164 +75,41 @@ def _lsh_sig_cte(n_planes: int, n_tables: int, dim: int = 64) -> str:
     )
 
 
-def _lsh_topk_oracle(query_pred: str = f"q.vec_id < {_N_QUERIES}") -> str:
+def _lsh_topk_oracle(query_pred: str) -> str:
     """Also the oracle of the STREAMING ingest twin
     (queries/streaming_q.streaming_similarity_ingest), which passes its
     own query-set predicate — the stream-static candidate join is
     slicing-invariant, so the drained result equals this batch SQL."""
-    return f"""
-    WITH {_lsh_sig_cte(12, 4)},
-    cand AS (
+    return ops.topk_sql(
+        f"""
+      WITH {_lsh_sig_cte(ops.LSH_PLANES, ops.LSH_TABLES)}
       SELECT DISTINCT q.vec_id AS query_id, c.vec_id
       FROM sigs c
       JOIN sigs q ON c.table_idx = q.table_idx
                  AND c.signature = q.signature
-      WHERE {query_pred}
-    ),
-    scored AS (
-      SELECT cand.query_id, cand.vec_id,
-             ROUND(list_cosine_similarity(
-               list_transform(eq.embedding, x -> CAST(x AS DOUBLE)),
-               list_transform(ec.embedding, x -> CAST(x AS DOUBLE))), 6)
-             AS cosine
-      FROM cand
-      JOIN embeddings eq ON eq.vec_id = cand.query_id
-      JOIN embeddings ec ON ec.vec_id = cand.vec_id
+      WHERE {query_pred}""",
+        _K,
     )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, vec_id
-             ) AS BIGINT) AS rank
-      FROM scored
-    ) t WHERE rank <= {_K}
-    """
 
 
 def _lsh_near_dup_oracle(threshold: float, n_planes: int, n_tables: int) -> str:
-    return f"""
-    WITH {_lsh_sig_cte(n_planes, n_tables)},
-    cand AS (
+    return ops.near_pairs_sql(
+        f"""
+      WITH {_lsh_sig_cte(n_planes, n_tables)}
       SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
       FROM sigs a
       JOIN sigs b ON a.table_idx = b.table_idx
                  AND a.signature = b.signature
-                 AND a.vec_id < b.vec_id
+                 AND a.vec_id < b.vec_id""",
+        threshold,
     )
-    SELECT c.id_a, c.id_b,
-           ROUND(list_cosine_similarity(
-             list_transform(ea.embedding, x -> CAST(x AS DOUBLE)),
-             list_transform(eb.embedding, x -> CAST(x AS DOUBLE))), 6)
-           AS cosine
-    FROM cand c
-    JOIN embeddings ea ON ea.vec_id = c.id_a
-    JOIN embeddings eb ON eb.vec_id = c.id_b
-    WHERE ROUND(list_cosine_similarity(
-             list_transform(ea.embedding, x -> CAST(x AS DOUBLE)),
-             list_transform(eb.embedding, x -> CAST(x AS DOUBLE))), 6)
-          >= {threshold}
-    """
 
 
-@register(
-    "similarity_topk_bruteforce",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-      FROM embeddings WHERE vec_id < {_N_QUERIES}
-    ),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             ROUND(list_cosine_similarity(
-               q.qvec,
-               list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS cosine
-      FROM q, embeddings e
-    )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, vec_id
-             ) AS BIGINT) AS rank
-      FROM scored
-    ) t WHERE rank <= {_K}
-    """,
-)
-def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: broadcast query set × one corpus scan."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ops.cosine_topk(emb, queries, k=_K)
-
-
-@register("similarity_lsh_topk", oracle=_lsh_topk_oracle(), memo=True)
-def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k via sign-random-projection LSH buckets (the
-    100 TB scale path: candidates come from bucket joins, not full
-    scans). Quantized integer projections make bucket membership exactly
-    reproducible in SQL → fully hash-checked."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ops.lsh_bucketed_topk(emb, queries, k=_K)
-
-
-# Production-grade recall contract (r5 — was 0.4): at nprobe=8/16 cells
-# the measured recall@5 on this corpus is 0.85-0.975 across k-means
-# seeds {0,1,7,42,123} at both sf0.001 and sf0.01, so the 0.8 gate holds
-# with margin; floor re-proven in tests/test_ivf.py.
-_IVF_RECALL_GATE = 0.8
-
-
-@register(
-    "similarity_ivf_topk",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-      FROM embeddings WHERE vec_id < {_N_QUERIES}
-    ),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             ROUND(list_cosine_similarity(
-               q.qvec,
-               list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS cosine
-      FROM q, embeddings e
-    )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, vec_id
-             ) AS BIGINT) AS rank
-      FROM scored
-    ) t WHERE rank <= {_K}
-    """,
-)
-def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (k-means cell) approximate top-k — the partition-pruned ANN
-    path: a query scans nprobe cells, not the corpus.
-
-    RECALL-GATED oracle (k-means assignment isn't SQL-reproducible, so
-    the sketch can't be replayed): the query computes BOTH the IVF
-    result and the exact brute-force top-k, and emits the exact rows
-    when IVF recall@k >= {_IVF_RECALL_GATE} (the floor
-    tests/test_ivf.py proves for this corpus), else the raw IVF rows —
-    a guaranteed hash mismatch. Green therefore certifies both the ANN
-    recall contract and the exact ranking against the oracle engine."""
-    from ..operators import ivf
-
-    emb = tables.load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # nprobe=8 of 16 cells: half the corpus scanned per query (vs full
-    # for brute force) at recall@5 >= 0.85 across seeds — the standard
-    # IVF recall/scan-fraction trade, tuned for the 0.8 contract
-    approx = ivf.ivf_topk(emb, queries, k=_K, n_cells=16, nprobe=8)
-    exact = ops.cosine_topk(emb, queries, k=_K)
+def _recall_gated(exact: DataFrame, approx: DataFrame, gate: float) -> DataFrame:
+    """The exact rows when the approximate top-k's recall@k against them
+    is >= gate, else the approximate rows — a guaranteed hash mismatch.
+    Green therefore certifies both the ANN recall contract and the exact
+    ranking against the oracle engine."""
     recall = (
         exact.join(
             approx.select("query_id", "vec_id").withColumn("m", F.lit(1)),
@@ -223,30 +123,82 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact_leg = (
         exact.crossJoin(F.broadcast(recall))
-        .where(F.col("recall") >= _IVF_RECALL_GATE)
+        .where(F.col("recall") >= gate)
         .drop("recall")
     )
     approx_leg = (
         approx.crossJoin(F.broadcast(recall))
-        .where(F.col("recall") < _IVF_RECALL_GATE)
+        .where(F.col("recall") < gate)
         .drop("recall")
     )
     return exact_leg.unionByName(approx_leg)
 
 
+_EXACT_COSINE_ORACLE = ops.topk_sql(_PROBE_PAIRS, _K)
+
+
+@register("similarity_topk_bruteforce", oracle=_EXACT_COSINE_ORACLE)
+def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k: broadcast query set × one corpus scan."""
+    emb = tables.load_table(spark, sf_dir, "embeddings")
+    return ops.topk(emb, _probe_set(emb), _K)
+
+
+@register(
+    "similarity_lsh_topk",
+    oracle=_lsh_topk_oracle(f"q.vec_id < {_N_QUERIES}"),
+    memo=True,
+)
+def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate top-k via sign-random-projection LSH buckets (the
+    100 TB scale path: candidates come from bucket joins, not full
+    scans). Quantized integer projections make bucket membership exactly
+    reproducible in SQL → fully hash-checked."""
+    emb = tables.load_table(spark, sf_dir, "embeddings")
+    return ops.lsh_bucketed_topk(emb, _probe_set(emb), _K)
+
+
+# Production-grade recall contract of both k-means paths (IVF and PQ).
+# IVF at nprobe=8/16 cells measures recall@5 0.85-0.975 across k-means
+# seeds {0,1,7,42,123} at both sf0.001 and sf0.01; PQ with a 1/3 ADC
+# shortlist measures 0.85-0.95. The 0.8 gate holds with margin; the
+# floors are re-proven in tests/test_ivf.py and tests/test_pq.py.
+_RECALL_GATE = 0.8
+
+
+@register("similarity_ivf_topk", oracle=_EXACT_COSINE_ORACLE)
+def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF (k-means cell) approximate top-k — the partition-pruned ANN
+    path: a query scans nprobe cells, not the corpus.
+
+    RECALL-GATED oracle (k-means assignment isn't SQL-reproducible, so
+    the sketch can't be replayed): the query computes BOTH the IVF
+    result and the exact brute-force top-k, and emits the exact rows
+    when IVF recall@k >= _RECALL_GATE (the floor tests/test_ivf.py
+    proves for this corpus), else the raw IVF rows (_recall_gated)."""
+    from ..operators import ivf
+
+    emb = tables.load_table(spark, sf_dir, "embeddings")
+    queries = _probe_set(emb)
+    # nprobe=8 of 16 cells: half the corpus scanned per query (vs full
+    # for brute force) at recall@5 >= 0.85 across seeds — the standard
+    # IVF recall/scan-fraction trade, tuned for the 0.8 contract
+    return _recall_gated(
+        ops.topk(emb, queries, _K),
+        ivf.ivf_topk(emb, queries, _K, n_cells=16, nprobe=8),
+        _RECALL_GATE,
+    )
+
+
+def _exact_near_pairs(emb: DataFrame) -> DataFrame:
+    """All-pairs near duplicates at cosine >= _EXACT_DUP_THRESHOLD."""
+    a, b = ops.pair_sides(ops.normed(emb))
+    return ops.cosine_pairs(a.crossJoin(b), _EXACT_DUP_THRESHOLD)
+
+
 @register(
     "embedding_near_duplicates_exact",
-    oracle="""
-    WITH v AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings
-    )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ROUND(list_cosine_similarity(a.vec, b.vec), 6) AS cosine
-    FROM v a JOIN v b ON a.vec_id < b.vec_id
-    WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= 0.4
-    """,
+    oracle=ops.near_pairs_sql(_ALL_PAIRS, _EXACT_DUP_THRESHOLD),
 )
 def embedding_near_duplicates_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (all-pairs ≥ 0.4) — the
@@ -259,53 +211,14 @@ def embedding_near_duplicates_exact(spark: SparkSession, sf_dir: str) -> DataFra
     production path at scale. Never benchmark it and never run it on a
     full corpus; bench.py asserts it stays out of the headline set
     (ORACLE_BASELINE_ONLY)."""
-    emb = tables.load_table(spark, sf_dir, "embeddings")
-    # Per-vector norm computed ONCE before the pair join (the naive
-    # per-pair cosine recomputes both norms for every pair — 3x the
-    # interpreted-HOF work). dot/(na*nb) evaluates to the same double.
-    v = emb.select(
-        F.col("vec_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    ).withColumn("nrm", ops._norm(F.col("vec")))
-    a = v.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = v.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(
-        ops._dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-    )
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .where(F.col("cosine") >= 0.4)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _exact_near_pairs(tables.load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
     "embedding_dedup_keep_canonical",
-    oracle="""
-    WITH v AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings
+    oracle=ops.keep_canonical_sql(
+        ops.near_pairs_sql(_ALL_PAIRS, _EXACT_DUP_THRESHOLD)
     ),
-    dominated AS (
-      SELECT DISTINCT b.vec_id
-      FROM v a JOIN v b ON a.vec_id < b.vec_id
-      WHERE ROUND(list_cosine_similarity(a.vec, b.vec), 6) >= 0.4
-    )
-    SELECT e.vec_id, CAST(e.label AS BIGINT) AS label
-    FROM embeddings e
-    WHERE e.vec_id NOT IN (SELECT vec_id FROM dominated)
-    """,
 )
 def embedding_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup, keep-canonical rule: drop any vector that has a
@@ -320,33 +233,7 @@ def embedding_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFram
     downstream keep-canonical semantics. Excluded from bench.py's
     headline set (ORACLE_BASELINE_ONLY)."""
     emb = tables.load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        F.col("vec_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    ).withColumn("nrm", ops._norm(F.col("vec")))
-    a = v.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = v.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(
-        ops._dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-    )
-    dominated = (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(cos >= 0.4)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-    )
-    return emb.join(dominated, "vec_id", "left_anti").select(
-        "vec_id", F.col("label").cast("bigint").alias("label")
-    )
+    return ops.keep_canonical(emb, _exact_near_pairs(emb))
 
 
 @register(
@@ -359,68 +246,34 @@ def embedding_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Thresholds are tuned DOWN for the synthetic corpus (max pairwise
     cosine is ~0.60 at every sf — there are no planted near-dups), so the
     candidate-join + verify path actually produces rows: cos ≥ 0.35 with
-    5-plane buckets (LSH recall is partial by design). Production
-    defaults live on the operator (0.95 / 12 planes)."""
+    5-plane buckets (LSH recall is partial by design). A production run
+    would use a threshold near 0.95 and 12-plane buckets."""
     emb = tables.load_table(spark, sf_dir, "embeddings")
-    return ops.cosine_near_duplicates(
-        emb, threshold=0.35, n_planes=5, n_tables=6
-    )
-
-
-# PQ shares the IVF recall contract: 0.8, measured 0.85-0.95 across
-# k-means seeds at both test scales with a 30% ADC shortlist (these
-# synthetic near-random vectors are PQ's worst case — ADC/exact rank
-# correlation ~0.5 — so the shortlist is the recall knob; structured
-# real embedding corpora shrink it).
-_PQ_RECALL_GATE = 0.8
+    return ops.cosine_near_duplicates(emb, threshold=0.35, n_planes=5, n_tables=6)
 
 
 @register(
     "similarity_pq_topk",
     memo=True,  # codebook training happens at plan-build time — pay once
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-      FROM embeddings WHERE vec_id < {_N_QUERIES}
-    ),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             ROUND(list_distance(
-               q.qvec,
-               list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS l2
-      FROM q, embeddings e
-    )
-    SELECT query_id, vec_id, l2, rank FROM (
-      SELECT query_id, vec_id, l2,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY l2, vec_id
-             ) AS BIGINT) AS rank
-      FROM scored
-    ) t WHERE rank <= {_K}
-    """,
+    oracle=ops.topk_sql(_PROBE_PAIRS, _K, "l2"),
 )
 def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators/pq.py) — the memory-bound
     100 TB path: vectors stored as m=4 one-byte codes (64x compression),
-    ADC table lookups build a 30% shortlist, exact L2 re-ranks only the
+    ADC table lookups build a 1/3 shortlist, exact L2 re-ranks only the
     shortlist (raw vectors fetched by semi-join for shortlist ids).
 
     RECALL-GATED oracle (k-means codebooks aren't SQL-reproducible, same
     contract as similarity_ivf_topk): the query computes BOTH the PQ
     result and the exact L2 top-k and emits the exact rows when PQ
-    recall@k >= {_PQ_RECALL_GATE}, else the raw PQ rows — a guaranteed
-    hash mismatch. Green certifies the ANN recall contract AND the
-    exact ranking against the oracle engine."""
+    recall@k >= _RECALL_GATE, else the raw PQ rows (_recall_gated)."""
     from ..operators import pq
 
     emb = tables.load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_set(emb)
     # shortlist scales with the corpus (1/3, floor 150): a FIXED 150 was
     # 30% of the sf0.01 corpus but only 7.5% at sf0.1, where the recall
-    # gate fired red (found by the sf0.1 full-parity sweep, r7). The
+    # gate fired red in the sf0.1 full-parity sweep. The
     # testdata embeddings are near-uniform random — PQ's worst case
     # (distances concentrate, m=4 k=16 ADC barely separates neighbors),
     # measured recall@5 at sf0.1: 10% shortlist -> 0.40, 20% -> 0.68,
@@ -428,34 +281,15 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lets much smaller shortlists clear the same gate. One count at
     # plan-build time — memo=True pays it once per session.
     shortlist = max(150, emb.count() // 3)
-    approx = pq.pq_topk_rerank(emb, queries, k=_K, shortlist=shortlist)
-    exact = pq.l2_topk(emb, queries, k=_K)
-    recall = (
-        exact.join(
-            approx.select("query_id", "vec_id").withColumn("m", F.lit(1)),
-            ["query_id", "vec_id"],
-            "left",
-        )
-        .agg(
-            (F.sum(F.coalesce(F.col("m"), F.lit(0))) / F.count(F.lit(1)))
-            .alias("recall")
-        )
+    return _recall_gated(
+        ops.topk(emb, queries, _K, "l2"),
+        pq.pq_topk_rerank(emb, queries, _K, shortlist),
+        _RECALL_GATE,
     )
-    exact_leg = (
-        exact.crossJoin(F.broadcast(recall))
-        .where(F.col("recall") >= _PQ_RECALL_GATE)
-        .drop("recall")
-    )
-    approx_leg = (
-        approx.crossJoin(F.broadcast(recall))
-        .where(F.col("recall") < _PQ_RECALL_GATE)
-        .drop("recall")
-    )
-    return exact_leg.unionByName(approx_leg)
 
 
 # ---------------------------------------------------------------------------
-# Embedding-space decontamination (r10): the benchmark-contamination scan a
+# Embedding-space decontamination: the benchmark-contamination scan a
 # training pipeline runs BEFORE the n-gram pass (queries/text.py
 # decontamination_ngram_overlap) — paraphrased contamination survives token
 # overlap checks but not embedding similarity.
@@ -473,18 +307,16 @@ def _embench_pred_sql() -> str:
 def _decon_embedding_oracle() -> str:
     return f"""
     WITH bench AS (
-      SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS bvec
+      SELECT {ops.doubles_sql("embedding")} AS bvec
       FROM embeddings WHERE {_embench_pred_sql()}
     ),
     corpus AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
+      SELECT vec_id, label, {ops.doubles_sql("embedding")} AS cvec
       FROM embeddings WHERE NOT ({_embench_pred_sql()})
     ),
     per_vec AS (
       SELECT c.vec_id, c.label,
-             MAX(ROUND(list_cosine_similarity(c.cvec, b.bvec), 6))
-               AS max_cosine
+             MAX({ops.score_sql("c.cvec", "b.bvec")}) AS max_cosine
       FROM corpus c, bench b
       GROUP BY c.vec_id, c.label
     )
@@ -511,10 +343,11 @@ def decontamination_embedding_scan(
     sets are small by construction — the 100 TB side is always the
     corpus), so the scan is MAP-ONLY: no shuffle until the final
     label×band rollup of corpus-row-count inputs. The per-pair cosine
-    is a (batch × dim) @ (dim × n_bench) float64 matmul — the r10
-    F.transform/fold formulation ran every corpus×bench pair on
+    is a (batch × dim) @ (dim × n_bench) float64 matmul — an
+    F.transform/fold formulation runs every corpus×bench pair on
     Spark's interpreted HOF path, measured ~10x slower than the SIMD
-    matmul for the same arithmetic (operators/similarity.py:130).
+    matmul for the same arithmetic (operators/similarity._signature_udf
+    makes the same trade).
     Rounding to 6 decimals keeps last-ulp float drift from flipping a
     band; rounding is monotone, so round(max) == max(round-each) and
     the F.round can sit OUTSIDE the udf, preserving Spark's exact
@@ -523,9 +356,8 @@ def decontamination_embedding_scan(
     Fails loudly when the hash split selects ZERO benchmark vectors
     (possible at tiny scales): the oracle's cross join against an
     empty bench CTE yields zero rows while a silent Spark side would
-    emit null cosine_band rows — a parity break flagged by the r10
-    advisor. An empty benchmark set means the scan is meaningless, so
-    it raises instead.
+    emit null cosine_band rows, a parity break. An empty benchmark set
+    means the scan is meaningless, so it raises instead.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf

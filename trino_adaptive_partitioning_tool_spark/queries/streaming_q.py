@@ -58,6 +58,7 @@ from .multimodal import (
 )
 from .registry import register
 from .similarity import _lsh_topk_oracle
+from .text import _PII_SUFFIX_SQL, _pii_suffix_col
 
 
 # Session-memoized streaming feed directories, removed at interpreter
@@ -554,25 +555,19 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment", "event_type")
 
 
+_PII_TOTALS = ", ".join(
+    f"CAST(SUM({text_ops.pii_count_sql(name)}) AS BIGINT) AS total_{name}s"
+    for name in text_ops.PII_PATTERNS
+)
+
+
 @register(
     "streaming_pii_scrub",
-    oracle="""
+    oracle=f"""
     WITH aug AS (
-      SELECT doc_id, lang, text || ' contact: user' ||
-        CAST(doc_id AS VARCHAR) || '@example.com via https://example.org/d/'
-        || CAST(doc_id AS VARCHAR) || ' or call +1 (555) 010-' ||
-        lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS text
-      FROM documents
+      SELECT doc_id, lang, text || {_PII_SUFFIX_SQL} AS text FROM documents
     )
-    SELECT lang,
-      CAST(COUNT(*) AS BIGINT) AS n_docs,
-      CAST(SUM(len(regexp_extract_all(text,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))) AS BIGINT)
-        AS total_emails,
-      CAST(SUM(len(regexp_extract_all(text, 'https?://[^\\s]+'))) AS BIGINT)
-        AS total_urls,
-      CAST(SUM(len(regexp_extract_all(text,
-        '\\+?[0-9][0-9()\\-. ]{7,}[0-9]'))) AS BIGINT) AS total_phones
+    SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs, {_PII_TOTALS}
     FROM aug
     GROUP BY lang
     ORDER BY lang
@@ -588,9 +583,6 @@ def streaming_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     The map-only scrub plus a complete-mode aggregate is deterministic,
     so this is the one streaming query with a full DuckDB oracle — the
     hash check proves stream == SQL, not just stream == batch."""
-    # imported here: queries/text registers after this module
-    from .text import _pii_suffix_col
-
     def _write(d: str) -> None:
         tables.load_table(spark, sf_dir, "documents").select(
             "doc_id",
@@ -656,7 +648,7 @@ def streaming_similarity_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         vector_ingest.ingest_candidates(stream, emb), "append"
     ).distinct()
     queries = new_vecs.select(F.col("vec_id").alias("query_id"), "embedding")
-    return sim_ops.rank_candidates(emb, queries, cand_ids, k=5)
+    return sim_ops.topk(emb, queries, 5, candidates=cand_ids)
 
 
 _GATE_MOD, _GATE_REM = 10, 7  # doc_id % 10 == 7 -> the streamed ingest split

@@ -12,18 +12,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import text as ops
+from ..operators.dedup import TOKENS_SQL, tokens_expr
 from ..sources import tables
 from .registry import register
-
-_TOKS = (
-    "list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '')"
-)
 
 
 @register(
     "text_token_stats",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
+    WITH tok AS (SELECT doc_id, text, {TOKENS_SQL} AS toks FROM documents)
     SELECT
       doc_id,
       CAST(length(text) AS BIGINT) AS char_count,
@@ -73,7 +70,7 @@ def quality_scores_sql(source: str = "documents") -> str:
           CAST(len(list_distinct(toks)) AS DOUBLE)
             / GREATEST(CAST(len(toks) AS DOUBLE), 1.0) AS distinct_ratio,
           LEAST(CAST(len(toks) AS DOUBLE) / 200.0, 1.0) AS length_score
-        FROM (SELECT doc_id, text, {_TOKS} AS toks FROM {source})
+        FROM (SELECT doc_id, text, {TOKENS_SQL} AS toks FROM {source})
           quality_tok
       ) quality_sig
     ) quality_ratios
@@ -101,7 +98,7 @@ def _lang_hits_legs() -> str:
     "text_language_id",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents
+      SELECT doc_id, list_distinct({TOKENS_SQL}) AS toks FROM documents
     ),
     hits AS (
       {_lang_hits_legs()}
@@ -240,7 +237,7 @@ def _winnow_oracle(k: int = 4, keep_every: int = 8) -> str:
 
     shingle = f"array_to_string(list_slice(toks, i, i + {k - 1}), ' ')"
     return f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH tok AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
     sh AS (
       SELECT doc_id,
         CASE WHEN len(toks) >= {k}
@@ -283,7 +280,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_top_tokens",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest({_TOKS}) AS token FROM documents
+      SELECT unnest({TOKENS_SQL}) AS token FROM documents
     )
     SELECT token, COUNT(*) AS cnt
     FROM tok
@@ -298,7 +295,6 @@ def corpus_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan holds (map-side partial counts shuffle one row per distinct
     token, and TakeOrderedAndProject caps the driver result at k)."""
     from pyspark.sql import functions as F
-    from ..operators.dedup import tokens_expr
 
     docs = tables.load_table(spark, sf_dir, "documents")
     return (
@@ -314,7 +310,7 @@ def corpus_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bm25_search_topk",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS term FROM documents
+      SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents
     ), dl AS (
       SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id
     ), tf AS (
@@ -369,7 +365,7 @@ def _ngram_hash_cte(k: int, source: str = "documents", prefix: str = "") -> str:
 
     g = md5_60_sql(f"array_to_string(list_slice(toks, i, i + {k - 1}), ' ')")
     return f"""
-    {prefix}tok AS (SELECT doc_id, {_TOKS} AS toks FROM {source}),
+    {prefix}tok AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {source}),
     {prefix}sh AS (SELECT doc_id, CASE WHEN len(toks) >= {k}
             THEN list_transform(range(1, len(toks) - {k - 2}), i -> {g})
             ELSE [] END AS gs FROM {prefix}tok),
@@ -441,7 +437,7 @@ def _model_quality_oracle() -> str:
     )
     return f"""
     WITH tok AS (
-      SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents
+      SELECT doc_id, list_distinct({TOKENS_SQL}) AS toks FROM documents
     ),
     f AS (
       SELECT doc_id,
@@ -491,7 +487,7 @@ def _loaded_weights_oracle() -> str:
       FROM range({_QW_BUCKETS}) t(i)
     ),
     tok AS (
-      SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents
+      SELECT doc_id, list_distinct({TOKENS_SQL}) AS toks FROM documents
     ),
     e AS (
       SELECT doc_id, CAST({bucket} AS INT) AS bucket
@@ -571,7 +567,7 @@ def duplicate_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_repetition_stats",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH tok AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
     bg AS (SELECT doc_id, CASE WHEN len(toks) >= 2
             THEN list_transform(range(1, len(toks) - 0),
                  i -> array_to_string(list_slice(toks, i, i + 1), ' '))
@@ -610,6 +606,12 @@ _PII_SUFFIX_SQL = (
 )
 
 
+_PII_COUNTS = ", ".join(
+    f"CAST({ops.pii_count_sql(name)} AS INT) AS n_{name}"
+    for name in ops.PII_PATTERNS
+)
+
+
 def _pii_suffix_col() -> F.Column:
     did = F.col("doc_id").cast("string")
     return F.concat(
@@ -628,19 +630,7 @@ def _pii_suffix_col() -> F.Column:
     WITH aug AS (
       SELECT doc_id, text || {_PII_SUFFIX_SQL} AS text FROM documents
     )
-    SELECT doc_id,
-      CAST(len(regexp_extract_all(text,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}')) AS INT)
-        AS n_email,
-      CAST(len(regexp_extract_all(text, 'https?://[^\\s]+')) AS INT)
-        AS n_url,
-      CAST(len(regexp_extract_all(text,
-        '\\+?[0-9][0-9()\\-. ]{{7,}}[0-9]')) AS INT) AS n_phone,
-      md5(regexp_replace(regexp_replace(regexp_replace(text,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '[REDACTED]', 'g'),
-        'https?://[^\\s]+', '[REDACTED]', 'g'),
-        '\\+?[0-9][0-9()\\-. ]{{7,}}[0-9]', '[REDACTED]', 'g'))
-        AS redacted_md5
+    SELECT doc_id, {_PII_COUNTS}, md5({ops.pii_redact_sql()}) AS redacted_md5
     FROM aug
     ORDER BY doc_id
     """,
@@ -716,7 +706,7 @@ def document_chunking_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_entropy_scores",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, UNNEST({_TOKS}) AS token FROM documents
+      SELECT doc_id, UNNEST({TOKENS_SQL}) AS token FROM documents
     ),
     counts AS (
       SELECT doc_id, token, COUNT(*) AS n FROM tok GROUP BY doc_id, token
@@ -756,7 +746,7 @@ def _containment_oracle(
 
     shingle = f"array_to_string(list_slice(toks, i, i + {k - 1}), ' ')"
     return f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH tok AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
     sh AS (
       SELECT doc_id,
         CASE WHEN len(toks) >= {k}
@@ -813,8 +803,8 @@ def winnow_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_mixture_plan",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, source, len({_TOKS}) AS n_tokens,
-             len(list_distinct({_TOKS})) AS n_distinct
+      SELECT doc_id, lang, source, len({TOKENS_SQL}) AS n_tokens,
+             len(list_distinct({TOKENS_SQL})) AS n_distinct
       FROM documents
     ),
     grp AS (
@@ -849,10 +839,7 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully oracle-checkable). One token pass + one strata rollup; the
     strata table is dimension-sized at any corpus scale."""
     docs = tables.load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda t: t != "",
-    )
+    toks = tokens_expr("text")
     per_doc = docs.select(
         "lang",
         "source",
@@ -897,7 +884,7 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_lm_perplexity",
     oracle=f"""
-    WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH d AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
     b2 AS (
       SELECT doc_id, pair[1] AS a, pair[2] AS b FROM (
         SELECT doc_id,
@@ -950,7 +937,7 @@ _ZIPF_HEAD = 500  # fit over the head ranks (standard Zipf practice; also
     "corpus_zipf_stats",
     memo=True,
     oracle=f"""
-    WITH tok AS (SELECT unnest({_TOKS}) AS token FROM documents),
+    WITH tok AS (SELECT unnest({TOKENS_SQL}) AS token FROM documents),
     counts AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token),
     totals AS (
       SELECT COUNT(*) AS n_vocab, SUM(cnt) AS total_tokens FROM counts
@@ -1050,7 +1037,7 @@ _BPE_TOP = 50
     "bpe_merge_pair_counts",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest({_TOKS}) AS word FROM documents
+      SELECT unnest({TOKENS_SQL}) AS word FROM documents
     ),
     w AS (
       SELECT word, COUNT(*) AS freq FROM toks
@@ -1241,7 +1228,7 @@ def bpe_train_merges(
 def _bpe_words_sql() -> str:
     return f"""
       SELECT word, COUNT(*) AS freq FROM (
-        SELECT unnest({_TOKS}) AS word FROM documents
+        SELECT unnest({TOKENS_SQL}) AS word FROM documents
       ) toks
       WHERE regexp_matches(word, '^[a-z]+$') AND length(word) >= 2
       GROUP BY word
@@ -1342,7 +1329,7 @@ _LANG_PRED_SQL = f"""
     "language_id_confusion",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents
+      SELECT doc_id, list_distinct({TOKENS_SQL}) AS toks FROM documents
     ),
     hits AS (
       {_lang_hits_legs()}
@@ -1412,7 +1399,7 @@ def _bpe_compression_oracle() -> str:
     ctes.append(
         f"""lv AS (
       SELECT lang, word, COUNT(*) AS freq FROM (
-        SELECT lang, unnest({_TOKS}) AS word FROM documents
+        SELECT lang, unnest({TOKENS_SQL}) AS word FROM documents
       ) toks
       WHERE regexp_matches(word, '^[a-z]+$') AND length(word) >= 2
       GROUP BY lang, word

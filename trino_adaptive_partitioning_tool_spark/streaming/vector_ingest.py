@@ -3,7 +3,7 @@
 The continuous-ingest half of the similarity surface: new embedding
 vectors arrive as a stream, each micro-batch computes the SAME quantized
 sign-random-projection signatures as the batch LSH path
-(operators/similarity._signature_udf — one int64 matmul per Arrow
+(operators/similarity.bucket_signatures — one int64 matmul per Arrow
 batch), and the signatures join a STATIC pre-bucketed corpus on
 (table_idx, signature).
 
@@ -11,7 +11,7 @@ Determinism argument: the join is stream-static and stateless, so the
 emitted candidate set is the union over micro-batches of per-batch inner
 joins — invariant to how the feed slices. Ranking (exact cosine top-k)
 runs once at drain time over the materialized candidates
-(operators/similarity.rank_candidates), so the end result equals the
+(the operators/similarity.topk kernel), so the end result equals the
 batch `lsh_bucketed_topk` for the same query set exactly — which is the
 DuckDB-oracle contract of `streaming_similarity_ingest`.
 
@@ -30,44 +30,14 @@ from pyspark.sql import functions as F
 from ..operators import similarity as sim
 
 
-def bucket_signatures(
-    vecs: DataFrame,
-    out_id: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """(out_id, table_idx, signature) bucket keys for every vector —
-    works identically on a static frame or a streaming one (the
-    signature UDF is stateless)."""
-    sig_udf = sim._signature_udf(n_planes, n_tables, dim)
-    return vecs.select(
-        F.col(id_col).alias(out_id),
-        F.posexplode(sig_udf(sim._as_double(F.col(vec_col)))).alias(
-            "table_idx", "signature"
-        ),
-    )
-
-
-def ingest_candidates(
-    stream_vecs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    dim: int = 64,
-) -> DataFrame:
+def ingest_candidates(stream_vecs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Streaming (query_id, vec_id) candidate pairs: the stream side's
     per-batch signatures equi-joined against the static corpus buckets.
     Append-mode safe with no watermark (stateless join); duplicates
     across tables are expected and deduplicated at rank time."""
-    c = bucket_signatures(
-        corpus, "vec_id", id_col, vec_col, n_planes, n_tables, dim
-    )
-    q = bucket_signatures(
-        stream_vecs, "query_id", id_col, vec_col, n_planes, n_tables, dim
+    c = sim.bucket_signatures(corpus, "vec_id")
+    q = sim.bucket_signatures(
+        stream_vecs.select(F.col("vec_id").alias("query_id"), "embedding"),
+        "query_id",
     )
     return q.join(c, ["table_idx", "signature"]).select("query_id", "vec_id")
