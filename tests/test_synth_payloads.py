@@ -66,6 +66,62 @@ def test_generator_payloads_match_golden_digest(spark, fmt):
     assert pids == sorted(pids) and set(pids) == set(range(8))
 
 
+# md5 over what PixmapCodec makes of each generator's rows: decode(),
+# the pixels()/pcm() array (dtype, shape, bytes), resize(payload, 5, 3)
+# for rasters and frames() for Y4M. The oracle rows see only decoded
+# statistics; these pin every decoded sample and every re-encoded byte.
+DECODE_GOLDEN = {
+    "png": "3416a52f76237d6f760312cb55e9f00e",
+    "webp": "57c8b6ad3fa42e71005b51fd01c750de",
+    "webp_lz": "4a6f425ffa8e1482f0908433815e6c5e",
+    "png_depth": "f5b1035cdfe8193be92f222f2dc2838a",
+    "wav": "8578e52548158bfab3bfb9edaa0faeee",
+    "adpcm": "20f0fcee42313f074c81aa1a7f1fb700",
+    "aiff": "cf7821e44a775a566b3a943fe9c7a0ea",
+    "mulaw": "f093f0ba5cb159a960365b5d4e368f13",
+    "flac": "a78873747f077dcf099bf6016ea17ab4",
+    "y4m": "3931fcc06b2cf67eae638ce82d475d23",
+    "jpeg": "5978a9f22d1f5ae8f4825c1984aad0ed",
+    "progressive_jpeg": "fee63b318d49c00d0fdaf1e10830d82a",
+    "avi": "88aff3e77533969ea74a55fb3ee0af99",
+    "gif": "05dd21f833ab7f4764e0012e805d22ca",
+    "bmp": "0f66c0b6476ce345ad7a98e5d8e0c714",
+    "tiff": "e874ff2c6276edd4be1568a510595bc3",
+    "afp": "b1d73856b7cf62106fc6bc2ed49e2366",
+    "phash": "c94f57a4d19f56a4cdbafcafc7b1c70f",
+}
+
+
+def decode_digest(rows) -> str:
+    codec = mm.PixmapCodec()
+    h = hashlib.md5()
+    for r in rows:
+        payload, media_type = bytes(r["payload"]), r["media_type"]
+        parts = [codec.decode(payload, media_type)]
+        arr = None
+        if media_type == "image":
+            arr = codec.pixels(payload)
+            try:
+                parts.append(codec.resize(payload, 5, 3))
+            except ValueError as exc:  # no resize encoder for the format
+                parts.append(type(exc).__name__)
+        elif media_type == "audio":
+            arr = codec.pcm(payload)
+        elif payload.startswith(b"YUV4MPEG2"):
+            parts.append(codec.frames(payload, 0, 100))
+        if arr is not None:
+            parts.append((arr.dtype.str, arr.shape, arr.tobytes()))
+        h.update(repr((r["asset_id"], parts)).encode())
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("fmt", sorted(GOLDEN))
+def test_generator_payloads_decode_to_golden_digest(spark, fmt):
+    df = getattr(mm, f"synth_{fmt}_assets")(spark)
+    rows = df.orderBy("asset_id").collect()
+    assert decode_digest(rows) == DECODE_GOLDEN[fmt]
+
+
 def test_pure_spark_generators_plan_no_python_stage(spark):
     """synth_assets, synth_ppm_assets and y4m_dims are Spark projections:
     reading them never runs a Python worker."""
