@@ -56,13 +56,19 @@ for t in (
 import __spark_entry__ as e  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
+from trino_adaptive_partitioning_tool_spark.session import (  # noqa: E402
+    default_driver_memory,
+)
+
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.sql.shuffle.partitions", "32")
     # the ONLY divergence from the driver's plain session: its default
     # 1g driver heap dies mid-sweep at sf0.1 (196 queries + persisted
-    # assignment frames in one JVM); correctness semantics unchanged
-    .config("spark.driver.memory", "16g")
+    # assignment frames in one JVM); sized to the host like get_spark's
+    # (a 16g heap on a 16 GB host gets the JVM killed); correctness
+    # semantics unchanged
+    .config("spark.driver.memory", default_driver_memory())
     .getOrCreate()
 )
 
