@@ -10,6 +10,7 @@ import struct
 import numpy as np
 import pytest
 
+from trino_adaptive_partitioning_tool_spark.operators.codecs import avi, jpeg, wav
 from trino_adaptive_partitioning_tool_spark.operators.multimodal import (
     PixmapCodec,
 )
@@ -30,82 +31,82 @@ def _frames(n, mw=2, mh=1, seed=0):
         )
         cb = np.full_like(y, 128)
         cr = np.full_like(y, 128)
-        out.append(PixmapCodec._encode_jpeg(y, cb, cr, subsampling="444"))
+        out.append(jpeg.encode(y, cb, cr, subsampling="444"))
     return out
 
 
 def test_round_trip():
     frames = _frames(5)
-    payload = PixmapCodec._encode_avi(frames, 16, 8, fps=10)
-    w, h, fps, got = PixmapCodec._parse_avi(payload)
+    payload = avi.encode(frames, 16, 8, fps=10)
+    w, h, fps, got = avi.parse(payload)
     assert (w, h, fps) == (16, 8, 10)
     assert got == frames
 
 
 def test_idx1_offset_tamper_raises():
-    payload = bytearray(PixmapCodec._encode_avi(_frames(3), 16, 8))
+    payload = bytearray(avi.encode(_frames(3), 16, 8))
     idx_pos = payload.rfind(b"idx1")
     assert idx_pos > 0
     # corrupt the second entry's offset field
     off_pos = idx_pos + 8 + 16 + 8
     payload[off_pos] ^= 0x04
     with pytest.raises(ValueError, match="idx1"):
-        PixmapCodec._parse_avi(bytes(payload))
+        avi.parse(bytes(payload))
 
 
 def test_idx1_reorder_raises():
     """Swapping two idx1 entries (same chunks, wrong order) must fail
     the layout cross-check even though every entry is individually
     valid."""
-    payload = bytearray(PixmapCodec._encode_avi(_frames(3), 16, 8))
+    payload = bytearray(avi.encode(_frames(3), 16, 8))
     idx_pos = payload.rfind(b"idx1") + 8
     e0 = bytes(payload[idx_pos : idx_pos + 16])
     e1 = bytes(payload[idx_pos + 16 : idx_pos + 32])
     payload[idx_pos : idx_pos + 32] = e1 + e0
     with pytest.raises(ValueError, match="idx1"):
-        PixmapCodec._parse_avi(bytes(payload))
+        avi.parse(bytes(payload))
 
 
 def test_frame_count_mismatch_raises():
-    payload = bytearray(PixmapCodec._encode_avi(_frames(4), 16, 8))
+    payload = bytearray(avi.encode(_frames(4), 16, 8))
     avih_pos = payload.find(b"avih") + 8
     # dwTotalFrames is the 5th DWORD of avih
     struct.pack_into("<I", payload, avih_pos + 16, 7)
     with pytest.raises(ValueError, match="frame count"):
-        PixmapCodec._parse_avi(bytes(payload))
+        avi.parse(bytes(payload))
 
 
 def test_non_mjpg_handler_raises():
-    payload = bytearray(PixmapCodec._encode_avi(_frames(2), 16, 8))
+    payload = bytearray(avi.encode(_frames(2), 16, 8))
     payload[payload.find(b"MJPG") : payload.find(b"MJPG") + 4] = b"H264"
     with pytest.raises(ValueError, match="MJPG"):
-        PixmapCodec._parse_avi(bytes(payload))
+        avi.parse(bytes(payload))
 
 
 def test_truncation_raises():
-    payload = PixmapCodec._encode_avi(_frames(3), 16, 8)
+    payload = avi.encode(_frames(3), 16, 8)
     for cut in (10, len(payload) // 3, len(payload) // 2, len(payload) - 5):
         with pytest.raises(ValueError):
-            PixmapCodec._parse_avi(payload[:cut])
+            avi.parse(payload[:cut])
 
 
 def test_decode_dispatch_disambiguates_riff():
-    avi = PixmapCodec._encode_avi(_frames(2), 16, 8)
-    wav = PixmapCodec._encode_wav(
+    avi_payload = avi.encode(_frames(2), 16, 8)
+    wav_payload = wav.encode(
         np.arange(-20, 20, dtype="<i2"), channels=2
     )
-    aw, ah, amean = _pc.decode(avi, "video")
+    aw, ah, amean = _pc.decode(avi_payload, "video")
     assert (aw, ah) == (16, 8)
-    frames, channels, _ = _pc.decode(wav, "audio")
+    frames, channels, _ = _pc.decode(wav_payload, "audio")
     assert (frames, channels) == (20, 2)
 
 
 def test_decode_mean_matches_frame_decodes():
     frames = _frames(3, seed=7)
-    payload = PixmapCodec._encode_avi(frames, 16, 8)
+    payload = avi.encode(frames, 16, 8)
     total, count = 0, 0
     for f in frames:
-        _, _, px = PixmapCodec._parse_jpeg(f)
+        _, _, px = jpeg.parse(f)
         total += int(px.astype(np.int64).sum())
         count += px.size
     _, _, mean = _pc.decode(payload, "video")

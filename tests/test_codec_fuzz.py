@@ -18,6 +18,18 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from trino_adaptive_partitioning_tool_spark.operators.codecs import (
+    aiff,
+    avi,
+    flac,
+    gif,
+    jpeg,
+    netpbm,
+    png,
+    tiff,
+    wav,
+    webp,
+)
 from trino_adaptive_partitioning_tool_spark.operators.multimodal import (
     PixmapCodec,
 )
@@ -41,7 +53,7 @@ def test_png_round_trip_exact(data):
     ch = data.draw(st.sampled_from([1, 2, 3, 4]))
     px = _img(data.draw, h, w, ch)
     arr = px if px.ndim == 3 else px[:, :, None]
-    got = _pc._parse_png(PixmapCodec._encode_png(arr))[2]
+    got = png.parse(png.encode(arr))[2]
     assert np.array_equal(got, arr)
 
 
@@ -72,7 +84,7 @@ def test_png_depth_grid_round_trip_exact(data):
         pal = rng.integers(0, 256, (1 << d, data.draw(st.sampled_from([3, 4]))))
         px = pal[rng.integers(0, 1 << d, (h, w))].astype(np.uint8)
         kw = {"depth": d, "palette": True}
-    got = _pc._parse_png(PixmapCodec._encode_png(px, interlace=inter, **kw))[2]
+    got = png.parse(png.encode(px, interlace=inter, **kw))[2]
     assert got.dtype == px.dtype
     assert np.array_equal(got, px)
 
@@ -91,17 +103,17 @@ def test_png_adam7_round_trip_exact(data):
     ch = data.draw(st.sampled_from([1, 2, 3, 4]))
     px = _img(data.draw, h, w, ch)
     arr = px if px.ndim == 3 else px[:, :, None]
-    pay = PixmapCodec._encode_png(arr, interlace=True)
-    got = _pc._parse_png(pay)[2]
+    pay = png.encode(arr, interlace=True)
+    got = png.parse(pay)[2]
     assert np.array_equal(got, arr)
     assert np.array_equal(
-        got, _pc._parse_png(PixmapCodec._encode_png(arr))[2]
+        got, png.parse(png.encode(arr))[2]
     )
     # truncation that removes IHDR/IDAT bytes must raise the contract
     # ValueError (cuts inside the 12-byte IEND trailer lose no data)
     cut = data.draw(st.integers(10, len(pay) - 13))
     try:
-        _pc._parse_png(pay[:cut])
+        png.parse(pay[:cut])
     except ValueError:
         pass
     else:
@@ -124,8 +136,8 @@ def test_png_palette_round_trip_exact(data):
     rng = np.random.default_rng(seed)
     pal = rng.integers(0, 256, (n_colors, ch), dtype=np.uint8)
     px = pal[rng.integers(0, n_colors, (h, w))]
-    pay = PixmapCodec._encode_png(px, interlace=inter, palette=True)
-    w2, h2, out = _pc._parse_png(pay)
+    pay = png.encode(px, interlace=inter, palette=True)
+    w2, h2, out = png.parse(pay)
     assert (w2, h2) == (w, h)
     assert out.shape == px.shape  # tRNS presence must preserve RGBA
     assert np.array_equal(out, px)
@@ -148,7 +160,7 @@ def test_webp_round_trip_exact(data):
         px = np.full_like(px, px.flat[0])
     elif mode == "two":
         px = np.where(px % 2 == 0, px.flat[0], px.flat[-1]).astype(np.uint8)
-    dw, dh, got = _pc._parse_webp(PixmapCodec._encode_webp(px))
+    dw, dh, got = webp.parse(webp.encode(px))
     assert (dw, dh) == (w, h)
     assert np.array_equal(got, px)
 
@@ -206,8 +218,8 @@ def test_webp_lz_round_trip_exact(data):
         tile = pal[idx].reshape(h0, w, ch)
         kw["palette"] = True
     px = np.tile(tile, (reps, 1, 1))
-    pay = PixmapCodec._encode_webp(px, **kw)
-    dw, dh, got = _pc._parse_webp(pay)
+    pay = webp.encode(px, **kw)
+    dw, dh, got = webp.parse(pay)
     assert (dw, dh) == (w, h0 * reps)
     assert np.array_equal(got, px)
 
@@ -216,7 +228,7 @@ def test_vp8l_dist_table_is_spec_permutation():
     """The neighborhood map inverts the plane-to-code lut into a
     permutation of codes 1..120 whose documented prefix matches the
     spec's ordered listing."""
-    table = PixmapCodec._vp8l_dist_table()
+    table = webp.DIST_TABLE
     assert table[0] is None and len(table) == 121
     assert sorted(set(table[1:])) == sorted(table[1:])  # injective
     assert table[1:13] == (
@@ -231,7 +243,7 @@ def test_vp8l_dist_table_is_spec_permutation():
 def test_vp8l_prefix_split_inverts_prefix_read(value):
     """_vp8l_prefix_split is the exact encoder-side inverse of the
     decoder's length/distance prefix-value read."""
-    sym, extra_val, extra_bits = PixmapCodec._vp8l_prefix_split(value)
+    sym, extra_val, extra_bits = webp.prefix_split(value)
     assert 0 <= extra_val < (1 << extra_bits) if extra_bits else extra_val == 0
 
     class _FakeBr:
@@ -239,7 +251,7 @@ def test_vp8l_prefix_split_inverts_prefix_read(value):
             assert n == extra_bits
             return extra_val
 
-    assert PixmapCodec._vp8l_prefix_read(sym, _FakeBr()) == value
+    assert webp.prefix_read(sym, _FakeBr()) == value
 
 
 @settings(max_examples=_EXAMPLES, deadline=None)
@@ -252,8 +264,8 @@ def test_jpeg_round_trip_bounded_error(data):
     w = data.draw(st.integers(1, 24))
     dri = data.draw(st.sampled_from([0, 1, 3]))
     gray = _img(data.draw, h, w, 1)
-    dw, dh, px = _pc._parse_jpeg(
-        PixmapCodec._encode_jpeg(gray, restart_interval=dri)
+    dw, dh, px = jpeg.parse(
+        jpeg.encode(gray, restart_interval=dri)
     )
     assert (dw, dh) == (w, h)
     assert np.abs(px[:, :, 0].astype(int) - gray.astype(int)).max() <= 4
@@ -261,8 +273,8 @@ def test_jpeg_round_trip_bounded_error(data):
     cw, chh = (w + 1) // 2, (h + 1) // 2
     cb = _img(data.draw, chh, cw, 1)
     cr = _img(data.draw, chh, cw, 1)
-    dw, dh, px = _pc._parse_jpeg(
-        PixmapCodec._encode_jpeg(gray, cb, cr, "420", restart_interval=dri)
+    dw, dh, px = jpeg.parse(
+        jpeg.encode(gray, cb, cr, "420", restart_interval=dri)
     )
     assert (dw, dh, px.shape[2]) == (w, h, 3)
 
@@ -279,18 +291,18 @@ def test_progressive_jpeg_decodes_identically_to_baseline(data):
     h = data.draw(st.integers(1, 24))
     w = data.draw(st.integers(1, 24))
     gray = _img(data.draw, h, w, 1)
-    _, _, prog = _pc._parse_jpeg(
-        PixmapCodec._encode_jpeg_progressive(gray)
+    _, _, prog = jpeg.parse(
+        jpeg.encode_progressive(gray)
     )
-    _, _, base = _pc._parse_jpeg(PixmapCodec._encode_jpeg(gray))
+    _, _, base = jpeg.parse(jpeg.encode(gray))
     assert np.array_equal(prog, base)
     cb = _img(data.draw, h, w, 1)
     cr = _img(data.draw, h, w, 1)
-    _, _, prog = _pc._parse_jpeg(
-        PixmapCodec._encode_jpeg_progressive(gray, cb, cr)
+    _, _, prog = jpeg.parse(
+        jpeg.encode_progressive(gray, cb, cr)
     )
-    _, _, base = _pc._parse_jpeg(
-        PixmapCodec._encode_jpeg(gray, cb, cr, "444")
+    _, _, base = jpeg.parse(
+        jpeg.encode(gray, cb, cr, "444")
     )
     assert np.array_equal(prog, base)
 
@@ -308,10 +320,10 @@ def test_jpeg_constant_blocks_exact(data):
     yb = rng.integers(0, 256, (2 * mh, 2 * mw), dtype=np.uint8)
     cb = rng.integers(0, 256, (mh, mw), dtype=np.uint8)
     cr = rng.integers(0, 256, (mh, mw), dtype=np.uint8)
-    _, _, px = _pc._parse_jpeg(
-        PixmapCodec._encode_jpeg(up(yb), up(cb), up(cr), "420")
+    _, _, px = jpeg.parse(
+        jpeg.encode(up(yb), up(cb), up(cr), "420")
     )
-    exp = PixmapCodec._ycbcr_to_rgb(
+    exp = jpeg.ycbcr_to_rgb(
         up(yb).astype(np.int64),
         np.repeat(np.repeat(up(cb), 2, 0), 2, 1).astype(np.int64),
         np.repeat(np.repeat(up(cr), 2, 0), 2, 1).astype(np.int64),
@@ -330,8 +342,8 @@ def test_gif_round_trip_exact(data):
     rng = np.random.default_rng(seed)
     idx = rng.integers(0, n_colors, (h, w), dtype=np.uint8)
     pal = rng.integers(0, 256, (n_colors, 3), dtype=np.uint8)
-    dw, dh, got, gpal = _pc._parse_gif(
-        PixmapCodec._encode_gif(idx, pal, interlace=interlace)
+    dw, dh, got, gpal = gif.parse(
+        gif.encode(idx, pal, interlace=interlace)
     )
     assert (dw, dh) == (w, h)
     assert np.array_equal(got, idx)
@@ -357,8 +369,8 @@ def test_lzw_arbitrary_streams_round_trip(data):
     vals = vals[:n]
     if not vals:
         return
-    enc = PixmapCodec._lzw_encode(vals, min_code)
-    assert PixmapCodec._lzw_decode(enc, min_code, len(vals)) == vals
+    enc = gif.lzw_encode(vals, min_code)
+    assert gif.lzw_decode(enc, min_code, len(vals)) == vals
 
 
 @settings(max_examples=_EXAMPLES, deadline=None)
@@ -367,8 +379,8 @@ def test_adpcm_decode_matches_independent_state_machine(data):
     """The production IMA-ADPCM decoder vs a from-the-spec dict/loop
     reimplementation over arbitrary (predictor, index, nibble-stream)
     blocks — including the int16 and step-index clamp paths."""
-    step_t = PixmapCodec._IMA_STEP_TABLE
-    idx_t = PixmapCodec._IMA_INDEX_TABLE
+    step_t = wav.IMA_STEP_TABLE
+    idx_t = wav.IMA_INDEX_TABLE
 
     def ref(blocks):
         out = []
@@ -403,8 +415,8 @@ def test_adpcm_decode_matches_independent_state_machine(data):
         )
         for _ in range(n_blocks)
     ]
-    frames, ch, samples = _pc._parse_wav(
-        PixmapCodec._encode_wav_adpcm(blocks)
+    frames, ch, samples = wav.parse(
+        wav.encode_adpcm(blocks)
     )
     assert ch == 1 and frames == n_blocks * (n_nib + 1)
     assert list(samples) == ref(blocks)
@@ -418,7 +430,7 @@ def test_wav_round_trip_exact(data):
     seed = data.draw(st.integers(0, 2**32 - 1))
     rng = np.random.default_rng(seed)
     samples = rng.integers(-32768, 32768, frames * channels).astype("<i2")
-    fr, ch, got = _pc._parse_wav(PixmapCodec._encode_wav(samples, channels))
+    fr, ch, got = wav.parse(wav.encode(samples, channels))
     assert (fr, ch) == (frames, channels)
     assert np.array_equal(got, samples)
 
@@ -456,7 +468,7 @@ def test_flac_round_trip_exact(data):
     else:
         samples = rng.integers(-2048, 2048, n) * 16
     samples = samples.astype("<i2")
-    payload = PixmapCodec._encode_flac(
+    payload = flac.encode(
         samples,
         channels,
         block_size=block_size,
@@ -465,7 +477,7 @@ def test_flac_round_trip_exact(data):
         partition_order=po,
         force_escape=escape,
     )
-    fr, ch, got, rate = PixmapCodec._parse_flac(payload)
+    fr, ch, got, rate = flac.parse(payload)
     assert (fr, ch, rate) == (frames, channels, 16000)
     assert np.array_equal(got, samples)
 
@@ -479,46 +491,74 @@ def test_truncation_always_raises_valueerror(data):
     never a foreign exception type."""
     kind = data.draw(
         st.sampled_from(
-            ["png", "jpeg", "gif", "wav", "flac", "avi", "webp", "adpcm"]
+            [
+                "png", "jpeg", "gif", "wav", "flac", "avi", "webp", "adpcm",
+                "bmp", "aiff", "mulaw", "progressive_jpeg", "tiff", "ppm",
+            ]
         )
     )
     seed = data.draw(st.integers(0, 2**32 - 1))
     rng = np.random.default_rng(seed)
     if kind == "png":
-        payload = PixmapCodec._encode_png(
+        payload = png.encode(
             rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
         )
     elif kind == "webp":
-        payload = PixmapCodec._encode_webp(
+        payload = webp.encode(
             rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
         )
     elif kind == "adpcm":
-        payload = PixmapCodec._encode_wav_adpcm(
+        payload = wav.encode_adpcm(
             [(100, 5, [int(x) for x in rng.integers(0, 16, 8)])] * 2
         )
     elif kind == "jpeg":
-        payload = PixmapCodec._encode_jpeg(
+        payload = jpeg.encode(
             rng.integers(0, 256, (8, 8), dtype=np.uint8)
         )
     elif kind == "gif":
-        payload = PixmapCodec._encode_gif(
+        payload = gif.encode(
             rng.integers(0, 16, (5, 7), dtype=np.uint8),
             rng.integers(0, 256, (16, 3), dtype=np.uint8),
         )
     elif kind == "wav":
-        payload = PixmapCodec._encode_wav(
+        payload = wav.encode(
             rng.integers(-100, 100, 40).astype("<i2"), 2
         )
     elif kind == "flac":
-        payload = PixmapCodec._encode_flac(
+        payload = flac.encode(
             rng.integers(-32768, 32768, 40).astype("<i2"), 2,
             block_size=8,
         )
+    elif kind == "bmp":
+        payload = netpbm.encode_bmp(
+            rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
+        )
+    elif kind == "ppm":
+        payload = netpbm.encode(
+            rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
+        )
+    elif kind == "tiff":
+        payload = tiff.encode(
+            rng.integers(0, 256, (5, 7, 3), dtype=np.uint8),
+            rows_per_strip=2,
+        )
+    elif kind == "aiff":
+        payload = aiff.encode(
+            rng.integers(-100, 100, 40).astype(">i2"), 2
+        )
+    elif kind == "mulaw":
+        payload = wav.encode_mulaw(
+            rng.integers(0, 256, 39, dtype=np.uint8).tobytes(), 1
+        )
+    elif kind == "progressive_jpeg":
+        payload = jpeg.encode_progressive(
+            rng.integers(0, 256, (8, 16), dtype=np.uint8)
+        )
     else:
-        jf = PixmapCodec._encode_jpeg(
+        jf = jpeg.encode(
             rng.integers(0, 256, (8, 8), dtype=np.uint8)
         )
-        payload = PixmapCodec._encode_avi([jf, jf], 8, 8)
+        payload = avi.encode([jf, jf], 8, 8)
     full = _pc.decode(payload, "image")
     cut = data.draw(st.integers(1, len(payload) - 1))
     try:
@@ -539,8 +579,8 @@ def test_tiff_round_trip_exact(data):
     rps = data.draw(st.integers(1, 5))
     px = _img(data.draw, h, w, ch)
     arr = px if px.ndim == 3 else px[:, :, None]
-    got = _pc._parse_tiff(
-        PixmapCodec._encode_tiff(px, byte_order=bo, packbits=pb,
+    got = tiff.parse(
+        tiff.encode(px, byte_order=bo, packbits=pb,
                                  rows_per_strip=rps)
     )[2]
     assert np.array_equal(got, arr)
@@ -549,9 +589,5 @@ def test_tiff_round_trip_exact(data):
 @settings(max_examples=_EXAMPLES, deadline=None)
 @given(st.binary(min_size=0, max_size=600))
 def test_packbits_arbitrary_bytes_round_trip(data):
-    from trino_adaptive_partitioning_tool_spark.operators.multimodal import (
-        PixmapCodec as P,
-    )
-
-    enc = P._packbits_encode(data)
-    assert P._packbits_decode(enc, len(data)) == data
+    enc = tiff.packbits_encode(data)
+    assert tiff.packbits_decode(enc, len(data)) == data

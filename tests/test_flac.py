@@ -15,10 +15,13 @@ import hashlib
 import numpy as np
 import pytest
 
+from trino_adaptive_partitioning_tool_spark.operators.codecs import flac
+from trino_adaptive_partitioning_tool_spark.operators.codecs.bitio import (
+    MsbBitReader,
+    MsbBitWriter,
+)
 from trino_adaptive_partitioning_tool_spark.operators.multimodal import (
     PixmapCodec,
-    _MsbBitReader,
-    _MsbBitWriter,
 )
 
 _pc = PixmapCodec()
@@ -43,10 +46,10 @@ def _md5_samples(aid: int, frames: int, ch: int) -> np.ndarray:
 @pytest.mark.parametrize("block_size", [8, 16, 32])
 def test_round_trip_structural_matrix(channels, stereo_mode, block_size):
     samples = _md5_samples(channels * 31 + block_size, 37, channels)
-    payload = PixmapCodec._encode_flac(
+    payload = flac.encode(
         samples, channels, block_size=block_size, stereo_mode=stereo_mode
     )
-    n, ch, dec, rate = PixmapCodec._parse_flac(payload)
+    n, ch, dec, rate = flac.parse(payload)
     assert (n, ch, rate) == (37, channels, 16000)
     assert np.array_equal(dec, samples)
 
@@ -58,7 +61,7 @@ def test_round_trip_residual_paths(
     force_verbatim, force_escape, partition_order
 ):
     samples = _md5_samples(7, 48, 1)
-    payload = PixmapCodec._encode_flac(
+    payload = flac.encode(
         samples,
         1,
         block_size=16,
@@ -66,13 +69,13 @@ def test_round_trip_residual_paths(
         force_escape=force_escape,
         partition_order=partition_order,
     )
-    assert np.array_equal(PixmapCodec._parse_flac(payload)[2], samples)
+    assert np.array_equal(flac.parse(payload)[2], samples)
 
 
 def test_constant_subframe_round_trip():
     samples = np.full(40, -12345, dtype=np.int16)
-    payload = PixmapCodec._encode_flac(samples, 2, block_size=16)
-    n, ch, dec, _ = PixmapCodec._parse_flac(payload)
+    payload = flac.encode(samples, 2, block_size=16)
+    n, ch, dec, _ = flac.parse(payload)
     assert (n, ch) == (20, 2)
     assert np.array_equal(dec, samples)
 
@@ -81,16 +84,16 @@ def test_wasted_bits_detected_and_inverted():
     # all samples share 3 trailing zero bits -> subframe must flag
     # k=3 wasted bits and the decoder must shift them back in
     data = [v * 8 for v in (-100, 3, 77, -5, 12, 9, -64, 20)]
-    fw = _MsbBitWriter()
-    PixmapCodec._write_flac_subframe(fw, data, 16, False, 0, False)
+    fw = MsbBitWriter()
+    flac.write_subframe(fw, data, 16, False, 0, False)
     fw.align()
     raw = fw.getvalue()
-    br = _MsbBitReader(raw)
+    br = MsbBitReader(raw)
     assert br.read(1) == 0  # reserved pad
     br.read(6)  # subframe type
     assert br.read(1) == 1  # wasted-bits flag set
     assert br.read_unary() + 1 == 3  # k = 3
-    got = PixmapCodec._read_flac_subframe(_MsbBitReader(raw), len(data), 16)
+    got = flac.read_subframe(MsbBitReader(raw), len(data), 16)
     assert got == data
 
 
@@ -105,7 +108,7 @@ def test_lpc_subframe_decode():
         data[i] - (2 * data[i - 1] - data[i - 2])
         for i in range(order, len(data))
     ]
-    fw = _MsbBitWriter()
+    fw = MsbBitWriter()
     fw.write(0, 1)  # reserved pad
     fw.write(0b100000 | (order - 1), 6)  # LPC, order bits = order-1
     fw.write(0, 1)  # no wasted bits
@@ -115,37 +118,37 @@ def test_lpc_subframe_decode():
     fw.write(shift, 5)
     for c in coefs:
         fw.write(c & ((1 << prec) - 1), prec)
-    PixmapCodec._write_flac_residual(fw, res, len(data), order, 0, False)
+    flac.write_residual(fw, res, len(data), order, 0, False)
     fw.align()
-    got = PixmapCodec._read_flac_subframe(
-        _MsbBitReader(fw.getvalue()), len(data), 16
+    got = flac.read_subframe(
+        MsbBitReader(fw.getvalue()), len(data), 16
     )
     assert got == data
 
 
 def test_crc8_corruption_raises():
     samples = _md5_samples(3, 30, 1)
-    payload = bytearray(PixmapCodec._encode_flac(samples, 1))
+    payload = bytearray(flac.encode(samples, 1))
     # byte right after the metadata (4 magic + 4 header + 34 body)
     payload[42 + 5] ^= 0x01  # inside the first frame header
     with pytest.raises(ValueError):
-        PixmapCodec._parse_flac(bytes(payload))
+        flac.parse(bytes(payload))
 
 
 def test_crc16_corruption_raises():
     samples = _md5_samples(4, 30, 1)
-    payload = bytearray(PixmapCodec._encode_flac(samples, 1))
+    payload = bytearray(flac.encode(samples, 1))
     payload[-3] ^= 0x40  # inside the last frame's subframe data
     with pytest.raises(ValueError):
-        PixmapCodec._parse_flac(bytes(payload))
+        flac.parse(bytes(payload))
 
 
 def test_streaminfo_md5_tamper_raises():
     samples = _md5_samples(5, 30, 1)
-    payload = bytearray(PixmapCodec._encode_flac(samples, 1))
+    payload = bytearray(flac.encode(samples, 1))
     payload[30] ^= 0xFF  # inside the STREAMINFO md5 field (bytes 26..41)
     with pytest.raises(ValueError, match="MD5"):
-        PixmapCodec._parse_flac(bytes(payload))
+        flac.parse(bytes(payload))
 
 
 def test_frame_order_scramble_raises():
@@ -155,7 +158,7 @@ def test_frame_order_scramble_raises():
     # non-periodic content: the md5-cycle repeats every 8 samples, which
     # would make both frames byte-identical and the swap a no-op
     samples = (np.arange(32) * 997 % 30000 - 15000).astype(np.int16)
-    payload = PixmapCodec._encode_flac(
+    payload = flac.encode(
         samples, 1, block_size=16, force_verbatim=True
     )
     meta_end = 4 + 4 + 34
@@ -166,27 +169,27 @@ def test_frame_order_scramble_raises():
     # sanity: the scramble really kept both frames byte-valid
     assert swapped != payload
     with pytest.raises(ValueError, match="MD5"):
-        PixmapCodec._parse_flac(swapped)
+        flac.parse(swapped)
 
 
 def test_utf8_coded_number_widths():
     for v in (0, 0x7F, 0x80, 0x7FF, 0x800, 2**16, 2**21 - 1, 2**31 - 1,
               2**36 - 1):
-        enc = PixmapCodec._flac_utf8_encode(v)
-        assert PixmapCodec._flac_utf8_decode(_MsbBitReader(enc)) == v
+        enc = flac.utf8_encode(v)
+        assert flac.utf8_decode(MsbBitReader(enc)) == v
 
 
 def test_multibyte_frame_numbers_round_trip():
     # 250 frames of 8 samples: frame indexes past 127 exercise the
     # 2-byte UTF-8 coded-number path inside real frame headers
     samples = _md5_samples(13, 2000, 1)
-    payload = PixmapCodec._encode_flac(samples, 1, block_size=8)
-    assert np.array_equal(PixmapCodec._parse_flac(payload)[2], samples)
+    payload = flac.encode(samples, 1, block_size=8)
+    assert np.array_equal(flac.parse(payload)[2], samples)
 
 
 def test_decode_dispatch_returns_audio_shape():
     samples = _md5_samples(21, 40, 2)
-    payload = PixmapCodec._encode_flac(samples, 2)
+    payload = flac.encode(samples, 2)
     frames, channels, mean_abs = _pc.decode(payload, "audio")
     assert (frames, channels) == (40, 2)
     assert mean_abs == pytest.approx(
@@ -196,4 +199,4 @@ def test_decode_dispatch_returns_audio_shape():
 
 def test_non_flac_magic_raises():
     with pytest.raises(ValueError):
-        PixmapCodec._parse_flac(b"fLaX" + b"\x00" * 64)
+        flac.parse(b"fLaX" + b"\x00" * 64)

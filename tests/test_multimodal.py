@@ -7,6 +7,15 @@ from __future__ import annotations
 import pytest
 
 from trino_adaptive_partitioning_tool_spark.operators import multimodal as mm
+from trino_adaptive_partitioning_tool_spark.operators.codecs import (
+    aiff,
+    gif,
+    jpeg,
+    netpbm,
+    png,
+    tiff,
+    wav,
+)
 
 
 def test_synth_assets_deterministic(spark):
@@ -181,8 +190,8 @@ def test_pixmap_codec_bmp_roundtrip_matches_pixels():
 
     c = PixmapCodec()
     px = (np.arange(5 * 3 * 3, dtype=np.uint8) * 3 % 251).reshape(3, 5, 3)
-    bmp = c._encode_bmp(px)
-    w, h, got = c._parse_bmp(bmp)
+    bmp = netpbm.encode_bmp(px)
+    w, h, got = netpbm.parse_bmp(bmp)
     assert (w, h) == (5, 3)
     assert np.array_equal(got, px)
     assert c.decode(bmp, "image") == (5, 3, px.mean())
@@ -198,7 +207,7 @@ def test_pixmap_codec_resize_is_true_nearest_neighbor():
     c = PixmapCodec()
     px = np.arange(8 * 4 * 3, dtype=np.uint8).reshape(4, 8, 3)
     resized = c.resize(_p6(px), 3, 2)
-    _, _, _, _, got = c._parse_netpbm(resized)
+    _, _, _, _, got = netpbm.parse(resized)
     ri = (np.arange(2) * 4) // 2
     ci = (np.arange(3) * 8) // 3
     assert np.array_equal(got, px[ri][:, ci])
@@ -283,17 +292,17 @@ def test_png_round_trip_all_filters_and_color_types():
     for ch in (1, 2, 3, 4):
         for h, w in [(1, 1), (2, 2), (5, 7), (9, 13), (64, 48)]:
             px = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8)
-            enc = c._encode_png(px)
-            w2, h2, px2 = c._parse_png(enc)
+            enc = png.encode(px)
+            w2, h2, px2 = png.parse(enc)
             assert (w2, h2) == (w, h)
             assert np.array_equal(px2, px), (ch, h, w)
     # decode() protocol surface: exact dims + exact mean
     px = rng.integers(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    w, h, mi = c.decode(c._encode_png(px), "image")
+    w, h, mi = c.decode(png.encode(px), "image")
     assert (w, h) == (4, 5)
     assert abs(mi - px.mean()) < 1e-9
     # resize keeps the PNG container
-    out = c.resize(c._encode_png(px), 2, 3)
+    out = c.resize(png.encode(px), 2, 3)
     w, h, _ = c.decode(out, "image")
     assert (w, h) == (2, 3)
 
@@ -304,12 +313,7 @@ def test_png_rejects_unsupported_variants():
 
     import pytest as _pytest
 
-    from trino_adaptive_partitioning_tool_spark.operators.multimodal import (
-        PixmapCodec,
-    )
-
-    c = PixmapCodec()
-    sig = PixmapCodec._PNG_SIG
+    sig = png.SIGNATURE
 
     def chunk(t, d):
         return (
@@ -317,7 +321,7 @@ def test_png_rejects_unsupported_variants():
             + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF)
         )
 
-    def png(depth, color, interlace, payload=b"\x00" * 32):
+    def make_png(depth, color, interlace, payload=b"\x00" * 32):
         return (
             sig
             + chunk(b"IHDR",
@@ -332,28 +336,28 @@ def test_png_rejects_unsupported_variants():
     # 16-bit palette, packed multi-channel types, a depth that does
     # not exist, indexed color without its PLTE, unknown interlace
     with _pytest.raises(ValueError, match="depth/color"):
-        c._parse_png(png(16, 3, 0))  # 16-bit palette is illegal
+        png.parse(make_png(16, 3, 0))  # 16-bit palette is illegal
     with _pytest.raises(ValueError, match="depth/color"):
-        c._parse_png(png(2, 2, 0))  # packed RGB is illegal
+        png.parse(make_png(2, 2, 0))  # packed RGB is illegal
     with _pytest.raises(ValueError, match="depth/color"):
-        c._parse_png(png(3, 0, 0))  # depth 3 does not exist
+        png.parse(make_png(3, 0, 0))  # depth 3 does not exist
     with _pytest.raises(ValueError, match="PLTE"):
-        c._parse_png(png(8, 3, 0))  # palette but no PLTE chunk
+        png.parse(make_png(8, 3, 0))  # palette but no PLTE chunk
     with _pytest.raises(ValueError, match="interlace"):
-        c._parse_png(png(8, 2, 2))  # method 2 does not exist
+        png.parse(make_png(8, 2, 2))  # method 2 does not exist
     with _pytest.raises(ValueError, match="size mismatch"):
-        c._parse_png(png(8, 2, 1))  # Adam7 with a sequential-size IDAT
+        png.parse(make_png(8, 2, 1))  # Adam7 with a sequential-size IDAT
     # CRC tamper inside a chunk body must be caught
     import numpy as np
 
-    good = bytearray(c._encode_png(
+    good = bytearray(png.encode(
         np.arange(48, dtype=np.uint8).reshape(4, 4, 3)))
     good[len(sig) + 8 + 2] ^= 0xFF  # IHDR body byte
     with _pytest.raises(ValueError, match="CRC"):
-        c._parse_png(bytes(good))
+        png.parse(bytes(good))
     # wrong IDAT length for the declared dims
     with _pytest.raises(ValueError, match="size mismatch"):
-        c._parse_png(png(8, 2, 0, payload=b"\x00" * 5))
+        png.parse(make_png(8, 2, 0, payload=b"\x00" * 5))
 
 
 def test_synth_png_assets_decode_through_arrow_stage(spark):
@@ -401,13 +405,13 @@ def test_wav_round_trip_and_rejects():
         for frames in (1, 10, 59):
             s = rng.integers(-32768, 32768, size=frames * ch,
                              dtype=np.int16)
-            f2, c2, s2 = c._parse_wav(c._encode_wav(s, ch))
+            f2, c2, s2 = wav.parse(wav.encode(s, ch))
             assert (f2, c2) == (frames, ch)
             assert np.array_equal(s2, s)
     # decode(): frames as width, channels as height, mean |sample|
     # (int64 abs — abs(int16 -32768) would overflow back to -32768)
     w, h, mi = c.decode(
-        c._encode_wav(np.array([-32768, 100, -100, 32767],
+        wav.encode(np.array([-32768, 100, -100, 32767],
                                dtype=np.int16), 2),
         "audio",
     )
@@ -415,21 +419,21 @@ def test_wav_round_trip_and_rejects():
     assert abs(mi - (32768 + 100 + 100 + 32767) / 4) < 1e-9
     # chunk walk honors RIFF even-offset padding (odd LIST before data)
     s = np.array([1, -2, 3, -4], dtype=np.int16)
-    good = c._encode_wav(s, 1)
+    good = wav.encode(s, 1)
     fmt_end = 12 + 8 + 16
     patched = (good[:fmt_end] + b"LIST" + struct.pack("<I", 3)
                + b"abc\x00" + good[fmt_end:])
     patched = b"RIFF" + struct.pack("<I", len(patched) - 8) + patched[8:]
-    assert np.array_equal(c._parse_wav(patched)[2], s)
+    assert np.array_equal(wav.parse(patched)[2], s)
     # rejects: non-WAVE RIFF, 8-bit PCM
     with _pytest.raises(ValueError, match="RIFF/WAVE"):
-        c._parse_wav(b"RIFFxxxxAVI " + b"\x00" * 8)
+        wav.parse(b"RIFFxxxxAVI " + b"\x00" * 8)
     fmt8 = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
     bad = (b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt8) + 8) + b"WAVE"
            + b"fmt " + struct.pack("<I", len(fmt8)) + fmt8
            + b"data" + struct.pack("<I", 0))
     with _pytest.raises(ValueError, match="16-bit"):
-        c._parse_wav(bad)
+        wav.parse(bad)
 
 
 def test_synth_wav_assets_decode_through_arrow_stage(spark):
@@ -577,7 +581,6 @@ def test_jpeg_constant_block_exact_round_trip_all_modes():
 
     import numpy as np
 
-    pc = mm.PixmapCodec()
     up = lambda b: np.repeat(np.repeat(b, 8, 0), 8, 1)  # noqa: E731
     for aid in (0, 7, 41):
         d = hashlib.md5(str(aid).encode()).digest()
@@ -591,14 +594,14 @@ def test_jpeg_constant_block_exact_round_trip_all_modes():
             [d[(3 * m + 11) % 16] for m in range(n)], np.uint8
         ).reshape(mh, mw)
         # grayscale: decoded samples ARE the block bytes
-        w, h, px = pc._parse_jpeg(mm.PixmapCodec._encode_jpeg(up(yb)))
+        w, h, px = jpeg.parse(jpeg.encode(up(yb)))
         assert (w, h) == (24, 16)
         assert np.array_equal(px[:, :, 0], up(yb))
         # 4:4:4: decoded RGB equals the fixed-point transform exactly
-        w, h, px = pc._parse_jpeg(
-            mm.PixmapCodec._encode_jpeg(up(yb), up(cb), up(cr), "444")
+        w, h, px = jpeg.parse(
+            jpeg.encode(up(yb), up(cb), up(cr), "444")
         )
-        exp = mm.PixmapCodec._ycbcr_to_rgb(
+        exp = jpeg.ycbcr_to_rgb(
             up(yb).astype(np.int64),
             up(cb).astype(np.int64),
             up(cr).astype(np.int64),
@@ -611,11 +614,11 @@ def test_jpeg_constant_block_exact_round_trip_all_modes():
             for k in range(4):
                 by, bx = divmod(k, 2)
                 yb4[2 * my + by, 2 * mx + bx] = d[(4 * m + k) % 16]
-        w, h, px = pc._parse_jpeg(
-            mm.PixmapCodec._encode_jpeg(up(yb4), up(cb), up(cr), "420")
+        w, h, px = jpeg.parse(
+            jpeg.encode(up(yb4), up(cb), up(cr), "420")
         )
         assert (w, h) == (48, 32)
-        exp = mm.PixmapCodec._ycbcr_to_rgb(
+        exp = jpeg.ycbcr_to_rgb(
             up(yb4).astype(np.int64),
             np.repeat(np.repeat(up(cb), 2, 0), 2, 1).astype(np.int64),
             np.repeat(np.repeat(up(cr), 2, 0), 2, 1).astype(np.int64),
@@ -633,15 +636,15 @@ def test_jpeg_general_lossy_round_trip_and_padding():
     pc = mm.PixmapCodec()
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, (19, 23), dtype=np.uint8)
-    w, h, px = pc._parse_jpeg(mm.PixmapCodec._encode_jpeg(img))
+    w, h, px = jpeg.parse(jpeg.encode(img))
     assert (w, h) == (23, 19)
     assert np.abs(px[:, :, 0].astype(int) - img.astype(int)).max() <= 4
     # 4:2:0 color with odd dims: shape contract + decode() sniffing
     y = rng.integers(0, 256, (21, 27), dtype=np.uint8)
     cb = rng.integers(0, 256, (11, 14), dtype=np.uint8)
     cr = rng.integers(0, 256, (11, 14), dtype=np.uint8)
-    payload = mm.PixmapCodec._encode_jpeg(y, cb, cr, "420")
-    w, h, px = pc._parse_jpeg(payload)
+    payload = jpeg.encode(y, cb, cr, "420")
+    w, h, px = jpeg.parse(payload)
     assert (w, h) == (27, 21) and px.shape == (21, 27, 3)
     dw, dh, mi = pc.decode(payload, "image")
     assert (dw, dh) == (27, 21) and mi == pytest.approx(float(px.mean()))
@@ -651,17 +654,16 @@ def test_jpeg_general_lossy_round_trip_and_padding():
 def test_jpeg_rejects_malformed_payloads():
     import numpy as np
 
-    pc = mm.PixmapCodec()
     img = np.full((8, 8), 100, np.uint8)
-    payload = mm.PixmapCodec._encode_jpeg(img)
+    payload = jpeg.encode(img)
     with pytest.raises(ValueError, match="not a JPEG"):
-        pc._parse_jpeg(b"\x00\x00" + payload[2:])
+        jpeg.parse(b"\x00\x00" + payload[2:])
     # truncated mid-segment
     with pytest.raises(ValueError):
-        pc._parse_jpeg(payload[:20])
+        jpeg.parse(payload[:20])
     # truncated entropy stream
     with pytest.raises(ValueError):
-        pc._parse_jpeg(payload[:-8])
+        jpeg.parse(payload[:-8])
     # SOF2 is SUPPORTED since r11, but a baseline entropy stream under
     # a flipped SOF2 marker is still malformed: the baseline SOS header
     # declares spectral selection 0..63, which progressive forbids for
@@ -669,11 +671,11 @@ def test_jpeg_rejects_malformed_payloads():
     sof0 = payload.index(b"\xff\xc0")
     prog = payload[:sof0] + b"\xff\xc2" + payload[sof0 + 2 :]
     with pytest.raises(ValueError, match="Se != 0"):
-        pc._parse_jpeg(prog)
+        jpeg.parse(prog)
     # lossless (SOF3) stays rejected
     sof3 = payload[:sof0] + b"\xff\xc3" + payload[sof0 + 2 :]
     with pytest.raises(ValueError, match="baseline"):
-        pc._parse_jpeg(sof3)
+        jpeg.parse(sof3)
 
 
 def test_jpeg_y4m_decode_branch_matches_frame_walk():
@@ -728,7 +730,7 @@ def test_synth_jpeg_assets_decode_through_arrow_stage(spark):
             y = lambda j: d[j % 16]  # noqa: E731
             cb = lambda m: d[(3 * m + 5) % 16]  # noqa: E731
             cr = lambda m: d[(3 * m + 11) % 16]  # noqa: E731
-            rgb = mm.PixmapCodec._ycbcr_to_rgb
+            rgb = jpeg.ycbcr_to_rgb
             if mode == 1:
                 vals = [
                     rgb(*(np.array([v], np.int64) for v in
@@ -762,17 +764,17 @@ def test_jpeg_resize_total_roundtrip():
     rng = np.random.default_rng(3)
     # grayscale path
     g = rng.integers(0, 256, (16, 24), dtype=np.uint8)
-    rs = pc.resize(mm.PixmapCodec._encode_jpeg(g), 8, 8)
-    w, h, px = pc._parse_jpeg(rs)
+    rs = pc.resize(jpeg.encode(g), 8, 8)
+    w, h, px = jpeg.parse(rs)
     assert (w, h) == (8, 8) and px.shape[2] == 1
     # color path: compare against NN of the decoded source
     y = rng.integers(0, 256, (16, 16), dtype=np.uint8)
     cb = rng.integers(0, 256, (16, 16), dtype=np.uint8)
     cr = rng.integers(0, 256, (16, 16), dtype=np.uint8)
-    src = mm.PixmapCodec._encode_jpeg(y, cb, cr, "444")
-    _, _, src_px = pc._parse_jpeg(src)
+    src = jpeg.encode(y, cb, cr, "444")
+    _, _, src_px = jpeg.parse(src)
     rs = pc.resize(src, 8, 8)
-    w, h, out = pc._parse_jpeg(rs)
+    w, h, out = jpeg.parse(rs)
     assert (w, h) == (8, 8) and out.shape == (8, 8, 3)
     ri = (np.arange(8) * 16) // 8
     want = src_px[ri][:, ri]
@@ -788,7 +790,6 @@ def test_jpeg_restart_markers_round_trip_exact():
 
     import numpy as np
 
-    pc = mm.PixmapCodec()
     up = lambda b: np.repeat(np.repeat(b, 8, 0), 8, 1)  # noqa: E731
     d = hashlib.md5(b"13").digest()
     mw, mh = 3, 2
@@ -801,18 +802,18 @@ def test_jpeg_restart_markers_round_trip_exact():
         [d[(3 * m + 11) % 16] for m in range(n)], np.uint8
     ).reshape(mh, mw)
     for interval in (1, 2, 5):
-        plain = pc._parse_jpeg(mm.PixmapCodec._encode_jpeg(up(yb)))
-        rst = pc._parse_jpeg(
-            mm.PixmapCodec._encode_jpeg(
+        plain = jpeg.parse(jpeg.encode(up(yb)))
+        rst = jpeg.parse(
+            jpeg.encode(
                 up(yb), restart_interval=interval
             )
         )
         assert np.array_equal(plain[2], rst[2]), interval
-        c_plain = pc._parse_jpeg(
-            mm.PixmapCodec._encode_jpeg(up(yb), up(cb), up(cr), "444")
+        c_plain = jpeg.parse(
+            jpeg.encode(up(yb), up(cb), up(cr), "444")
         )
-        c_rst = pc._parse_jpeg(
-            mm.PixmapCodec._encode_jpeg(
+        c_rst = jpeg.parse(
+            jpeg.encode(
                 up(yb), up(cb), up(cr), "444", restart_interval=interval
             )
         )
@@ -820,9 +821,9 @@ def test_jpeg_restart_markers_round_trip_exact():
     # lossy general image with restarts: same pixels as without
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, (24, 24), dtype=np.uint8)
-    a = pc._parse_jpeg(mm.PixmapCodec._encode_jpeg(img))
-    b = pc._parse_jpeg(
-        mm.PixmapCodec._encode_jpeg(img, restart_interval=1)
+    a = jpeg.parse(jpeg.encode(img))
+    b = jpeg.parse(
+        jpeg.encode(img, restart_interval=1)
     )
     assert np.array_equal(a[2], b[2])
 
@@ -844,28 +845,28 @@ def test_gif_codec_round_trip_lzw_interlace_and_rejects():
     # forces LZW width growth and at least one 4096 dictionary reset
     for idx, inter in [(big, False), (big, True),
                        (np.arange(20, dtype=np.uint8).reshape(5, 4), True)]:
-        payload = mm.PixmapCodec._encode_gif(idx, pal, interlace=inter)
-        w, h, got, gpal = pc._parse_gif(payload)
+        payload = gif.encode(idx, pal, interlace=inter)
+        w, h, got, gpal = gif.parse(payload)
         assert (w, h) == (idx.shape[1], idx.shape[0])
         assert np.array_equal(got, idx), inter
         assert np.array_equal(gpal[: len(pal)], pal)
     # decode()/pixels() dispatch + palette lookup
-    payload = mm.PixmapCodec._encode_gif(big, pal)
+    payload = gif.encode(big, pal)
     w, h, mi = pc.decode(payload, "image")
     assert (w, h) == (90, 80)
     assert mi == pytest.approx(float(pal[big].mean()))
     assert pc.pixels(payload).shape == (80, 90, 3)
     # resize: NN on the index grid, original palette kept (exact)
     rs = pc.resize(payload, 9, 8)
-    w, h, ridx, rpal = pc._parse_gif(rs)
+    w, h, ridx, rpal = gif.parse(rs)
     ri = (np.arange(8) * 80) // 8
     ci = (np.arange(9) * 90) // 9
     assert np.array_equal(ridx, big[ri][:, ci])
     # rejects
     with pytest.raises(ValueError, match="not a GIF"):
-        pc._parse_gif(b"NOPE" + payload[4:])
+        gif.parse(b"NOPE" + payload[4:])
     with pytest.raises(ValueError):
-        pc._parse_gif(payload[:40])  # truncated mid-stream
+        gif.parse(payload[:40])  # truncated mid-stream
 
 
 def test_gif_mean_blind_interlace_bug_caught_by_weighted_sum():
@@ -875,16 +876,15 @@ def test_gif_mean_blind_interlace_bug_caught_by_weighted_sum():
     checksum."""
     import numpy as np
 
-    pc = mm.PixmapCodec()
     pal = np.array(
         [[(7 * i) % 256, (11 * i) % 256, (13 * i) % 256]
          for i in range(256)], np.uint8,
     )
     idx = np.arange(20, dtype=np.uint8).reshape(5, 4)
-    payload = mm.PixmapCodec._encode_gif(idx, pal, interlace=True)
-    _, _, good, _ = pc._parse_gif(payload)
+    payload = gif.encode(idx, pal, interlace=True)
+    _, _, good, _ = gif.parse(payload)
     # simulate the bug: rows in file (interlace) order, no reassembly
-    order = [r for s, st in mm.PixmapCodec._GIF_INTERLACE_PASSES
+    order = [r for s, st in gif.INTERLACE_PASSES
              for r in range(s, 5, st)]
     buggy = good[order]  # naive: file row k lands at raster row k
     assert not np.array_equal(buggy, good)
@@ -910,44 +910,40 @@ def test_tiff_round_trip_structural_matrix():
         for bo in ("II", "MM"):
             for pb in (False, True):
                 for rps in (None, 1, 2):
-                    payload = mm.PixmapCodec._encode_tiff(
+                    payload = tiff.encode(
                         px if ch == 3 else px[:, :, 0],
                         byte_order=bo, packbits=pb, rows_per_strip=rps,
                     )
-                    w, h, got = pc._parse_tiff(payload)
+                    w, h, got = tiff.parse(payload)
                     assert (w, h) == (7, 5)
                     assert np.array_equal(got, px), (ch, bo, pb, rps)
-    payload = mm.PixmapCodec._encode_tiff(
+    payload = tiff.encode(
         rng.integers(0, 256, (4, 6, 3), dtype=np.uint8),
         packbits=True, rows_per_strip=2,
     )
     for cut in range(4, len(payload)):
         with pytest.raises(ValueError):
-            pc._parse_tiff(payload[:cut])
+            tiff.parse(payload[:cut])
     with pytest.raises(ValueError, match="not a TIFF"):
-        pc._parse_tiff(b"XXXX" + payload[4:])
+        tiff.parse(b"XXXX" + payload[4:])
     # decode()/pixels()/resize() dispatch
     w, h, mi = pc.decode(payload, "image")
     assert (w, h) == (6, 4)
     assert pc.pixels(payload).shape == (4, 6, 3)
-    rw, rh, rpx = pc._parse_tiff(pc.resize(payload, 3, 2))
+    rw, rh, rpx = tiff.parse(pc.resize(payload, 3, 2))
     assert (rw, rh) == (3, 2)
 
 
 def test_packbits_run_detection_and_edge_cases():
-    from trino_adaptive_partitioning_tool_spark.operators.multimodal import (
-        PixmapCodec as P,
-    )
-
     for data in (
         b"", b"a", b"ab", b"aaa", b"a" * 500,
         bytes(range(200)), b"ab" * 100, b"aaab" * 60,
         bytes([0]) * 128 + bytes([1]),
     ):
-        enc = P._packbits_encode(data)
-        assert P._packbits_decode(enc, len(data)) == data, data[:12]
+        enc = tiff.packbits_encode(data)
+        assert tiff.packbits_decode(enc, len(data)) == data, data[:12]
     # runs actually compress
-    assert len(P._packbits_encode(b"z" * 300)) <= 6
+    assert len(tiff.packbits_encode(b"z" * 300)) <= 6
 
 
 def test_mulaw_wav_decode_canonical_table_values():
@@ -959,16 +955,16 @@ def test_mulaw_wav_decode_canonical_table_values():
 
     pc = mm.PixmapCodec()
     codes = bytes([0x00, 0x80, 0x7F, 0xFF, 0x10, 0x90])
-    payload = mm.PixmapCodec._encode_wav_mulaw(codes, 1)
-    frames, ch, samples = pc._parse_wav(payload)
+    payload = wav.encode_mulaw(codes, 1)
+    frames, ch, samples = wav.parse(payload)
     assert (frames, ch) == (6, 1)
     assert list(samples[:4]) == [-32124, 32124, 0, 0]
     # sign symmetry across the complementary code pair
     assert samples[4] == -samples[5]
     # odd byte count: RIFF even pad must not break the walk
-    odd = mm.PixmapCodec._encode_wav_mulaw(bytes([0x00, 0x80, 0xFF]), 1)
+    odd = wav.encode_mulaw(bytes([0x00, 0x80, 0xFF]), 1)
     assert len(odd) % 2 == 0
-    f2, c2, s2 = pc._parse_wav(odd)
+    f2, c2, s2 = wav.parse(odd)
     assert (f2, c2) == (3, 1) and list(s2) == [-32124, 32124, 0]
     # decode() surface: mean |sample| intensity
     w, h, mi = pc.decode(payload, "audio")
@@ -981,7 +977,7 @@ def test_mulaw_wav_decode_canonical_table_values():
     fmt_off = payload.index(b"fmt ") + 8
     struct.pack_into("<H", bad, fmt_off + 12, 5)  # block_align != channels
     with pytest.raises(ValueError):
-        pc._parse_wav(bytes(bad))
+        wav.parse(bytes(bad))
 
 
 def test_aiff_round_trip_and_extended_rate():
@@ -995,20 +991,20 @@ def test_aiff_round_trip_and_extended_rate():
     for ch in (1, 2):
         for rate in (8000, 16000, 44100, 48000, 96000):
             samples = rng.integers(-32768, 32768, 30 * ch).astype(">i2")
-            payload = mm.PixmapCodec._encode_aiff(samples, ch, rate)
-            frames, c2, got, r2 = pc._parse_aiff(payload)
+            payload = aiff.encode(samples, ch, rate)
+            frames, c2, got, r2 = aiff.parse(payload)
             assert (frames, c2, r2) == (30, ch, rate)
             assert np.array_equal(got, samples)
-    payload = mm.PixmapCodec._encode_aiff(
+    payload = aiff.encode(
         rng.integers(-100, 100, 20).astype(">i2"), 2
     )
     w, h, mi = pc.decode(payload, "audio")
     assert (w, h) == (10, 2)
     with pytest.raises(ValueError, match="not an AIFF"):
-        pc._parse_aiff(b"FORM\x00\x00\x00\x04WAVE")
+        aiff.parse(b"FORM\x00\x00\x00\x04WAVE")
     for cut in range(12, len(payload)):
         try:
-            pc._parse_aiff(payload[:cut])
+            aiff.parse(payload[:cut])
         except ValueError:
             continue
         raise AssertionError(f"cut {cut} did not raise")
@@ -1224,5 +1220,5 @@ def test_audio_fingerprint_window_guard_and_pcm_seam():
     ch1 = -ch0
     inter = np.empty(2 * AFP_WINDOW, np.int16)
     inter[0::2], inter[1::2] = ch0, ch1
-    got = PixmapCodec().pcm(PixmapCodec._encode_wav(inter, 2))
+    got = PixmapCodec().pcm(wav.encode(inter, 2))
     assert np.array_equal(got, ch0)

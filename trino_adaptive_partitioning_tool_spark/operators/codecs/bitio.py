@@ -1,17 +1,25 @@
-"""Bit packers and readers shared by the codecs."""
+"""Bit packers and readers shared by the codecs.
+
+MSB-first (FLAC, JPEG) and LSB-first (VP8L, GIF LZW). JPEG's marker
+byte-stuffing is a mode of the MSB pair: the stuffed writer emits a 0x00
+after every 0xFF data byte and pads to a byte boundary with 1s; the
+stuffed reader drops those 0x00 bytes and ends its data at the first
+marker. Every out-of-data read raises ValueError, so a truncated payload
+fails loudly.
+"""
 
 from __future__ import annotations
 
 
-class _MsbBitWriter:
-    """MSB-first bit packer (FLAC's bit order: the most significant bit
-    of each value lands in the most significant free bit of the output
-    byte stream)."""
+class MsbBitWriter:
+    """MSB-first bit packer: the most significant bit of each value lands
+    in the most significant free bit of the output byte stream."""
 
-    def __init__(self) -> None:
+    def __init__(self, stuffed: bool = False) -> None:
         self._out = bytearray()
         self._acc = 0
         self._nbits = 0
+        self._stuffed = stuffed
 
     def write(self, value: int, nbits: int) -> None:
         if nbits <= 0:
@@ -20,7 +28,10 @@ class _MsbBitWriter:
         self._nbits += nbits
         while self._nbits >= 8:
             self._nbits -= 8
-            self._out.append((self._acc >> self._nbits) & 0xFF)
+            byte = (self._acc >> self._nbits) & 0xFF
+            self._out.append(byte)
+            if byte == 0xFF and self._stuffed:
+                self._out.append(0x00)
         self._acc &= (1 << self._nbits) - 1
 
     def write_unary(self, q: int) -> None:
@@ -31,8 +42,15 @@ class _MsbBitWriter:
         self.write(1, q + 1)
 
     def align(self) -> None:
+        """Pad to a byte boundary: with 0s, or with 1s when stuffed."""
         if self._nbits:
-            self.write(0, 8 - self._nbits)
+            pad = 8 - self._nbits
+            self.write((1 << pad) - 1 if self._stuffed else 0, pad)
+
+    def marker(self, code: int) -> None:
+        """Align, then emit the two-byte marker 0xFF ``code`` unstuffed."""
+        self.align()
+        self._out += bytes((0xFF, code))
 
     def getvalue(self) -> bytes:
         if self._nbits:
@@ -40,11 +58,29 @@ class _MsbBitWriter:
         return bytes(self._out)
 
 
-class _MsbBitReader:
-    """MSB-first bit reader over a bytes buffer; every out-of-data read
-    raises ValueError so truncated payloads fail loudly."""
+def marker_offset(data: bytes, pos: int) -> int:
+    """Offset of the first JPEG marker at or after ``pos``: a 0xFF not
+    followed by a stuffed 0x00 (a lone trailing 0xFF counts); len(data)
+    when there is none."""
+    while True:
+        i = data.find(b"\xff", pos)
+        if i < 0:
+            return len(data)
+        if i + 1 >= len(data) or data[i + 1] != 0x00:
+            return i
+        pos = i + 2
 
-    def __init__(self, data: bytes, pos: int = 0) -> None:
+
+class MsbBitReader:
+    """MSB-first bit reader over a bytes buffer. ``stuffed`` reads one
+    JPEG entropy-coded segment starting at ``pos``: ``end`` is the offset
+    of the marker that closes it, and reading past it raises."""
+
+    def __init__(self, data: bytes, pos: int = 0, stuffed: bool = False) -> None:
+        if stuffed:
+            self.end = marker_offset(data, pos)
+            data = data[pos : self.end].replace(b"\xff\x00", b"\xff")
+            pos = 0
         self._data = data
         self._byte = pos
         self._bit = 0
@@ -53,7 +89,7 @@ class _MsbBitReader:
         v = 0
         while nbits > 0:
             if self._byte >= len(self._data):
-                raise ValueError("truncated FLAC bitstream")
+                raise ValueError("truncated bitstream")
             avail = 8 - self._bit
             take = avail if avail < nbits else nbits
             cur = self._data[self._byte]
@@ -74,7 +110,7 @@ class _MsbBitReader:
         while self.read(1) == 0:
             q += 1
             if q > 1 << 24:
-                raise ValueError("runaway unary code in FLAC bitstream")
+                raise ValueError("runaway unary code in bitstream")
         return q
 
     def align(self) -> None:
@@ -91,10 +127,9 @@ class _MsbBitReader:
         return self._bit == 0
 
 
-class _LsbBitWriter:
-    """LSB-first bit packer (VP8L's bit order: values fill each output
-    byte from its least significant bit upward — the opposite of FLAC's
-    MSB packing above)."""
+class LsbBitWriter:
+    """LSB-first bit packer: values fill each output byte from its least
+    significant bit upward."""
 
     def __init__(self) -> None:
         self._out = bytearray()
@@ -116,19 +151,23 @@ class _LsbBitWriter:
         return out
 
 
-class _LsbBitReader:
-    """LSB-first bit reader; out-of-data reads raise ValueError."""
+class LsbBitReader:
+    """LSB-first bit reader."""
 
     def __init__(self, data: bytes) -> None:
         self._data = data
-        self._pos = 0  # absolute bit position
+        self._pos = 0
+        self._acc = 0
+        self._n = 0
 
     def read(self, nbits: int) -> int:
-        v = 0
-        for i in range(nbits):
-            byte = self._pos >> 3
-            if byte >= len(self._data):
-                raise ValueError("truncated VP8L bitstream")
-            v |= ((self._data[byte] >> (self._pos & 7)) & 1) << i
+        while self._n < nbits:
+            if self._pos >= len(self._data):
+                raise ValueError("truncated bitstream")
+            self._acc |= self._data[self._pos] << self._n
             self._pos += 1
+            self._n += 8
+        v = self._acc & ((1 << nbits) - 1)
+        self._acc >>= nbits
+        self._n -= nbits
         return v

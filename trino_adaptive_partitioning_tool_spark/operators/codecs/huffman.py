@@ -1,13 +1,16 @@
-"""Huffman code construction and bit-serial symbol reads."""
+"""Huffman code construction and bit-serial symbol reads.
+
+One canonical walk serves both code families: VP8L orders symbols by
+(length, symbol id) the DEFLATE way, JPEG by its DHT value list, and
+both count codes upward with a left shift at each length increase.
+"""
 
 from __future__ import annotations
 
-from .bitio import _LsbBitReader
+from collections.abc import Iterable
 
 
-def _limited_huffman_lengths(
-    freqs: dict[int, int], max_len: int
-) -> dict[int, int]:
+def limited_lengths(freqs: dict[int, int], max_len: int) -> dict[int, int]:
     """Length-limited Huffman code lengths via boundary package-merge —
     optimal under the max_len constraint, deterministic (ties broken by
     symbol id). Returns {symbol: length} for every symbol in freqs."""
@@ -34,24 +37,47 @@ def _limited_huffman_lengths(
     return lengths
 
 
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """DEFLATE-style canonical code assignment: symbols sorted by
-    (length, symbol id), codes count upward with left-shifts at each
-    length increase. Returns {symbol: (code, length)} — code bits are
-    MSB-first (reverse before writing through an LSB-first packer)."""
-    ordered = sorted((l, s) for s, l in lengths.items() if l > 0)
-    codes: dict[int, tuple[int, int]] = {}
+def canonical_walk(ordered: Iterable[tuple[int, int]]) -> list[tuple[int, int, int]]:
+    """(symbol, code, length) for (length, symbol) pairs in code order.
+    Code bits are MSB-first (reverse before an LSB-first packer)."""
+    out = []
     code = 0
     prev_len = 0
     for l, s in ordered:
         code <<= l - prev_len
         prev_len = l
-        codes[s] = (code, l)
+        out.append((s, code, l))
         code += 1
-    return codes
+    return out
 
 
-def _reverse_bits(value: int, nbits: int) -> int:
+def length_order(lengths: dict[int, int]) -> list[tuple[int, int]]:
+    """(length, symbol) pairs of the used symbols, DEFLATE code order."""
+    return sorted((l, s) for s, l in lengths.items() if l > 0)
+
+
+def canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
+    """{symbol: (code, length)}, symbols ordered by (length, symbol id)."""
+    return {s: (c, l) for s, c, l in canonical_walk(length_order(lengths))}
+
+
+def jpeg_table(lengths: dict[int, int]) -> tuple[list[int], list[int]]:
+    """A DHT's (bits, vals): symbol count per code length 1..16 and the
+    symbols in code order, so jpeg_walk(bits, vals) assigns exactly
+    canonical_codes(lengths)."""
+    bits = [0] * 16
+    for l in lengths.values():
+        bits[l - 1] += 1
+    return bits, [s for _l, s in length_order(lengths)]
+
+
+def jpeg_walk(bits: list[int], vals: list[int]) -> list[tuple[int, int, int]]:
+    """(symbol, code, length) of a DHT's (bits, vals) table."""
+    lens = [l for l, n in enumerate(bits, 1) for _ in range(n)]
+    return canonical_walk(zip(lens, vals))
+
+
+def reverse_bits(value: int, nbits: int) -> int:
     out = 0
     for _ in range(nbits):
         out = (out << 1) | (value & 1)
@@ -59,25 +85,25 @@ def _reverse_bits(value: int, nbits: int) -> int:
     return out
 
 
-def _huff_decode_table(
-    lengths: dict[int, int]
+def decode_table(
+    walk: list[tuple[int, int, int]]
 ) -> tuple[dict[tuple[int, int], int], int]:
     """(len, code)->symbol lookup + max length, for bit-serial canonical
     decoding (code accumulates MSB-first as bits arrive)."""
-    codes = _canonical_codes(lengths)
-    table = {(l, c): s for s, (c, l) in codes.items()}
-    max_len = max((l for _s, (_c, l) in codes.items()), default=0)
-    return table, max_len
+    table = {(l, c): s for s, c, l in walk}
+    return table, max((l for _s, _c, l in walk), default=0)
 
 
-def _read_huff_symbol(
-    br: _LsbBitReader, table: dict[tuple[int, int], int], max_len: int
-) -> int:
+def read_symbol(br, table: dict[tuple[int, int], int], max_len: int) -> int:
+    """One symbol off ``br`` (either bit reader), a bit at a time."""
     if max_len == 0:  # trivial single-symbol code: zero bits per symbol
-        return table[(0, 0)]
+        if (0, 0) in table:
+            return table[(0, 0)]
+        raise ValueError("empty huffman code")
     code = 0
     for l in range(1, max_len + 1):
         code = (code << 1) | br.read(1)
-        if (l, code) in table:
-            return table[(l, code)]
-    raise ValueError("invalid VP8L huffman code")
+        sym = table.get((l, code))
+        if sym is not None:
+            return sym
+    raise ValueError("invalid huffman code")

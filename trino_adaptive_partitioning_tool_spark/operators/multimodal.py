@@ -33,8 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import rowmap
-from .codecs.bitio import _MsbBitReader, _MsbBitWriter  # noqa: F401
-from .codecs.pixmap import PixmapCodec
+from .codecs import aiff, avi, flac, gif, jpeg, png, tiff, wav, webp, y4m
+from .codecs.netpbm import encode_bmp
+from .codecs.pixmap import PixmapCodec, is_raster  # noqa: F401 (the real Codec)
 
 ASSET_SCHEMA = T.StructType(
     [
@@ -241,7 +242,7 @@ def synth_png_assets(
 
     def encode(aid: int):
         w, h, ch = aid % 6 + 2, aid % 4 + 2, (1, 3, 4)[aid % 3]
-        payload = PixmapCodec._encode_png(
+        payload = png.encode(
             _digest_raster(aid, h, w, ch),
             interlace=aid % 5 == 2,
             palette=aid % 7 == 3 and ch != 1,
@@ -264,7 +265,7 @@ def synth_webp_assets(
 
     def encode(aid: int):
         w, h, ch = aid % 6 + 2, aid % 4 + 2, (3, 4)[aid % 2]
-        payload = PixmapCodec._encode_webp(_digest_raster(aid, h, w, ch))
+        payload = webp.encode(_digest_raster(aid, h, w, ch))
         return "image", payload, (w, h, None, None, "webp")
 
     return _encoded_assets(spark, n, partitions, encode)
@@ -308,7 +309,7 @@ def synth_webp_lz_assets(
 
     def encode(aid: int):
         w, h0, r, ch = aid % 5 + 3, aid % 7 + 2, aid % 3 + 2, (3, 4)[aid % 2]
-        payload = PixmapCodec._encode_webp(
+        payload = webp.encode(
             np.tile(_digest_raster(aid, h0, w, ch), (r, 1, 1)),
             backrefs=True,
             cache_bits=aid % 11 + 1,
@@ -341,7 +342,7 @@ def synth_png_depth_assets(
             px = ((raw[0::2] << 8) | raw[1::2]).reshape(h, w, ch)
         else:
             px = (_digest_raster(aid, h, w, 1) % (1 << depth)).astype(np.uint8)
-        payload = PixmapCodec._encode_png(
+        payload = png.encode(
             px, interlace=aid % 5 == 0, depth=depth
         )
         return "image", payload, (w, h, None, None, "png")
@@ -365,7 +366,7 @@ def synth_wav_assets(
         samples = np.frombuffer(_digest_cycle(aid, frames * ch * 2), "<i2")
         return (
             "audio",
-            PixmapCodec._encode_wav(samples, ch),
+            wav.encode(samples, ch),
             (frames, ch, 16000, frames * 1000 // 16000, "wav"),
         )
 
@@ -396,7 +397,7 @@ def synth_adpcm_assets(
             ]
             pred = int.from_bytes(hb[0:2], "little", signed=True)
             blocks.append((pred, hb[2] % 89, nibs))
-        payload = PixmapCodec._encode_wav_adpcm(blocks)
+        payload = wav.encode_adpcm(blocks)
         return "audio", payload, (None, None, 8000, None, "wav")
 
     return _encoded_assets(spark, n, partitions, encode)
@@ -417,7 +418,7 @@ def synth_aiff_assets(
         samples = np.frombuffer(_digest_cycle(aid, frames * ch * 2), ">i2")
         return (
             "audio",
-            PixmapCodec._encode_aiff(samples, ch),
+            aiff.encode(samples, ch),
             (frames, ch, 16000, frames * 1000 // 16000, "aiff"),
         )
 
@@ -438,7 +439,7 @@ def synth_mulaw_assets(
         frames, ch = aid % 49 + 10, aid % 2 + 1
         return (
             "audio",
-            PixmapCodec._encode_wav_mulaw(_digest_cycle(aid, frames * ch), ch),
+            wav.encode_mulaw(_digest_cycle(aid, frames * ch), ch),
             (frames, ch, 8000, frames * 1000 // 8000, "wav"),
         )
 
@@ -469,7 +470,7 @@ def synth_flac_assets(
         samples = np.frombuffer(_digest_cycle(aid, frames * ch * 2), "<i2")
         if aid % 7 == 0:
             samples = np.full(frames * ch, samples[0], dtype=np.int16)
-        payload = PixmapCodec._encode_flac(
+        payload = flac.encode(
             samples,
             ch,
             block_size=8 << (aid % 3),
@@ -520,9 +521,8 @@ def synth_y4m_assets(
         w, h, nf = _y4m_shape(aid)
         fsz = w * h * 3 // 2
         data = _digest_cycle(aid, nf * fsz)
-        header = f"YUV4MPEG2 W{w} H{h} F10:1 Ip A1:1 C420\n".encode()
-        payload = header + b"".join(
-            b"FRAME\n" + data[k * fsz : (k + 1) * fsz] for k in range(nf)
+        payload = y4m.encode(
+            [data[k * fsz : (k + 1) * fsz] for k in range(nf)], w, h
         )
         return "video", payload, (w, h, None, nf * 100, "y4m")
 
@@ -571,9 +571,9 @@ def synth_jpeg_assets(
                 2 * mw,
             )
         if mode == 0:  # grayscale
-            payload = PixmapCodec._encode_jpeg(y, restart_interval=dri)
+            payload = jpeg.encode(y, restart_interval=dri)
         else:
-            payload = PixmapCodec._encode_jpeg(
+            payload = jpeg.encode(
                 y, cb, cr,
                 subsampling="420" if mode == 2 else "444",
                 restart_interval=dri,
@@ -600,9 +600,9 @@ def synth_progressive_jpeg_assets(
         mw, mh = (aid // 2) % 3 + 1, (aid // 6) % 2 + 1
         y, cb, cr = _ycc_planes(_digest(aid), mh, mw)
         if aid % 2 == 0:  # grayscale
-            payload = PixmapCodec._encode_jpeg_progressive(y)
+            payload = jpeg.encode_progressive(y)
         else:  # 4:4:4
-            payload = PixmapCodec._encode_jpeg_progressive(y, cb, cr)
+            payload = jpeg.encode_progressive(y, cb, cr)
         return "image", payload, (8 * mw, 8 * mh, None, None, "jpeg")
 
     return _encoded_assets(spark, n, partitions, encode)
@@ -626,7 +626,7 @@ def synth_avi_assets(
     def encode(aid: int):
         mw, mh, nf = aid % 3 + 1, (aid // 3) % 2 + 1, aid % 6 + 2
         frames = [
-            PixmapCodec._encode_jpeg(
+            jpeg.encode(
                 *_ycc_planes(_digest(aid * 131 + f), mh, mw), subsampling="444"
             )
             for f in range(nf)
@@ -634,7 +634,7 @@ def synth_avi_assets(
         w, h = 8 * mw, 8 * mh
         return (
             "video",
-            PixmapCodec._encode_avi(frames, w, h, fps=10),
+            avi.encode(frames, w, h, fps=10),
             (w, h, None, nf * 100, "avi"),
         )
 
@@ -662,11 +662,8 @@ def avi_frame_stats(assets: DataFrame) -> DataFrame:
     leave it."""
 
     def stats(aid: int, payload: bytes):
-        w, h, fps, jpegs = PixmapCodec._parse_avi(payload)
-        for idx, j in enumerate(jpegs):
-            fw, fh, px = PixmapCodec._parse_jpeg(j)
-            if (fw, fh) != (w, h):
-                raise ValueError("AVI frame dims disagree with header")
+        w, h, fps, frames = avi.decode_frames(payload)
+        for idx, px in enumerate(frames):
             s = int(px.astype(np.int64).sum())
             yield aid, idx, idx * 1000 // fps, w, h, s, s / px.size
 
@@ -697,7 +694,7 @@ def synth_gif_assets(
 
     def encode(aid: int):
         w, h = aid % 6 + 2, aid % 4 + 2
-        payload = PixmapCodec._encode_gif(
+        payload = gif.encode(
             np.frombuffer(_digest_cycle(aid, w * h), np.uint8).reshape(h, w),
             _GIF_PALETTE,
             interlace=aid % 3 == 2,
@@ -720,7 +717,7 @@ def synth_bmp_assets(
 
     def encode(aid: int):
         w, h = aid % 6 + 2, aid % 4 + 2
-        payload = PixmapCodec._encode_bmp(_digest_raster(aid, h, w, 3))
+        payload = encode_bmp(_digest_raster(aid, h, w, 3))
         return "image", payload, (w, h, None, None, "bmp")
 
     return _encoded_assets(spark, n, partitions, encode)
@@ -742,7 +739,7 @@ def synth_tiff_assets(
 
     def encode(aid: int):
         w, h, ch = aid % 6 + 2, aid % 4 + 2, 3 if aid % 2 == 0 else 1
-        payload = PixmapCodec._encode_tiff(
+        payload = tiff.encode(
             _digest_raster(aid, h, w, ch),
             byte_order="MM" if aid % 5 == 0 else "II",
             packbits=aid % 3 == 0,
@@ -928,21 +925,6 @@ DECODED_PHASH_SCHEMA = T.StructType(
     ]
 )
 
-# magic-byte prefixes PixmapCodec.pixels() can rasterize — the fused
-# decode+hash stage dispatches on these instead of try/fallback so a
-# CORRUPT raster quarantines from its own parse, not a second one
-_RASTER_MAGIC = (
-    b"P5", b"P6", b"BM", b"\x89PNG\r\n\x1a\n", b"\xff\xd8",
-    b"GIF87a", b"GIF89a", b"II*\x00", b"MM\x00*",
-)
-
-
-def _is_raster(payload: bytes) -> bool:
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return True
-    return payload.startswith(_RASTER_MAGIC)
-
-
 def _avg_hash(px: "np.ndarray") -> int:
     """Cross-multiplied average-hash over a decoded raster — the single
     implementation perceptual_hashes and the fused stage both call, so
@@ -982,7 +964,9 @@ def decode_assets_with_phash(
 
     def decode(aid: int, mt: str, raw: bytes):
         try:
-            if _is_raster(raw):
+            # magic-byte dispatch, not try/fallback: a CORRUPT raster
+            # quarantines from its own parse, not a second one
+            if is_raster(raw):
                 px = codec.pixels(raw).astype(np.int64)
                 h_, w_, ch = px.shape
                 # same value decode()'s raster branch returns: mean of
@@ -1369,9 +1353,9 @@ def synth_afp_assets(
             samples[0] = samples[1] = 30000
             samples[4] = samples[5] = -30000
         if aid % 5 == 2:
-            payload, fmt = PixmapCodec._encode_aiff(samples, 1), "aiff"
+            payload, fmt = aiff.encode(samples, 1), "aiff"
         else:
-            payload, fmt = PixmapCodec._encode_wav(samples, 1), "wav"
+            payload, fmt = wav.encode(samples, 1), "wav"
         return "audio", payload, (n_samp, 1, 16000, n_samp * 1000 // 16000, fmt)
 
     return _encoded_assets(spark, n, partitions, encode)
@@ -1403,9 +1387,9 @@ def synth_phash_assets(
         if aid % 8 == 7:
             px[0, 0, 0] = (int(px[0, 0, 0]) + 16) % 256
         if ch != 1 and aid % 2 == 1:
-            payload, fmt = PixmapCodec._encode_webp(px), "webp"
+            payload, fmt = webp.encode(px), "webp"
         else:
-            payload, fmt = PixmapCodec._encode_png(px), "png"
+            payload, fmt = png.encode(px), "png"
         return "image", payload, (w, h, None, None, fmt)
 
     return _encoded_assets(spark, n, partitions, encode)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators import multimodal as mm
 from ..operators import similarity
+from ..operators.codecs import wav
 from .registry import register
 
 
@@ -289,7 +290,7 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid PNG payloads — zlib IDAT, CRC-checked chunks, per-row filter
     cycle over all five PNG filters, gray/RGB/RGBA color types —
     generated in one Arrow mapInPandas stage (synth_png_assets) and
-    decoded by PixmapCodec._parse_png (stdlib zlib inflate + filter
+    decoded by codecs.png.parse (stdlib zlib inflate + filter
     inverses) through the production decode stage with
     require_codec=True. Grouped by channel count so gray, RGB and RGBA
     decoding are each separately certified. The oracle re-derives every
@@ -345,7 +346,7 @@ def multimodal_webp_decode_stats(
     length-limited Huffman codes built by boundary package-merge,
     transmitted through the spec's 19-symbol code-length code —
     generated in one Arrow mapInPandas stage (synth_webp_assets) and
-    decoded by PixmapCodec._parse_webp through the production decode
+    decoded by codecs.webp.parse through the production decode
     stage with require_codec=True. Grouped by channel count so the
     RGB (alpha-hint clear) and RGBA (alpha-hint set) paths are each
     separately certified. The oracle re-derives every number from the
@@ -656,7 +657,7 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables, dequantize, de-zigzag, IDCT, chroma upsampling, fixed-point
     YCbCr->RGB — generated by synth_jpeg_assets (constant 8x8 blocks +
     unit quant tables make the lossy format exactly round-trippable)
-    and decoded by PixmapCodec._parse_jpeg through the production
+    and decoded by codecs.jpeg.parse through the production
     Arrow stage with require_codec=True, grouped by mode so grayscale,
     4:4:4 and 4:2:0 paths are each separately certified. The oracle
     re-derives every decoded statistic from the md5 block-value
@@ -713,7 +714,7 @@ def multimodal_progressive_jpeg_stats(
     first (Ss=1..63) and AC refinement with EOBn run coding and
     correction bits — encoded by synth_progressive_jpeg_assets and
     decoded by the multi-scan coefficient accumulator in
-    PixmapCodec._parse_jpeg through the production Arrow stage.
+    codecs.jpeg.parse through the production Arrow stage.
     Constant blocks + unit quant make the whole 4/8-scan pipeline
     bit-exact, so the oracle re-derives every decoded statistic from
     the md5 block convention (including the fixed-point color
@@ -1096,7 +1097,7 @@ def multimodal_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL GIF decode path: valid single-frame GIF89a payloads
     (synth_gif_assets — real LZW compression, 256-entry arithmetic
     palette, every third asset interlaced) decoded by
-    PixmapCodec._parse_gif through the position_weighted_stats Arrow
+    codecs.gif.parse through the position_weighted_stats Arrow
     stage with require_codec=True, grouped by interlace flag so the
     plain and 4-pass-reassembly paths certify separately. The
     position-weighted checksum is the point: interlacing permutes rows
@@ -1239,10 +1240,8 @@ def _adpcm_oracle() -> str:
     clamp re-derived sample by sample from the synthesis digests —
     blocks are independent, so the recursion advances all (asset,
     block) chains in lock-step, one level per sample."""
-    from ..operators.multimodal import PixmapCodec as _PC
-
-    steps = "[" + ", ".join(str(s) for s in _PC._IMA_STEP_TABLE) + "]"
-    idxt = "[" + ", ".join(str(i) for i in _PC._IMA_INDEX_TABLE) + "]"
+    steps = "[" + ", ".join(str(s) for s in wav.IMA_STEP_TABLE) + "]"
+    idxt = "[" + ", ".join(str(i) for i in wav.IMA_INDEX_TABLE) + "]"
     # nibble k (0-based) of the block digest: half of byte (3 + k//2)%16
     nib = (
         "((('0x' || substr(hx, CAST(((3 + k // 2) % 16) * 2 + 1 AS INT),"
@@ -1443,7 +1442,7 @@ def multimodal_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL TIFF decode path: baseline TIFFs with per-asset structural
     variety — gray/RGB, uncompressed/real-PackBits, II/MM byte orders,
-    1..3-row strips — decoded by PixmapCodec._parse_tiff through the
+    1..3-row strips — decoded by codecs.tiff.parse through the
     position_weighted_stats Arrow stage with require_codec=True,
     grouped by compression so both data paths certify separately. The
     decoded raster is the same positional digest function regardless
@@ -1501,7 +1500,7 @@ def multimodal_tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode path: valid RIFF/WAVE 16-bit PCM payloads
     (synth_wav_assets — varying frame/channel counts, md5-cycled sample
-    words) decoded by PixmapCodec._parse_wav through the production
+    words) decoded by codecs.wav.parse through the production
     Arrow stage with require_codec=True, rolled up per channel count.
     The mean |sample| amplitude is the signal an audio curation filter
     thresholds on (silence / clipping detection); the oracle re-derives
@@ -1553,7 +1552,7 @@ def multimodal_flac_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL FLAC decode path: every payload is a genuine FLAC stream
     (synth_flac_assets — rice/rice2/escape residuals, fixed predictors,
     constant/verbatim subframes, all four stereo channel assignments,
-    partial final blocks) decoded by PixmapCodec._parse_flac through
+    partial final blocks) decoded by codecs.flac.parse through
     the production Arrow stage with require_codec=True. Grouped by
     (channels, constant-vs-noise) so the constant-subframe path and the
     predictor/rice path certify separately. The decoder's STREAMINFO
@@ -2175,7 +2174,7 @@ def multimodal_webp_lz_decode_stats(
     LZ77 encoding carries dist=h0*w backrefs (both neighborhood-mapped
     and dist+120 literal distance codes), length prefix values with
     extra bits, and a color cache at every legal cache_bits in 1..11;
-    PixmapCodec._parse_webp reconstructs the exact pixels through the
+    codecs.webp.parse reconstructs the exact pixels through the
     production decode stage with require_codec=True. Grouped by
     channel count so RGB and RGBA are separately certified."""
     decoded = _decoded(mm.synth_webp_lz_assets(spark, n=192))
