@@ -39,7 +39,7 @@ def sample(payload: bytes, every_ms: int) -> list[tuple[int, int, bytes]]:
     return out
 
 
-def encode(frames: list[bytes], w: int, h: int, fps: int = 10) -> bytes:
-    """A progressive 4:2:0 stream of the given raw frames."""
-    header = f"YUV4MPEG2 W{w} H{h} F{fps}:1 Ip A1:1 C420\n".encode()
+def encode(frames: list[bytes], w: int, h: int) -> bytes:
+    """A progressive 4:2:0 stream of the given raw frames at 10 fps."""
+    header = f"YUV4MPEG2 W{w} H{h} F10:1 Ip A1:1 C420\n".encode()
     return header + b"".join(b"FRAME\n" + f for f in frames)

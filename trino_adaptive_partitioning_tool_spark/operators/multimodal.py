@@ -10,8 +10,8 @@ implementations exist behind one dispatch seam:
 - the default deterministic fake (`_fake_decode_*`) — hash-derived
   pixels/samples, used where only the Spark-side plumbing (schema,
   batch shape, partitioning) is under test; and
-- `PixmapCodec` — a REAL pure-python decoder (and for several formats
-  encoder) for the container's full format census: PPM/PGM, BMP, PNG
+- `PixmapCodec` (operators/codecs) — a REAL pure-python decoder and
+  encoder for the container's full format census: PPM/PGM, BMP, PNG
   (all filter types), GIF (LZW), TIFF, baseline + progressive (SOF2)
   JPEG, VP8L WebP-lossless, WAV PCM, IMA-ADPCM (WAV fmt 0x11), µ-law,
   AIFF, FLAC, Y4M, MJPEG-AVI. Registered decode queries pass
@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import rowmap
-from .codecs import aiff, avi, flac, gif, jpeg, png, tiff, wav, webp, y4m
-from .codecs.netpbm import encode_bmp
+from .codecs import aiff, avi, flac, gif, jpeg, netpbm, png, tiff, wav, webp, y4m
 from .codecs.pixmap import PixmapCodec, is_raster  # noqa: F401 (the real Codec)
 
 ASSET_SCHEMA = T.StructType(
@@ -717,7 +716,7 @@ def synth_bmp_assets(
 
     def encode(aid: int):
         w, h = aid % 6 + 2, aid % 4 + 2
-        payload = encode_bmp(_digest_raster(aid, h, w, 3))
+        payload = netpbm.encode_bmp(_digest_raster(aid, h, w, 3))
         return "image", payload, (w, h, None, None, "bmp")
 
     return _encoded_assets(spark, n, partitions, encode)
