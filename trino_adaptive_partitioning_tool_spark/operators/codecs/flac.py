@@ -18,10 +18,12 @@ from .bitio import MsbBitReader, MsbBitWriter
 # (left-side/right-side/mid-side), wasted-bits, and the STREAMINFO
 # MD5 of the decoded stream verified on decode — a frame-order or
 # sample-value bug cannot produce plausible output, it raises.
-_RATE_CODES = {
-    88200: 1, 176400: 2, 192000: 3, 8000: 4, 16000: 5, 22050: 6,
-    24000: 7, 32000: 8, 44100: 9, 48000: 10, 96000: 11,
-}
+# frame-header sample-rate codes 1..11 (0: the STREAMINFO rate)
+_RATES = (
+    None, 88200, 176400, 192000, 8000, 16000, 22050, 24000,
+    32000, 44100, 48000, 96000,
+)
+_RATE_CODES = {r: code for code, r in enumerate(_RATES) if r}
 
 
 def _build_crc_table(poly: int, width: int) -> tuple:
@@ -419,14 +421,10 @@ def _parse_frame(
         n = br.read(16) + 1
     else:
         n = 256 << (bs_code - 8)
-    rate_table = (
-        None, 88200, 176400, 192000, 8000, 16000, 22050, 24000,
-        32000, 44100, 48000, 96000,
-    )
     if rate_code == 0:
         pass  # use stream rate
     elif rate_code <= 11:
-        if rate_table[rate_code] != stream_rate:
+        if _RATES[rate_code] != stream_rate:
             raise ValueError("FLAC frame sample rate mismatch")
     elif rate_code == 12:
         if br.read(8) * 1000 != stream_rate:

@@ -8,6 +8,10 @@ import struct
 import numpy as np
 
 
+# IFD field type -> struct code: BYTE, SHORT, LONG
+_FIELD_TYPES = {1: "B", 3: "H", 4: "I"}
+
+
 def packbits_decode(data: bytes, expected: int) -> bytes:
     """Apple PackBits RLE (TIFF compression 32773)."""
     out = bytearray()
@@ -82,17 +86,16 @@ def parse(payload: bytes):
     for k in range(n_entries):
         off = ifd_off + 2 + 12 * k
         tag, typ, cnt = struct.unpack_from(f"{e}HHI", payload, off)
-        size = {1: 1, 3: 2, 4: 4}.get(typ)
-        if size is None:
+        fmt = _FIELD_TYPES.get(typ)
+        if fmt is None:
             continue  # RATIONAL etc. — not needed for baseline
-        total = size * cnt
+        total = struct.calcsize(fmt) * cnt
         if total <= 4:
             voff = off + 8
         else:
             voff = struct.unpack_from(f"{e}I", payload, off + 8)[0]
         if voff + total > len(payload):
             raise ValueError("truncated TIFF tag values")
-        fmt = {1: "B", 3: "H", 4: "I"}[typ]
         tags[tag] = list(
             struct.unpack_from(f"{e}{cnt}{fmt}", payload, voff)
         )
@@ -188,9 +191,7 @@ def encode(
     extra = bytearray()
     ifd = struct.pack(f"{e}H", len(entries))
     for tag, typ, vals in entries:
-        size = {3: 2, 4: 4}[typ]
-        fmt = {3: "H", 4: "I"}[typ]
-        packed = struct.pack(f"{e}{len(vals)}{fmt}", *vals)
+        packed = struct.pack(f"{e}{len(vals)}{_FIELD_TYPES[typ]}", *vals)
         ent = struct.pack(f"{e}HHI", tag, typ, len(vals))
         if len(packed) <= 4:
             ent += packed + b"\x00" * (4 - len(packed))

@@ -90,6 +90,11 @@ def prefix_split(value: int) -> tuple[int, int, int]:
     return sym + 2, v - ((2 + ((v >> extra) & 1)) << extra), extra
 
 
+def _s8(v: int) -> int:
+    """A byte as a signed int8."""
+    return v - 256 if v >= 128 else v
+
+
 def _cache_key(r: int, g: int, b: int, a: int, bits: int) -> int:
     """Color-cache slot (RFC 9649 §4.2.3): multiplicative hash of
     the packed ARGB word."""
@@ -278,9 +283,6 @@ def encode(
     if meta_groups not in (1, 2):
         raise ValueError("meta_groups must be 1 or 2")
 
-    def s8(v: int) -> int:
-        return v - 256 if v >= 128 else v
-
     chain: list[tuple[str, tuple | None]] = []
     if subtract_green:  # forward: code in the transformed domain
         flat[:, 0] = (flat[:, 0] - flat[:, 1]) & 0xFF
@@ -292,9 +294,9 @@ def encode(
             raise ValueError("color-transform element out of int8")
         for i in range(n):
             r0, g0, b0 = int(flat[i, 0]), int(flat[i, 1]), int(flat[i, 2])
-            flat[i, 0] = (r0 - ((g2r * s8(g0)) >> 5)) & 0xFF
+            flat[i, 0] = (r0 - ((g2r * _s8(g0)) >> 5)) & 0xFF
             flat[i, 2] = (
-                b0 - ((g2b * s8(g0)) >> 5) - ((r2b * s8(r0)) >> 5)
+                b0 - ((g2b * _s8(g0)) >> 5) - ((r2b * _s8(r0)) >> 5)
             ) & 0xFF
         size_bits = 4
         tw = (w + 15) >> size_bits
@@ -777,19 +779,16 @@ def _inv_color(
     tile pixel's BLUE channel, green_to_blue its green,
     red_to_blue its red; red reconstructs before feeding the
     red_to_blue term, exactly as the spec sequences it."""
-    def s8(v: int) -> int:
-        return v - 256 if v >= 128 else v
-
     out = res.copy()
     n = w * h
     for i in range(n):
         y, x = divmod(i, w)
         cte = tiles[(y >> size_bits) * tw + (x >> size_bits)]
-        g2r, g2b, r2b = s8(int(cte[2])), s8(int(cte[1])), s8(int(cte[0]))
-        g = s8(int(out[i][1]))
+        g2r, g2b, r2b = _s8(int(cte[2])), _s8(int(cte[1])), _s8(int(cte[0]))
+        g = _s8(int(out[i][1]))
         r = (int(out[i][0]) + ((g2r * g) >> 5)) & 0xFF
         b = (int(out[i][2]) + ((g2b * g) >> 5)) & 0xFF
-        b = (b + ((r2b * s8(r)) >> 5)) & 0xFF
+        b = (b + ((r2b * _s8(r)) >> 5)) & 0xFF
         out[i][0] = r
         out[i][2] = b
     return out
